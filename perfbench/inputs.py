@@ -20,10 +20,10 @@ from tiff_to_geojson_csv_json_format_converter_spark.functions import affine, ge
 from tiff_to_geojson_csv_json_format_converter_spark.sources import synth
 
 IMAGE_SIZES = [64, 256]
-# the synthetic image mix (cluster share, CRS, format, NoData mode) cycles
-# every 80 ids; aligning the seeded id range to it keeps the mix, and so
-# the work per pass, identical across seeds
-_ID_PERIOD = 80
+# the synthetic image mix (size, cluster share, CRS, bands, format, NoData
+# mode) cycles every 240 ids (lcm of 16, 5 and 3); aligning the seeded id
+# range to it keeps the mix, and so the work per pass, identical across seeds
+_ID_PERIOD = 240
 
 
 # --- images -----------------------------------------------------------------
@@ -317,18 +317,22 @@ def jaccard_oracle(docs: list[dict], n: int, threshold_e6: int) -> set:
     return pairs
 
 
-def embeddings(seed: int, n: int, dim: int = 64, n_clusters: int = 10) -> np.ndarray:
+def embeddings(seed: int, n: int, dim: int = 64, n_clusters: int = 10) -> tuple[np.ndarray, set]:
     """Unit vectors around seeded cluster centres, with one vector in
-    twenty a near copy of an earlier one (the near-duplicate pairs)."""
+    twenty a near copy of an earlier one; returns the vectors and those
+    planted (earlier, copy) pairs."""
     rng = np.random.default_rng([seed, 5])
     centres = rng.normal(size=(n_clusters, dim))
     labels = rng.integers(n_clusters, size=n)
     v = centres[labels] + rng.normal(scale=1.2, size=(n, dim))
+    planted = set()
     for j in range(1, n):
         if j % 20 == 0:
-            v[j] = v[int(rng.integers(j))] + rng.normal(scale=0.05, size=dim)
+            src = int(rng.integers(j))
+            v[j] = v[src] + rng.normal(scale=0.05, size=dim)
+            planted.add((src, j))
     v /= np.linalg.norm(v, axis=1, keepdims=True)
-    return v.astype(np.float32)
+    return v.astype(np.float32), planted
 
 
 def quantized(v: np.ndarray, scale: int = 1000) -> np.ndarray:

@@ -8,16 +8,17 @@ public functions.
 One process runs Spark at local[<cores this process may use>] with one
 closed-loop client: each operation is issued after the previous one
 returned. A run builds the seeded inputs (set-up, repeated and reported
-as a median, plus two unmeasured warm-up passes), then runs passes of
+as a median, plus one unmeasured warm-up pass), then runs passes of
 checked operations for ``--seconds``. The last stdout line is
 ``{"correct", "attempted", "failed", "metrics"}``: the end-to-end metrics
 with ``--trace 0``, the per-layer metrics with ``--trace 1``. The line
 before it carries the workload-specific metrics, input sizes and the
 host-load probe.
 
-With ``--trace 1`` the first half of the measured time runs untraced,
-the second half runs every span under its own Spark job group with a
-local event log, which is folded per span after the session stops.
+With ``--trace 1`` the session keeps a local event log, and passes
+alternate between untraced ones and traced ones, which run every span
+under its own Spark job group; the log is folded per span after the
+session stops.
 """
 
 from __future__ import annotations
@@ -34,16 +35,15 @@ import threading
 import time
 import traceback
 from collections import defaultdict
+from contextlib import contextmanager
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 WORK = os.path.join(ROOT, ".perfbench_work")
 WORKLOAD_NAMES = ("ingest_tiles", "spatial_query", "geo_export", "caption_dedup")
 SETUP_REPEATS = 3
-# JIT warming runs on for a few passes; CPU per pass settles from the third
-WARMUP_PASSES = 2
-# bench.py's quiet-window reference for the host probe kernel
-PROBE_REF_SEC = 0.20
+MEASURED_PASSES = 2
+TRACE_PAIRS = 2
 
 SETUP_SPANS = ("plans.session.get_spark", "sources.synth.images_df", "setup.points_table",
                "setup.corpus")
@@ -67,6 +67,9 @@ RATIOS = (("operators.joins.cell_cover_join.useful_ratio", "1"),
           ("operators.joins.knn_join.inexact_share", "1"),
           ("operators.extract.rows_per_pixel", "1"),
           ("spark.py_task_fixed_ms", "ms"),
+          ("spark.python_cpu_s", "s"),
+          ("spark.jvm_cpu_s", "s"),
+          ("spark.jit_cpu_s", "s"),
           ("spark.jvm_peak_rss_mb", "MB"),
           ("spark.python_peak_rss_mb", "MB"),
           ("trace.overhead_s", "s"))
@@ -110,17 +113,68 @@ def descendants(pid: int) -> list[int]:
 _TICKS = os.sysconf("SC_CLK_TCK")
 
 
-def tree_cpu_s() -> float:
+class CpuClock:
     """CPU seconds (user + system) used so far by this process and every
-    process it started, the reaped ones included."""
-    ticks = 0
-    for pid in [os.getpid()] + descendants(os.getpid()):
+    process it started, the reaped ones included: in total, in this
+    (driver) process, in the Python workers, and in the JVM's JIT compiler
+    and garbage collector threads. The JVM starts and retires those
+    threads as it goes, so the last reading of every one ever seen counts."""
+
+    THREAD_KINDS = (("jit", ("C1 CompilerThre", "C2 CompilerThre")), ("gc", ("GC Thread", "G1 ")))
+
+    def __init__(self):
+        self.threads: dict[tuple, tuple] = {}  # (pid, tid) -> (kind or None, last ticks)
+        self.is_jvm: dict[int, bool] = {}
+
+    def _jvm(self, pid: int) -> bool:
+        if pid not in self.is_jvm:
+            with open(f"/proc/{pid}/comm") as f:
+                self.is_jvm[pid] = f.read().strip() == "java"
+        return self.is_jvm[pid]
+
+    def _scan_threads(self, pid: int) -> None:
+        for tid in os.listdir(f"/proc/{pid}/task"):
+            key = (pid, tid)
+            kind = self.threads[key][0] if key in self.threads else self._kind(pid, tid)
+            if kind is None:
+                self.threads[key] = (None, 0)
+                continue
+            try:
+                with open(f"/proc/{pid}/task/{tid}/stat") as f:
+                    self.threads[key] = (kind, sum(int(v) for v in f.read().rsplit(")", 1)[1].split()[11:13]))
+            except (OSError, IndexError, ValueError):
+                continue
+
+    @classmethod
+    def _kind(cls, pid: int, tid: str):
         try:
-            with open(f"/proc/{pid}/stat") as f:
-                ticks += sum(int(v) for v in f.read().rsplit(")", 1)[1].split()[11:15])
-        except (OSError, IndexError, ValueError):
-            continue
-    return ticks / _TICKS
+            with open(f"/proc/{pid}/task/{tid}/comm") as f:
+                comm = f.read()
+        except OSError:
+            return None
+        return next((k for k, prefixes in cls.THREAD_KINDS if comm.startswith(prefixes)), None)
+
+    def read(self) -> dict:
+        me = os.getpid()
+        out = dict.fromkeys(("cpu_s", "driver_s", "python_s", "jit_s", "gc_s"), 0)
+        for pid in [me] + descendants(me):
+            try:
+                with open(f"/proc/{pid}/stat") as f:
+                    ticks = sum(int(v) for v in f.read().rsplit(")", 1)[1].split()[11:15])
+                jvm = pid != me and self._jvm(pid)
+                if jvm:
+                    self._scan_threads(pid)
+            except (OSError, IndexError, ValueError):
+                continue
+            out["cpu_s"] += ticks
+            if pid == me:
+                out["driver_s"] += ticks
+            elif not jvm:
+                out["python_s"] += ticks
+        for kind, ticks in self.threads.values():
+            if kind is not None:
+                out[f"{kind}_s"] += ticks
+        return {k: v / _TICKS for k, v in out.items()}
 
 
 def _alive(pid: int) -> bool:
@@ -198,19 +252,21 @@ class Ops:
     """Runs one checked operation inside its span; counts attempts and
     failures. A failure is an exception or a failed output check."""
 
-    def __init__(self, tracer):
+    def __init__(self, tracer, clock):
         self.tracer = tracer
         self.attempted = self.failed = 0
         self.times = defaultdict(list)  # name -> seconds, measured passes only
-        self.cpu_s = 0.0  # process-tree CPU seconds inside operations
+        self.clock = clock
+        self.cpu = defaultdict(float)  # CpuClock.read() keys -> seconds inside operations
 
     def run(self, name, fn, check, pass_id, rows=len):
         self.attempted += 1
         try:
-            cpu0 = tree_cpu_s()
+            cpu0 = self.clock.read()
             with self.tracer.span(name, pass_id) as sp:
                 out = fn()
-            self.cpu_s += tree_cpu_s() - cpu0
+            for k, v in self.clock.read().items():
+                self.cpu[k] += v - cpu0[k]
             sp["rows"] = rows(out)
             if pass_id >= 0:
                 self.times[name].append(sp["end"] - sp["start"])
@@ -227,32 +283,6 @@ class Ops:
 
 
 # --- probes -------------------------------------------------------------------------
-
-def make_host_probe():
-    """bench.py's bare-kernel host probe: single-process extraction of 32
-    synthetic images, no Spark. Recorded beside each run, never used to
-    correct a number."""
-    import numpy as np
-
-    from tiff_to_geojson_csv_json_format_converter_spark.functions import cells
-    from tiff_to_geojson_csv_json_format_converter_spark.operators.extract import _extract_image
-    from tiff_to_geojson_csv_json_format_converter_spark.sources import synth
-
-    records = synth.generate_pandas(np.arange(32), 4096, [128, 256]).to_dict("records")
-
-    def probe() -> float:
-        t0 = time.perf_counter()
-        for img in records:
-            for _b, _i, lon, lat, _z in _extract_image(
-                img["image_id"], img["bytes"], img["w"], img["h"], img["fmt"],
-                img["transform"], img["crs"], img["band_count"], True, None, None, True,
-            ):
-                cells.tile_xy(lon, lat, 12)
-        return time.perf_counter() - t0
-
-    probe()
-    return probe
-
 
 def _best_rate(fn, units: float, reps: int = 3) -> float:
     best = math.inf
@@ -351,11 +381,25 @@ def per_layer(tracer, wl, fold, extra) -> dict:
     return out
 
 
+@contextmanager
+def measured(clock: CpuClock, into: list):
+    """Appends the wall seconds of the block and its CpuClock deltas to ``into``."""
+    w0, c0 = time.perf_counter(), clock.read()
+    yield
+    into.append({"wall_s": time.perf_counter() - w0, **{k: v - c0[k] for k, v in clock.read().items()}})
+
+
+def _median_of(recs: list, key) -> float:
+    return statistics.median(key(r) for r in recs) if recs else math.nan
+
+
 def bench(args, cpus: int, work: str, rss: RssSampler):
     from tiff_to_geojson_csv_json_format_converter_spark.plans import session
 
     import spans
     import workloads
+    # the host probe bench.py stamps beside its numbers: recorded, never used to correct one
+    from bench import PROBE_REF_SEC, make_host_probe
 
     conf = {
         "spark.local.dir": os.path.join(work, "spark-local"),
@@ -368,41 +412,43 @@ def bench(args, cpus: int, work: str, rss: RssSampler):
         conf.update({"spark.eventLog.enabled": "true", "spark.eventLog.dir": f"file://{events}",
                      "spark.eventLog.compress": "false", "spark.eventLog.rolling.enabled": "false"})
     tracer = spans.Tracer()
-    with tracer.span("plans.session.get_spark") as sp:
+    clock = CpuClock()
+    setup = defaultdict(list)  # phase -> [{wall_s, CpuClock.read() deltas}] of each time it ran
+    with measured(clock, setup["session"]), tracer.span("plans.session.get_spark"):
         spark = session.get_spark(master=f"local[{cpus}]", extra_conf=conf)
-    session_s = sp["end"] - sp["start"]
     try:
         spark.sparkContext.setLogLevel("ERROR")
-        ops = Ops(tracer)
+        ops = Ops(tracer, clock)
         wl = workloads.WORKLOADS[args.workload](spark, args.seed, tracer, ops, work)
-        inputs_s = []
         for r in range(SETUP_REPEATS):
             if r:
                 wl.release()
-            t0 = time.perf_counter()
-            wl.setup_inputs()
-            inputs_s.append(time.perf_counter() - t0)
+            with measured(clock, setup["inputs"]):
+                wl.setup_inputs()
         wl.build_oracle()
-        warmup_s = []
-        for w in range(WARMUP_PASSES):
-            t0 = time.perf_counter()
-            wl.run_pass(-1 - w)
-            warmup_s.append(time.perf_counter() - t0)
-            wl.after_pass(-1 - w)
-        setup_s = session_s + statistics.median(inputs_s) + sum(warmup_s)
+        # one unmeasured warm-up pass: first-call costs (Python workers, JIT, codegen) stay out of the passes
+        with measured(clock, setup["warmup"]):
+            wl.run_pass(-1)
+        wl.after_pass(-1)
+        setup_cost = {k: setup["session"][0][k] + _median_of(setup["inputs"], lambda r: r[k]) + setup["warmup"][0][k]
+                      for k in ("wall_s", "cpu_s")}
 
         probe = make_host_probe()
         probe_before = probe()
-        untraced, traced, pass_cpu = [], [], []
+        passes = {"untraced": [], "traced": []}
         start = time.perf_counter()
         p = 0
-        while time.perf_counter() - start < args.seconds:
-            if args.trace and tracer.sc is None and (untraced and time.perf_counter() - start >= args.seconds / 2):
-                tracer.sc = spark.sparkContext
-            t0, cpu0 = time.perf_counter(), ops.cpu_s
+        # at least MEASURED_PASSES passes, so every run measures the same stretch of the JVM's
+        # warm-up. The traced run orders its passes untraced, traced, traced, untraced, ..., so
+        # the JVM still warming up favours neither side, until it has TRACE_PAIRS of each at least
+        while (time.perf_counter() - start < args.seconds
+               or len(passes["untraced"]) < (TRACE_PAIRS if args.trace else MEASURED_PASSES)
+               or (args.trace and len(passes["traced"]) < TRACE_PAIRS)):
+            tracer.sc = spark.sparkContext if args.trace and p % 4 in (1, 2) else None
+            t0, cpu0 = time.perf_counter(), dict(ops.cpu)
             wl.run_pass(p)
-            (traced if tracer.sc is not None else untraced).append(time.perf_counter() - t0)
-            pass_cpu.append(ops.cpu_s - cpu0)
+            passes["untraced" if tracer.sc is None else "traced"].append(
+                {"wall_s": time.perf_counter() - t0, **{k: v - cpu0.get(k, 0.0) for k, v in ops.cpu.items()}})
             wl.after_pass(p)
             if tracer.sc is not None:
                 wl.extra_probes(p)
@@ -411,17 +457,17 @@ def bench(args, cpus: int, work: str, rss: RssSampler):
 
         extra = {}
         if args.trace:
-            if tracer.sc is None:  # one pass filled the time: trace one more
-                tracer.sc = spark.sparkContext
-                t0 = time.perf_counter()
-                wl.run_pass(p)
-                traced.append(time.perf_counter() - t0)
-                wl.after_pass(p)
-                wl.extra_probes(p)
-            wl.trace_probes(p + 1)
+            tracer.sc = spark.sparkContext
+            wl.trace_probes(p)
             tracer.sc = None
             extra["spark.py_task_fixed_ms"] = py_task_fixed_ms(spark)
-            extra["trace.overhead_s"] = statistics.median(traced) - statistics.median(untraced)
+            extra["trace.overhead_s"] = (_median_of(passes["traced"], lambda r: r["cpu_s"])
+                                         - _median_of(passes["untraced"], lambda r: r["cpu_s"]))
+            untraced = passes["untraced"]
+            extra["spark.python_cpu_s"] = _median_of(untraced, lambda r: r["python_s"])
+            extra["spark.jvm_cpu_s"] = _median_of(
+                untraced, lambda r: r["cpu_s"] - r["python_s"] - r["driver_s"] - r["jit_s"])
+            extra["spark.jit_cpu_s"] = _median_of(untraced, lambda r: r["jit_s"])
     finally:
         stop_spark(spark)
 
@@ -432,7 +478,8 @@ def bench(args, cpus: int, work: str, rss: RssSampler):
                 fold.update(spans.fold_event_log(f))
     tracer.dump(os.path.join(WORK, f"spans-{args.workload}-s{args.seed}-t{args.trace}.json"))
 
-    e2e = {"setup_s": (setup_s, "s"), "pass_cpu_s": (statistics.median(pass_cpu), "s")}
+    e2e = {"setup_s": (setup_cost["cpu_s"], "s"),
+           "pass_cpu_s": (_median_of(passes["untraced"], lambda r: r["cpu_s"]), "s")}
     extra["spark.jvm_peak_rss_mb"] = rss.peak["jvm"] / 1e6
     extra["spark.python_peak_rss_mb"] = rss.peak["python"] / 1e6
     if args.trace:
@@ -445,13 +492,15 @@ def bench(args, cpus: int, work: str, rss: RssSampler):
         "workload": args.workload, "seed": args.seed, "cpus": cpus, "trace": args.trace,
         "sizes": wl.sizes(),
         "metrics": {k: {"value": v, "unit": u} for k, (v, u) in {
-            **e2e, "pass_s": (statistics.median(untraced), "s"), **wl.detail(),
+            **e2e, "setup_wall_s": (setup_cost["wall_s"], "s"),
+            "pass_s": (_median_of(passes["untraced"], lambda r: r["wall_s"]), "s"),
+            **wl.detail(),
             "peak_rss_mb": (rss.peak["total"] / 1e6, "MB"),
             "error_rate": (ops.failed / max(ops.attempted, 1), "1"),
         }.items()},
         "op_s": dict(ops.median_times()),
-        "setup": {"session_s": session_s, "inputs_s": inputs_s, "warmup_s": warmup_s},
-        "passes": {"untraced_s": untraced, "traced_s": traced, "cpu_s": pass_cpu},
+        "setup": dict(setup),
+        "passes": passes,
         "host_probe": {"before_s": probe_before, "after_s": probe_after,
                        "ratio_before": probe_before / PROBE_REF_SEC, "ratio_after": probe_after / PROBE_REF_SEC},
         "jobs_outside_traced_spans": fold.get(None, {}).get("jobs", 0),

@@ -15,6 +15,7 @@ import statistics
 
 import numpy as np
 import pyarrow.parquet as pq
+from pyspark.sql import functions as F
 
 from tiff_to_geojson_csv_json_format_converter_spark import api
 from tiff_to_geojson_csv_json_format_converter_spark.functions import cells
@@ -83,7 +84,7 @@ class Workload:
 
 class IngestTiles(Workload):
     name = "ingest_tiles"
-    N_IMAGES = 8
+    N_IMAGES = 96
 
     def setup_inputs(self):
         self.ids = inputs.image_ids(self.seed, self.N_IMAGES)
@@ -137,8 +138,10 @@ class IngestTiles(Workload):
     def trace_probes(self, p):
         self.ops.run("operators.tiling.catalog_rollup",
                      lambda: tiling.catalog_rollup(self.conv.points("valid")).collect(), self._check_rollup, p)
+        # the writers run on as many images as the geo_export workload has
         geo = GeoExport(self.spark, self.seed, self.tracer, self.ops, self.workdir)
-        geo.use_images(self.ids, self.images)
+        ids = self.ids[:GeoExport.N_IMAGES]
+        geo.use_images(ids, self.images.where(F.col("image_id").isin([f"img_{int(i):08d}" for i in ids])))
         geo.build_oracle()
         geo.run_pass(p)
         geo.after_pass(p)
@@ -379,7 +382,7 @@ class CaptionDedup(Workload):
 
     def setup_inputs(self):
         self.docs = inputs.documents(self.seed, self.N_BASE_DOCS, self.DOC_REPLICAS)
-        self.vecs = inputs.embeddings(self.seed, self.N_VECTORS)
+        self.vecs, self.planted = inputs.embeddings(self.seed, self.N_VECTORS)
         with self.tracer.span("setup.corpus") as sp:
             self.docs_df = self._cache(self.spark.createDataFrame(
                 [(d["doc_id"], d["source"], d["text"]) for d in self.docs],
@@ -396,6 +399,8 @@ class CaptionDedup(Workload):
         iu = np.triu_indices(self.N_VECTORS, 1)
         hit = self.cos[iu] >= self.COSINE_E6
         self.cos_want = set(zip(iu[0][hit].tolist(), iu[1][hit].tolist()))
+        if not self.planted <= self.cos_want:
+            raise AssertionError("a planted near copy is below the cosine threshold")
         truth = similarity.brute_topk(self.emb_df, k=self.TOPK).collect()
         self.topk_want = {}
         for r in truth:
@@ -411,8 +416,9 @@ class CaptionDedup(Workload):
                                        block_col="source", scope=scope).select("doc_a", "doc_b").collect()
 
     def _check_cosine(self, rows):
+        # LSH may miss pairs near the threshold; the planted near copies must all be found
         got = {(r["id_a"], r["id_b"]) for r in rows}
-        return got <= self.cos_want and len(got) == len(rows) and all(
+        return self.planted <= got <= self.cos_want and len(got) == len(rows) and all(
             self.cos[r["id_a"], r["id_b"]] == r["cos_e6"] for r in rows)
 
     def _check_ivf(self, rows):
@@ -447,7 +453,8 @@ class CaptionDedup(Workload):
 
     def sizes(self):
         return {"docs": len(self.docs), "vectors": self.N_VECTORS,
-                "jaccard_pairs": len(self.jaccard_want), "cosine_pairs": len(self.cos_want)}
+                "jaccard_pairs": len(self.jaccard_want), "cosine_pairs": len(self.cos_want),
+                "planted_cosine_pairs": len(self.planted)}
 
     def detail(self):
         t = self.ops.median_times()
