@@ -95,6 +95,49 @@ def test_all_nodata_images_emit_nothing(spark, images_pdf, images_sdf):
     assert empty_ids.isdisjoint(set(got["image_id"]))
 
 
+def test_points_batches_match_old_construction(images_pdf, monkeypatch):
+    """extract_points' Arrow body, run without Spark over one batch of
+    several images with a batch cap that splits bands: every emitted
+    batch equals the earlier construction (image_id from a numpy repeat of
+    Python strings, band buffered as int64 then cast to int32)."""
+    import pyarrow as pa
+
+    cap = 100
+    monkeypatch.setattr(extract, "_BATCH_ROWS", cap)
+    cols = ["image_id", "bytes", "w", "h", "fmt", "transform", "crs", "band_count"]
+    recs = images_pdf[cols].head(12).to_dict("records")
+    got = list(extract._points_batches(
+        iter([pa.RecordBatch.from_pylist(recs)]), True, None, None, True, None))
+
+    def old_batch(chunks):  # chunk: (image_id, band, pixel_idx, lon, lat, z)
+        return pa.RecordBatch.from_arrays(
+            [
+                pa.array(np.concatenate([np.repeat(c[0], len(c[2])) for c in chunks])),
+                pa.array(np.concatenate(
+                    [np.full(len(c[2]), c[1], dtype=np.int64) for c in chunks]).astype(np.int32)),
+                *(pa.array(np.concatenate([c[k] for c in chunks])) for k in (2, 3, 4, 5)),
+            ],
+            names=["image_id", "band", "pixel_idx", "longitude", "latitude", "elevation"],
+        )
+
+    want, chunks, n_buf, split = [], [], 0, False
+    for r in recs:
+        for band, *arrs in extract._extract_image(*(r[c] for c in cols), True, None, None, True):
+            split |= len(arrs[0]) > cap
+            for lo in range(0, len(arrs[0]), cap):
+                chunks.append((r["image_id"], band, *(a[lo:lo + cap] for a in arrs)))
+                n_buf += len(chunks[-1][2])
+                if n_buf >= cap:
+                    want.append(old_batch(chunks))
+                    chunks, n_buf = [], 0
+    if chunks:
+        want.append(old_batch(chunks))
+    assert split and len({r["image_id"] for r in recs}) > 1 and len(want) > 2
+    assert len(got) == len(want)
+    for g, w in zip(got, want):
+        assert g.schema == w.schema and g.equals(w)
+
+
 def test_windowed_read_equals_filtered_full_extract(spark, images_pdf, images_sdf):
     """A4 windowed read: bbox pushed into the decode must equal
     full-extract-then-filter exactly (the crop=True economy)."""

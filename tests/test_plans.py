@@ -592,3 +592,47 @@ def test_clip_fallback_ladder_classification_edge_cases(spark):
     got1 = {r["point_id"] for r in out1.collect()}
     got2 = {r["point_id"] for r in out2.collect()}
     assert got1 and got1 == got2
+
+
+def test_clip_refuses_caller_barrier_column(spark):
+    """A caller column named like the clip's internal barrier column is
+    refused, never reused for the parity seed or dropped from the output."""
+    pts = spark.createDataFrame(
+        [(1, 77.2, 28.2, "keep")],
+        f"point_id long, longitude double, latitude double, {joins._PIP_BARRIER_COL} string",
+    )
+    sq = [[77.1, 28.1], [77.3, 28.1], [77.3, 28.3], [77.1, 28.3], [77.1, 28.1]]
+    with pytest.raises(ValueError, match=joins._PIP_BARRIER_COL):
+        joins.clip_points(pts, [sq])
+    with pytest.raises(ValueError, match=joins._PIP_BARRIER_COL):
+        joins.clip_points_union(pts, [[sq]])
+
+
+def test_tile_assign_null_image_id_keeps_distinct_semantics(spark):
+    """tile_assign's rollup on a frame with a NULL image_id: n_images is
+    COUNT(DISTINCT image_id) (NULL not counted) while n_points and the
+    pyramid keep every point, as the oracle's COUNT(*) does."""
+    from tiff_to_geojson_csv_json_format_converter_spark.plans import entry_queries
+
+    pts = spark.createDataFrame(
+        [(77.01, 28.41, 5.0, 1), (77.011, 28.411, 7.0, 2), (77.012, 28.412, 9.0, None),
+         (77.013, 28.413, 4.0, 1), (77.9, 28.9, 3.0, None)],
+        "lon double, lat double, z double, image_id long",
+    )
+    got = entry_queries._tile_rollups(pts)
+    key = ["kind", "level", "tile_x", "tile_y"]
+    tiles = pts.select(
+        cells.tile_x_col(F.col("lon"), 12).alias("tile_x"),
+        cells.tile_y_col(F.col("lat"), 12).alias("tile_y"), "image_id")
+    want = {
+        (r.tile_x, r.tile_y): (r.n_points, r.n_images)
+        for r in tiles.groupBy("tile_x", "tile_y").agg(
+            F.count("*").alias("n_points"),
+            F.countDistinct("image_id").alias("n_images")).collect()
+    }
+    assign = {(r.tile_x, r.tile_y): (r.n_points, r.n_images)
+              for r in got.filter("kind = 'assign'").select(*key, "n_points", "n_images").collect()}
+    assert assign == want
+    assert sorted(want.values()) == [(1, 0), (4, 2)]
+    finest = got.filter("kind = 'pyramid' and level = 12").agg(F.sum("n_points")).first()[0]
+    assert finest == 5

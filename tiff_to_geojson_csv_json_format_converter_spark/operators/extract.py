@@ -308,80 +308,82 @@ def extract_points(
         "image_id", "bytes", "w", "h", "fmt", "transform", "crs", "band_count",
     ]
     src = images_df.select(*cols)
+    return src.mapInArrow(
+        lambda batches: _points_batches(
+            batches, valid_only, sample_cap, geojson_cap, round_output, bbox),
+        POINTS_SCHEMA,
+    )
 
-    def _window_for(transform, crs, w, h):
-        if bbox is None:
-            return None
-        return bbox_pixel_window(transform, crs, w, h, bbox)
 
-    def run(batches: Iterator) -> Iterator:
-        import pyarrow as pa
+def _points_batch(ids: list, lens: list, bufs: dict):
+    """One POINTS_SCHEMA RecordBatch from buffered chunks: chunk ``c`` has
+    ``lens[c]`` rows of image ``ids[c]``. ``image_id`` is built in Arrow
+    (``take`` of the distinct-per-chunk names), never as Python strings."""
+    import pyarrow as pa
 
-        out_ids: list = []
-        bufs = {k: [] for k in ("band", "pixel_idx", "lon", "lat", "z")}
-        n_buf = 0
+    rep = np.repeat(np.arange(len(ids), dtype=np.int32), lens)
+    return pa.RecordBatch.from_arrays(
+        [
+            pa.array(ids, pa.string()).take(pa.array(rep)),
+            pa.array(np.concatenate(bufs["band"])),
+            pa.array(np.concatenate(bufs["pixel_idx"])),
+            pa.array(np.concatenate(bufs["lon"])),
+            pa.array(np.concatenate(bufs["lat"])),
+            pa.array(np.concatenate(bufs["z"])),
+        ],
+        names=["image_id", "band", "pixel_idx", "longitude", "latitude", "elevation"],
+    )
 
-        def flush():
-            nonlocal n_buf, out_ids, bufs
-            if not n_buf:
-                return None
-            rb = pa.RecordBatch.from_arrays(
-                [
-                    pa.array(np.concatenate([np.repeat(i, ln) for i, ln in out_ids]) if out_ids else []),
-                    pa.array(np.concatenate(bufs["band"]).astype(np.int32)),
-                    pa.array(np.concatenate(bufs["pixel_idx"])),
-                    pa.array(np.concatenate(bufs["lon"])),
-                    pa.array(np.concatenate(bufs["lat"])),
-                    pa.array(np.concatenate(bufs["z"])),
-                ],
-                names=["image_id", "band", "pixel_idx", "longitude", "latitude", "elevation"],
-            )
-            out_ids = []
-            bufs = {k: [] for k in bufs}
-            n_buf = 0
-            return rb
 
-        for batch in batches:
-            tbl = batch.to_pydict()
-            for j in range(batch.num_rows):
-                win = _window_for(tbl["transform"][j], tbl["crs"][j], tbl["w"][j], tbl["h"][j])
-                for band, bi, bl, bb, bz in _extract_image(
-                    tbl["image_id"][j], tbl["bytes"][j], tbl["w"][j], tbl["h"][j],
-                    tbl["fmt"][j], tbl["transform"][j], tbl["crs"][j],
-                    tbl["band_count"][j], valid_only, sample_cap, geojson_cap,
-                    round_output, window=win,
-                ):
-                    if bbox is not None and len(bi):
-                        _mn_lon, _mn_lat, _mx_lon, _mx_lat = bbox
-                        m = (
-                            (bl >= _mn_lon) & (bl <= _mx_lon)
-                            & (bb >= _mn_lat) & (bb <= _mx_lat)
-                        )
-                        bi, bl, bb, bz = bi[m], bl[m], bb[m], bz[m]
-                    if len(bi) == 0:
-                        continue
-                    # chunk oversized bands BEFORE buffering — one
-                    # 4096x4096 band would otherwise blow the ~256k-row
-                    # batch cap 64x in a single append
-                    for lo in range(0, len(bi), _BATCH_ROWS):
-                        sl = slice(lo, lo + _BATCH_ROWS)
-                        n = len(bi[sl])
-                        out_ids.append((tbl["image_id"][j], n))
-                        bufs["band"].append(np.full(n, band, dtype=np.int64))
-                        bufs["pixel_idx"].append(bi[sl])
-                        bufs["lon"].append(bl[sl])
-                        bufs["lat"].append(bb[sl])
-                        bufs["z"].append(bz[sl])
-                        n_buf += n
-                        if n_buf >= _BATCH_ROWS:
-                            rb = flush()
-                            if rb is not None:
-                                yield rb
-        rb = flush()
-        if rb is not None:
-            yield rb
-
-    return src.mapInArrow(run, POINTS_SCHEMA)
+def _points_batches(batches: Iterator, valid_only, sample_cap, geojson_cap,
+                    round_output, bbox) -> Iterator:
+    """extract_points' mapInArrow body: image batches -> point batches of
+    about ``_BATCH_ROWS`` rows."""
+    ids: list = []
+    lens: list = []
+    bufs = {k: [] for k in ("band", "pixel_idx", "lon", "lat", "z")}
+    n_buf = 0
+    for batch in batches:
+        tbl = batch.to_pydict()
+        for j in range(batch.num_rows):
+            win = None if bbox is None else bbox_pixel_window(
+                tbl["transform"][j], tbl["crs"][j], tbl["w"][j], tbl["h"][j], bbox)
+            for band, bi, bl, bb, bz in _extract_image(
+                tbl["image_id"][j], tbl["bytes"][j], tbl["w"][j], tbl["h"][j],
+                tbl["fmt"][j], tbl["transform"][j], tbl["crs"][j],
+                tbl["band_count"][j], valid_only, sample_cap, geojson_cap,
+                round_output, window=win,
+            ):
+                if bbox is not None and len(bi):
+                    _mn_lon, _mn_lat, _mx_lon, _mx_lat = bbox
+                    m = (
+                        (bl >= _mn_lon) & (bl <= _mx_lon)
+                        & (bb >= _mn_lat) & (bb <= _mx_lat)
+                    )
+                    bi, bl, bb, bz = bi[m], bl[m], bb[m], bz[m]
+                if len(bi) == 0:
+                    continue
+                # chunk oversized bands BEFORE buffering — one
+                # 4096x4096 band would otherwise blow the ~256k-row
+                # batch cap 64x in a single append
+                for lo in range(0, len(bi), _BATCH_ROWS):
+                    sl = slice(lo, lo + _BATCH_ROWS)
+                    n = len(bi[sl])
+                    ids.append(tbl["image_id"][j])
+                    lens.append(n)
+                    bufs["band"].append(np.full(n, band, dtype=np.int32))
+                    bufs["pixel_idx"].append(bi[sl])
+                    bufs["lon"].append(bl[sl])
+                    bufs["lat"].append(bb[sl])
+                    bufs["z"].append(bz[sl])
+                    n_buf += n
+                    if n_buf >= _BATCH_ROWS:
+                        yield _points_batch(ids, lens, bufs)
+                        ids, lens = [], []
+                        bufs = {k: [] for k in bufs}
+                        n_buf = 0
+    if n_buf:
+        yield _points_batch(ids, lens, bufs)
 
 
 def extract_tile_partials(images_df, level: int = 12, valid_only: bool = True):

@@ -126,9 +126,11 @@ def _pip_barrier(df: DataFrame) -> DataFrame:
     vs 0.19s at sf0.1. Guarding the PREDICATE does not work — Spark 4
     happily pushes nondeterministic predicates through a deterministic
     Project (verified in r7 plans); the nondeterminism must sit in the
-    projection itself. Callers drop the column right after the clip."""
+    projection itself. Callers drop the column right after the clip, so a
+    caller column of the same name is refused, never reused or dropped."""
     if _PIP_BARRIER_COL in df.columns:
-        return df
+        raise ValueError(f"input already has a column named {_PIP_BARRIER_COL!r}, "
+                         "which the polygon clip uses internally")
     return df.withColumn(_PIP_BARRIER_COL, F.monotonically_increasing_id())
 
 

@@ -260,12 +260,18 @@ def q_tile_assign(spark, sf_dir):
     n_images = -1: distinct counts are NOT decomposable across a child
     merge (an image spans many child tiles) and the contract records
     that honestly rather than smuggling in a per-level repass."""
-    pts = _pts(spark, sf_dir).filter("valid")
+    return _tile_rollups(_pts(spark, sf_dir).filter("valid"))
+
+
+def _tile_rollups(pts: DataFrame) -> DataFrame:
+    """q_tile_assign's two legs over a (lon, lat, z, image_id) table."""
     z = F.col("z").cast("long")
     # ONE point-table aggregation shared by both legs: per-(tile, image)
-    # partials feed the assign rollup (count of partial rows == distinct
-    # images; int64 sums/min/max merge losslessly) AND the pyramid's
-    # finest level — the point table shuffles once, not once per leg
+    # partials feed the assign rollup (count of non-NULL partial ids ==
+    # COUNT(DISTINCT image_id); int64 sums/min/max merge losslessly) AND
+    # the pyramid's finest level — the point table shuffles once, not
+    # once per leg. A NULL image_id group keeps its points in n_points
+    # and the pyramid, as the oracle's COUNT(*) does.
     base = (
         pts.select(
             cells.tile_x_col(F.col("lon"), 12).alias("tile_x"),
@@ -285,7 +291,7 @@ def q_tile_assign(spark, sf_dir):
         base.groupBy("tile_x", "tile_y")
         .agg(
             F.sum("n_points").alias("n_points"),
-            F.count("*").alias("n_images"),
+            F.count("image_id").alias("n_images"),
             F.sum("sum_v").alias("sum_elev"),
             F.min("min_v").alias("min_elev"),
             F.max("max_v").alias("max_elev"),

@@ -8,6 +8,28 @@ merely *also* works on local[N]:
 - Arrow on, large batches (the decode UDFs move pixels JVM<->Python in
   few large Arrow batches, not rows)
 - zstd parquet, 128 MB target file partitions
+- on ``local[...]`` masters, Python workers fork from
+  ``plans.worker_daemon``, which cuts the per-task Python constant
+
+Every Arrow UDF task pays a fixed Python CPU cost in its worker. For
+an identity ``mapInArrow`` (4-core host, Python 3.11, ``local[2]``,
+reused workers; CPU of a worker between consecutive tasks) it is 0.28 s
+with the stock ``pyspark.daemon``:
+
+- ~0.23 s ``importlib.invalidate_caches()`` at task start, which makes
+  each of the worker's 16 zip importers re-read pyspark.zip's directory;
+- ~0.044 s the daemon's ``gc.collect()`` after the task, a walk of every
+  object the worker holds;
+- the rest, ~3 ms: socket handshake, reading and unpickling the
+  command, opening the Arrow streams.
+
+``plans.worker_daemon`` removes the first two: 0.003 s per task. The
+per-task wall time of the same stage over a JVM-only one (perfbench's
+``spark.py_task_fixed_ms``, ``local[4]``) fell from 58-73 ms to
+14-17 ms; the rest is JVM-side task launch and the handshake. It is
+set only for ``local[...]`` masters. On a cluster the daemon starts
+before the executor can import the application's ``--py-files``, so it
+could not import this package; there the stock daemon runs.
 """
 
 from __future__ import annotations
@@ -17,6 +39,9 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
+# the directory holding this package, so Python workers can import it
+# whatever the working directory
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def get_spark(
@@ -36,11 +61,20 @@ def get_spark(
     # python worker daemons; respects pre-set values.
     os.environ.setdefault("MALLOC_MMAP_THRESHOLD_", str(2 << 30))
     os.environ.setdefault("MALLOC_TRIM_THRESHOLD_", str(2 << 30))
+    if not master and not os.environ.get("SPARK_MASTER"):
+        master = f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
     builder = SparkSession.builder.appName(app_name)
     if master:
         builder = builder.master(master)
-    elif not os.environ.get("SPARK_MASTER"):
-        builder = builder.master(f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]")
+    for k, v in session_conf(master, shuffle_partitions, extra_conf).items():
+        builder = builder.config(k, v)
+    return builder.getOrCreate()
+
+
+def session_conf(master: str | None, shuffle_partitions: int | None = None,
+                 extra_conf: dict | None = None) -> dict:
+    """The Spark conf ``get_spark`` sets for ``master`` (None: chosen by
+    the launcher); ``extra_conf`` overrides any key."""
     conf = {
         "spark.sql.adaptive.enabled": "true",
         "spark.sql.adaptive.coalescePartitions.enabled": "true",
@@ -61,8 +95,11 @@ def get_spark(
         "spark.driver.memory": os.environ.get("SPARK_DRIVER_MEMORY", "8g"),
         "spark.ui.enabled": "false",
     }
+    if master == "local" or (master or "").startswith("local["):
+        # a cluster's executors import --py-files only after their daemon
+        # has started, so the daemon module is a local-only setting
+        conf["spark.python.daemon.module"] = f"{__package__}.worker_daemon"
+        conf["spark.executorEnv.PYTHONPATH"] = _PACKAGE_ROOT
     if extra_conf:
         conf.update(extra_conf)
-    for k, v in conf.items():
-        builder = builder.config(k, v)
-    return builder.getOrCreate()
+    return conf
