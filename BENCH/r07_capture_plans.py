@@ -18,7 +18,7 @@ os.makedirs(OUT, exist_ok=True)
 
 def main():
     from tiff_to_geojson_csv_json_format_converter_spark.operators import (
-        extract, similarity, zonal,
+        extract, similarity, tiling, zonal,
     )
     from tiff_to_geojson_csv_json_format_converter_spark.plans import entry_queries
     from tiff_to_geojson_csv_json_format_converter_spark.plans.session import get_spark
@@ -46,7 +46,7 @@ def main():
         dfs["raster_zonal_join"] = zonal.zonal_stats(
             extract.extract_points(images, valid_only=True),
             [synth.GOLDEN_DELHI_RING], "poly_0000")
-        dfs["raster_tile_fused"] = extract.extract_tile_partials(images, 12)
+        dfs["raster_tile_fused"] = tiling.tile_histogram_from_partials(extract.extract_partials(images, 12))
         dfs["raster_zonal_fused"] = zonal.zonal_stats_fused(
             images, [synth.GOLDEN_DELHI_RING], "poly_0000")
 

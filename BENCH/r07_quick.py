@@ -24,7 +24,7 @@ def main():
     import bench
 
     from tiff_to_geojson_csv_json_format_converter_spark.operators import (
-        extract, similarity, zonal,
+        extract, similarity, tiling, zonal,
     )
     from tiff_to_geojson_csv_json_format_converter_spark.plans import entry_queries
     from tiff_to_geojson_csv_json_format_converter_spark.plans.session import get_spark
@@ -55,7 +55,7 @@ def main():
                 extract.extract_points(images, valid_only=True),
                 [synth.GOLDEN_DELHI_RING], "poly_0000").count()
         elif name == "raster_tile_fused":
-            fn = lambda: extract.extract_tile_partials(images, 12).count()
+            fn = lambda: tiling.tile_histogram_from_partials(extract.extract_partials(images, 12)).count()
         elif name == "raster_zonal_fused":
             fn = lambda: zonal.zonal_stats_fused(
                 images, [synth.GOLDEN_DELHI_RING], "poly_0000").count()

@@ -38,11 +38,11 @@ images = spark.read.parquet(images_path)
 # warm-up: run the FULL job once (python worker imports, codegen, file
 # listing, page cache); then time the steady-state second run — the
 # number that projects to long-running cluster jobs
-extract.extract_tile_partials(images, 12).count()
+tiling.tile_histogram_from_partials(extract.extract_partials(images, 12)).count()
 t0 = time.perf_counter()
 # the scale-shaped plan: fused decode->affine->reproject->filter->tile
 # partial-agg (O(tiles) crosses Python->JVM, not O(pixels))
-n = extract.extract_tile_partials(images, 12).count()
+n = tiling.tile_histogram_from_partials(extract.extract_partials(images, 12)).count()
 dt = time.perf_counter() - t0
 total_px = images.selectExpr("sum(w * h * band_count)").collect()[0][0]
 n_imgs = images.count()

@@ -409,7 +409,7 @@ def main() -> None:
     n_images = int(os.environ.get("SPARK_GRAFT_BENCH_IMAGES", "256"))
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
 
-    from tiff_to_geojson_csv_json_format_converter_spark.operators import extract, zonal
+    from tiff_to_geojson_csv_json_format_converter_spark.operators import extract, tiling, zonal
     from tiff_to_geojson_csv_json_format_converter_spark.plans import entry_queries
     from tiff_to_geojson_csv_json_format_converter_spark.plans.session import get_spark
     from tiff_to_geojson_csv_json_format_converter_spark.sources import synth
@@ -486,9 +486,10 @@ def main() -> None:
 
     # the scale-shaped fused variants (partial agg inside the Arrow pass)
     probed("raster_tile_fused")
-    timings["raster_tile_fused"] = round(
-        best_of(lambda: extract.extract_tile_partials(images, 12).count()), 3
-    )
+    timings["raster_tile_fused"] = round(best_of(
+        lambda: tiling.tile_histogram_from_partials(
+            extract.extract_partials(images, 12)).count()
+    ), 3)
     total += timings["raster_tile_fused"]
 
     probed("raster_zonal_fused")

@@ -108,6 +108,20 @@ class TestCells:
         lat = rng.uniform(28.0, 28.5, 500)
         assert set(cells.cell_id(lon, lat, 12).tolist()) <= cover
 
+    def test_tile_xy_matches_spark_twin_off_the_finite_range(self, spark):
+        """NaN, +-inf and out-of-range degrees get the tile the Spark
+        column gives (its floor saturates to a long, NaN -> 0)."""
+        from pyspark.sql import functions as F
+
+        vals = [float("nan"), float("inf"), float("-inf"), 1e300, -1e300,
+                77.2, -180.0, 180.0, 28.3]
+        pairs = [(a, b) for a in vals for b in vals]
+        got = spark.createDataFrame(pairs, "lon double, lat double").select(
+            cells.tile_id_col(F.col("lon"), F.col("lat"), 12).alias("t")).collect()
+        tx, ty = cells.tile_xy(np.array([p[0] for p in pairs]),
+                               np.array([p[1] for p in pairs]), 12)
+        assert [r.t for r in got] == (tx * 4096 + ty).tolist()
+
     def test_cell_bounds_roundtrip(self):
         cid = int(cells.cell_id(np.array([77.2]), np.array([28.3]), 12)[0])
         mn_lon, mn_lat, mx_lon, mx_lat = cells.cell_bounds(cid)

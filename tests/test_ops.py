@@ -557,3 +557,15 @@ def test_jaccard_pairs_equals_bruteforce(spark, threshold_e6):
                 lo, hi = min(ida, idb), max(ida, idb)
                 want[(lo, hi)] = (inter, union, j_e6)
     assert got_set == want, (sorted(got_set), sorted(want))
+
+
+def test_jaccard_pairs_keep_ids_above_2_53(spark):
+    """Pair ids above 2^53 must reach the verify kernel and the output
+    exactly: float64 cannot hold 2^53 + 1 or 2^53 + 3."""
+    ida, idb = 2**53 + 1, 2**53 + 3
+    docs = spark.createDataFrame(
+        [(ida, BASE), (idb, BASE + " again"), (7, "zzzz unrelated text")],
+        "doc_id long, text string",
+    )
+    got = dedup.jaccard_pairs(docs, n=4, threshold_e6=500_000).collect()
+    assert [(r.doc_a, r.doc_b) for r in got] == [(ida, idb)]

@@ -373,13 +373,86 @@ class TestStreaming:
 
 class TestFusedOperators:
     def test_tile_partials_equal_row_path(self, spark, points_sdf):
-        from tiff_to_geojson_csv_json_format_converter_spark.operators import extract as ex
+        """tiles(), catalog() and analyze() aggregate inside the extract
+        pass; each equals its per-point form on images with several
+        bands, NoData pixels and all-NoData files."""
+        import pandas as pd
+
+        from tiff_to_geojson_csv_json_format_converter_spark.api import Converter
 
         images = synth.images_df(spark, "xs")
-        fused = ex.extract_tile_partials(images, 12).toPandas().sort_values("tile_id").reset_index(drop=True)
-        unf = tiling.tile_histogram(points_sdf, 12).toPandas().sort_values("tile_id").reset_index(drop=True)
-        assert fused["tile_id"].tolist() == unf["tile_id"].tolist()
-        assert fused["n_points"].tolist() == unf["n_points"].tolist()
+        conv = Converter(spark, images)
+        key = lambda df: sorted(map(tuple, df.collect()))
+        assert key(conv.tiles()) == key(tiling.tile_histogram(points_sdf, 12))
+        assert conv.catalog() == sinks.master_catalog(points_sdf, images)
+        got = conv.analyze().toPandas().set_index("image_id").sort_index()
+        want = extract.analyze_images(points_sdf).toPandas().set_index("image_id")
+        want = want.reindex(got.index).fillna({"valid_pixels": 0})
+        pd.testing.assert_frame_equal(got[want.columns], want, check_dtype=False)
+        assert (got["valid_pixels"] == 0).any() and (got["valid_pixels"] > 0).any()
+        assert images.filter("band_count > 1").count() > 0
+
+    def test_partials_duplicate_image_row(self, spark):
+        """A repeated image row doubles its points but not n_images —
+        countDistinct over the partial rows, as over the points."""
+        from pyspark.sql import functions as F
+
+        from tiff_to_geojson_csv_json_format_converter_spark.api import Converter
+
+        images = synth.images_df(spark, "xs")
+        first = extract.extract_points(images).select(F.min("image_id")).first()[0]
+        dup = images.unionByName(images.filter(F.col("image_id") == first))
+        got = sorted(map(tuple, Converter(spark, dup).tiles().collect()))
+        want = sorted(map(tuple, tiling.tile_histogram(extract.extract_points(dup), 12).collect()))
+        assert got == want
+        base = dict((t, n) for t, n, _ in Converter(spark, images).tiles().collect())
+        assert sum(n for _, n, _ in got) > sum(base.values())
+
+    def test_fold_by_key_follows_spark_nan_order(self, spark):
+        """The in-worker fold agrees with Spark's min (skips NaN) and
+        max (NaN wins) on groups with some, all and no NaN."""
+        from pyspark.sql import functions as F
+
+        key = np.array([3, 1, 3, 1, 2, 2, 4, 4], dtype=np.int64)
+        v = np.array([np.nan, 5.0, 2.0, np.nan, np.nan, np.nan, -1.0, 7.5])
+        keys, n, [(mn, mx)] = extract.fold_by_key(key, [v])
+        want = (
+            spark.createDataFrame([(int(k), float(x)) for k, x in zip(key, v)],
+                                  "k long, v double")
+            .groupBy("k").agg(F.count("*").alias("n"), F.min("v").alias("mn"),
+                              F.max("v").alias("mx"))
+            .orderBy("k").toPandas()
+        )
+        assert keys.tolist() == want["k"].tolist() and n.tolist() == want["n"].tolist()
+        np.testing.assert_array_equal(mn, want["mn"].to_numpy())
+        np.testing.assert_array_equal(mx, want["mx"].to_numpy())
+
+    def test_partials_plan_ships_no_points(self, spark, monkeypatch):
+        """The one Python node under tiles() and catalog() emits the
+        per-(image, tile) partials, not points."""
+        from tiff_to_geojson_csv_json_format_converter_spark.api import Converter
+
+        def arrow_outputs(df):
+            out, todo = [], [df._jdf.queryExecution().sparkPlan()]
+            while todo:
+                node = todo.pop()
+                if node.nodeName() == "MapInArrow":
+                    attrs = node.output()
+                    out.append([attrs.apply(i).name() for i in range(attrs.size())])
+                kids = node.children()
+                todo += [kids.apply(i) for i in range(kids.size())]
+            return out
+
+        partials = [f.split()[0] for f in extract.PARTIALS_SCHEMA.split(", ")]
+        conv = Converter(spark, synth.images_df(spark, "xs").localCheckpoint())
+        seen = []
+        real = sinks.catalog_document
+        monkeypatch.setattr(sinks, "catalog_document",
+                            lambda per_image, images: seen.append(per_image) or real(per_image, images))
+        conv.catalog()
+        assert len(seen) == 1
+        for df in (conv.tiles(), seen[0]):
+            assert arrow_outputs(df) == [partials]
 
     def test_zonal_fused_equals_row_path(self, spark, points_sdf):
         images = synth.images_df(spark, "xs")

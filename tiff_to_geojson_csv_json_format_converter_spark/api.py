@@ -15,6 +15,13 @@ Per-image output files (GeoJSON / CSV / JSON / readme) are assembled
 from ONE distributed pass; file writing is bounded by the reference's
 own output caps (10k GeoJSON features), so the driver-side assembly is
 O(files + capped features), never O(pixels).
+
+Where the points go: ``tiles()``, ``catalog()`` and ``analyze()`` only
+need aggregates, so they aggregate inside the extract pass
+(``extract.extract_partials``: one row per image and tile, folded in the
+Python worker) and only O(images x tiles) rows cross into the JVM.
+``points()``, ``convert()``, ``zonal_response()`` and ``nearest()``
+still materialize every point (``extract.extract_points``).
 """
 
 from __future__ import annotations
@@ -61,8 +68,7 @@ class Converter:
 
     def analyze(self) -> DataFrame:
         """Per-image metadata incl. sparsity (test.py:83-95)."""
-        pts = extract.extract_points(self.images, valid_only=True)
-        agg = extract.analyze_images(pts)
+        agg = self._per_image()
         # valid_pixels counts points across ALL bands — the denominator
         # must too, or multi-band images inflate the percentage
         totals = self.images.select(
@@ -176,10 +182,16 @@ class Converter:
         return joins.knn_join(pts, queries, k=k)
 
     def catalog(self) -> dict:
-        pts = extract.extract_points(self.images, valid_only=True)
-        return sinks.master_catalog(pts, self.images)
+        return sinks.catalog_document(self._per_image(), self.images)
 
     def tiles(self, level: int = tiling.DEFAULT_LEVEL) -> DataFrame:
-        return tiling.tile_histogram(
-            extract.extract_points(self.images, valid_only=True), level
+        return tiling.tile_histogram_from_partials(
+            extract.extract_partials(self.images, level)
+        )
+
+    def _per_image(self) -> DataFrame:
+        """``extract.analyze_images`` of the valid points, folded from the
+        per-(image, tile) partials."""
+        return extract.analyze_partials(
+            extract.extract_partials(self.images, tiling.DEFAULT_LEVEL)
         )

@@ -60,10 +60,14 @@ def _unpart1by1(v: np.ndarray) -> np.ndarray:
 
 
 def tile_xy(lon: np.ndarray, lat: np.ndarray, level: int) -> tuple[np.ndarray, np.ndarray]:
+    """numpy twin of ``tile_x_col``/``tile_y_col``, also off the finite
+    range: Spark's floor saturates to a long (NaN -> 0) before the clamp,
+    so the clamp runs in float here, before the int64 cast."""
     n = 1 << level
-    tx = np.floor((np.asarray(lon, dtype=np.float64) + 180.0) / 360.0 * n).astype(np.int64)
-    ty = np.floor((90.0 - np.asarray(lat, dtype=np.float64)) / 180.0 * n).astype(np.int64)
-    return np.clip(tx, 0, n - 1), np.clip(ty, 0, n - 1)
+    tx = np.floor((np.asarray(lon, dtype=np.float64) + 180.0) / 360.0 * n)
+    ty = np.floor((90.0 - np.asarray(lat, dtype=np.float64)) / 180.0 * n)
+    return tuple(np.clip(np.nan_to_num(t, nan=0.0), 0, n - 1).astype(np.int64)
+                 for t in (tx, ty))
 
 
 def cell_id(lon: np.ndarray, lat: np.ndarray, level: int) -> np.ndarray:

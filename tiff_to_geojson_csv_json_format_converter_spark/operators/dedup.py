@@ -146,13 +146,16 @@ def _verify_jaccard_blocked(cand: DataFrame, sets_df: DataFrame,
         "doc_a", "doc_b",
         F.lit(None).cast("binary").alias("blob"),
     )
+    # set rows repeat their own id as doc_b (the kernel tells them apart
+    # by the blob): a null there would make pandas read the whole doc_b
+    # column as float64 and corrupt ids above 2^53
     rep_sets = (
         packed
         .withColumn("b", F.pmod(F.xxhash64("doc_a"), F.lit(B)).cast("int"))
         .withColumn("o", F.explode(F.sequence(F.lit(0), F.lit(B - 1))))
         .select(
             F.least("b", "o").alias("bi"), F.greatest("b", "o").alias("bj"),
-            "doc_a", F.lit(None).cast(id_t).alias("doc_b"), "blob",
+            "doc_a", F.col("doc_a").alias("doc_b"), "blob",
         )
     )
     out_schema = (f"doc_a {id_t}, doc_b {id_t}, n_inter long, "

@@ -387,41 +387,42 @@ def json_struct_of_arrays(
 
 
 def master_catalog(points: DataFrame, images: DataFrame) -> dict:
-    """The master catalog document (doesSamples.py:351-466): one
-    aggregation query -> per-file entries (sorted) + overall bounds."""
-    agg = points.groupBy("image_id").agg(
-        F.count("*").alias("points"),
-        F.min("longitude").alias("min_lon"), F.max("longitude").alias("max_lon"),
-        F.min("latitude").alias("min_lat"), F.max("latitude").alias("max_lat"),
-        F.min("elevation").alias("min_z"), F.max("elevation").alias("max_z"),
-    )
+    """The master catalog document (doesSamples.py:351-466) of a points
+    table: per-file entries (sorted) + overall bounds."""
+    from .extract import analyze_images
+
+    return catalog_document(analyze_images(points), images)
+
+
+def catalog_document(per_image: DataFrame, images: DataFrame) -> dict:
+    """:func:`master_catalog` from a per-image aggregate with
+    ``extract.analyze_images`` columns (``valid_pixels`` and min/max of
+    longitude, latitude, elevation) — one aggregation query."""
     # LEFT join from the image catalog: all-NoData files contribute zero
     # points but the reference catalog enumerates every source file
     # (has_valid_data=false entries, doesSamples.py:351-466)
     per_file = (
         images.select("image_id", "w", "h", "caption")
-        .join(agg, "image_id", "left")
-        .na.fill({"points": 0})
+        .join(per_image, "image_id", "left")
+        .na.fill({"valid_pixels": 0})
         .orderBy("image_id")  # doesSamples.py:439 sort by source
     ).collect()
+    # per-file bound -> overall_bounds key, fold
+    folds = (("min_longitude", "min_x", min), ("max_longitude", "max_x", max),
+             ("min_latitude", "min_y", min), ("max_latitude", "max_y", max),
+             ("min_elevation", "min_z", min), ("max_elevation", "max_z", max))
     files = []
-    ob = {"min_x": None, "max_x": None, "min_y": None, "max_y": None, "min_z": None, "max_z": None}
+    ob = {dst: None for _, dst, _ in folds}
     for r in per_file:
         d = r.asDict()
         files.append({
             "source_tiff": d["image_id"], "file_prefix": d["image_id"],
-            "bounds_wgs84": {
-                "min_longitude": d["min_lon"], "max_longitude": d["max_lon"],
-                "min_latitude": d["min_lat"], "max_latitude": d["max_lat"],
-                "min_elevation": d["min_z"], "max_elevation": d["max_z"],
-            },
-            "original_points": d["w"] * d["h"], "frontend_points": d["points"],
-            "has_valid_data": d["points"] > 0,
+            "bounds_wgs84": {src: d[src] for src, _, _ in folds},
+            "original_points": d["w"] * d["h"], "frontend_points": d["valid_pixels"],
+            "has_valid_data": d["valid_pixels"] > 0,
             "available_formats": {"csv": True, "json": True, "geojson_wgs84": True, "readme": True},
         })
-        for src, dst, fn in (("min_lon", "min_x", min), ("max_lon", "max_x", max),
-                             ("min_lat", "min_y", min), ("max_lat", "max_y", max),
-                             ("min_z", "min_z", min), ("max_z", "max_z", max)):
+        for src, dst, fn in folds:
             if d[src] is None:
                 continue  # zero-point file: no bounds to fold
             ob[dst] = d[src] if ob[dst] is None else fn(ob[dst], d[src])

@@ -63,6 +63,15 @@ def tile_histogram(points: DataFrame, level: int = DEFAULT_LEVEL) -> DataFrame:
     )
 
 
+def tile_histogram_from_partials(partials: DataFrame) -> DataFrame:
+    """:func:`tile_histogram` over ``extract.extract_partials`` rows (tile
+    level fixed by the partials): ``n`` sums to the point count, and
+    ``countDistinct`` over the (image, tile) rows keeps the null- and
+    duplicate-id semantics of the point form."""
+    return partials.groupBy("tile_id").agg(
+        F.sum("n").alias("n_points"), F.countDistinct("image_id").alias("n_images"))
+
+
 def tile_pyramid(points: DataFrame, value_col: str, finest: int = 12,
                  coarsest: int = 6, lon_col: str = "longitude",
                  lat_col: str = "latitude",

@@ -43,7 +43,7 @@ def zonal_stats(points: DataFrame, rings: list, polygon_id: str = "poly") -> Dat
 def zonal_stats_fused(images: DataFrame, rings: list, polygon_id: str = "poly") -> DataFrame:
     """FUSED decode -> clip -> per-(image, band) partial stats in one
     Arrow pass (the O(pixels)->O(images) shuffle shrink; see
-    extract.extract_tile_partials). The polygon rides in by closure
+    extract.extract_partials). The polygon rides in by closure
     (broadcast); per-image bbox pre-check skips decode entirely for
     non-overlapping images — the reference's file prefilter, fused."""
     import numpy as np

@@ -1596,12 +1596,12 @@ def q_raster_zonal_delhi(spark, sf_dir):
 
 @_register("raster_tile_catalog")
 def q_raster_tile_catalog(spark, sf_dir):
-    """Tiling + catalog rollup over decoded rasters."""
+    """Tiling + catalog rollup over decoded rasters, aggregated inside
+    the extract pass (same path as ``Converter.tiles``)."""
     from ..operators import extract
 
     images = synth.images_df(spark, "xs")
-    pts = extract.extract_points(images, valid_only=True)
-    return tiling.tile_histogram(pts, level=12)
+    return tiling.tile_histogram_from_partials(extract.extract_partials(images, 12))
 
 
 _JACCARD_NOBLOCK_SQL = """
