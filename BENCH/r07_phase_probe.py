@@ -118,8 +118,7 @@ def main():
         n_cand = [0]
 
         def cand():
-            c, _, _ = joins.cell_cover_candidates(
-                pts_cc, polys, 8, "lon", "lat", rings="none")
+            c, _, _ = joins.cell_cover_candidates(pts_cc, polys, 8, "lon", "lat")
             n_cand[0] = c.count()
         timed("cell.cand_count", cand, out)
         out["cell.n_candidates"] = n_cand[0]

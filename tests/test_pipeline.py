@@ -128,39 +128,6 @@ class TestTiling:
         assert np.array_equal(got["cell_id"].to_numpy(), want_cell)
         assert np.array_equal(got["tile_id"].to_numpy(), tx * (1 << 12) + ty)
 
-    def test_multi_level_cell_ids_bit_equal(self, spark, points_sdf, points_pdf):
-        """The derived multi-level forms (cell_id_multi_col /
-        explode_cell_levels) must be bit-equal to the direct per-level
-        cell_id_col: the Z-order prefix shift and the per-level floor
-        must agree at every level, including at grid-edge coordinates."""
-        from pyspark.sql import functions as F
-
-        levels = [4, 6, 8, 10, 12, 14, 16]
-        edge = spark.createDataFrame(
-            [(-180.0, 90.0), (179.999999, -89.999999), (0.0, 0.0),
-             (180.0, -90.0), (-0.0000001, 0.0000001)],
-            "longitude double, latitude double")
-        for df in (points_sdf.select("longitude", "latitude"), edge):
-            multi = cells.cell_id_multi_col(
-                F.col("longitude"), F.col("latitude"), levels)
-            sel = df.select(
-                *[m.alias(f"m{lv}") for lv, m in zip(levels, multi)],
-                "longitude", "latitude").toPandas()
-            for lv in levels:
-                want = cells.cell_id(sel["longitude"].to_numpy(),
-                                     sel["latitude"].to_numpy(), lv)
-                assert np.array_equal(sel[f"m{lv}"].to_numpy(), want), lv
-            # explode form: same multiset of (lon, lat, cell) triples
-            ex = cells.explode_cell_levels(
-                df, F.col("longitude"), F.col("latitude"), levels).toPandas()
-            assert len(ex) == len(sel) * len(levels)
-            got = sorted(zip(ex["longitude"], ex["latitude"], ex["cell"]))
-            want_all = sorted(
-                (lo, la, int(cells.cell_id(np.array([lo]), np.array([la]), lv)[0]))
-                for lo, la in zip(sel["longitude"], sel["latitude"])
-                for lv in levels)
-            assert got == want_all
-
     def test_salted_repartition_preserves_rows(self, spark, points_sdf):
         tiled = tiling.assign_tiles(points_sdf, 12)
         before = tiled.count()

@@ -190,7 +190,7 @@ def test_ann_lsh_wire_tags_plan_the_declared_wire(spark):
     """The driver's ann_lsh_topk union must really PLAN both wires:
     the dim-64 leg scores JVM-side (zip_with aggregate, no Python in
     the re-rank), the dim-192 leg rides the binary wire (packed-blob
-    Arrow scorer — no zip_with anywhere in its plan)."""
+    Arrow scoring kernel — no zip_with anywhere in its plan)."""
     from tiff_to_geojson_csv_json_format_converter_spark.operators import similarity
 
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
@@ -204,7 +204,7 @@ def test_ann_lsh_wire_tags_plan_the_declared_wire(spark):
     wide = emb.select("vec_id", wide_vec.alias("embedding"))
     wplan = plan_str(similarity.lsh_topk(wide, k=5, dim=192))
     assert "zip_with" not in wplan  # binary wire: no per-element lambda
-    assert wplan.count("MapInPandas") >= 2  # bucket kernel + Arrow scorer
+    assert wplan.count("MapInPandas") >= 2  # bucket kernel + Arrow scoring kernel
 
 
 def test_cosine_pairs_auto_routes_high_threshold_through_lsh(spark):
@@ -344,7 +344,10 @@ def test_jaccard_join_is_prefix_equi_join(spark):
 
 def test_cell_cover_join_is_equi_join(spark):
     """D1-at-scale: points meet polygons on the cell key (shuffled
-    equi-join), never a cartesian / broadcast nested loop."""
+    equi-join), never a cartesian / broadcast nested loop, and the
+    exact refinement is the plan's one Arrow eval node."""
+    import re
+
     pts = spark.createDataFrame(
         [(1, 77.25, 28.25, 5.0)],
         "point_id long, longitude double, latitude double, elevation double",
@@ -354,15 +357,15 @@ def test_cell_cover_join_is_equi_join(spark):
     p = plan_str(df)
     assert "CartesianProduct" not in p and "BroadcastNestedLoopJoin" not in p
     assert "SortMergeJoin" in p or "ShuffledHashJoin" in p or "BroadcastHashJoin" in p
+    assert len(re.findall(r"^\(\d+\) ArrowEvalPython$", p, re.M)) == 1
 
 
-def test_cell_cover_codegen_scorer_bit_equal_and_jvm_only(spark):
-    """The default 'codegen' PIP scorer must (a) plan NO Python
-    evaluation node — the Arrow kernel's per-worker constants made the
-    join scale negatively 8->32 cores (BENCH/r06_diag_cell_cover.json)
-    — and (b) agree bit-for-bit with the Arrow kernel AND the numpy
-    reference, including hole polygons and an UNCLOSED ring (the wrap
-    edge close_ring() adds)."""
+def test_cell_cover_join_matches_numpy_pip(spark):
+    """The join must agree with the numpy reference
+    (``geometry.points_in_polygon``) on a hole polygon and an UNCLOSED
+    ring (the wrap edge close_ring() adds). Level 8 is the default
+    (every cover cell is a boundary cell here); level 12 also yields
+    interior cells, so both branches of the kernel are exercised."""
     import json
 
     from tiff_to_geojson_csv_json_format_converter_spark.functions import (
@@ -392,16 +395,6 @@ def test_cell_cover_codegen_scorer_bit_equal_and_jvm_only(spark):
     pts = spark.createDataFrame(
         pts_xy, "point_id long, longitude double, latitude double")
 
-    got = {}
-    for scorer in ("codegen", "arrow"):
-        df = joins.cell_cover_join(pts, polys, level=8, scorer=scorer)
-        got[scorer] = {(r["point_id"], r["polygon_id"])
-                       for r in df.collect()}
-        p = plan_str(df)
-        if scorer == "codegen":
-            assert "ArrowEvalPython" not in p and "BatchEvalPython" not in p
-    assert got["codegen"] == got["arrow"]
-
     x = np.array([p[1] for p in pts_xy])
     y = np.array([p[2] for p in pts_xy])
     ids = np.array([p[0] for p in pts_xy])
@@ -410,58 +403,22 @@ def test_cell_cover_codegen_scorer_bit_equal_and_jvm_only(spark):
         inside = gf.points_in_polygon(
             x, y, [np.asarray(r, dtype=np.float64) for r in rr])
         want |= {(int(i), pid) for i in ids[inside]}
-    assert got["codegen"] == want
+    assert want
+
+    for level, interior_kinds in ((8, {False}), (12, {False, True})):
+        got = {(r["point_id"], r["polygon_id"])
+               for r in joins.cell_cover_join(pts, polys, level=level).collect()}
+        assert got == want, level
+        cand = joins.cell_cover_candidates(pts, polys, level=level)[0]
+        assert {r["interior"] for r in
+                cand.select("interior").distinct().collect()} == interior_kinds
 
 
-def test_cell_cover_adaptive_levels(spark):
-    """level=None picks the cover level PER POLYGON: identical result
-    multiset to any fixed level (PIP refinement is exact, candidates
-    only vary), strictly FEWER exact-scored boundary candidates on a
-    mixed-size layer, and a plan that stays an equi-join. (Adaptive is
-    an OPT-IN, not the default — BENCH/r06_inversion_ab.json measured
-    it slower than level=8 on this data shape.)"""
-    from collections import Counter
-
-    pts = spark.read.parquet(f"{SF}/lineitem.parquet").selectExpr(
-        "l_orderkey * 10 + l_linenumber as point_id",
-        "77.0 + (l_partkey % 1000) * 0.0005 as longitude",
-        "28.0 + (l_suppkey % 1000) * 0.0005 as latitude")
-    polys = synth.polygons_df(spark)
-
-    fixed = joins.cell_cover_join(pts, polys, level=8)
-    adapt = joins.cell_cover_join(pts, polys, level=None)
-    key = lambda r: (r["point_id"], r["polygon_id"])
-    assert Counter(map(key, fixed.collect())) == Counter(
-        map(key, adapt.collect()))
-    p = plan_str(adapt)
-    assert "CartesianProduct" not in p and "BroadcastNestedLoopJoin" not in p
-
-    nb_fixed = joins.cell_cover_candidates(pts, polys, level=8)[0] \
-        .filter("not interior").count()
-    nb_adapt = joins.cell_cover_candidates(pts, polys, level=None)[0] \
-        .filter("not interior").count()
-    assert nb_adapt < nb_fixed
-
-    # _auto_level: monotone in polygon size, capped cover, menu-valued
-    lv_small = joins._auto_level(77.0, 28.0, 77.01, 28.01)
-    lv_big = joins._auto_level(70.0, 20.0, 90.0, 35.0)
-    assert lv_small > lv_big
-    assert lv_small in joins._ADAPTIVE_LEVELS
-    assert lv_big in joins._ADAPTIVE_LEVELS
-    for lv, box in ((lv_small, (77.0, 28.0, 77.01, 28.01)),
-                    (lv_big, (70.0, 20.0, 90.0, 35.0))):
-        assert len(cells.cover_bbox(*box, lv)) <= 4096
-    # the cap is a promise: an unsatisfiable cap raises, never over-covers
-    with pytest.raises(ValueError, match="max_cover_cells"):
-        joins._auto_level(-180.0, -90.0, 180.0, 90.0, max_cover_cells=100)
-
-
-def test_cell_cover_scorers_agree_on_schema_and_fail_loudly(spark):
-    """Scorer interchangeability and detect-don't-drop: identical column
-    ORDER from both scorers (positional readers must not care which one
-    ran), a driver-collect cap on the arrow path, and loud codegen
-    failures for unparseable / degenerate geometry (a silent NULL
-    parity would drop boundary rows while keeping interior rows)."""
+def test_cell_cover_join_schema_and_fails_loudly(spark):
+    """Column ORDER is the points columns then ``polygon_id``
+    (positional readers depend on it), the driver-collect cap raises,
+    and unparseable / degenerate geometry fails loudly instead of
+    dropping rows."""
     import json
 
     pts = spark.createDataFrame(
@@ -478,36 +435,21 @@ def test_cell_cover_scorers_agree_on_schema_and_fail_loudly(spark):
 
     square = [[[77.0, 28.0], [77.5, 28.0], [77.5, 28.5], [77.0, 28.5],
                [77.0, 28.0]]]
-    cols = {s: joins.cell_cover_join(pts, layer(square), scorer=s).columns
-            for s in ("arrow", "codegen")}
-    assert cols["arrow"] == cols["codegen"] == [
+    assert joins.cell_cover_join(pts, layer(square)).columns == [
         "point_id", "longitude", "latitude", "polygon_id"]
 
     with pytest.raises(ValueError, match="max_layer_rows"):
-        joins.cell_cover_join(pts, layer(square), scorer="arrow",
-                              max_layer_rows=0)
+        joins.cell_cover_join(pts, layer(square), max_layer_rows=0)
 
-    # corrupt JSON: must raise at evaluation, not emit partial rows
-    # (the cover stage's json.loads detects it first — loud is loud)
+    # corrupt JSON: must raise, not emit partial rows
     bad = layer('{"type": "Polygon", "coordinates": [[[77.0, oops')
-    with pytest.raises(Exception,
-                       match="Expecting value|unparseable polygon"):
-        joins.cell_cover_join(pts, bad, scorer="codegen").collect()
+    with pytest.raises(Exception, match="Expecting value"):
+        joins.cell_cover_join(pts, bad).collect()
 
-    # degenerate 1-point ring: raised by whichever stage sees it first
-    # (cover's close_ring or the codegen size guard), never silent
+    # degenerate 1-point ring: close_ring raises, never silent
     degen = layer([[[77.25, 28.25]]])
     with pytest.raises(Exception, match="ring must"):
-        joins.cell_cover_join(pts, degen, scorer="codegen").collect()
-
-    # the parity predicate's own null guard (defense-in-depth for
-    # rings that reach it as null elements, e.g. non-numeric coords
-    # under the 3-level schema): loud error, not a NULL filter drop
-    nul = pts.withColumn("rings_arr", F.from_json(
-        F.lit('[[["a", "b"], ["c", "d"], ["e", "f"]]]'),
-        "array<array<array<double>>>"))
-    with pytest.raises(Exception, match="null or mis-nested"):
-        nul.filter(joins._pip_parity_pred("longitude", "latitude")).collect()
+        joins.cell_cover_join(pts, degen).collect()
 
 
 def test_clip_fallback_ladder_rungs(spark):

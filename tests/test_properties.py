@@ -31,10 +31,9 @@ def test_cell_roundtrip_and_parent_prefix(lon, lat, level):
        coarse=st.integers(min_value=0, max_value=16),
        delta=st.integers(min_value=0, max_value=12))
 def test_zorder_prefix_shift_derivation(lon, lat, coarse, delta):
-    """The derivation the multi-level Column builders rely on
-    (cells.cell_id_multi_col / explode_cell_levels): the morton code at
-    a coarser level IS the finer level's morton shifted right by twice
-    the level difference — for ANY coordinate, because IEEE
+    """The Z-order prefix property behind ``cells.parent``: the morton
+    code at a coarser level IS the finer level's morton shifted right
+    by twice the level difference — for ANY coordinate, because IEEE
     power-of-two scaling is exact so the tile floors commute with the
     shift."""
     fine = coarse + delta

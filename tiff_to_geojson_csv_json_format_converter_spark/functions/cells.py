@@ -181,11 +181,10 @@ def _part1by1_col(v: "Column") -> "Column":
     The obvious shift-mask ladder duplicates its operand at every one
     of its 5 steps — a 2^5-fold expression-tree blowup per coordinate
     that breaches janino's 64 KB method limit once several cell ids
-    share one projection (the adaptive cover explodes one id per layer
-    level), dropping the whole stage out of codegen. The table form
-    references the operand 4x total; the array literal constant-folds
-    to a single object in the codegen references, so generated code
-    stays small and in whole-stage codegen."""
+    share one projection, dropping the whole stage out of codegen. The
+    table form references the operand 4x total; the array literal
+    constant-folds to a single object in the codegen references, so
+    generated code stays small and in whole-stage codegen."""
     table = F.expr(_morton_table_sql())
     out = None
     for byte_i in range(4):  # 28-bit levels: 4 bytes cover tile_x/y
@@ -196,86 +195,12 @@ def _part1by1_col(v: "Column") -> "Column":
     return out
 
 
-def _morton_col(lon: "Column", lat: "Column", level: int) -> "Column":
-    """Interleaved morton(tile_x, tile_y) at ``level`` — the shared
-    core of every Column-side cell-id builder (single- and
-    multi-level), so the tile-floor + byte-table derivation exists in
-    exactly one place."""
-    return _part1by1_col(tile_x_col(lon, level)).bitwiseOR(
-        F.shiftleft(_part1by1_col(tile_y_col(lat, level)), 1))
-
-
 def cell_id_col(lon: "Column", lat: "Column", level: int) -> "Column":
     """int64 cell id as a pure Column expression — tile assignment stays
     inside Tungsten codegen; no Python is involved at any scale."""
-    return F.lit(level << 58).bitwiseOR(
-        _morton_col(lon, lat, level)).cast("long")
-
-
-def cell_id_multi_col(lon: "Column", lat: "Column",
-                      levels: "list[int]") -> "list[Column]":
-    """Cell ids at SEVERAL levels from ONE morton interleave.
-
-    The adaptive cover join needs a point's cell id at every level its
-    polygon layer uses. Building each level's id independently repeats
-    the tile-floor and byte-table machinery per level — measured to
-    push the projection past janino's method limit at ~5 levels,
-    dropping the whole stage to interpreted mode (20x slower candidate
-    phase). Instead: interleave once at the FINEST requested level F,
-    then each coarser id is a right-shift — Z-order prefixes satisfy
-    ``morton(tx >> s, ty >> s) == morton(tx, ty) >> 2s``, and
-    ``tile_x`` at level L equals ``tile_x`` at F shifted by ``F - L``
-    because scaling by a power of two is exact in IEEE doubles (the
-    floor and the clamp both commute with the shift). Bit-equal to
-    :func:`cell_id_col` per level (tested)."""
-    if not levels:
-        raise ValueError("levels must be non-empty")
-    finest = max(levels)
-    m = _morton_col(lon, lat, finest)
-    return [
-        F.lit(lv << 58).bitwiseOR(
-            F.shiftrightunsigned(m, 2 * (finest - lv))).cast("long")
-        for lv in levels
-    ]
-
-
-def explode_cell_levels(df, lon: "Column", lat: "Column",
-                        levels: "list[int]", out: str = "cell"):
-    """One row per (input row, level) with the cell id at that level in
-    ``out`` — the multi-level point-side key for adaptive cover joins.
-
-    Shape matters enormously here: putting the per-level id expressions
-    inside ``explode(array(...))`` re-evaluates each element expression
-    per OUTPUT row with no common-subexpression reuse, and the Generate
-    stage runs them interpreted — measured 20-130 s for a projection
-    that takes 0.2 s in this form on the same 2M-row input. So the
-    morton interleave is materialized as a projected column FIRST (one
-    codegen evaluation per input row), the explode is over a tiny
-    foldable (shift, level-tag) struct array, and each output id is a
-    single shift+OR afterwards. Ids are bit-equal to
-    :func:`cell_id_col` per level (same derivation as
-    :func:`cell_id_multi_col`)."""
-    if not levels:
-        raise ValueError("levels must be non-empty")
-    finest = max(levels)
-    m = _morton_col(lon, lat, finest)
-    entries = F.array(*[
-        F.struct(F.lit(2 * (finest - lv)).alias("s"),
-                 F.lit(lv << 58).alias("tag"))
-        for lv in levels
-    ])
-    tmp_m, tmp_e = "_cell_lvl_m", "_cell_lvl_e"
-    for name in (tmp_m, tmp_e, out):
-        if name in df.columns:
-            raise ValueError(f"column {name!r} already present")
-    return (
-        df.withColumn(tmp_m, m)
-        .withColumn(tmp_e, F.explode(entries))
-        .withColumn(out, F.expr(
-            f"cast({tmp_e}.tag | shiftrightunsigned({tmp_m}, {tmp_e}.s) "
-            f"as long)"))
-        .drop(tmp_m, tmp_e)
-    )
+    morton = _part1by1_col(tile_x_col(lon, level)).bitwiseOR(
+        F.shiftleft(_part1by1_col(tile_y_col(lat, level)), 1))
+    return F.lit(level << 58).bitwiseOR(morton).cast("long")
 
 
 def tile_id_col(lon: "Column", lat: "Column", level: int) -> "Column":

@@ -73,9 +73,9 @@ def _pip_literal_pred(rings: list, lon_col: str, lat_col: str,
                       seed_col: str | None = None):
     """Even-odd ray-cast against a FIXED small ring list as a LITERAL
     whole-stage-codegen predicate — no Python workers, no Arrow hop,
-    no per-row ring-array walking (unlike :func:`_pip_parity_pred`,
-    whose boxed lambda evaluation over a rings column was measured
-    GC-bound; here every coordinate is a compiled double literal).
+    no per-row ring-array walking (a boxed lambda evaluation over a
+    rings column was measured GC-bound, see :func:`cell_cover_join`;
+    here every coordinate is a compiled double literal).
 
     Bit-compatible with :func:`..functions.geometry.points_in_polygon`:
     per edge the crossing abscissa evaluates the identical float64
@@ -265,79 +265,10 @@ def clip_points_multi(points: DataFrame, polygons: dict[str, list],
     return boxed.withColumn(tag_col, F.explode(tags(F.col(lon_col), F.col(lat_col))))
 
 
-def _pip_parity_pred(lon_col: str, lat_col: str,
-                     rings_col: str = "rings_arr"):
-    """Even-odd ray-cast as a PURE CATALYST predicate over parsed
-    GeoJSON rings (``array<array<array<double>>>``) — no Python workers,
-    no Arrow hop, scales with JVM threads.
-
-    Bit-compatible with :func:`..functions.geometry.points_in_polygon`:
-
-    - the crossing abscissa evaluates the IDENTICAL float64 expression
-      in the identical order, ``(xj-xi)*(y-yi)/(yj-yi)+xi`` — IEEE-754
-      ops are deterministic, so JVM == numpy bit-for-bit;
-    - XOR across shell+hole rings == parity of the TOTAL crossing
-      count, so one nested ``aggregate`` sums crossings over (ring,
-      edge) and tests oddness;
-    - an unclosed ring gets the same wrap edge ``close_ring`` appends
-      (guarded by exact first==last comparison, as numpy does).
-
-    Out of scope exactly like the numpy kernel's callers: NaN
-    coordinates (Spark orders NaN unlike IEEE; all PIP inputs are
-    valid-filtered).
-
-    Why this exists: a zero-Python PIP refinement for deployments where
-    the Python-worker fleet itself is the constraint. Measured caveat
-    (BENCH/r06_diag_cell_cover_scorer.json): at typical ring sizes the
-    boxed per-edge lambda evaluation allocates MORE JVM garbage than
-    the slim broadcast-variable Arrow kernel, so this is the option,
-    not the default — the r5 8->32-core inversion reproduced with this
-    pure-JVM plan too, which is what pinned the regression on
-    allocation/GC pressure rather than on Python worker constants.
-    """
-    x, y = f"`{lon_col}`", f"`{lat_col}`"
-
-    def edge(p1: str, p2: str) -> str:
-        xi, yi = f"element_at({p1}, 1)", f"element_at({p1}, 2)"
-        xj, yj = f"element_at({p2}, 1)", f"element_at({p2}, 2)"
-        return (f"IF(({yi} > {y}) != ({yj} > {y}) "
-                f"AND {x} < ({xj} - {xi}) * ({y} - {yi}) / ({yj} - {yi})"
-                f" + {xi}, 1L, 0L)")
-
-    first, last = "element_at(ring, 1)", "element_at(ring, size(ring))"
-    closed = (f"element_at({first}, 1) = element_at({last}, 1) "
-              f"AND element_at({first}, 2) = element_at({last}, 2)")
-    per_ring = (
-        # degenerate rings fail LOUDLY, matching close_ring's
-        # ValueError on the numpy path (a 1-point ring would otherwise
-        # hit sequence(1, 0) = [1, 0] descending and die with an opaque
-        # array-index error; a 2-point ring would silently score)
-        "CASE WHEN size(ring) < 3 THEN "
-        "raise_error(concat('ring must have >= 3 points, got ', "
-        "size(ring))) ELSE "
-        f"aggregate(sequence(1, size(ring) - 1), 0L, (c, k) -> c + "
-        + edge("element_at(ring, k)", "element_at(ring, k + 1)")
-        + f") + IF({closed}, 0L, " + edge(last, first) + ") END"
-    )
-    # mis-nested-but-valid JSON (e.g. MultiPolygon 4-level coordinates
-    # under the 3-level schema) parses to null ELEMENTS rather than a
-    # null array, which would drive the whole parity NULL — coalesce
-    # turns that into a loud error instead of silently dropped rows
-    return F.expr(
-        f"coalesce(aggregate(`{rings_col}`, 0L, "
-        f"(acc, ring) -> acc + ({per_ring})) % 2 = 1, "
-        f"cast(raise_error('ring coordinates are null or mis-nested "
-        f"(expected Polygon-style array<array<array<double>>>)') "
-        f"as boolean))"
-    )
-
-
 def cell_cover_join(points: DataFrame, polygons: DataFrame,
-                    level: int | None = 8,
+                    level: int = 8,
                     lon_col: str = "longitude", lat_col: str = "latitude",
-                    scorer: str = "arrow",
-                    max_layer_rows: int = 250_000,
-                    max_cover_cells: int = 4096) -> DataFrame:
+                    max_layer_rows: int = 250_000) -> DataFrame:
     """Point-in-polygon join for LARGE polygon sets: cell-cover equi-join
     + exact PIP refinement.
 
@@ -345,34 +276,25 @@ def cell_cover_join(points: DataFrame, polygons: DataFrame,
     reference's one-request shapes, wrong for 10^5+ polygon layers. Here
     both sides meet on a Z-order cell key instead:
 
-    1. each polygon explodes (Arrow UDF) to the cells covering its
-       bbox — narrow rows (cell, polygon_id, interior); cells wholly
+    1. each polygon explodes (Arrow UDF) to the ``level`` cells covering
+       its bbox — narrow rows (cell, polygon_id, interior); cells wholly
        inside the polygon are pre-classified so their points skip the
-       ray-cast entirely (exact work = boundary cells). With
-       ``level=None`` the cover level is chosen PER POLYGON
-       (:func:`_auto_level`): big polygons coarse cells, small
-       polygons fine cells, cover size capped at ``max_cover_cells``.
-       MEASURED trade-off (BENCH/r06 inversion A/B, sf0.1 x4, quiet
-       window): adaptive shrinks the boundary band ~10x but every
-       candidate row crosses Arrow regardless, so the total candidate
-       shrink was only ~15% (11.8M -> 10.0M) while the point side's
-       per-level explode multiplied the join probe side 4x — net
-       SLOWER at both widths (t8 5.8 vs 5.1 s, t32 12-14 vs 4.7 s).
-       Hence the FIXED default ``level=8``; reach for ``level=None``
-       only when the layer's polygon sizes span several orders of
-       magnitude AND a fixed level would breach ``max_cover_cells``;
-    2. each point gets its cell id in pure codegen (with adaptive
-       levels: one id per cover level the layer uses, via
-       :func:`cells.explode_cell_levels` — ids encode the level);
+       ray-cast entirely (exact work = boundary cells);
+    2. each point gets its cell id in pure codegen
+       (:func:`cells.cell_id_col`);
     3. a shuffle equi-join on the cell produces candidates — each point
        only ever meets polygons whose cover shares its cell, so the
        pair count is output-shaped, not |points| x |polygons|; the
-       candidate rows stay geometry-free (cell, polygon_id, interior)
-       — ring geometry reaches the scorer out-of-band (broadcast
-       variable for 'arrow', broadcast join of pre-parsed arrays for
-       'codegen'), never duplicated per candidate row;
-    4. exact ray-cast over the boundary-cell candidates only —
-       interior-cell rows short-circuit JVM-side.
+       candidate rows stay geometry-free (cell, polygon_id, interior);
+    4. exact ray-cast over the boundary-cell candidates only, in the
+       vectorized numpy kernel. Ring geometry is resolved inside the
+       kernel from a Spark broadcast variable ({polygon_id: parsed
+       ndarrays}, one copy per worker), so neither the JVM rows nor the
+       Arrow transfer ever hold a per-row geometry string (~250 B/row
+       of pure allocator+transfer garbage before; GC time was the
+       dominant cost of this stage at 32 cores,
+       BENCH/r06_diag_heap.json). Interior-cell rows short-circuit
+       inside the kernel (no ray-cast — one boolean copy).
 
     Hot cells (dense tiles) are ordinary join skew — AQE skew-join or
     ``salted_repartition`` on the cell key applies. Returns the points
@@ -380,46 +302,25 @@ def cell_cover_join(points: DataFrame, polygons: DataFrame,
     exactly like a SQL join).
 
     ``polygons`` needs (polygon_id, geojson, min_lon, min_lat,
-    max_lon, max_lat) — the ``synth.polygons_df`` shape.
+    max_lon, max_lat) — the ``synth.polygons_df`` shape. The layer is
+    materialized with ONE small driver job at call time, capped at
+    ``max_layer_rows`` (raises above it).
 
-    ``scorer`` picks the exact-refinement engine, bit-equal results:
+    Measured negative results, deleted — do not rebuild them:
 
-    - ``'arrow'`` (default): the vectorized numpy kernel. The
-      candidate rows carry ONLY ``polygon_id`` — ring geometry is
-      resolved inside the kernel from a Spark broadcast variable
-      ({polygon_id: parsed ndarrays}, one copy per worker), so neither
-      the JVM rows nor the Arrow transfer ever hold a per-row geometry
-      string (~250 B/row of pure allocator+transfer garbage before;
-      GC time was the dominant cost of this stage at 32 cores,
-      BENCH/r06_diag_heap.json). Interior-cell rows short-circuit
-      inside the kernel (no ray-cast — one boolean copy).
-      Cost note: materializes the layer with ONE small driver job at
-      call time, capped at ``max_layer_rows`` (raises above it —
-      switch to 'codegen' + explicit ``level``, which keeps everything
-      executor-side, for larger layers).
-    - ``'codegen'``: :func:`_pip_parity_pred` — the ray-cast as a
-      Catalyst expression over JVM-parsed ring arrays, zero Python
-      stages. Useful where Python workers are expensive; at typical
-      vertex counts the boxed per-edge evaluation generates more JVM
-      garbage than the slim Arrow kernel, so it is not the default.
+    - r06 adaptive per-polygon cover levels (``level=None``): shrank
+      the boundary band ~10x, but every candidate still crossed Arrow
+      (11.8M -> 10.0M) while the point side's per-level explode
+      multiplied the join's probe side 4x — slower at 8 cores (5.8/7.0
+      vs 4.9/5.1 s) and at 32 (12-14 vs 4.7 s), BENCH/r06_inversion_ab.json;
+    - r06 pure-Catalyst parity ray-cast over JVM-parsed ring arrays
+      (zero Python stages): its boxed per-edge lambda evaluation made
+      more JVM garbage than this kernel — 14.5-14.8 s vs 4.6-6.6 s,
+      BENCH/r06_diag_cell_cover_scorer.json;
+    - r07 per-polygon_id LITERAL codegen parity dispatch: the predicate
+      restructures the join and lands in a substituted join condition
+      — 2.76 s vs 1.69 s at 32 cores, OPTIMIZATION_r07.md.
     """
-    if scorer == "codegen":
-        cand, lon_col, lat_col = cell_cover_candidates(
-            points, polygons, level, lon_col, lat_col, rings="parsed",
-            max_layer_rows=max_layer_rows, max_cover_cells=max_cover_cells)
-        out_cols = [c for c in cand.columns
-                    if c not in ("cell", "rings_arr", "interior",
-                                 "polygon_id") ] + ["polygon_id"]
-        return (
-            cand.filter(F.col("interior")
-                        | _pip_parity_pred(lon_col, lat_col, "rings_arr"))
-            # the broadcast join puts its key first; normalize to the
-            # 'arrow' order (points columns, then polygon_id) so the two
-            # scorers are drop-in interchangeable for positional readers
-            .select(*out_cols)
-        )
-    if scorer != "arrow":
-        raise ValueError(f"unknown scorer {scorer!r} ('codegen' or 'arrow')")
     import json as _json
 
     # the polygon layer is broadcast-small by construction (it rode a
@@ -428,41 +329,22 @@ def cell_cover_join(points: DataFrame, polygons: DataFrame,
     # deserializes ONCE per worker instead of shipping geometry per row.
     # limit()+1 bounds the driver exposure BEFORE materializing anything:
     # one job either returns the whole layer or proves it's over the cap.
-    # The SAME collect also feeds the adaptive level-set derivation —
-    # level=None must not cost a second driver job over the layer.
+    # rings are parsed in Python, as the cover stage does, so corrupt
+    # GeoJSON raises the decoder's own error
     taken = polygons.select(
-        "polygon_id", F.get_json_object("geojson", "$.coordinates"),
-        "min_lon", "min_lat", "max_lon", "max_lat",
-    ).limit(max_layer_rows + 1).collect()
+        "polygon_id", "geojson").limit(max_layer_rows + 1).collect()
     if len(taken) > max_layer_rows:
-        remedy = (
-            "pass an explicit integer level (adaptive levels also need "
-            "a driver pass over the layer)" if level is None else
-            "use scorer='codegen' (executor-side broadcast join of "
-            "parsed rings) for very large layers")
         raise ValueError(
             f"polygon layer exceeds max_layer_rows={max_layer_rows} for "
-            f"the driver-collected broadcast; {remedy}")
-    levels_used = None
-    if level is None:
-        levels_used = _levels_for_bboxes(
-            [(r[2], r[3], r[4], r[5]) for r in taken], max_cover_cells)
+            f"the driver-collected broadcast; split the layer or raise "
+            f"the cap")
     cand, lon_col, lat_col = cell_cover_candidates(
-        points, polygons, level, lon_col, lat_col, rings="none",
-        max_layer_rows=max_layer_rows, max_cover_cells=max_cover_cells,
-        levels_used=levels_used)
+        points, polygons, level, lon_col, lat_col)
     rings_map = {
         r[0]: [np.asarray(rr, dtype=np.float64)
-               for rr in _json.loads(r[1])]
+               for rr in _json.loads(r[1])["coordinates"]]
         for r in taken
     }
-    # NOTE (r07): a per-polygon_id LITERAL codegen parity dispatch was
-    # built and A/B'd here as an inversion fix (the Arrow scorer's
-    # 8->32 flatness is concurrent-python-worker pressure,
-    # BENCH/r07_diag_cell_cover.json) — but it measured SLOWER than
-    # this kernel at 32 cores (2.76s vs 1.69s quiet: the predicate
-    # restructures the join and lands in a substituted join condition),
-    # so the slim broadcast-variable kernel stays the default.
     bc = points.sparkSession.sparkContext.broadcast(rings_map)
 
     @F.pandas_udf(BooleanType())
@@ -491,84 +373,17 @@ def cell_cover_join(points: DataFrame, polygons: DataFrame,
     )
 
 
-# the adaptive-cover level menu: even levels 4..16 (cell areas step by
-# 16x). A FIXED menu keeps the point side's explode bounded: a point
-# emits at most one cell id per DISTINCT level the layer actually uses.
-_ADAPTIVE_LEVELS = (4, 6, 8, 10, 12, 14, 16)
-
-
-def _auto_level(min_lon: float, min_lat: float, max_lon: float,
-                max_lat: float, max_cover_cells: int = 4096,
-                levels: tuple = _ADAPTIVE_LEVELS) -> int:
-    """Finest menu level whose bbox cover stays within
-    ``max_cover_cells`` — big polygons get coarse cells, small polygons
-    fine cells. Finer cells shrink the boundary band: the exact-PIP
-    candidate count per polygon falls as ~cell_width * perimeter /
-    area, while the cover table grows only to the cap. Pure function of
-    the bbox, so the driver (choosing the point side's level set) and
-    the executors (covering each polygon) always agree. Raises when the
-    cap is unsatisfiable even at the coarsest menu level (possible only
-    for caps below the coarsest level's worst-case cover, e.g.
-    ``max_cover_cells < 256`` with a world-spanning bbox) — the cap is
-    a promise, not a hint."""
-    best = None
-    for lv in levels:
-        x0, y1 = cells.tile_xy(np.array([min_lon]), np.array([min_lat]), lv)
-        x1, y0 = cells.tile_xy(np.array([max_lon]), np.array([max_lat]), lv)
-        n = int(x1[0] - x0[0] + 1) * int(y1[0] - y0[0] + 1)
-        if n <= max_cover_cells:
-            best = lv
-        else:
-            break
-    if best is None:
-        raise ValueError(
-            f"bbox ({min_lon}, {min_lat}, {max_lon}, {max_lat}) needs "
-            f"more than max_cover_cells={max_cover_cells} cells even at "
-            f"the coarsest menu level {levels[0]}")
-    return best
-
-
-def _levels_for_bboxes(bboxes, max_cover_cells: int) -> list:
-    """The SET of adaptive cover levels a layer uses, from its bbox
-    rows — the ONE derivation both the arrow path (which already holds
-    the collected layer) and cell_cover_candidates (which collects just
-    the bboxes) must share, or the point side's level set could
-    silently diverge from the executors' per-polygon choices."""
-    return sorted(
-        {_auto_level(mn_lon, mn_lat, mx_lon, mx_lat, max_cover_cells)
-         for mn_lon, mn_lat, mx_lon, mx_lat in bboxes}
-    ) or [_ADAPTIVE_LEVELS[0]]
-
-
 def cell_cover_candidates(points: DataFrame, polygons: DataFrame,
-                          level: int | None = 8,
+                          level: int = 8,
                           lon_col: str = "longitude",
-                          lat_col: str = "latitude", rings: str = "none",
-                          max_layer_rows: int = 250_000,
-                          max_cover_cells: int = 4096,
-                          levels_used: "list[int] | None" = None):
+                          lat_col: str = "latitude"):
     """The candidate-generation stages of :func:`cell_cover_join`
-    (polygon cell cover -> point cell key -> cell equi-join), without
-    the final PIP refinement — factored out so the scaling diagnostics
-    can time the join phase and the Python scorer phase separately.
-    Returns (candidates, lon_col, lat_col).
-
-    An integer ``level`` (default 8) pins one cover level for every
-    polygon — no driver job, and the measured fast path (see
-    :func:`cell_cover_join`). ``level=None`` picks the level PER
-    POLYGON from the :data:`_ADAPTIVE_LEVELS` menu via
-    :func:`_auto_level` — cell ids encode their level, so mixed-level
-    covers share one equi-join key; the point side explodes to one
-    cell id per level the layer uses (driver-derived from the layer's
-    bboxes, one tiny job bounded by ``max_layer_rows`` — or passed in
-    precomputed via ``levels_used`` by a caller that already collected
-    the layer, so the adaptive arrow path costs ONE driver job total).
-
-    ``rings='none'`` (the arrow scorer's shape) keeps candidate rows
-    geometry-free; ``'parsed'`` broadcast-joins the JVM-parsed
-    ``array<array<array<double>>>`` (``rings_arr``, for the codegen
-    predicate) — parsed ONCE on the broadcast side, so the
-    per-candidate-row cost is array walking, never JSON parsing."""
+    (polygon cell cover at ``level`` -> point cell key -> cell
+    equi-join -> bbox prune), without the final PIP refinement —
+    factored out so the candidate phase can be timed and counted on its
+    own. Returns (candidates, lon_col, lat_col); candidate rows carry
+    the points columns plus (cell, polygon_id, interior) and no
+    geometry."""
     import json as _json
 
     from ..functions import cells as _cells
@@ -578,11 +393,8 @@ def cell_cover_candidates(points: DataFrame, polygons: DataFrame,
             rows = {"cell": [], "polygon_id": [], "interior": [],
                     "bx0": [], "by0": [], "bx1": [], "by1": []}
             for r in pdf.itertuples(index=False):
-                lv = level if level is not None else _auto_level(
-                    r.min_lon, r.min_lat, r.max_lon, r.max_lat,
-                    max_cover_cells)
                 cover_cells = _cells.cover_bbox(
-                    r.min_lon, r.min_lat, r.max_lon, r.max_lat, lv
+                    r.min_lon, r.min_lat, r.max_lon, r.max_lat, level
                 )
                 rings_list = [np.asarray(rr, dtype=np.float64)
                               for rr in _json.loads(r.geojson)["coordinates"]]
@@ -597,7 +409,7 @@ def cell_cover_candidates(points: DataFrame, polygons: DataFrame,
                 rows["interior"].extend(interior.tolist())
                 # the polygon's exact bbox rides on each cover row so the
                 # join can drop bbox-outside candidates in codegen BEFORE
-                # the scorer: cover cells are coarse, so most boundary-
+                # the PIP kernel: cover cells are coarse, so most boundary-
                 # cell points are outside the polygon bbox and can never
                 # be PIP-inside (zero crossings) — filtering them is
                 # result-preserving and shrinks the Arrow transfer
@@ -609,61 +421,20 @@ def cell_cover_candidates(points: DataFrame, polygons: DataFrame,
 
     # (cell, polygon_id, interior, bbox) only — the rings geometry would
     # otherwise be duplicated into every covering-cell row and shuffled
-    # cover-size times; it is re-attached AFTER the cell join by a
-    # broadcast join on polygon_id (one copy per executor, not per row)
+    # cover-size times; the PIP kernel reads it from a broadcast variable
     poly_cells = polygons.mapInPandas(
         cover, "cell long, polygon_id string, interior boolean, "
                "bx0 double, by0 double, bx1 double, by1 double"
     )
-    coords = F.get_json_object("geojson", "$.coordinates")
-    if rings == "parsed":
-        parsed = F.from_json(coords, "array<array<array<double>>>")
-        # an unparseable geometry must DETECT, not silently drop: a NULL
-        # rings_arr would make the parity predicate NULL, dropping that
-        # polygon's boundary rows while KEEPING its interior rows —
-        # partial output with no error (the arrow scorer raises on the
-        # same input via json.loads on the driver)
-        rings_df = polygons.select(
-            "polygon_id",
-            F.when(parsed.isNull(), F.expr(
-                "raise_error(concat('unparseable polygon geojson "
-                "coordinates for ', polygon_id))"
-            )).otherwise(parsed).alias("rings_arr"),
-        )
-    elif rings == "none":
-        rings_df = None  # scorer resolves geometry via a broadcast var
-    else:
-        raise ValueError(
-            f"unknown rings mode {rings!r} ('parsed' or 'none')")
-    if level is None:
-        if levels_used is None:
-            # derive the SET of levels this layer uses from its bboxes
-            # (a tiny driver job over the small side, capped like the
-            # geometry broadcast); each point then emits one codegen
-            # cell id per used level — its level-L row can only meet
-            # polygons covered at L, because cell ids encode the level
-            taken = polygons.select(
-                "min_lon", "min_lat", "max_lon", "max_lat"
-            ).limit(max_layer_rows + 1).collect()
-            if len(taken) > max_layer_rows:
-                raise ValueError(
-                    f"polygon layer exceeds max_layer_rows="
-                    f"{max_layer_rows} for adaptive cover levels; pass "
-                    f"an explicit integer level for very large layers")
-            levels_used = _levels_for_bboxes(taken, max_cover_cells)
-        pts = _cells.explode_cell_levels(
-            points, F.col(lon_col), F.col(lat_col), levels_used)
-    else:
-        if "cell" in points.columns:
-            # same loud contract as explode_cell_levels' guard: the
-            # join key must never silently clobber a caller column
-            raise ValueError("column 'cell' already present")
-        pts = points.withColumn(
-            "cell", _cells.cell_id_col(F.col(lon_col), F.col(lat_col), level)
-        )
+    if "cell" in points.columns:
+        # the join key must never silently clobber a caller column
+        raise ValueError("column 'cell' already present")
+    pts = points.withColumn(
+        "cell", _cells.cell_id_col(F.col(lon_col), F.col(lat_col), level)
+    )
     cand = (
         pts.join(poly_cells, "cell")
-        # bbox prune (codegen, before any scorer): a point outside the
+        # bbox prune (codegen, before the PIP kernel): a point outside the
         # polygon's bbox has zero ray crossings, so dropping it cannot
         # change the join result; interior-cell rows skip the test
         .filter(
@@ -673,8 +444,6 @@ def cell_cover_candidates(points: DataFrame, polygons: DataFrame,
         )
         .drop("bx0", "by0", "bx1", "by1")
     )
-    if rings_df is not None:
-        cand = cand.join(F.broadcast(rings_df), "polygon_id")
     return cand, lon_col, lat_col
 
 

@@ -594,7 +594,7 @@ def cosine_pairs_blocked(df: DataFrame, threshold_e6: int = 950_000,
             return pd.DataFrame({c: pd.Series(dtype="int64") for c in out_cols})
         A = unpack_f64(a["vec"])
         Bm = A if diag else unpack_f64(b["vec"])
-        # norms + Gram products via the shared guarded scorer (f64 BLAS
+        # norms + Gram products via the shared guarded scoring block (f64 BLAS
         # inside the 53-bit window, int64 fallback past it; passing the
         # same array twice on the diagonal reuses its norms)
         dots, dots_f, na, nb = _exact_dots_norms(A, Bm)

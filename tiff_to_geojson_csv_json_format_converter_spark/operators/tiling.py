@@ -76,8 +76,7 @@ def tile_pyramid(points: DataFrame, value_col: str, finest: int = 12,
                  coarsest: int = 6, lon_col: str = "longitude",
                  lat_col: str = "latitude",
                  distinct_col: str | None = None,
-                 partials: DataFrame | None = None,
-                 checkpoint_depth: int | None = None) -> DataFrame:
+                 partials: DataFrame | None = None) -> DataFrame:
     """Multi-resolution mosaic pyramid (map-tile zoom levels): per-tile
     stats at every level in [coarsest, finest], long format
     (level, tile_x, tile_y, n_points, sum_v, min_v, max_v).
@@ -100,18 +99,14 @@ def tile_pyramid(points: DataFrame, value_col: str, finest: int = 12,
     ``approx_distinct`` (estimation error ~1-2% at the default
     lgConfigK=12, far under typical tile-stat needs).
 
-    Every level (or, with ``checkpoint_depth=k``, only the finest k)
-    is ``localCheckpoint(eager=False)``'d so the final union reads
-    each level's shuffle output once instead of re-deriving the chain
-    per branch — union branches get NO exchange reuse (r6 finding,
-    re-verified r7: a checkpoint-free pyramid plans 14 scans / 56
-    exchanges). A depth-limited variant (let the 4x-per-level-smaller
-    tail re-derive) was interleave-A/B'd in r7 and measured within
-    noise of checkpoint-all at sf0.1, so checkpoint-all stays the
-    default; the knob remains for deployments where block-store writes
-    are the constraint. The value column must already be integral
-    (callers pass floor-scaled cents) so sums stay exact int64 at any
-    scale.
+    Every level is ``localCheckpoint(eager=False)``'d so the final
+    union reads each level's shuffle output once instead of
+    re-deriving the chain per branch — union branches get NO exchange
+    reuse (r6 finding, re-verified r7: a checkpoint-free pyramid plans
+    14 scans / 56 exchanges). Checkpointing only the finest few levels
+    measured within noise of checkpoint-all in r7. The value column
+    must already be integral (callers pass floor-scaled cents) so sums
+    stay exact int64 at any scale.
 
     ``partials``: a pre-aggregated finest-level frame (tile_x, tile_y,
     n_points, sum_v, min_v, max_v — several rows per tile allowed,
@@ -152,9 +147,7 @@ def tile_pyramid(points: DataFrame, value_col: str, finest: int = 12,
         if distinct_col is not None:
             out = out.withColumn(
                 "approx_distinct", F.hll_sketch_estimate("hll"))
-        if checkpoint_depth is None or finest - level < max(checkpoint_depth, 1):
-            out = out.localCheckpoint(eager=False)
-        return out
+        return out.localCheckpoint(eager=False)
 
     if partials is not None:
         lvl = finish(
