@@ -157,6 +157,70 @@ def test_windowed_read_equals_filtered_full_extract(spark, images_pdf, images_sd
     assert len(want) <= len(got) < len(full)
 
 
+@pytest.mark.parametrize("crs, transform", [
+    ("EPSG:32643", (187.3, 41.9, 431_000.7, -23.1, -196.7, 3_121_000.3)),
+    ("EPSG:4326", (0.0021, 0.00037, 77.1, 0.00043, -0.0019, 28.4)),
+])
+def test_full_grid_path_equals_index_form_on_sheared_transform(crs, transform):
+    """With b, d != 0, the full-grid path (affine broadcast over a row and
+    a column vector, no z gather) gives exactly the x/y, and so the
+    rows, of the ``idx // w, idx % w`` form; a strided read, which
+    takes the index form, gives the same rows at its indices."""
+    from tiff_to_geojson_csv_json_format_converter_spark.functions import affine, projection
+    from tiff_to_geojson_csv_json_format_converter_spark.sources import codecs
+
+    h, w, bands = 37, 53, 2
+    idx = np.arange(h * w, dtype=np.int64)
+    xb, yb = affine.pixel_to_world(transform, np.arange(h)[:, None], np.arange(w))
+    xi, yi = affine.pixel_to_world(transform, idx // w, idx % w)
+    np.testing.assert_array_equal(xb.reshape(-1), xi)
+    np.testing.assert_array_equal(yb.reshape(-1), yi)
+
+    rng = np.random.default_rng(5)
+    grid = (rng.random((bands * h, w)) * 900 + 100).astype(np.float32)
+    grid[rng.random(grid.shape) < 0.2] = codecs.NODATA_F32
+    lon, lat = projection.to_wgs84(
+        xi.astype(np.float32).astype(np.float64), yi.astype(np.float32).astype(np.float64), crs)
+    args = ("sheared", codecs.encode(grid, "raw_f32"), w, h, "raw_f32", transform, crs, bands, True)
+    full = list(extract._extract_image(*args, None, None, False))
+    strided = list(extract._extract_image(*args, h * w // 3, None, False))
+    assert [b[0] for b in full] == [b[0] for b in strided] == list(range(bands))
+    for band, bi, bl, bb, bz in full:
+        z = grid[band * h:(band + 1) * h].reshape(-1)
+        mask = z > -1e30
+        np.testing.assert_array_equal(bi, idx[mask])
+        np.testing.assert_array_equal(bl, lon[mask])
+        np.testing.assert_array_equal(bb, lat[mask])
+        np.testing.assert_array_equal(bz, z[mask].astype(np.float64))
+    for (_, fi, fl, fb, fz), (_, si, sl, sb, sz) in zip(full, strided):
+        assert len(si) and set(si % 3) == {0}
+        keep = np.isin(fi, si)
+        for f, s in ((fi, si), (fl, sl), (fb, sb), (fz, sz)):
+            np.testing.assert_array_equal(f[keep], s)
+
+
+def test_fold_by_key_equals_one_level_stable_sort():
+    """The run-then-head fold gives bit for bit what a stable sort of
+    every row and one reduceat per key give, on keys that come in runs
+    and recur (a tile re-entered on the next pixel row), with NaN."""
+    rng = np.random.default_rng(9)
+    key = np.repeat(rng.integers(0, 6, 400), rng.integers(1, 30, 400)).astype(np.int64)
+    # rounded: equal values tie; shifted off zero: no +-0.0 tie, which
+    # neither fold pins down
+    vals = [rng.normal(size=len(key)).round(3) + 10.0 for _ in range(3)]
+    vals[1][rng.random(len(key)) < 0.05] = np.nan
+    vals[2][key == 4] = np.nan
+    order = np.argsort(key, kind="stable")
+    ks = key[order]
+    starts = np.flatnonzero(np.r_[True, ks[1:] != ks[:-1]])
+    keys, n, bounds = extract.fold_by_key(key, vals)
+    np.testing.assert_array_equal(keys, ks[starts])
+    np.testing.assert_array_equal(n, np.diff(np.r_[starts, len(ks)]))
+    for v, (mn, mx) in zip(vals, bounds):
+        assert mn.tobytes() == np.fmin.reduceat(v[order], starts).tobytes()
+        assert mx.tobytes() == np.maximum.reduceat(v[order], starts).tobytes()
+
+
 def test_analyze_bounds_match_oracle(spark, images_pdf, images_sdf):
     pts = extract.extract_points(images_sdf, valid_only=True)
     got = extract.analyze_images(pts).toPandas().set_index("image_id").sort_index()

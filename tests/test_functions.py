@@ -75,6 +75,72 @@ class TestProjection:
         lon, lat = projection.to_wgs84(np.array([77.25]), np.array([28.1]), "EPSG:4326")
         assert lon[0] == 77.25 and lat[0] == 28.1
 
+    def test_clenshaw_matches_direct_sum_on_synthetic_pixel_centres(self):
+        """Every UTM pixel centre of three seeded 96-image synthetic sets,
+        downcast to float32 as the extract kernel does."""
+        pts = {32643: ([], []), 32644: ([], [])}
+        for seed in (1, 2, 3):
+            base = 240 * int(np.random.default_rng(seed).integers(1, 10_000))
+            for i in range(base, base + 96):
+                p = synth.image_params(i, 96, [64, 256])
+                if p["crs"] == "EPSG:4326":
+                    continue
+                n = p["size"]
+                idx = np.arange(n * n)
+                x, y = affine.pixel_to_world(p["transform"], idx // n, idx % n)
+                xs, ys = pts[int(p["crs"].split(":")[1])]
+                xs.append(x.astype(np.float32).astype(np.float64))
+                ys.append(y.astype(np.float32).astype(np.float64))
+        assert all(xs for xs, _ in pts.values())  # both zones are exercised
+        for epsg, (xs, ys) in pts.items():
+            _assert_matches_direct_sum(np.concatenate(xs), np.concatenate(ys), epsg)
+
+    def test_clenshaw_matches_direct_sum_on_random_points(self):
+        """2 M points per zone over lon0 +- 3.5 deg, lat 0.5-84 deg."""
+        rng = np.random.default_rng(11)
+        for epsg in (32643, 32644):
+            lon0 = projection.utm_zone_lon0(epsg)
+            x, y = projection.utm_forward(
+                lon0 + rng.uniform(-3.5, 3.5, 2_000_000), rng.uniform(0.5, 84.0, 2_000_000), epsg)
+            _assert_matches_direct_sum(x, y, epsg)
+
+    def test_inverse_keeps_scalar_inputs(self):
+        lon, lat = projection.utm_inverse(500000.0, 3_000_000.0, 32643)
+        assert lon == 75.0 and np.ndim(lat) == 0
+        assert np.round(lat, 6) == np.round(_utm_inverse_direct(500000.0, 3_000_000.0, 32643)[1], 6)
+
+
+def _utm_inverse_direct(x, y, epsg):
+    """The reference for ``projection.utm_inverse``: the same 6th-order
+    Krüger series summed term by term, with sin/cos/sinh/cosh of every
+    multiple angle evaluated directly."""
+    j = np.arange(1, 7, dtype=np.float64)
+    k = projection._K0 * projection._ABAR
+    xi = np.asarray(y, dtype=np.float64) / k
+    eta = (np.asarray(x, dtype=np.float64) - projection._E0) / k
+    two_jxi = 2.0 * np.multiply.outer(j, xi)
+    two_jeta = 2.0 * np.multiply.outer(j, eta)
+    beta = projection._BETA.reshape((6,) + (1,) * xi.ndim)
+    xi_p = xi - np.sum(beta * np.sin(two_jxi) * np.cosh(two_jeta), axis=0)
+    eta_p = eta - np.sum(beta * np.cos(two_jxi) * np.sinh(two_jeta), axis=0)
+    chi = np.arcsin(np.sin(xi_p) / np.cosh(eta_p))
+    delta = projection._DELTA.reshape((6,) + (1,) * chi.ndim)
+    phi = chi + np.sum(delta * np.sin(2.0 * np.multiply.outer(j, chi)), axis=0)
+    lam = np.arctan2(np.sinh(eta_p), np.cos(xi_p))
+    return projection.utm_zone_lon0(epsg) + np.degrees(lam), np.degrees(phi)
+
+
+def _assert_matches_direct_sum(x, y, epsg, chunk=250_000):
+    """Clenshaw vs direct sum: within 1e-12 deg, and equal after the
+    extract kernel's np.round(., 6). Chunked to bound the direct sum's
+    (6, n) temporaries."""
+    for lo in range(0, len(x), chunk):
+        got = projection.utm_inverse(x[lo:lo + chunk], y[lo:lo + chunk], epsg)
+        want = _utm_inverse_direct(x[lo:lo + chunk], y[lo:lo + chunk], epsg)
+        for g, w in zip(got, want):
+            assert np.abs(g - w).max() <= 1e-12
+            np.testing.assert_array_equal(np.round(g, 6), np.round(w, 6))
+
 
 class TestCells:
     def test_roundtrip(self):

@@ -62,12 +62,23 @@ def _unpart1by1(v: np.ndarray) -> np.ndarray:
 def tile_xy(lon: np.ndarray, lat: np.ndarray, level: int) -> tuple[np.ndarray, np.ndarray]:
     """numpy twin of ``tile_x_col``/``tile_y_col``, also off the finite
     range: Spark's floor saturates to a long (NaN -> 0) before the clamp,
-    so the clamp runs in float here, before the int64 cast."""
+    so the clamp runs in float here, before the int64 cast (``fmax``/
+    ``fmin`` skip NaN, so NaN lands on tile 0 and +-inf on the edges).
+    Each step runs in place on one float copy per axis."""
     n = 1 << level
-    tx = np.floor((np.asarray(lon, dtype=np.float64) + 180.0) / 360.0 * n)
-    ty = np.floor((90.0 - np.asarray(lat, dtype=np.float64)) / 180.0 * n)
-    return tuple(np.clip(np.nan_to_num(t, nan=0.0), 0, n - 1).astype(np.int64)
-                 for t in (tx, ty))
+    tx = np.array(lon, dtype=np.float64)
+    tx += 180.0
+    tx /= 360.0
+    ty = np.array(lat, dtype=np.float64)
+    np.subtract(90.0, ty, out=ty)
+    ty /= 180.0
+    out = []
+    for t in (tx, ty):
+        t *= n
+        np.floor(t, out=t)
+        np.fmin(np.fmax(t, 0, out=t), n - 1, out=t)
+        out.append(t.astype(np.int64))
+    return tuple(out)
 
 
 def cell_id(lon: np.ndarray, lat: np.ndarray, level: int) -> np.ndarray:

@@ -11,6 +11,18 @@ the pyc demo's EPSG:32644), plus identity for EPSG:4326.
 Accuracy: the 6th-order series is good to sub-nanometer for UTM's
 |lon - lon0| <= 3.5 deg — far below the 6-decimal rounding the
 reference applies (completePixleOutput.py:64-68).
+
+The inverse sums its series by Clenshaw's recurrence (Karney 2011,
+"Transverse Mercator with an accuracy of a few nanometers", J. Geodesy
+85:475-485): its two series take 4 sin/cos/sinh/cosh calls a point
+instead of 30. On the 835,584 UTM pixel centres of perfbench's 96
+``ingest_tiles`` images, image by image, that is 0.32 -> 0.12 s of CPU
+(one core of a shared 4-core x86 host). It differs from the
+term-by-term sum of the same coefficients by at most 7.1e-14 deg over
+lon0 +- 3.5 deg, lat 0.5-84 deg (4 M random points, EPSG:32643/32644),
+and not at all after ``np.round(., 6)``; ``tests/test_functions.py``
+keeps the direct sum as its reference. ``utm_forward`` keeps the direct
+sum: ``synth`` derives every synthetic UTM image's transform from it.
 """
 
 from __future__ import annotations
@@ -84,20 +96,40 @@ def utm_forward(lon: np.ndarray, lat: np.ndarray, epsg: int) -> tuple[np.ndarray
     return _E0 + _K0 * _ABAR * eta, _K0 * _ABAR * xi
 
 
+def _sin_series(coef: np.ndarray, sin2, cos2):
+    """sum_j coef[j-1] * sin(2 j t) from sin 2t and cos 2t alone, by
+    Clenshaw's recurrence u_j = coef[j-1] + 2 cos(2t) u_{j+1} - u_{j+2},
+    sum = sin(2t) u_1 (Karney 2011, eq. 59). ``t`` may be complex: the
+    recurrence and the sum hold unchanged for sin/cos of a complex 2t."""
+    a = 2.0 * cos2
+    u1, u2 = a * coef[-1] + coef[-2], coef[-1]
+    for c in coef[-3::-1]:
+        u1, u2 = a * u1 - u2 + c, u1
+    return sin2 * u1
+
+
 def utm_inverse(x: np.ndarray, y: np.ndarray, epsg: int) -> tuple[np.ndarray, np.ndarray]:
-    """UTM easting/northing (m) -> WGS84 lon/lat (deg) for EPSG:326xx."""
+    """UTM easting/northing (m) -> WGS84 lon/lat (deg) for EPSG:326xx.
+
+    Both series go through :func:`_sin_series`. The xi/eta pair is one
+    complex series in zeta = xi + i eta, so the trig work per point is
+    sin 2xi, cos 2xi, sinh 2eta, cosh 2eta; the chi -> phi series takes
+    sin 2chi and cos 2chi from sin chi algebraically (chi lies in
+    [-90, 90] deg, so cos chi >= 0)."""
     lon0 = utm_zone_lon0(epsg)
     xi = np.asarray(y, dtype=np.float64) / (_K0 * _ABAR)
     eta = (np.asarray(x, dtype=np.float64) - _E0) / (_K0 * _ABAR)
-    two_jxi = 2.0 * np.multiply.outer(_J, xi)
-    two_jeta = 2.0 * np.multiply.outer(_J, eta)
-    beta = _BETA.reshape((6,) + (1,) * xi.ndim)
-    xi_p = xi - np.sum(beta * np.sin(two_jxi) * np.cosh(two_jeta), axis=0)
-    eta_p = eta - np.sum(beta * np.cos(two_jxi) * np.sinh(two_jeta), axis=0)
-    chi = np.arcsin(np.sin(xi_p) / np.cosh(eta_p))
-    two_jchi = 2.0 * np.multiply.outer(_J, chi)
-    delta = _DELTA.reshape((6,) + (1,) * chi.ndim)
-    phi = chi + np.sum(delta * np.sin(two_jchi), axis=0)
+    s2, c2 = np.sin(2.0 * xi), np.cos(2.0 * xi)
+    sh2, ch2 = np.sinh(2.0 * eta), np.cosh(2.0 * eta)
+    # sin 2zeta = sin 2xi cosh 2eta + i cos 2xi sinh 2eta,
+    # cos 2zeta = cos 2xi cosh 2eta - i sin 2xi sinh 2eta
+    d = _sin_series(_BETA, s2 * ch2 + 1j * (c2 * sh2), c2 * ch2 - 1j * (s2 * sh2))
+    xi_p = xi - d.real
+    eta_p = eta - d.imag
+    sin_chi = np.sin(xi_p) / np.cosh(eta_p)
+    sin2_chi = sin_chi * sin_chi
+    phi = np.arcsin(sin_chi) + _sin_series(
+        _DELTA, 2.0 * sin_chi * np.sqrt(1.0 - sin2_chi), 1.0 - 2.0 * sin2_chi)
     lam = np.arctan2(np.sinh(eta_p), np.cos(xi_p))
     return lon0 + np.degrees(lam), np.degrees(phi)
 

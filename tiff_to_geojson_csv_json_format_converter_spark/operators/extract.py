@@ -125,18 +125,25 @@ def _extract_image(
     if len(idx) == 0:
         return  # empty window: skip the decode entirely
     grid = codecs.decode(buf, fmt, w, h * band_count).reshape(band_count, h, w)
-    rows = idx // w
-    cols = idx % w
+    # idx is strictly increasing, so at full length it IS arange(h*w):
+    # broadcast the affine over a row and a column vector instead of
+    # splitting w*h indices — each element is the same IEEE expression
+    full = len(idx) == total
+    if full:
+        rows, cols = np.arange(h, dtype=np.int64)[:, None], np.arange(w, dtype=np.int64)
+    else:
+        rows, cols = idx // w, idx % w
     # affine at pixel centers (rasterio.transform.xy convention) — the
     # shared kernel, float32 downcast AFTER (doesSamples.py:50-52 quirk)
     from ..functions import affine as _affine
 
     xf, yf = _affine.pixel_to_world(transform, rows, cols)
-    x = xf.astype(np.float32)
-    y = yf.astype(np.float32)
+    x = xf.astype(np.float32).reshape(-1)
+    y = yf.astype(np.float32).reshape(-1)
     lon, lat = projection.to_wgs84(x.astype(np.float64), y.astype(np.float64), crs)
     for band in range(band_count):
-        z = grid[band].reshape(-1)[idx].astype(np.float32)
+        z = grid[band].reshape(-1)
+        z = (z if full else z[idx]).astype(np.float32, copy=False)
         if valid_only:
             mask = (z > 0) if grid.dtype == np.uint8 else (z > -1e30)
             if not mask.all():
@@ -404,15 +411,23 @@ def fold_by_key(key: np.ndarray, values: list) -> tuple:
     array. NaN follows Spark's ordering (NaN above every number), so a
     second fold by ``F.min``/``F.max`` gives what Spark gives over the
     unfolded rows: ``fmin`` skips NaN unless a group is all NaN, and
-    ``maximum`` returns NaN as soon as a group holds one."""
-    order = np.argsort(key, kind="stable")
-    ks = key[order]
+    ``maximum`` returns NaN as soon as a group holds one.
+
+    Row-major pixels come in runs of one key (a tile's span of an image
+    row), so each run is folded where it lies and only the run heads are
+    sorted (stable): the same counts, minima and maxima as a stable sort
+    of every row, without gathering every value."""
+    runs = np.flatnonzero(np.r_[True, key[1:] != key[:-1]])
+    order = np.argsort(key[runs], kind="stable")
+    ks = key[runs][order]
     starts = np.flatnonzero(np.r_[True, ks[1:] != ks[:-1]])
+    n = np.add.reduceat(np.diff(np.r_[runs, len(key)])[order], starts)
     out = []
     for v in values:
-        vs = v[order]
-        out.append((np.fmin.reduceat(vs, starts), np.maximum.reduceat(vs, starts)))
-    return ks[starts], np.diff(np.r_[starts, len(ks)]), out
+        mn = np.fmin.reduceat(v, runs)[order]
+        mx = np.maximum.reduceat(v, runs)[order]
+        out.append((np.fmin.reduceat(mn, starts), np.maximum.reduceat(mx, starts)))
+    return ks[starts], n, out
 
 
 def extract_partials(images_df, level: int = 12):
@@ -442,14 +457,15 @@ def _partials_batches(batches: Iterator, level: int) -> Iterator:
         tbl = batch.to_pydict()
         ids, lens, parts = [], [], []
         for j in range(batch.num_rows):
-            bands = list(_extract_image(
+            bands = [b for b in _extract_image(
                 tbl["image_id"][j], tbl["bytes"][j], tbl["w"][j], tbl["h"][j],
                 tbl["fmt"][j], tbl["transform"][j], tbl["crs"][j],
                 tbl["band_count"][j], True, None, None, True,
-            ))
-            if not any(len(b[1]) for b in bands):
+            ) if len(b[1])]
+            if not bands:
                 continue
-            lon, lat, z = (np.concatenate([b[k] for b in bands]) for k in (2, 3, 4))
+            lon, lat, z = (np.concatenate([b[k] for b in bands]) if len(bands) > 1
+                           else bands[0][k] for k in (2, 3, 4))
             tx, ty = cells.tile_xy(lon, lat, level)
             tids, n, bounds = fold_by_key(tx * (1 << level) + ty, [lon, lat, z])
             ids.append(tbl["image_id"][j])

@@ -498,11 +498,18 @@ def knn_join(
     spark = points.sparkSession
     n_parts = num_partitions or spark.sparkContext.defaultParallelism
     pts = points.withColumn("_cell", cells.cell_id_col(F.col(plon), F.col(plat), level))
-    # The small candidate side gets broadcast, so the join inherits the
-    # POINTS side's partitioning — a single-file parquet scan would make
-    # the whole fan-out single-task. Co-locate points by cell across
-    # n_parts tasks (at real scale the table is already written
-    # cell-partitioned and this is a no-op repartition).
+    # The planner picks the broadcast side of the cell join from size
+    # estimates (spark.sql.autoBroadcastJoinThreshold, 10 MB by default).
+    # On a large point table it broadcasts the candidate cells, and the
+    # join inherits the POINTS side's partitioning — a single-file
+    # parquet scan would make the whole fan-out single-task. Co-locate
+    # points by cell across n_parts tasks (at real scale the table is
+    # already written cell-partitioned and this is a no-op repartition).
+    # A point table under the threshold may be broadcast itself, keyed by
+    # _cell, on every call: perfbench spatial_query's cached 8-image
+    # table (estimated at 7.1 MB) is, for a one-query frame built with
+    # createDataFrame; its cached 48-query frame gets the candidates
+    # broadcast.
     if points.rdd.getNumPartitions() < n_parts:
         pts = pts.repartition(n_parts, "_cell")
 
@@ -515,10 +522,10 @@ def knn_join(
                 rows.append({"query_id": qid, "_cells": ring.tolist()})
             yield pd.DataFrame(rows)
 
-    # no repartition here: the candidate-cell side is the SMALL side (a
-    # few ring cells per query) and ends up broadcast — a shuffle in
-    # front of a BroadcastExchange is pure wasted wall-clock (plan-
-    # verified: Exchange feeding BroadcastExchange, r07 plans)
+    # no repartition here: the candidate-cell side (a few ring cells per
+    # query) is either broadcast or the streamed side of a broadcast
+    # join — a shuffle in front of either is pure wasted wall-clock
+    # (plan-verified: Exchange feeding BroadcastExchange, r07 plans)
     cand_cells = (
         queries.select("query_id", qlon, qlat)
         .mapInPandas(ring_cells, "query_id string, _cells array<long>")

@@ -30,6 +30,14 @@ per-task wall time of the same stage over a JVM-only one (perfbench's
 set only for ``local[...]`` masters. On a cluster the daemon starts
 before the executor can import the application's ``--py-files``, so it
 could not import this package; there the stock daemon runs.
+
+JIT flags are left at the JVM's defaults; two were measured and
+rejected (perfbench ``--seconds 2``, seed 21, one run per flag and
+workload, 4-core host). ``-XX:TieredStopAtLevel=1`` (C1 only) cut
+``spatial_query``'s ``pass_cpu_s`` from 9.68 to 6.91 s, but its pass
+wall time rose from ~3.3 to ~4.7 s; on ``ingest_tiles`` it raised
+``pass_cpu_s`` from 10.41 to 12.57 s, and ``zonal_stats`` from 0.99 to
+2.18 s. ``-XX:CICompilerCount=2`` stayed within noise on both.
 """
 
 from __future__ import annotations
