@@ -109,6 +109,44 @@ class TestKnn:
         ).toPandas()
         assert len(got) == 0 or not got["exact"].any()
 
+    def test_multi_band_ties_rank_in_band_order(self, spark):
+        """A 3-band pixel's rows share one distance; with k=3 they rank
+        by band, whatever order the rows arrive in."""
+        rows = [(0, 5, b, 77.2, 28.3) for b in (2, 1, 0)] + [(0, 6, 0, 77.3, 28.4)]
+        pts = spark.createDataFrame(
+            rows, "image_id long, pixel_idx long, band int, longitude double, latitude double")
+        qs = spark.createDataFrame([("q1", 77.2001, 28.3001)], "query_id string, lon double, lat double")
+        got = joins.knn_join(pts, qs, k=3).toPandas().sort_values("knn_rank")
+        assert got["knn_rank"].tolist() == [1, 2, 3]
+        assert got["band"].tolist() == [0, 1, 2]
+        assert (got["pixel_idx"] == 5).all()
+
+    def test_null_query_coordinates_return_no_rows(self, spark, points_sdf):
+        """A query with a null lon or lat gets no rows, even with points
+        on the grid's edge (where a null coordinate's tile would land);
+        the other queries' rows are those of the same call without it."""
+        import pandas as pd
+
+        near = synth.knn_queries(16)
+        near = near[(near.lon > 70) & (near.lon < 90)][["query_id", "lon", "lat"]]
+        nulls = pd.DataFrame([{"query_id": "null_lon", "lon": None, "lat": 28.3},
+                              {"query_id": "null_lat", "lon": 77.2, "lat": None}])
+        schema = "query_id string, lon double, lat double"
+        edge = spark.createDataFrame(
+            [("edge", 0, 0, -180.0, 28.3), ("edge", 1, 0, 77.2, 90.0)],
+            "image_id string, pixel_idx long, band int, longitude double, latitude double")
+        pts = points_sdf.select("image_id", "pixel_idx", "band", "longitude", "latitude").unionByName(edge)
+
+        def run(qpdf):
+            out = joins.knn_join(pts, spark.createDataFrame(qpdf, schema), k=2).toPandas()
+            return out.sort_values(["query_id", "knn_rank"]).reset_index(drop=True)
+
+        base = run(near)
+        with_nulls = run(pd.concat([near, nulls], ignore_index=True))
+        assert len(base) > 0
+        assert not with_nulls["query_id"].isin(["null_lon", "null_lat"]).any()
+        pd.testing.assert_frame_equal(with_nulls, base)
+
 
 class TestTiling:
     def test_column_twin_equals_numpy(self, spark, points_sdf, points_pdf):

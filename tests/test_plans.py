@@ -5,7 +5,8 @@ promises must be visible in explain() output, not just hoped for.
 - the polygon side of bbox joins is broadcast (no shuffle of the big side)
 - tile assignment is pure codegen (no Python evaluation node)
 - extraction is shuffle-free (embarrassingly parallel)
-- kNN candidate generation is an equi-join, never a cartesian product
+- kNN candidate generation is an equi-join, never a cartesian product;
+  it runs JVM-only and broadcasts only the ring cells
 """
 
 import numpy as np
@@ -74,6 +75,55 @@ def test_knn_has_no_cartesian_product(spark):
     qs = spark.createDataFrame([("q1", 77.2, 28.3)], "query_id string, lon double, lat double")
     p = plan_str(joins.knn_join(pts, qs, k=1))
     assert "CartesianProduct" not in p and "BroadcastNestedLoopJoin" not in p
+
+
+def _subtree(plan: str, node: str) -> str:
+    """The lines of ``plan`` (a tree string) under the first ``node``
+    line, the node included: every following line whose node name starts
+    further right."""
+    lines = plan.splitlines()
+    start = next(i for i, ln in enumerate(lines) if node in ln)
+
+    def col(ln):
+        return len(ln) - len(ln.lstrip(" :+-|"))
+
+    out = [lines[start]]
+    for ln in lines[start + 1:]:
+        if col(ln) <= col(lines[start]):
+            break
+        out.append(ln)
+    return "\n".join(out)
+
+
+@pytest.mark.parametrize("query_frame", ["one_request", "cached_batch"])
+def test_knn_plan_is_jvm_only_and_broadcasts_the_candidates(spark, query_frame):
+    """The executed (final AQE) kNN plan has no Python stage and exactly
+    one broadcast, of the exploded ring cells: the point table always
+    streams, whether the query side is a size-less createDataFrame
+    request or a cached batch smaller than the points."""
+    pts = spark.range(4096, numPartitions=4).selectExpr(
+        "id as pixel_idx", "77.0D + (id % 64) * 0.002D as longitude",
+        "28.0D + (id div 64) * 0.002D as latitude").cache()
+    pts.count()
+    if query_frame == "one_request":
+        qs = spark.createDataFrame([("q1", 77.05, 28.05)], "query_id string, lon double, lat double")
+    else:
+        qs = spark.createDataFrame(
+            [(f"q{i}", 77.0 + i * 0.0025, 28.0 + i * 0.0025) for i in range(48)],
+            "query_id string, lon double, lat double").cache()
+    try:
+        df = joins.knn_join(pts, qs, k=2)
+        assert len(df.collect()) > 0
+        final = df._jdf.queryExecution().executedPlan().executedPlan().toString()
+    finally:
+        pts.unpersist()
+        qs.unpersist()
+    for node in ("MapInPandas", "ArrowEvalPython", "BatchEvalPython"):
+        assert node not in final
+    assert final.count("BroadcastExchange") == 1
+    built = _subtree(final, "BroadcastExchange")
+    assert "Generate explode(sequence(" in built
+    assert "pixel_idx" not in built  # the point scan is the streamed side
 
 
 def test_salted_repartition_plan_shuffles_on_salt(spark):

@@ -1,7 +1,10 @@
 """Property-based tests (SURVEY.md §5 item 4): invariants that must hold
-for arbitrary (seeded) inputs — pure numpy layer, no Spark session."""
+for arbitrary (seeded) inputs — the pure numpy layer, and at the end the
+kNN join's Column ring cells and results against their numpy twins."""
 
 import numpy as np
+import pandas as pd
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -210,3 +213,94 @@ def test_horn_slope_aspect_ranges_and_shift_invariance(data):
     assert (a1 >= 0).all() and (a1 < 360).all()
     s2, a2, _ = terrain.horn_slope_aspect(z + np.float32(500.0), valid, 1.0, 1.0)
     np.testing.assert_allclose(s1, s2, atol=1e-3)
+
+
+# --- kNN: the Column ring and the join against brute force (Spark) ----------
+
+def _edge_queries(level: int) -> list[tuple[float, float]]:
+    """Every grid corner and edge midpoint, one cell in from each edge,
+    an exact interior cell corner, and the clamped out-of-range edges."""
+    n = 1 << level
+    w, h = 360.0 / n, 180.0 / n
+    lons = [-180.0, -180.0 + w, 0.0, 180.0 - w, 180.0, 200.0]
+    lats = [90.0, 90.0 - h, 0.0, -90.0 + h, -90.0, -95.0]
+    corner = (-180.0 + 1234 * w, 90.0 - 567 * h)
+    return [(lon, lat) for lon in lons for lat in lats] + [corner]
+
+
+@pytest.mark.parametrize("level", [12, 14])
+def test_knn_column_ring_equals_k_ring_xy(spark, level):
+    """The JVM ring of each query is exactly ``cells.k_ring_xy``'s
+    clipped Chebyshev square, decoded with ``cells.cell_to_xy``."""
+    from tiff_to_geojson_csv_json_format_converter_spark.operators import joins
+
+    qs = _edge_queries(level)
+    qdf = spark.createDataFrame([(str(i), lon, lat) for i, (lon, lat) in enumerate(qs)],
+                                "query_id string, lon double, lat double")
+    tx, ty = cells.tile_xy(np.array([q[0] for q in qs]), np.array([q[1] for q in qs]), level)
+    n = 1 << level
+    for max_ring in range(4):
+        got = {}
+        for r in joins._ring_cells(qdf, "lon", "lat", level, max_ring).collect():
+            got.setdefault(r["query_id"], set()).add((r["_cell"] // n, r["_cell"] % n))
+        for i in range(len(qs)):
+            _, rx, ry = cells.cell_to_xy(cells.k_ring_xy(int(tx[i]), int(ty[i]), level, max_ring))
+            assert got[str(i)] == set(zip(rx.tolist(), ry.tolist())), (qs[i], max_ring)
+
+
+def _knn_points(rng) -> pd.DataFrame:
+    """A dense cluster, a sparse field, multi-band pixels (the same point
+    in bands 0-2) and distinct pixels sharing one coordinate."""
+    dense = rng.uniform([77.0, 28.0], [77.05, 28.05], size=(300, 2))
+    sparse = rng.uniform([77.0, 28.0], [78.0, 29.0], size=(40, 2))
+    xy = np.vstack([dense, sparse, dense[:10]])  # the last 10 repeat a coordinate
+    pdf = pd.DataFrame({"image_id": rng.integers(0, 3, len(xy)), "pixel_idx": np.arange(len(xy)),
+                        "band": 0, "longitude": xy[:, 0], "latitude": xy[:, 1]})
+    multi = pdf.sample(30, random_state=int(rng.integers(1 << 31)))
+    return pd.concat([pdf] + [multi.assign(band=b) for b in (2, 1)], ignore_index=True)
+
+
+def _knn_queries(rng, level: int) -> list[tuple[float, float]]:
+    n = 1 << level
+    w, h = 360.0 / n, 180.0 / n
+    tx, ty = int((77.02 + 180.0) / w), int((90.0 - 28.02) / h)
+    return ([tuple(q) for q in rng.uniform([77.0, 28.0], [77.05, 28.05], size=(6, 2))]  # dense
+            + [tuple(q) for q in rng.uniform([77.1, 28.1], [78.0, 29.0], size=(4, 2))]  # sparse
+            + [(80.0, 30.0), (-120.0, 40.0)]  # outside the data's extent
+            + [(-180.0 + tx * w, 90.0 - ty * h), (-180.0 + tx * w, 28.03),
+               (77.03, 90.0 - ty * h)])  # exactly on cell edges
+
+
+@settings(max_examples=5, deadline=None)
+@given(seed=st.integers(min_value=0, max_value=2**32 - 1))
+def test_knn_join_agrees_with_brute_force(spark, seed):
+    """Exact rows are the brute-force neighbours (distance bits and tie
+    order: image_id, pixel_idx, band); inexact rows never beat the true
+    distance; a query is short of k rows only when its missing
+    neighbours lie beyond the searched radius."""
+    from tiff_to_geojson_csv_json_format_converter_spark.operators import joins
+
+    level, max_ring, k = 14, 2, 3
+    rng = np.random.default_rng(seed)
+    pdf = _knn_points(rng)
+    qs = _knn_queries(rng, level)
+    got = joins.knn_join(
+        spark.createDataFrame(pdf), spark.createDataFrame(
+            [(str(i), float(lon), float(lat)) for i, (lon, lat) in enumerate(qs)],
+            "query_id string, lon double, lat double"),
+        k=k, level=level, max_ring=max_ring).toPandas()
+    guard = (max_ring * 180.0 / (1 << level)) ** 2
+    plon, plat = pdf["longitude"].to_numpy(), pdf["latitude"].to_numpy()
+    for i, (lon, lat) in enumerate(qs):
+        rows = got[got["query_id"] == str(i)].sort_values("knn_rank")
+        assert rows["knn_rank"].tolist() == list(range(1, len(rows) + 1))
+        d2 = (plon - lon) * (plon - lon) + (plat - lat) * (plat - lat)
+        order = np.lexsort((pdf["band"], pdf["pixel_idx"], pdf["image_id"], d2))[:k]
+        assert len(rows) >= min(k, int((d2 <= guard).sum()))
+        for r, j in zip(rows.itertuples(), order):
+            assert r.exact == (r.dist2 <= guard)
+            if r.exact:
+                assert r.dist2 == d2[j]
+                assert (r.image_id, r.pixel_idx, r.band) == tuple(pdf.loc[j, ["image_id", "pixel_idx", "band"]])
+            else:
+                assert r.dist2 >= d2[j]

@@ -124,7 +124,8 @@ def parent(cid: np.ndarray, steps: int = 1) -> np.ndarray:
 
 def k_ring_xy(tx: int, ty: int, level: int, k: int) -> np.ndarray:
     """All cell ids within Chebyshev distance k of (tx, ty), clipped to
-    the grid — the neighborhood probe for cell-ring kNN (SURVEY.md D6)."""
+    the grid — the neighborhood probe for cell-ring kNN (SURVEY.md D6),
+    kept as the test oracle of its Column twin ``joins._ring_cells``."""
     n = 1 << level
     xs = np.arange(max(0, tx - k), min(n, tx + k + 1))
     ys = np.arange(max(0, ty - k), min(n, ty + k + 1))

@@ -10,11 +10,13 @@ Spark-first strategy per SURVEY.md §2.D:
   scan), (2) exact ray-casting PIP in an Arrow-batched pandas UDF.
   Optionally a cell-cover equi-join replaces (1) when polygons are
   many (cover cells pre-computed driver-side per polygon).
-- D6 kNN: index points by cell, probe expanding Chebyshev rings; the
-  candidate set is joined cell-to-cell (shuffle equi-join, never a
-  cross join), then ``row_number`` over (query, dist2) takes top-k.
-  The ring guarantee: stop expanding once the k-th best candidate is
-  closer than the nearest possible point of the next unexplored ring.
+- D6 kNN: index points by row-major tile id, probe each query's
+  Chebyshev ring square; the ring cells are exploded in codegen and
+  broadcast, the points stream past them (broadcast hash equi-join,
+  never a cross join), then ``row_number`` over (query, dist2) takes
+  top-k. The ring guarantee: a row is exact when the k-th best
+  candidate is closer than the nearest possible point of the first
+  unsearched ring.
 """
 
 from __future__ import annotations
@@ -463,6 +465,32 @@ def bbox_join(images: DataFrame, polygons: DataFrame, how: str = "inner") -> Dat
     return images.join(p, cond, how)
 
 
+def _ring_cells(queries: DataFrame, qlon: str, qlat: str, level: int,
+                max_ring: int) -> DataFrame:
+    """(query_id, _qlon, _qlat, _cell): one row per cell of each query's
+    clipped Chebyshev square of radius ``max_ring`` — the Column twin of
+    :func:`..functions.cells.k_ring_xy`, keyed row-major like
+    :func:`..functions.cells.tile_id_col`. Two ``explode(sequence(...))``
+    generators in whole-stage codegen; no Python. A query with a null
+    coordinate emits no cells: ``tile_x_col``/``tile_y_col`` would put
+    it on tile 0 (``greatest`` skips nulls) and pair it with the points
+    on the grid's edge at a null distance."""
+    n = 1 << level
+
+    def axis(t):
+        return F.explode(F.sequence(F.greatest(t - max_ring, F.lit(0)),
+                                    F.least(t + max_ring, F.lit(n - 1))))
+
+    return (
+        queries.select("query_id", F.col(qlon).alias("_qlon"), F.col(qlat).alias("_qlat"))
+        .filter(F.col("_qlon").isNotNull() & F.col("_qlat").isNotNull())
+        .withColumn("_tx", axis(cells.tile_x_col(F.col("_qlon"), level)))
+        .withColumn("_ty", axis(cells.tile_y_col(F.col("_qlat"), level)))
+        .select("query_id", "_qlon", "_qlat",
+                (F.col("_tx") * F.lit(n) + F.col("_ty")).alias("_cell"))
+    )
+
+
 def knn_join(
     points: DataFrame,
     queries: DataFrame,
@@ -471,22 +499,29 @@ def knn_join(
     max_ring: int = 2,
     point_cols: tuple = ("longitude", "latitude"),
     query_cols: tuple = ("lon", "lat"),
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """k-nearest-points per query via cell-ring expansion (SURVEY.md D6;
     reference semantics = the JS min-distance reduce emitted by the pyc
     ``tiff_processor_enhanced``: kNN with k=1 over all points).
 
-    Plan shape: points get a cell id (pure codegen); each query emits its
-    ring-0..max_ring candidate cell ids (small pandas UDF + explode);
-    candidates come from a cell equi-join (shuffle hash join on int64
-    keys — never a cross join); top-k via ``row_number`` on
-    (dist2, image_id, pixel_idx) for deterministic ties.
+    Plan shape, all JVM (no Python stage): each query explodes its
+    ring-0..max_ring cells (:func:`_ring_cells`) carrying its own
+    coordinates; that candidate-cell side is broadcast explicitly and the
+    points, keyed by the same row-major tile id in codegen, stream past
+    it (one BroadcastHashJoin, never a cross join); top-k via
+    ``row_number`` on (dist2, image_id, pixel_idx, band) for
+    deterministic ties.
+
+    The broadcast side holds at most (2·max_ring+1)² rows per query (25
+    at the defaults). Its hash relation measured ~65 bytes a row with
+    6-character query ids, so ~1.6 KB per query on top of a ~1 MB fixed
+    allocation (2.5 MB for 1,000 queries): it assumes the query side is
+    a request batch, as the broadcast query frame before it did.
 
     Guarantee: a result row is exact if its dist is <= the nearest
     possible distance of the first UNsearched ring; rows are flagged
     ``exact`` accordingly (queries in empty neighborhoods widen with
-    ``max_ring``).
+    ``max_ring``). A query with a null lon or lat returns no rows.
     """
     plon, plat = point_cols
     qlon, qlat = query_cols
@@ -495,47 +530,21 @@ def knn_join(
     # the first unsearched ring at distance max_ring * cell_h)
     cell_min_deg = 180.0 / (1 << level)
 
-    spark = points.sparkSession
-    n_parts = num_partitions or spark.sparkContext.defaultParallelism
-    pts = points.withColumn("_cell", cells.cell_id_col(F.col(plon), F.col(plat), level))
-    # The planner picks the broadcast side of the cell join from size
-    # estimates (spark.sql.autoBroadcastJoinThreshold, 10 MB by default).
-    # On a large point table it broadcasts the candidate cells, and the
-    # join inherits the POINTS side's partitioning — a single-file
-    # parquet scan would make the whole fan-out single-task. Co-locate
-    # points by cell across n_parts tasks (at real scale the table is
-    # already written cell-partitioned and this is a no-op repartition).
-    # A point table under the threshold may be broadcast itself, keyed by
-    # _cell, on every call: perfbench spatial_query's cached 8-image
-    # table (estimated at 7.1 MB) is, for a one-query frame built with
-    # createDataFrame; its cached 48-query frame gets the candidates
-    # broadcast.
+    n_parts = points.sparkSession.sparkContext.defaultParallelism
+    pts = points.withColumn("_cell", cells.tile_id_col(F.col(plon), F.col(plat), level))
+    # The streamed points keep their own partitioning through the
+    # broadcast join, so a single-file parquet scan would make the whole
+    # fan-out single-task (q_knn at sf0.1 on 4 cores: 3 splits, one task
+    # doing all 11.6 M candidate rows, 32 s instead of 8.4-9.0 s).
+    # Co-locate points by cell across the default parallelism (at real
+    # scale the table is already written cell-partitioned and this does
+    # not fire).
     if points.rdd.getNumPartitions() < n_parts:
         pts = pts.repartition(n_parts, "_cell")
 
-    def ring_cells(pdf_iter):
-        for pdf in pdf_iter:
-            qx, qy = cells.tile_xy(pdf[qlon].to_numpy(), pdf[qlat].to_numpy(), level)
-            rows = []
-            for qid, x, y in zip(pdf["query_id"], qx, qy):
-                ring = cells.k_ring_xy(int(x), int(y), level, max_ring)
-                rows.append({"query_id": qid, "_cells": ring.tolist()})
-            yield pd.DataFrame(rows)
-
-    # no repartition here: the candidate-cell side (a few ring cells per
-    # query) is either broadcast or the streamed side of a broadcast
-    # join — a shuffle in front of either is pure wasted wall-clock
-    # (plan-verified: Exchange feeding BroadcastExchange, r07 plans)
-    cand_cells = (
-        queries.select("query_id", qlon, qlat)
-        .mapInPandas(ring_cells, "query_id string, _cells array<long>")
-        .select("query_id", F.explode("_cells").alias("_cell"))
-    )
-    q = queries.select("query_id", F.col(qlon).alias("_qlon"), F.col(qlat).alias("_qlat"))
     id_cols = [c for c in points.columns if c in ("image_id", "pixel_idx", "band")]
     cand = (
-        cand_cells.join(pts, "_cell")
-        .join(F.broadcast(q), "query_id")
+        F.broadcast(_ring_cells(queries, qlon, qlat, level, max_ring)).join(pts, "_cell")
         .withColumn(
             "dist2",
             (F.col(plon) - F.col("_qlon")) * (F.col(plon) - F.col("_qlon"))
@@ -544,7 +553,11 @@ def knn_join(
         # slim before the window shuffle: only ids + rank key cross the wire
         .select("query_id", *id_cols, plon, plat, "dist2")
     )
-    order = [F.col("dist2"), *[F.col(c) for c in id_cols if c in ("image_id", "pixel_idx")]]
+    # ties: image_id and pixel_idx in the caller's column order, then the
+    # band, so a multi-band pixel ranks in band order, not shuffle order
+    order = ["dist2", *[c for c in id_cols if c != "band"]]
+    if "band" in id_cols:
+        order.append("band")
     w = Window.partitionBy("query_id").orderBy(*order)
     topk = (
         cand.withColumn("knn_rank", F.row_number().over(w))
@@ -554,10 +567,7 @@ def knn_join(
     # (max_ring ring's nearest edge, conservatively max_ring * min(cell
     # width, cell height) — the height is the binding dimension)
     guard = (max_ring * cell_min_deg) ** 2
-    return (
-        topk.withColumn("exact", F.col("dist2") <= F.lit(guard))
-        .drop("_cell", "_qlon", "_qlat")
-    )
+    return topk.withColumn("exact", F.col("dist2") <= F.lit(guard))
 
 
 def classify_clip_geometry(rings: list) -> str:
