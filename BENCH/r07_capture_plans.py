@@ -47,8 +47,6 @@ def main():
             extract.extract_points(images, valid_only=True),
             [synth.GOLDEN_DELHI_RING], "poly_0000")
         dfs["raster_tile_fused"] = tiling.tile_histogram_from_partials(extract.extract_partials(images, 12))
-        dfs["raster_zonal_fused"] = zonal.zonal_stats_fused(
-            images, [synth.GOLDEN_DELHI_RING], "poly_0000")
 
     if ONLY is None or "ann_ivf_distributed" in ONLY:
         emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")

@@ -4,7 +4,7 @@ count(), per-query host probe stamp) for a SUBSET of queries — the
 iteration loop for round-7 optimization. Usage:
   python BENCH/r07_quick.py ngram_jaccard,knn[,...]
 Special names: raster_extract, raster_zonal_join, raster_tile_fused,
-raster_zonal_fused, ann_ivf_distributed (same construction as bench.py).
+ann_ivf_distributed (same construction as bench.py).
 """
 
 import json
@@ -56,9 +56,6 @@ def main():
                 [synth.GOLDEN_DELHI_RING], "poly_0000").count()
         elif name == "raster_tile_fused":
             fn = lambda: tiling.tile_histogram_from_partials(extract.extract_partials(images, 12)).count()
-        elif name == "raster_zonal_fused":
-            fn = lambda: zonal.zonal_stats_fused(
-                images, [synth.GOLDEN_DELHI_RING], "poly_0000").count()
         elif name == "ann_ivf_distributed":
             emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
             fn = lambda: similarity.ivf_topk(

@@ -472,8 +472,8 @@ def main() -> None:
     timings["raster_extract"] = round(t_extract, 3)
     total += t_extract
 
-    # end-to-end spatial join: decode -> clip -> zonal agg in ONE plan
-    # (no materialization in between — the plan a user actually runs)
+    # end-to-end spatial join over a fresh extract frame: zonal_stats
+    # clips and folds inside the extract pass (the plan a user runs)
     probed("raster_zonal_join")
     t_zonal = best_of(
         lambda: zonal.zonal_stats(
@@ -484,7 +484,7 @@ def main() -> None:
     timings["raster_zonal_join"] = round(t_zonal, 3)
     total += t_zonal
 
-    # the scale-shaped fused variants (partial agg inside the Arrow pass)
+    # the scale-shaped fused tile variant (partial agg inside the Arrow pass)
     probed("raster_tile_fused")
     timings["raster_tile_fused"] = round(best_of(
         lambda: tiling.tile_histogram_from_partials(
@@ -492,12 +492,6 @@ def main() -> None:
     ), 3)
     total += timings["raster_tile_fused"]
 
-    probed("raster_zonal_fused")
-    t_zf = best_of(
-        lambda: zonal.zonal_stats_fused(images, [synth.GOLDEN_DELHI_RING], "poly_0000").count()
-    )
-    timings["raster_zonal_fused"] = round(t_zf, 3)
-    total += t_zf
     images.unpersist()
 
     blocked_info = None
@@ -549,7 +543,6 @@ def main() -> None:
         "extract_rows_per_sec": int(n_pts / t_extract),
         "extract_pixels_per_sec": int(total_px / t_extract),
         "spatial_join_images_per_sec": round(n_imgs / t_zonal, 2),
-        "spatial_join_fused_images_per_sec": round(n_imgs / t_zf, 2),
     }
     if blocked_info is not None:
         out["cosine_blocked"] = blocked_info

@@ -104,6 +104,36 @@ class TestConverter:
         assert resp["status"] == "success" and resp["layer"] == "slope"
         assert "band_1" in resp["min_max"]
 
+    def test_zonal_response_equals_cached_points_response(self, spark, monkeypatch):
+        """zonal_response folds inside the extract pass; the response is
+        the one built over cached points (the row path)."""
+        from tiff_to_geojson_csv_json_format_converter_spark.operators import extract, zonal
+
+        images = synth.images_df(spark, "xs").localCheckpoint()
+        conv = Converter(spark, images)
+        geom = {"type": "MultiPolygon", "coordinates": [[synth.GOLDEN_DELHI_RING]]}
+        folded = []
+        real = zonal._zonal_in_extract
+        monkeypatch.setattr(zonal, "_zonal_in_extract", lambda *a: folded.append(a) or real(*a))
+        got = json.loads(conv.zonal_response(geom, "slope"))
+        assert len(folded) == 1
+        pts = extract.extract_points(images, valid_only=True).cache()
+        monkeypatch.setattr(extract, "extract_points", lambda *a, **kw: pts)
+        try:
+            want = json.loads(conv.zonal_response(geom, "slope"))
+        finally:
+            pts.unpersist()
+        assert len(folded) == 1
+        assert set(got["min_max"]) == set(want["min_max"]) and len(want["min_max"]) > 1
+        for band, w in want["min_max"].items():
+            g = got["min_max"][band]
+            assert {k: g[k] for k in ("min", "max", "count", "data_type")} == \
+                {k: w[k] for k in ("min", "max", "count", "data_type")}
+            assert g["mean"] == pytest.approx(w["mean"], rel=1e-12, abs=0)
+            assert g["std"] == pytest.approx(w["std"], rel=1e-12, abs=0)
+        got["min_max"] = want["min_max"] = None
+        assert got == want
+
 
 class TestCsvByteParity:
     def test_csv_lines_match_pandas_to_csv(self, spark, images_pdf):

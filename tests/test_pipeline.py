@@ -10,7 +10,7 @@ import numpy as np
 import pytest
 
 from tests import oracle
-from tiff_to_geojson_csv_json_format_converter_spark.functions import cells
+from tiff_to_geojson_csv_json_format_converter_spark.functions import cells, geometry
 from tiff_to_geojson_csv_json_format_converter_spark.operators import (
     extract, joins, sinks, tiling, zonal,
 )
@@ -28,6 +28,38 @@ def images_pdf():
 @pytest.fixture(scope="module")
 def points_sdf(spark):
     return extract.extract_points(synth.images_df(spark, "xs"), valid_only=True).cache()
+
+
+@pytest.fixture(scope="module")
+def zonal_images(spark):
+    """The xs images under a plan of their own: no cached points frame
+    elsewhere in the session matches an extract over them."""
+    return synth.images_df(spark, "xs").localCheckpoint()
+
+
+def _box(x0, y0, x1, y1):
+    return [[x0, y0], [x1, y0], [x1, y1], [x0, y1], [x0, y0]]
+
+
+def _ring(cx, cy, radii):
+    """A closed ring with one vertex per radius, evenly spaced in angle."""
+    r = np.asarray(radii, dtype=np.float64)
+    a = np.pi / 2 + np.arange(len(r)) * 2 * np.pi / len(r)
+    ring = np.c_[cx + r * np.cos(a), cy + r * np.sin(a)].tolist()
+    return ring + ring[:1]
+
+
+# polygons over the xs images (16 px images of ~0.032 deg, most inside
+# the golden ring)
+_ZONAL_POLYGONS = {
+    "golden": [synth.GOLDEN_DELHI_RING],
+    "holed_box": [_box(77.0, 28.0, 77.3, 28.3), _box(77.1, 28.1, 77.2, 28.2)],
+    "concave_star": [_ring(77.25, 28.2, [0.2, 0.08] * 5)],
+    "multipolygon": geometry.normalize_geometry({"type": "MultiPolygon", "coordinates": [
+        [_box(77.405, 28.015, 77.425, 28.035)], [_box(77.15, 28.41, 77.17, 28.43)]]}),
+    "many_edges": [_ring(77.25, 28.25, [0.15] * 80)],  # the row path's Arrow PIP kernel
+    "miss": [_box(0.0, 0.0, 1.0, 1.0)],
+}
 
 
 @pytest.fixture(scope="module")
@@ -435,18 +467,8 @@ class TestFusedOperators:
     def test_partials_plan_ships_no_points(self, spark, monkeypatch):
         """The one Python node under tiles() and catalog() emits the
         per-(image, tile) partials, not points."""
+        from tests.test_plans import arrow_outputs
         from tiff_to_geojson_csv_json_format_converter_spark.api import Converter
-
-        def arrow_outputs(df):
-            out, todo = [], [df._jdf.queryExecution().sparkPlan()]
-            while todo:
-                node = todo.pop()
-                if node.nodeName() == "MapInArrow":
-                    attrs = node.output()
-                    out.append([attrs.apply(i).name() for i in range(attrs.size())])
-                kids = node.children()
-                todo += [kids.apply(i) for i in range(kids.size())]
-            return out
 
         partials = [f.split()[0] for f in extract.PARTIALS_SCHEMA.split(", ")]
         conv = Converter(spark, synth.images_df(spark, "xs").localCheckpoint())
@@ -459,15 +481,51 @@ class TestFusedOperators:
         for df in (conv.tiles(), seen[0]):
             assert arrow_outputs(df) == [partials]
 
-    def test_zonal_fused_equals_row_path(self, spark, points_sdf):
-        images = synth.images_df(spark, "xs")
-        zf = zonal.zonal_stats_fused(images, [synth.GOLDEN_DELHI_RING], "p").toPandas().sort_values(["image_id", "band"]).reset_index(drop=True)
-        zu = zonal.zonal_stats(points_sdf, [synth.GOLDEN_DELHI_RING], "p").toPandas().sort_values(["image_id", "band"]).reset_index(drop=True)
-        assert zf["count"].tolist() == zu["count"].tolist()
-        np.testing.assert_array_equal(zf["min"].to_numpy(), zu["min"].to_numpy())
-        np.testing.assert_array_equal(zf["max"].to_numpy(), zu["max"].to_numpy())
-        np.testing.assert_allclose(zf["mean"].to_numpy(), zu["mean"].to_numpy(), rtol=1e-12)
-        np.testing.assert_allclose(zf["std_pop"].to_numpy(), zu["std_pop"].to_numpy(), rtol=1e-7, atol=1e-9)
+    @pytest.mark.parametrize("case", sorted(_ZONAL_POLYGONS) + ["duplicate_image_row"])
+    def test_zonal_in_extract_equals_row_path(self, spark, zonal_images, case):
+        """zonal_stats over an untouched extract frame folds inside the
+        extract pass; over a cached copy it takes the row path. Both give
+        the same keys, counts and extremes, and mean and std_pop to
+        summation order."""
+        from pyspark.sql import functions as F
+
+        images, rings = zonal_images, _ZONAL_POLYGONS.get(case, [synth.GOLDEN_DELHI_RING])
+        if case == "duplicate_image_row":  # another image's pixels under img_00000001
+            images = images.unionByName(images.filter(F.col("image_id") == "img_00000002")
+                                        .withColumn("image_id", F.lit("img_00000001")))
+        pts = extract.extract_points(images, valid_only=True)
+        assert extract.source_images(pts) is images
+        fast_df = zonal.zonal_stats(pts, rings, "p")
+        fast = fast_df.toPandas()
+        cached = extract.extract_points(images, valid_only=True).cache()
+        try:
+            assert extract.source_images(cached) is None
+            # a fresh frame whose plan is now cached reads the cache too
+            assert extract.source_images(extract.extract_points(images, valid_only=True)) is None
+            row_df = zonal.zonal_stats(cached, rings, "p")
+            row = row_df.toPandas()
+            responses = [json.loads(zonal.stats_response(d, "l")) for d in (fast_df, row_df)]
+        finally:
+            cached.unpersist()
+        fast, row = (d.sort_values(["image_id", "band"]).reset_index(drop=True) for d in (fast, row))
+        assert list(fast.columns) == list(row.columns)
+        for c in ("polygon_id", "image_id", "band", "count", "min", "max"):
+            assert fast[c].tolist() == row[c].tolist(), c
+        for c in ("mean", "std_pop"):
+            np.testing.assert_allclose(fast[c].to_numpy(), row[c].to_numpy(), rtol=1e-12, atol=0)
+        if case == "miss":
+            assert len(fast) == 0
+            assert [r["min_max"] for r in responses] == [{"band_1": "Null"}] * 2
+            return
+        assert len(fast) > 0
+        if case == "multipolygon":  # each shell lies over its own image
+            assert {"img_00000003", "img_00000028"} <= set(fast["image_id"])
+        if case == "many_edges":
+            assert joins._count_pip_edges(rings) > joins._PIP_LITERAL_MAX_EDGES
+        if case == "duplicate_image_row":  # the key merges two partial rows
+            base = zonal.zonal_stats(extract.extract_points(zonal_images), rings).toPandas()
+            n = lambda d, i: d.loc[d["image_id"] == f"img_0000000{i}", "count"].sum()
+            assert n(fast, 1) == n(base, 1) + n(base, 2) and n(base, 1) > 0 and n(base, 2) > 0
 
 
 class TestSinks:

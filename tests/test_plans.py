@@ -14,7 +14,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from tiff_to_geojson_csv_json_format_converter_spark.functions import cells
-from tiff_to_geojson_csv_json_format_converter_spark.operators import extract, joins, tiling
+from tiff_to_geojson_csv_json_format_converter_spark.operators import extract, joins, tiling, zonal
 from tiff_to_geojson_csv_json_format_converter_spark.sources import synth
 
 SF = "/root/testdata/sf0.001"
@@ -28,6 +28,20 @@ def plan_str(df) -> str:
     with contextlib.redirect_stdout(buf):
         df.explain("formatted")
     return buf.getvalue()
+
+
+def arrow_outputs(df) -> list:
+    """The output column names of each MapInArrow node in ``df``'s
+    physical plan (a cached relation's own plan not included)."""
+    out, todo = [], [df._jdf.queryExecution().sparkPlan()]
+    while todo:
+        node = todo.pop()
+        if node.nodeName() == "MapInArrow":
+            attrs = node.output()
+            out.append([attrs.apply(i).name() for i in range(attrs.size())])
+        kids = node.children()
+        todo += [kids.apply(i) for i in range(kids.size())]
+    return out
 
 
 def test_parquet_scan_pushdown(spark):
@@ -66,6 +80,34 @@ def test_extraction_has_no_shuffle(spark):
     images = synth.images_df(spark, "xs")
     p = plan_str(extract.extract_points(images))
     assert "Exchange" not in p
+
+
+@pytest.mark.parametrize("frame", ["extract", "cached", "filtered", "sample_cap"])
+def test_zonal_stats_path_follows_its_input(spark, frame):
+    """An untouched extract frame plans one MapInArrow over the images
+    that emits the per-(image, band) partials, and no Python eval node;
+    any other points frame keeps the row path over its points."""
+    images = synth.images_df(spark, "xs").localCheckpoint()
+    pts = extract.extract_points(images, valid_only=True,
+                                 sample_cap=100 if frame == "sample_cap" else None)
+    if frame == "cached":
+        pts = pts.cache()
+    elif frame == "filtered":
+        pts = pts.filter("band = 0")
+    try:
+        df = zonal.zonal_stats(pts, [synth.GOLDEN_DELHI_RING])
+        outs, p = arrow_outputs(df), plan_str(df)
+    finally:
+        pts.unpersist()
+    partials = [f.split()[0] for f in zonal._PARTIALS_SCHEMA.split(", ")]
+    points = [f.split()[0] for f in extract.POINTS_SCHEMA.split(", ")]
+    if frame == "extract":
+        assert outs == [partials]
+        assert "ArrowEvalPython" not in p and "BatchEvalPython" not in p
+    elif frame == "cached":
+        assert outs == [] and "InMemoryTableScan" in p
+    else:
+        assert outs == [points]
 
 
 def test_knn_has_no_cartesian_product(spark):

@@ -16,12 +16,13 @@ from ONE distributed pass; file writing is bounded by the reference's
 own output caps (10k GeoJSON features), so the driver-side assembly is
 O(files + capped features), never O(pixels).
 
-Where the points go: ``tiles()``, ``catalog()`` and ``analyze()`` only
-need aggregates, so they aggregate inside the extract pass
-(``extract.extract_partials``: one row per image and tile, folded in the
-Python worker) and only O(images x tiles) rows cross into the JVM.
-``points()``, ``convert()``, ``zonal_response()`` and ``nearest()``
-still materialize every point (``extract.extract_points``).
+Where the points go: ``tiles()``, ``catalog()``, ``analyze()`` and
+``zonal_response()`` only need aggregates, so they aggregate inside the
+extract pass and only O(images x groups) rows cross into the JVM:
+``extract.extract_partials`` folds one row per image and tile, and
+``zonal.zonal_stats`` over a fresh ``extract.extract_points`` frame one
+row per image and band inside the polygon. ``points()``, ``convert()``
+and ``nearest()`` still materialize every point.
 """
 
 from __future__ import annotations

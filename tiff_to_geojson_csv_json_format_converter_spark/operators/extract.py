@@ -31,11 +31,14 @@ batches; output batches are capped at ~256k rows per yield. No shuffle
 is involved — extraction is embarrassingly parallel and scales
 linearly with executors. Every point then crosses the Python->JVM
 boundary (~52 bytes a row), which is the cost when only an aggregate
-is wanted: ``extract_partials`` runs the same per-image kernel and
-folds the points in the worker to one row per (image, tile), so that
-crossing shrinks from O(pixels) to O(images x tiles) rows (on 96
-images, 3.04 M points: 158 MB returned -> 0.3 MB; the ~14 MB of
-encoded images sent to the workers is the same on both paths).
+is wanted. Two aggregates run the same per-image kernel and fold the
+points in the worker instead, so only O(images x groups) rows cross:
+``extract_partials`` (one row per (image, tile), for tiles, catalog and
+analyze; on 96 images, 3.04 M points: 158 MB returned -> 0.3 MB) and
+``zonal.zonal_stats`` over an untouched default ``extract_points``
+frame (one row per (image, band) inside the polygon; see
+:func:`source_images`). The ~14 MB of encoded images sent to the
+workers is the same on every path.
 """
 
 from __future__ import annotations
@@ -326,12 +329,39 @@ def extract_points(
     final inclusive lon/lat bbox mask is applied to the (rounded) output
     — so the result IS exactly full-extract-then-filter, with the window
     only an economy.
+
+    The default frame (``valid_only=True``, every other argument at its
+    default) remembers ``images_df``: see :func:`source_images`.
     """
-    return images_df.select(*_KERNEL_COLS).mapInArrow(
+    points = images_df.select(*_KERNEL_COLS).mapInArrow(
         lambda batches: _points_batches(
             batches, valid_only, sample_cap, geojson_cap, round_output, bbox),
         POINTS_SCHEMA,
     )
+    if valid_only and sample_cap is None and geojson_cap is None and round_output and bbox is None:
+        points._source_images = images_df
+    return points
+
+
+def source_images(points):
+    """The images frame that ``points`` re-extracts, or None.
+
+    Only a frame returned as-is by ``extract_points(images,
+    valid_only=True)`` with every other argument at its default carries
+    it: every DataFrame transformation returns a new object without the
+    attribute. ``.cache()`` returns the same object, so a frame whose
+    plan is cached (or persisted) gives None too: reading its cached rows
+    is cheaper than decoding the images again. An aggregate over such a
+    frame may run its own fold inside the extract pass (``zonal.
+    zonal_stats``) and get what it would over the points."""
+    from pyspark import StorageLevel
+
+    images = vars(points).get("_source_images")
+    # is_cached answers for the frame itself without a JVM call; the
+    # storage level also sees the same plan cached through another frame
+    if images is None or points.is_cached or points.storageLevel != StorageLevel.NONE:
+        return None
+    return images
 
 
 def _points_batch(ids: list, lens: list, bufs: dict):

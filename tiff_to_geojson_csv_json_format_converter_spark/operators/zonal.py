@@ -9,127 +9,131 @@ over the polygon-masked pixels, with two contract quirks preserved here:
   (test2.py:1463-1473); the engine returns an empty stats row set and
   the response formatter emits the sentinel.
 
-Plan: clip (bbox predicate + PIP UDF) -> groupBy agg. One shuffle,
-map-side partial aggregation; the polygon is broadcast by closure.
+Two plans, picked from the input by :func:`zonal_stats`:
+
+- row path (any points frame): ``joins.clip_points`` (bbox predicate,
+  then the literal codegen ray-cast, or the Arrow PIP kernel above 64
+  edges) -> groupBy agg. One shuffle, map-side partial aggregation.
+- in-extract path (an untouched, uncached default
+  ``extract.extract_points`` frame, see ``extract.source_images``): one
+  ``mapInArrow`` over the images windows each image to the polygon's
+  bbox, extracts, clips with the same PIP kernel and folds each
+  (image, band) to n, sum, M2, min and max, so O(images x bands) rows
+  cross into the JVM instead of every point. The JVM merges the partial
+  rows of a key (several images rows may share an id) with the k-way
+  form of Chan et al.'s pairwise update. Same rows as the row path:
+  count, min and max exactly, mean and std_pop up to summation order.
 """
 
 from __future__ import annotations
 
 import json
 
-from pyspark.sql import DataFrame
+import numpy as np
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from . import joins
+from ..functions import geometry
+from . import extract, joins
+
+# the in-extract path's partial row: one per (image row, band) with points
+# inside the polygon; m2 is the sum of squared deviations from s / n
+_PARTIALS_SCHEMA = ("image_id string, band int, n long, s double, m2 double, "
+                    "mn double, mx double")
 
 
 def zonal_stats(points: DataFrame, rings: list, polygon_id: str = "poly") -> DataFrame:
-    """points (POINTS_SCHEMA) x one polygon -> per-(image, band) stats."""
-    clipped = joins.clip_points(points, rings)
-    return (
-        clipped.groupBy("image_id", "band")
-        .agg(
+    """points (POINTS_SCHEMA) x one polygon -> per-(image, band) stats.
+
+    ``points`` picks the plan: an untouched, uncached default
+    ``extract_points`` frame is clipped and folded inside the extract
+    pass, any other frame takes the row path (module docstring)."""
+    images = extract.source_images(points)
+    if images is not None:
+        stats = _zonal_in_extract(images, rings)
+    else:
+        stats = joins.clip_points(points, rings).groupBy("image_id", "band").agg(
             F.min("elevation").alias("min"),
             F.max("elevation").alias("max"),
             F.avg("elevation").alias("mean"),
             F.stddev_pop("elevation").alias("std_pop"),
             F.count("*").alias("count"),
         )
-        .withColumn("polygon_id", F.lit(polygon_id))
-        .select("polygon_id", "image_id", "band", "min", "max", "mean", "std_pop", "count")
-    )
-
-
-def zonal_stats_fused(images: DataFrame, rings: list, polygon_id: str = "poly") -> DataFrame:
-    """FUSED decode -> clip -> per-(image, band) partial stats in one
-    Arrow pass (the O(pixels)->O(images) shuffle shrink; see
-    extract.extract_partials). The polygon rides in by closure
-    (broadcast); per-image bbox pre-check skips decode entirely for
-    non-overlapping images — the reference's file prefilter, fused."""
-    import numpy as np
-
-    from ..functions import geometry as _geometry
-    from . import extract as _extract
-
-    rings_arr = [np.asarray(r, dtype=np.float64) for r in rings]
-    # prefilter bbox over ALL rings: normalize_geometry flattens
-    # MultiPolygon parts into one ring list, so rings[0] alone would
-    # skip images that overlap only a later disjoint shell
-    allv = np.vstack(rings_arr)
-    p_bbox = (allv[:, 0].min(), allv[:, 1].min(), allv[:, 0].max(), allv[:, 1].max())
-    cols = ["image_id", "bytes", "w", "h", "fmt", "transform", "crs", "band_count",
-            "min_lon", "min_lat", "max_lon", "max_lat"]
-    src = images.select(*cols)
-    schema = ("image_id string, band int, n long, s double, s2 double, "
-              "mn double, mx double")
-
-    def run(batches):
-        import pyarrow as pa
-
-        for batch in batches:
-            tbl = batch.to_pydict()
-            rows = []
-            for j in range(batch.num_rows):
-                i_bbox = (tbl["min_lon"][j], tbl["min_lat"][j], tbl["max_lon"][j], tbl["max_lat"][j])
-                if not _geometry.bbox_intersects(i_bbox, p_bbox):
-                    continue  # bbox prefilter: skip the decode entirely
-                # window pushdown: only the polygon-bbox pixel window is
-                # extracted — points outside it cannot be in the polygon,
-                # so the PIP result is unchanged while a small polygon on
-                # a large raster decodes/transforms ~overlap, not ~image
-                win = _extract.bbox_pixel_window(
-                    tbl["transform"][j], tbl["crs"][j], tbl["w"][j], tbl["h"][j],
-                    (p_bbox[0], p_bbox[1], p_bbox[2], p_bbox[3]),
-                )
-                for band, bi, bl, bb, bz in _extract._extract_image(
-                    tbl["image_id"][j], tbl["bytes"][j], tbl["w"][j], tbl["h"][j],
-                    tbl["fmt"][j], tbl["transform"][j], tbl["crs"][j],
-                    tbl["band_count"][j], True, None, None, True, window=win,
-                ):
-                    if len(bi) == 0:
-                        continue
-                    inside = _geometry.points_in_polygon(bl, bb, rings_arr)
-                    z = bz[inside]
-                    if len(z) == 0:
-                        continue
-                    rows.append((tbl["image_id"][j], band, len(z),
-                                 float(z.sum()), float((z * z).sum()),
-                                 float(z.min()), float(z.max())))
-            if rows:
-                cols_t = list(zip(*rows))
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array(cols_t[0], type=pa.string()),
-                        pa.array(cols_t[1], type=pa.int32()),
-                        pa.array(cols_t[2], type=pa.int64()),
-                        pa.array(cols_t[3], type=pa.float64()),
-                        pa.array(cols_t[4], type=pa.float64()),
-                        pa.array(cols_t[5], type=pa.float64()),
-                        pa.array(cols_t[6], type=pa.float64()),
-                    ],
-                    names=["image_id", "band", "n", "s", "s2", "mn", "mx"],
-                )
-
-    partials = src.mapInArrow(run, schema)
-    g = partials.groupBy("image_id", "band").agg(
-        F.sum("n").alias("count"),
-        F.sum("s").alias("s"), F.sum("s2").alias("s2"),
-        F.min("mn").alias("min"), F.max("mx").alias("max"),
-    )
-    mean = F.col("s") / F.col("count")
-    var = F.col("s2") / F.col("count") - mean * mean
     return (
-        g.withColumn("polygon_id", F.lit(polygon_id))
-        .withColumn("mean", mean)
-        .withColumn("std_pop", F.sqrt(F.greatest(var, F.lit(0.0))))
+        stats.withColumn("polygon_id", F.lit(polygon_id))
         .select("polygon_id", "image_id", "band", "min", "max", "mean", "std_pop", "count")
     )
+
+
+def _zonal_in_extract(images: DataFrame, rings: list) -> DataFrame:
+    """Per-(image_id, band) min/max/mean/std_pop/count of the valid points
+    of ``images`` inside ``rings``, folded inside the extract pass."""
+    rings_arr = [np.asarray(r, dtype=np.float64) for r in rings]
+    bbox = joins._rings_bbox(rings)
+    parts = images.select(*extract._KERNEL_COLS).mapInArrow(
+        lambda batches: _zonal_batches(batches, rings_arr, bbox), _PARTIALS_SCHEMA)
+    # k-way Chan merge: M2 = sum(m2_i) + sum(n_i * (mean_i - mean)^2); the
+    # key's mean comes first (a window over the aggregate's own
+    # partitioning), so a key with one partial row keeps its m2 exactly
+    key = Window.partitionBy("image_id", "band")
+    dev = F.col("s") / F.col("n") - F.col("mean")
+    return (
+        parts.withColumn("mean", F.sum("s").over(key) / F.sum("n").over(key))
+        .groupBy("image_id", "band")
+        .agg(
+            F.min("mn").alias("min"),
+            F.max("mx").alias("max"),
+            F.max("mean").alias("mean"),
+            F.sum(F.col("m2") + F.col("n") * dev * dev).alias("m2"),
+            F.sum("n").alias("count"),
+        )
+        .withColumn("std_pop", F.sqrt(F.col("m2") / F.col("count")))
+    )
+
+
+def _zonal_batches(batches, rings_arr: list, bbox: tuple):
+    """The in-extract path's mapInArrow body: image batches -> one
+    _PARTIALS_SCHEMA batch per image batch that has points inside."""
+    import pyarrow as pa
+
+    min_lon, min_lat, max_lon, max_lat = bbox
+    schema = pa.schema([
+        ("image_id", pa.string()), ("band", pa.int32()), ("n", pa.int64()), ("s", pa.float64()),
+        ("m2", pa.float64()), ("mn", pa.float64()), ("mx", pa.float64()),
+    ])
+    for batch in batches:
+        tbl = batch.to_pydict()
+        rows = []
+        for j in range(batch.num_rows):
+            # the polygon bbox's pixel window: an image the bbox misses
+            # decodes nothing, a small polygon on a large image extracts
+            # ~the overlap
+            win = extract.bbox_pixel_window(
+                tbl["transform"][j], tbl["crs"][j], tbl["w"][j], tbl["h"][j], bbox)
+            for band, _, lon, lat, z in extract._extract_image(
+                tbl["image_id"][j], tbl["bytes"][j], tbl["w"][j], tbl["h"][j],
+                tbl["fmt"][j], tbl["transform"][j], tbl["crs"][j],
+                tbl["band_count"][j], True, None, None, True, window=win,
+            ):
+                # clip_points' bbox predicate, then its PIP kernel
+                m = (lon >= min_lon) & (lon <= max_lon) & (lat >= min_lat) & (lat <= max_lat)
+                lon, lat, z = lon[m], lat[m], z[m]
+                z = z[geometry.points_in_polygon(lon, lat, rings_arr)]
+                if len(z) == 0:
+                    continue
+                s = float(z.sum())
+                d = z - s / len(z)
+                rows.append((tbl["image_id"][j], band, len(z), s, float(d @ d),
+                             float(z.min()), float(z.max())))
+        if rows:
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(c, type=f.type) for c, f in zip(zip(*rows), schema)], schema=schema)
 
 
 def zonal_stats_multi(points: DataFrame, polygons: list[dict]) -> DataFrame:
     """Many polygons at once: unioned per-polygon clips (each polygon's
     bbox predicate still prunes independently). For large polygon layers
-    prefer the cell-cover equi-join in ``tiling.cover_join``."""
+    prefer the cell-cover equi-join in ``joins.cell_cover_join``."""
     if not polygons:
         return points.sparkSession.createDataFrame(
             [],
