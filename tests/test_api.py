@@ -75,6 +75,17 @@ class TestTiffDirSource:
             np.testing.assert_array_equal(got[c].to_numpy(), want[c].to_numpy(), err_msg=c)
 
 
+def _info_files_and_empty_images(conv, out) -> tuple:
+    """The images ``convert(mode='valid')`` wrote an info file for, and
+    the images whose extraction has no valid point."""
+    from tiff_to_geojson_csv_json_format_converter_spark.operators import extract
+
+    infos = {p[:-len(".info.txt")] for p in os.listdir(out) if p.endswith(".info.txt")}
+    have = {r["image_id"] for r in extract.extract_points(conv.images)
+            .select("image_id").distinct().collect()}
+    return infos, {r["image_id"] for r in conv.images.select("image_id").collect()} - have
+
+
 class TestConverter:
     def test_convert_valid_mode_outputs(self, spark, tmp_path):
         conv = Converter.from_synthetic(spark, "xs")
@@ -87,8 +98,21 @@ class TestConverter:
         assert doc["type"] == "FeatureCollection"
         assert doc["features"][0]["geometry"]["type"] == "Point"
         # all-NoData images got info files instead of geojson
-        infos = [p for p in os.listdir(tmp_path / "out") if p.endswith(".info.txt")]
-        assert infos
+        infos, empties = _info_files_and_empty_images(conv, tmp_path / "out")
+        assert infos and infos == empties
+
+    def test_convert_valid_mode_duplicate_image_row(self, spark, tmp_path):
+        """A repeated images row: one catalog entry per row, and still one
+        info file per all-NoData image and none for the repeated one."""
+        from pyspark.sql import functions as F
+
+        images = synth.images_df(spark, "xs")
+        first = images.orderBy("image_id").first()["image_id"]
+        conv = Converter(spark, images.unionByName(images.filter(F.col("image_id") == first)))
+        res = conv.convert(str(tmp_path / "out"), mode="valid")
+        assert res["catalog"]["total_files"] == images.count() + 1
+        infos, empties = _info_files_and_empty_images(conv, tmp_path / "out")
+        assert infos and infos == empties
 
     def test_analyze_contract(self, spark):
         conv = Converter.from_synthetic(spark, "xs")

@@ -62,6 +62,36 @@ _ZONAL_POLYGONS = {
 }
 
 
+def _catalog_reference(per_image, images) -> dict:
+    """sinks.catalog_document as a Spark LEFT join + orderBy + collect():
+    the reference the driver-side join and sort must reproduce."""
+    per_file = (
+        images.select("image_id", "w", "h", "caption")
+        .join(per_image, "image_id", "left")
+        .na.fill({"valid_pixels": 0})
+        .orderBy("image_id")
+    ).collect()
+    folds = (("min_longitude", "min_x", min), ("max_longitude", "max_x", max),
+             ("min_latitude", "min_y", min), ("max_latitude", "max_y", max),
+             ("min_elevation", "min_z", min), ("max_elevation", "max_z", max))
+    files = []
+    ob = {dst: None for _, dst, _ in folds}
+    for r in per_file:
+        d = r.asDict()
+        files.append({
+            "source_tiff": d["image_id"], "file_prefix": d["image_id"],
+            "bounds_wgs84": {src: d[src] for src, _, _ in folds},
+            "original_points": d["w"] * d["h"], "frontend_points": d["valid_pixels"],
+            "has_valid_data": d["valid_pixels"] > 0,
+            "available_formats": {"csv": True, "json": True, "geojson_wgs84": True, "readme": True},
+        })
+        for src, dst, fn in folds:
+            if d[src] is not None:
+                ob[dst] = d[src] if ob[dst] is None else fn(ob[dst], d[src])
+    return {"type": "elevation_catalog", "total_files": len(files),
+            "coordinate_system": "EPSG:4326", "overall_bounds": ob, "files": files}
+
+
 @pytest.fixture(scope="module")
 def points_pdf(images_pdf):
     return oracle.extract_points(images_pdf, valid_only=True)
@@ -278,6 +308,33 @@ class TestTiling:
         assert o["min_longitude"] == per_file["min_longitude"].min()
         assert o["max_latitude"] == per_file["max_latitude"].max()
 
+    def test_catalog_rollup_partials_equal_row_path(self, spark, zonal_images):
+        """Over a fresh extract frame the rollup folds the per-(image,
+        tile) partials; its rows, the is_overall grand total included,
+        equal the row path's over a cached copy of the same points, also
+        when a repeated images row doubles one id's points."""
+        from pyspark.sql import functions as F
+
+        first = zonal_images.first()["image_id"]
+        dup = zonal_images.unionByName(zonal_images.filter(F.col("image_id") == first))
+        first_points = []
+        for images in (zonal_images, dup):
+            # every fold runs before the cached copy exists (a cached plan
+            # also serves a fresh extract frame over the same images)
+            fresh = extract.extract_points(images)
+            assert extract.source_images(fresh) is images
+            got = sorted(map(tuple, tiling.catalog_rollup(fresh).collect()), key=repr)
+            cached = extract.extract_points(images).cache()
+            try:
+                assert extract.source_images(cached) is None
+                want = sorted(map(tuple, tiling.catalog_rollup(cached).collect()), key=repr)
+            finally:
+                cached.unpersist()
+            assert got == want
+            assert sum(r[-1] for r in got) == 1  # one is_overall row
+            first_points.append(next(r[1] for r in got if r[0] == first))
+        assert first_points[1] == 2 * first_points[0] > 0
+
 
 class TestCatalogResume:
     def test_kill_and_resume_no_duplicates(self, spark, points_sdf, tmp_path):
@@ -480,6 +537,38 @@ class TestFusedOperators:
         assert len(seen) == 1
         for df in (conv.tiles(), seen[0]):
             assert arrow_outputs(df) == [partials]
+
+    @pytest.mark.parametrize("case", ["xs", "duplicate_image_row", "null_image_id", "code_point_order"])
+    def test_catalog_document_equals_spark_join(self, spark, case):
+        """The driver-side join and sort of catalog_document give the
+        document the Spark LEFT join + orderBy gives (_catalog_reference):
+        all-NoData files, a repeated images row, a NULL image_id (matches
+        nothing, sorts first) and ids whose code-point order is not their
+        case-folded order."""
+        from pyspark.sql import functions as F
+
+        images = synth.images_df(spark, "xs")
+        ids = [r["image_id"] for r in images.select("image_id").orderBy("image_id").collect()]
+        if case == "duplicate_image_row":
+            images = images.unionByName(images.filter(F.col("image_id") == ids[1]))
+        elif case == "null_image_id":
+            images = images.withColumn("image_id", F.when(
+                F.col("image_id") != ids[1], F.col("image_id")).cast("string"))
+        elif case == "code_point_order":
+            names = {ids[0]: "img_a", ids[1]: "img_\u00e9", ids[2]: "img_B"}
+            images = images.replace(names, subset=["image_id"])
+        per_image = extract.analyze_partials(extract.extract_partials(images, 12))
+        got = sinks.catalog_document(per_image, images)
+        assert got == _catalog_reference(per_image, images)
+        sources = [f["source_tiff"] for f in got["files"]]
+        if case == "duplicate_image_row":
+            assert sources.count(ids[1]) == 2 and got["files"][1] == got["files"][2]
+        elif case == "null_image_id":
+            assert sources[0] is None and got["files"][0]["frontend_points"] == 0
+            assert per_image.filter(F.col("image_id").isNull()).count() == 1
+        elif case == "code_point_order":
+            assert sources[-3:] == ["img_B", "img_a", "img_\u00e9"]
+        assert {f["has_valid_data"] for f in got["files"]} == {True, False}
 
     @pytest.mark.parametrize("case", sorted(_ZONAL_POLYGONS) + ["duplicate_image_row"])
     def test_zonal_in_extract_equals_row_path(self, spark, zonal_images, case):

@@ -110,6 +110,51 @@ def test_zonal_stats_path_follows_its_input(spark, frame):
         assert outs == [points]
 
 
+def test_tiles_plan_one_exchange_no_python_eval(spark):
+    """Converter.tiles(): the partials are hash-partitioned by tile_id
+    once, which serves both of countDistinct's aggregation stages."""
+    import re
+
+    from tiff_to_geojson_csv_json_format_converter_spark.api import Converter
+
+    p = plan_str(Converter(spark, synth.images_df(spark, "xs")).tiles())
+    assert len(re.findall(r"^\(\d+\) Exchange", p, re.M)) == 1
+    assert "hashpartitioning(tile_id" in p
+    assert "ArrowEvalPython" not in p and "BatchEvalPython" not in p
+
+
+def test_catalog_runs_at_most_three_jobs(spark):
+    """Converter.catalog(): the per-image fold and the images' rows are
+    collected and joined on the driver, no distributed join or sort."""
+    from tiff_to_geojson_csv_json_format_converter_spark.api import Converter
+
+    sc = spark.sparkContext
+    conv = Converter(spark, synth.images_df(spark, "xs"))
+    sc.setJobGroup("test-catalog-jobs", "Converter.catalog")
+    try:
+        cat = conv.catalog()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert cat["total_files"] == synth.SCALES["xs"][0]
+    assert 1 <= len(sc.statusTracker().getJobIdsForGroup("test-catalog-jobs")) <= 3
+
+
+def test_catalog_rollup_path_follows_its_input(spark):
+    """catalog_rollup over a fresh extract frame plans one MapInArrow
+    that emits the per-(image, tile) partials; over a cached copy it
+    reads the cached points."""
+    images = synth.images_df(spark, "xs").localCheckpoint()
+    partials = [f.split()[0] for f in extract.PARTIALS_SCHEMA.split(", ")]
+    assert arrow_outputs(tiling.catalog_rollup(extract.extract_points(images))) == [partials]
+    cached = extract.extract_points(images).cache()
+    try:
+        df = tiling.catalog_rollup(cached)
+        assert arrow_outputs(df) == [] and "InMemoryTableScan" in plan_str(df)
+    finally:
+        cached.unpersist()
+
+
 def test_knn_has_no_cartesian_product(spark):
     pts = spark.createDataFrame(
         [(1, 77.2, 28.3)], "pixel_idx long, longitude double, latitude double"

@@ -23,6 +23,13 @@ extract pass and only O(images x groups) rows cross into the JVM:
 ``zonal.zonal_stats`` over a fresh ``extract.extract_points`` frame one
 row per image and band inside the polygon. ``points()``, ``convert()``
 and ``nearest()`` still materialize every point.
+
+Where the catalog goes: ``catalog()`` folds the partials per image in
+Spark, then collects that O(files) aggregate and the images' (id, w, h)
+rows and joins and sorts them on the driver (``sinks.catalog_document``),
+as the reference's loop over the files does. ``convert(mode='valid')``
+reads which files have data from the catalog it has just built instead
+of listing the points' distinct ids.
 """
 
 from __future__ import annotations
@@ -145,9 +152,10 @@ class Converter:
         # same note): rows here are one per IMAGE (metadata only, no
         # pixels), so the collect is catalog-sized, not data-sized. At
         # true 10^8-file scale route this through a distributed text
-        # sink keyed by image_id instead.
+        # sink keyed by image_id instead. The catalog just built over the
+        # same valid points already says which files have data.
         if mode == "valid":
-            have = {r["image_id"] for r in pts.select("image_id").distinct().collect()}
+            have = {f["source_tiff"] for f in cat["files"] if f["has_valid_data"]}
             for r in self.images.select("image_id", "w", "h", "crs").collect():
                 if r["image_id"] not in have:
                     p = os.path.join(out_dir, f"{r['image_id']}.info.txt")

@@ -397,35 +397,43 @@ def master_catalog(points: DataFrame, images: DataFrame) -> dict:
 def catalog_document(per_image: DataFrame, images: DataFrame) -> dict:
     """:func:`master_catalog` from a per-image aggregate with
     ``extract.analyze_images`` columns (``valid_pixels`` and min/max of
-    longitude, latitude, elevation) — one aggregation query."""
-    # LEFT join from the image catalog: all-NoData files contribute zero
-    # points but the reference catalog enumerates every source file
-    # (has_valid_data=false entries, doesSamples.py:351-466)
-    per_file = (
-        images.select("image_id", "w", "h", "caption")
-        .join(per_image, "image_id", "left")
-        .na.fill({"valid_pixels": 0})
-        .orderBy("image_id")  # doesSamples.py:439 sort by source
-    ).collect()
+    longitude, latitude, elevation), one row per ``image_id``.
+
+    Spark folds the aggregate; its rows and the images' (id, w, h) rows
+    are then collected, and the join and the sort run on the driver, as
+    the reference's loop over the files does: both sides are O(files),
+    and a distributed join and ``orderBy`` of them cost more jobs than
+    they save. They keep Spark's semantics: a LEFT join where a NULL
+    ``image_id`` matches nothing, a repeated images row gets one entry
+    each, and ids sort NULL first, then in code-point order (Spark's
+    UTF-8 byte order)."""
+    aggs = {r["image_id"]: r.asDict() for r in per_image.collect()}
+    rows = images.select("image_id", "w", "h").collect()
+    # doesSamples.py:439 sort by source
+    rows.sort(key=lambda r: (r["image_id"] is not None, r["image_id"] or ""))
     # per-file bound -> overall_bounds key, fold
     folds = (("min_longitude", "min_x", min), ("max_longitude", "max_x", max),
              ("min_latitude", "min_y", min), ("max_latitude", "max_y", max),
              ("min_elevation", "min_z", min), ("max_elevation", "max_z", max))
     files = []
     ob = {dst: None for _, dst, _ in folds}
-    for r in per_file:
-        d = r.asDict()
+    for r in rows:
+        # LEFT join from the image catalog: all-NoData files contribute
+        # zero points but the reference catalog enumerates every source
+        # file (has_valid_data=false entries, doesSamples.py:351-466)
+        a = aggs.get(r["image_id"], {}) if r["image_id"] is not None else {}
+        n = a.get("valid_pixels") or 0
         files.append({
-            "source_tiff": d["image_id"], "file_prefix": d["image_id"],
-            "bounds_wgs84": {src: d[src] for src, _, _ in folds},
-            "original_points": d["w"] * d["h"], "frontend_points": d["valid_pixels"],
-            "has_valid_data": d["valid_pixels"] > 0,
+            "source_tiff": r["image_id"], "file_prefix": r["image_id"],
+            "bounds_wgs84": {src: a.get(src) for src, _, _ in folds},
+            "original_points": r["w"] * r["h"], "frontend_points": n,
+            "has_valid_data": n > 0,
             "available_formats": {"csv": True, "json": True, "geojson_wgs84": True, "readme": True},
         })
         for src, dst, fn in folds:
-            if d[src] is None:
+            if a.get(src) is None:
                 continue  # zero-point file: no bounds to fold
-            ob[dst] = d[src] if ob[dst] is None else fn(ob[dst], d[src])
+            ob[dst] = a[src] if ob[dst] is None else fn(ob[dst], a[src])
     return {
         "type": "elevation_catalog",
         "total_files": len(files),

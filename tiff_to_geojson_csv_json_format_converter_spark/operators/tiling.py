@@ -13,7 +13,9 @@ skew-join splitting handles the join-side residual (SURVEY.md §4).
 The catalog rollup reproduces the reference master catalog
 (doesSamples.py:351-466, completePixleOutput.py:284-468): per-image
 bounds + counts, folded into overall bounds — one aggregation query;
-the grand-total row is the catalog's ``overall_bounds``.
+the grand-total row is the catalog's ``overall_bounds``. Over a fresh
+``extract.extract_points`` frame it rolls up the per-(image, tile)
+partials folded inside the extract pass instead of the points.
 """
 
 from __future__ import annotations
@@ -22,6 +24,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import cells
+from . import extract
 
 DEFAULT_LEVEL = 12
 
@@ -67,8 +70,15 @@ def tile_histogram_from_partials(partials: DataFrame) -> DataFrame:
     """:func:`tile_histogram` over ``extract.extract_partials`` rows (tile
     level fixed by the partials): ``n`` sums to the point count, and
     ``countDistinct`` over the (image, tile) rows keeps the null- and
-    duplicate-id semantics of the point form."""
-    return partials.groupBy("tile_id").agg(
+    duplicate-id semantics of the point form.
+
+    ``countDistinct`` plans two aggregation stages, the first clustered
+    by (tile_id, image_id), the second by tile_id, and each would get its
+    own shuffle. Hash-partitioning the partials by ``tile_id`` first
+    satisfies both, so the plan has one Exchange instead of two. Skipping
+    the map-side partial aggregation loses nothing: the rows are already
+    folded per (image, tile)."""
+    return partials.repartition("tile_id").groupBy("tile_id").agg(
         F.sum("n").alias("n_points"), F.countDistinct("image_id").alias("n_images"))
 
 
@@ -174,17 +184,24 @@ def tile_pyramid(points: DataFrame, value_col: str, finest: int = 12,
 def catalog_rollup(points: DataFrame) -> DataFrame:
     """Per-image catalog entries plus the grand-total overall_bounds row
     (``rollup``): image_id = NULL row carries the catalog fold the
-    reference accumulates imperatively at doesSamples.py:403-408."""
+    reference accumulates imperatively at doesSamples.py:403-408.
+
+    Over an untouched, uncached default ``extract.extract_points`` frame
+    (``extract.source_images``, the rule ``zonal.zonal_stats`` follows)
+    it rolls up the per-(image, tile) ``extract.extract_partials`` rows
+    instead, so only those rows leave the Python workers: the same rows,
+    since counts add up and the partial bounds follow Spark's min/max."""
+    images = extract.source_images(points)
+    if images is None:
+        rows, count, col = points, F.count("*"), lambda agg, c: c
+    else:
+        rows, count = extract.extract_partials(images, DEFAULT_LEVEL), F.sum("n")
+        col = lambda agg, c: f"{agg}_{c}"
     return (
-        points.rollup("image_id")
+        rows.rollup("image_id")
         .agg(
-            F.count("*").alias("points"),
-            F.min("longitude").alias("min_longitude"),
-            F.max("longitude").alias("max_longitude"),
-            F.min("latitude").alias("min_latitude"),
-            F.max("latitude").alias("max_latitude"),
-            F.min("elevation").alias("min_elevation"),
-            F.max("elevation").alias("max_elevation"),
+            count.alias("points"),
+            *(getattr(F, agg)(col(agg, c)).alias(f"{agg}_{c}") for agg, c in extract._BOUNDS),
         )
         .withColumn("is_overall", F.col("image_id").isNull())
     )
