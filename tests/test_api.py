@@ -114,6 +114,21 @@ class TestConverter:
         infos, empties = _info_files_and_empty_images(conv, tmp_path / "out")
         assert infos and infos == empties
 
+    def test_convert_valid_mode_catalog_is_summary_path(self, spark, tmp_path, monkeypatch):
+        """convert(mode='valid') writes the catalog Converter.catalog()
+        builds, from the per-images-row summaries, not the points."""
+        from tiff_to_geojson_csv_json_format_converter_spark.operators import extract
+
+        conv = Converter(spark, synth.images_df(spark, "xs").localCheckpoint())
+        seen = []
+        real = extract.extract_summaries
+        monkeypatch.setattr(extract, "extract_summaries",
+                            lambda images: seen.append(images) or real(images))
+        res = conv.convert(str(tmp_path / "out"), mode="valid")
+        assert len(seen) == 1 and seen[0] is conv.images
+        with open(tmp_path / "out" / "master_catalog.json") as f:
+            assert json.load(f) == res["catalog"] == conv.catalog()
+
     def test_analyze_contract(self, spark):
         conv = Converter.from_synthetic(spark, "xs")
         out = conv.analyze().toPandas()

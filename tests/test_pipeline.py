@@ -63,33 +63,30 @@ _ZONAL_POLYGONS = {
 
 
 def _catalog_reference(per_image, images) -> dict:
-    """sinks.catalog_document as a Spark LEFT join + orderBy + collect():
-    the reference the driver-side join and sort must reproduce."""
-    per_file = (
+    """sinks.catalog_document as a Spark LEFT join + orderBy + collect(),
+    with the overall bounds folded by Spark's min/max over the joined
+    rows: the reference the driver-side merge and sort must reproduce."""
+    from pyspark.sql import functions as F
+
+    joined = (
         images.select("image_id", "w", "h", "caption")
         .join(per_image, "image_id", "left")
         .na.fill({"valid_pixels": 0})
-        .orderBy("image_id")
-    ).collect()
-    folds = (("min_longitude", "min_x", min), ("max_longitude", "max_x", max),
-             ("min_latitude", "min_y", min), ("max_latitude", "max_y", max),
-             ("min_elevation", "min_z", min), ("max_elevation", "max_z", max))
-    files = []
-    ob = {dst: None for _, dst, _ in folds}
-    for r in per_file:
-        d = r.asDict()
-        files.append({
-            "source_tiff": d["image_id"], "file_prefix": d["image_id"],
-            "bounds_wgs84": {src: d[src] for src, _, _ in folds},
-            "original_points": d["w"] * d["h"], "frontend_points": d["valid_pixels"],
-            "has_valid_data": d["valid_pixels"] > 0,
-            "available_formats": {"csv": True, "json": True, "geojson_wgs84": True, "readme": True},
-        })
-        for src, dst, fn in folds:
-            if d[src] is not None:
-                ob[dst] = d[src] if ob[dst] is None else fn(ob[dst], d[src])
+    )
+    per_file = joined.orderBy("image_id").collect()
+    bounds = ("min_longitude", "max_longitude", "min_latitude", "max_latitude",
+              "min_elevation", "max_elevation")
+    ob = joined.agg(*(getattr(F, b[:3])(b).alias(b) for b in bounds)).first()
+    files = [{
+        "source_tiff": r["image_id"], "file_prefix": r["image_id"],
+        "bounds_wgs84": {b: r[b] for b in bounds},
+        "original_points": r["w"] * r["h"], "frontend_points": r["valid_pixels"],
+        "has_valid_data": r["valid_pixels"] > 0,
+        "available_formats": {"csv": True, "json": True, "geojson_wgs84": True, "readme": True},
+    } for r in per_file]
+    overall = {k: ob[b] for k, b in zip(("min_x", "max_x", "min_y", "max_y", "min_z", "max_z"), bounds)}
     return {"type": "elevation_catalog", "total_files": len(files),
-            "coordinate_system": "EPSG:4326", "overall_bounds": ob, "files": files}
+            "coordinate_system": "EPSG:4326", "overall_bounds": overall, "files": files}
 
 
 @pytest.fixture(scope="module")
@@ -522,30 +519,34 @@ class TestFusedOperators:
         np.testing.assert_array_equal(mx, want["mx"].to_numpy())
 
     def test_partials_plan_ships_no_points(self, spark, monkeypatch):
-        """The one Python node under tiles() and catalog() emits the
-        per-(image, tile) partials, not points."""
+        """The one Python node under tiles() emits the per-(image, tile)
+        partials, the one under catalog() the per-images-row summaries:
+        no points."""
         from tests.test_plans import arrow_outputs
         from tiff_to_geojson_csv_json_format_converter_spark.api import Converter
 
-        partials = [f.split()[0] for f in extract.PARTIALS_SCHEMA.split(", ")]
+        names = lambda schema: [f.split()[0] for f in schema.split(", ")]
         conv = Converter(spark, synth.images_df(spark, "xs").localCheckpoint())
         seen = []
         real = sinks.catalog_document
         monkeypatch.setattr(sinks, "catalog_document",
-                            lambda per_image, images: seen.append(per_image) or real(per_image, images))
+                            lambda summaries: seen.append(summaries) or real(summaries))
         conv.catalog()
         assert len(seen) == 1
-        for df in (conv.tiles(), seen[0]):
-            assert arrow_outputs(df) == [partials]
+        assert arrow_outputs(conv.tiles()) == [names(extract.PARTIALS_SCHEMA)]
+        assert arrow_outputs(seen[0]) == [names(extract.SUMMARY_SCHEMA)]
 
     @pytest.mark.parametrize("case", ["xs", "duplicate_image_row", "null_image_id", "code_point_order"])
     def test_catalog_document_equals_spark_join(self, spark, case):
-        """The driver-side join and sort of catalog_document give the
-        document the Spark LEFT join + orderBy gives (_catalog_reference):
-        all-NoData files, a repeated images row, a NULL image_id (matches
-        nothing, sorts first) and ids whose code-point order is not their
-        case-folded order."""
+        """Converter.catalog() (one collect of the summaries, merged and
+        sorted on the driver) gives the document the Spark LEFT join +
+        orderBy of the points' per-image aggregate gives
+        (_catalog_reference): all-NoData files, a repeated images row, a
+        NULL image_id (matches nothing, sorts first) and ids whose
+        code-point order is not their case-folded order."""
         from pyspark.sql import functions as F
+
+        from tiff_to_geojson_csv_json_format_converter_spark.api import Converter
 
         images = synth.images_df(spark, "xs")
         ids = [r["image_id"] for r in images.select("image_id").orderBy("image_id").collect()]
@@ -557,8 +558,8 @@ class TestFusedOperators:
         elif case == "code_point_order":
             names = {ids[0]: "img_a", ids[1]: "img_\u00e9", ids[2]: "img_B"}
             images = images.replace(names, subset=["image_id"])
-        per_image = extract.analyze_partials(extract.extract_partials(images, 12))
-        got = sinks.catalog_document(per_image, images)
+        per_image = extract.analyze_images(extract.extract_points(images))
+        got = Converter(spark, images).catalog()
         assert got == _catalog_reference(per_image, images)
         sources = [f["source_tiff"] for f in got["files"]]
         if case == "duplicate_image_row":
@@ -569,6 +570,67 @@ class TestFusedOperators:
         elif case == "code_point_order":
             assert sources[-3:] == ["img_B", "img_a", "img_\u00e9"]
         assert {f["has_valid_data"] for f in got["files"]} == {True, False}
+
+    def test_overall_bounds_follow_spark_order_with_nan(self, spark):
+        """An image whose transform makes some longitudes NaN sorts last:
+        the catalog's overall_bounds equal catalog_rollup's is_overall row
+        over the points (Spark's min/max), where Python's max(x, nan)
+        drops the NaN that max(nan, x) keeps."""
+        from pyspark.sql import functions as F
+
+        from tiff_to_geojson_csv_json_format_converter_spark.api import Converter
+
+        images = synth.images_df(spark, "xs")
+        last = extract.extract_points(images).agg(F.max("image_id")).first()[0]
+        # x = c + a*(col+.5) + b*(row+.5) is inf - inf = NaN from the third
+        # column and row on, +-inf or 0 before them
+        bad = F.array(*(F.lit(v) for v in (1e308, -1e308, 0.0, 0.0, -0.002, 28.5)))
+        hit = F.col("image_id") == last
+        images = images.withColumns({
+            "transform": F.when(hit, bad).otherwise(F.col("transform")),
+            "crs": F.when(hit, F.lit("EPSG:4326")).otherwise(F.col("crs")),
+        }).localCheckpoint()
+        got = Converter(spark, images).catalog()["overall_bounds"]
+        cached = extract.extract_points(images).cache()
+        try:
+            o = next(r for r in tiling.catalog_rollup(cached).collect() if r["is_overall"])
+        finally:
+            cached.unpersist()
+        want = {k: o[f"{k[:3]}_{c}"] for k, c in (
+            ("min_x", "longitude"), ("max_x", "longitude"), ("min_y", "latitude"),
+            ("max_y", "latitude"), ("min_z", "elevation"), ("max_z", "elevation"))}
+        assert np.isnan(want["max_x"]) and want["min_x"] == -np.inf
+        assert json.dumps(got) == json.dumps(want)
+
+    def test_merge_summaries_follows_spark_groupby(self, spark):
+        """The driver-side merge of repeated ids' summary rows equals
+        Spark's groupBy().agg(sum, min, max) over the same rows: NaN, +-inf,
+        an all-NaN bound, a zero-point row's NULL bounds and a NULL id."""
+        from pyspark.sql import functions as F
+
+        nan, inf = float("nan"), float("inf")
+        bounds = lambda *v: list(v) + [1.0, 2.0, 3.0, 4.0]
+        rows = [
+            ("a", 4, 4, 3, *bounds(nan, 5.0)), ("a", 4, 4, 2, *bounds(1.0, nan)),
+            ("a", 4, 4, 1, *bounds(-inf, inf)),
+            ("b", 4, 4, 2, *bounds(nan, nan)), ("b", 4, 4, 0, *[None] * 6),
+            ("b", 4, 4, 1, *bounds(nan, nan)),
+            ("c", 4, 4, 0, *[None] * 6), ("c", 4, 4, 5, nan, 7.0, -inf, nan, 0.0, -0.5),
+            ("d", 4, 4, 2, 2.0, 3.0, nan, inf, -inf, nan),
+            ("d", 4, 4, 1, nan, -inf, 9.0, -1.0, 8.0, nan),
+            (None, 4, 4, 6, *bounds(0.0, 1.0)),
+        ]
+        df = spark.createDataFrame(rows, extract.SUMMARY_SCHEMA)
+        got = sinks.merge_summaries(df.collect())
+        cols = [f.split()[0] for f in extract.SUMMARY_SCHEMA.split(", ")][4:]
+        want = {r["image_id"]: r.asDict() for r in df.groupBy("image_id").agg(
+            F.sum("n").alias("n"), *(getattr(F, c[:3])(c).alias(c) for c in cols)).collect()}
+        assert want.pop(None)["n"] == 6 and None not in got
+        assert json.dumps(got, sort_keys=True) == json.dumps(
+            {k: {c: v[c] for c in ["n"] + cols} for k, v in want.items()}, sort_keys=True)
+        # and whatever the row order
+        assert json.dumps(sinks.merge_summaries(df.collect()[::-1]), sort_keys=True) == json.dumps(
+            got, sort_keys=True)
 
     @pytest.mark.parametrize("case", sorted(_ZONAL_POLYGONS) + ["duplicate_image_row"])
     def test_zonal_in_extract_equals_row_path(self, spark, zonal_images, case):

@@ -123,13 +123,18 @@ def test_tiles_plan_one_exchange_no_python_eval(spark):
     assert "ArrowEvalPython" not in p and "BatchEvalPython" not in p
 
 
-def test_catalog_runs_at_most_three_jobs(spark):
-    """Converter.catalog(): the per-image fold and the images' rows are
-    collected and joined on the driver, no distributed join or sort."""
+def test_catalog_runs_one_job(spark, monkeypatch):
+    """Converter.catalog(): one collect() of the per-images-row summaries,
+    a plan with no Exchange; the merge and the sort run on the driver."""
     from tiff_to_geojson_csv_json_format_converter_spark.api import Converter
+    from tiff_to_geojson_csv_json_format_converter_spark.operators import sinks
 
     sc = spark.sparkContext
     conv = Converter(spark, synth.images_df(spark, "xs"))
+    seen = []
+    real = sinks.catalog_document
+    monkeypatch.setattr(sinks, "catalog_document",
+                        lambda summaries: seen.append(summaries) or real(summaries))
     sc.setJobGroup("test-catalog-jobs", "Converter.catalog")
     try:
         cat = conv.catalog()
@@ -137,16 +142,17 @@ def test_catalog_runs_at_most_three_jobs(spark):
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     assert cat["total_files"] == synth.SCALES["xs"][0]
-    assert 1 <= len(sc.statusTracker().getJobIdsForGroup("test-catalog-jobs")) <= 3
+    assert len(sc.statusTracker().getJobIdsForGroup("test-catalog-jobs")) == 1
+    assert len(seen) == 1 and "Exchange" not in plan_str(seen[0])
 
 
 def test_catalog_rollup_path_follows_its_input(spark):
     """catalog_rollup over a fresh extract frame plans one MapInArrow
-    that emits the per-(image, tile) partials; over a cached copy it
-    reads the cached points."""
+    that emits the per-images-row summaries; over a cached copy it reads
+    the cached points."""
     images = synth.images_df(spark, "xs").localCheckpoint()
-    partials = [f.split()[0] for f in extract.PARTIALS_SCHEMA.split(", ")]
-    assert arrow_outputs(tiling.catalog_rollup(extract.extract_points(images))) == [partials]
+    summaries = [f.split()[0] for f in extract.SUMMARY_SCHEMA.split(", ")]
+    assert arrow_outputs(tiling.catalog_rollup(extract.extract_points(images))) == [summaries]
     cached = extract.extract_points(images).cache()
     try:
         df = tiling.catalog_rollup(cached)

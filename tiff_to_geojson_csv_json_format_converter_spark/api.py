@@ -19,17 +19,20 @@ O(files + capped features), never O(pixels).
 Where the points go: ``tiles()``, ``catalog()``, ``analyze()`` and
 ``zonal_response()`` only need aggregates, so they aggregate inside the
 extract pass and only O(images x groups) rows cross into the JVM:
-``extract.extract_partials`` folds one row per image and tile, and
+``extract.extract_summaries`` folds one row per images row,
+``extract.extract_partials`` one row per image and tile, and
 ``zonal.zonal_stats`` over a fresh ``extract.extract_points`` frame one
 row per image and band inside the polygon. ``points()``, ``convert()``
 and ``nearest()`` still materialize every point.
 
-Where the catalog goes: ``catalog()`` folds the partials per image in
-Spark, then collects that O(files) aggregate and the images' (id, w, h)
-rows and joins and sorts them on the driver (``sinks.catalog_document``),
+Where the catalog goes: ``catalog()`` collects the per-images-row
+summaries in one Spark job, with no shuffle, then merges a repeated id's
+rows and sorts the entries on the driver (``sinks.catalog_document``),
 as the reference's loop over the files does. ``convert(mode='valid')``
-reads which files have data from the catalog it has just built instead
-of listing the points' distinct ids.
+builds its ``master_catalog.json`` the same way (its points frame is a
+fresh extract of the images, ``sinks.master_catalog``) and reads which
+files have data from that catalog instead of listing the points'
+distinct ids.
 """
 
 from __future__ import annotations
@@ -76,7 +79,7 @@ class Converter:
 
     def analyze(self) -> DataFrame:
         """Per-image metadata incl. sparsity (test.py:83-95)."""
-        agg = self._per_image()
+        agg = extract.analyze_summaries(extract.extract_summaries(self.images))
         # valid_pixels counts points across ALL bands — the denominator
         # must too, or multi-band images inflate the percentage
         totals = self.images.select(
@@ -191,16 +194,9 @@ class Converter:
         return joins.knn_join(pts, queries, k=k)
 
     def catalog(self) -> dict:
-        return sinks.catalog_document(self._per_image(), self.images)
+        return sinks.catalog_document(extract.extract_summaries(self.images))
 
     def tiles(self, level: int = tiling.DEFAULT_LEVEL) -> DataFrame:
         return tiling.tile_histogram_from_partials(
             extract.extract_partials(self.images, level)
-        )
-
-    def _per_image(self) -> DataFrame:
-        """``extract.analyze_images`` of the valid points, folded from the
-        per-(image, tile) partials."""
-        return extract.analyze_partials(
-            extract.extract_partials(self.images, tiling.DEFAULT_LEVEL)
         )

@@ -31,14 +31,20 @@ batches; output batches are capped at ~256k rows per yield. No shuffle
 is involved — extraction is embarrassingly parallel and scales
 linearly with executors. Every point then crosses the Python->JVM
 boundary (~52 bytes a row), which is the cost when only an aggregate
-is wanted. Two aggregates run the same per-image kernel and fold the
+is wanted. Three aggregates run the same per-image kernel and fold the
 points in the worker instead, so only O(images x groups) rows cross:
-``extract_partials`` (one row per (image, tile), for tiles, catalog and
-analyze; on 96 images, 3.04 M points: 158 MB returned -> 0.3 MB) and
-``zonal.zonal_stats`` over an untouched default ``extract_points``
-frame (one row per (image, band) inside the polygon; see
-:func:`source_images`). The ~14 MB of encoded images sent to the
-workers is the same on every path.
+
+- ``extract_summaries``: one row per images row (count and bounds), for
+  the catalog, ``Converter.analyze`` and ``tiling.catalog_rollup``; its
+  ``collect()`` is one job with no shuffle;
+- ``extract_partials``: one row per (image, tile), for tiles (on 96
+  images, 3.04 M points: 158 MB returned -> 0.3 MB);
+- ``zonal.zonal_stats`` over an untouched default ``extract_points``
+  frame: one row per (image, band) inside the polygon (see
+  :func:`source_images`).
+
+The ~14 MB of encoded images sent to the workers is the same on every
+path.
 """
 
 from __future__ import annotations
@@ -58,6 +64,14 @@ POINTS_SCHEMA = (
 # extract_partials: one row per (image, tile) — valid-point count and bounds
 PARTIALS_SCHEMA = (
     "image_id string, tile_id long, n long, "
+    "min_longitude double, max_longitude double, min_latitude double, "
+    "max_latitude double, min_elevation double, max_elevation double"
+)
+
+# extract_summaries: one row per images row — its size, valid-point count
+# and bounds (NULL bounds when it has no valid point)
+SUMMARY_SCHEMA = (
+    "image_id string, w int, h int, n long, "
     "min_longitude double, max_longitude double, min_latitude double, "
     "max_latitude double, min_elevation double, max_elevation double"
 )
@@ -467,11 +481,11 @@ def extract_partials(images_df, level: int = 12):
     bounds, over all bands. ``tile_id`` is ``cells.tile_id_col``'s
     row-major id at ``level`` (``cells.tile_xy`` is its numpy twin).
 
-    Tile and per-image aggregates (``Converter.tiles``, ``catalog``,
-    ``analyze``) fold these rows with ``sum``/``min``/``max``/
-    ``countDistinct`` and get exactly what they would over the points,
-    while the Python->JVM boundary carries O(images x tiles) rows
-    instead of O(pixels)."""
+    Tile aggregates (``Converter.tiles``) fold these rows with
+    ``sum``/``countDistinct`` and get exactly what they would over the
+    points, while the Python->JVM boundary carries O(images x tiles) rows
+    instead of O(pixels). Per-image aggregates fold
+    :func:`extract_summaries` instead."""
     return images_df.select(*_KERNEL_COLS).mapInArrow(
         lambda batches: _partials_batches(batches, level), PARTIALS_SCHEMA)
 
@@ -511,6 +525,50 @@ def _partials_batches(batches: Iterator, level: int) -> Iterator:
         )
 
 
+def extract_summaries(images_df):
+    """images DataFrame -> SUMMARY_SCHEMA: exactly one row per images row,
+    the valid, rounded points of :func:`extract_points` folded inside the
+    same Arrow pass into the point count ``n`` over all bands and the
+    lon/lat/elevation bounds, next to the row's ``w`` and ``h``. An image
+    with no valid point gets ``n = 0`` and NULL bounds.
+
+    The bounds follow Spark's min/max order (as :func:`fold_by_key`'s):
+    ``min`` skips NaN unless every value is NaN, ``max`` is NaN as soon as
+    one value is; so ``F.min``/``F.max`` over these rows give what they
+    give over the points. Only O(images) rows leave the Python workers,
+    and with no shuffle a ``collect()`` of them is one Spark job."""
+    return images_df.select(*_KERNEL_COLS).mapInArrow(_summaries_batches, SUMMARY_SCHEMA)
+
+
+def _summaries_batches(batches: Iterator) -> Iterator:
+    """extract_summaries' mapInArrow body: one summary batch per image batch."""
+    import pyarrow as pa
+
+    names = [f.split()[0] for f in SUMMARY_SCHEMA.split(", ")]
+    for batch in batches:
+        if not batch.num_rows:
+            continue
+        tbl = batch.to_pydict()
+        rows = []
+        for j in range(batch.num_rows):
+            bands = [b for b in _extract_image(
+                tbl["image_id"][j], tbl["bytes"][j], tbl["w"][j], tbl["h"][j],
+                tbl["fmt"][j], tbl["transform"][j], tbl["crs"][j],
+                tbl["band_count"][j], True, None, None, True,
+            ) if len(b[1])]
+            # (lon, lat, z) of every band: min and max per band, then over bands
+            rows.append([sum(len(b[1]) for b in bands)] + [
+                float(fold.reduce([fold.reduce(b[k]) for b in bands])) if bands else None
+                for k in (2, 3, 4) for fold in (np.fmin, np.maximum)])
+        cols = list(zip(*rows))
+        yield pa.RecordBatch.from_arrays(
+            [pa.array(tbl["image_id"], pa.string()), pa.array(tbl["w"], pa.int32()),
+             pa.array(tbl["h"], pa.int32()), pa.array(cols[0], pa.int64())]
+            + [pa.array(c, pa.float64()) for c in cols[1:]],
+            names=names,
+        )
+
+
 # (aggregate, column) of the per-image bounds, in output order
 _BOUNDS = tuple((agg, c) for c in ("longitude", "latitude", "elevation")
                 for agg in ("min", "max"))
@@ -528,12 +586,14 @@ def analyze_images(points_df):
     )
 
 
-def analyze_partials(partials_df):
-    """:func:`analyze_images` over :func:`extract_partials` rows: the same
-    columns and values, folded from O(tiles) rows instead of O(points)."""
+def analyze_summaries(summaries_df):
+    """:func:`analyze_images` over :func:`extract_summaries` rows: the same
+    columns and values, folded from O(images) rows instead of O(points).
+    An image with no valid point gets ``valid_pixels = 0`` and NULL bounds
+    where :func:`analyze_images` has no row."""
     from pyspark.sql import functions as F
 
-    return partials_df.groupBy("image_id").agg(
+    return summaries_df.groupBy("image_id").agg(
         F.sum("n").alias("valid_pixels"),
         *(getattr(F, agg)(f"{agg}_{c}").alias(f"{agg}_{c}") for agg, c in _BOUNDS),
     )

@@ -388,52 +388,95 @@ def json_struct_of_arrays(
 
 def master_catalog(points: DataFrame, images: DataFrame) -> dict:
     """The master catalog document (doesSamples.py:351-466) of a points
-    table: per-file entries (sorted) + overall bounds."""
-    from .extract import analyze_images
+    table: per-file entries (sorted) + overall bounds.
 
-    return catalog_document(analyze_images(points), images)
+    Over an untouched, uncached default ``extract.extract_points`` frame
+    of ``images`` (``extract.source_images``, the rule ``zonal.zonal_stats``
+    follows) it is :func:`catalog_document` of ``images``: one job, and no
+    point leaves the Python workers. Any other frame aggregates its points
+    per image, and the images' (id, w, h) rows are joined on the driver."""
+    from . import extract
 
-
-def catalog_document(per_image: DataFrame, images: DataFrame) -> dict:
-    """:func:`master_catalog` from a per-image aggregate with
-    ``extract.analyze_images`` columns (``valid_pixels`` and min/max of
-    longitude, latitude, elevation), one row per ``image_id``.
-
-    Spark folds the aggregate; its rows and the images' (id, w, h) rows
-    are then collected, and the join and the sort run on the driver, as
-    the reference's loop over the files does: both sides are O(files),
-    and a distributed join and ``orderBy`` of them cost more jobs than
-    they save. They keep Spark's semantics: a LEFT join where a NULL
-    ``image_id`` matches nothing, a repeated images row gets one entry
-    each, and ids sort NULL first, then in code-point order (Spark's
-    UTF-8 byte order)."""
+    if extract.source_images(points) is images:
+        return catalog_document(extract.extract_summaries(images))
+    per_image = extract.analyze_images(points).withColumnRenamed("valid_pixels", "n")
     aggs = {r["image_id"]: r.asDict() for r in per_image.collect()}
-    rows = images.select("image_id", "w", "h").collect()
+    return _catalog(images.select("image_id", "w", "h").collect(), aggs)
+
+
+def catalog_document(summaries: DataFrame) -> dict:
+    """:func:`master_catalog` from ``extract.extract_summaries`` rows, one
+    per images row: a single ``collect()``, one Spark job with no shuffle.
+
+    The rows of a repeated ``image_id`` are merged (:func:`merge_summaries`)
+    and the entries sorted on the driver, as the reference's loop over
+    the files does, with the semantics of a Spark LEFT join of the images
+    to the per-image aggregate and an ``orderBy``: a NULL ``image_id``
+    matches nothing and sorts first, ids sort in code-point order (Spark's
+    UTF-8 byte order), and a repeated images row gets one entry each, all
+    carrying its id's combined aggregate."""
+    rows = summaries.collect()
+    return _catalog(rows, merge_summaries(rows))
+
+
+# per-file bound -> overall_bounds key
+_OVERALL = (("min_longitude", "min_x"), ("max_longitude", "max_x"),
+            ("min_latitude", "min_y"), ("max_latitude", "max_y"),
+            ("min_elevation", "min_z"), ("max_elevation", "max_z"))
+
+
+def _spark_fold(col: str, a, b):
+    """``F.min`` (``col`` starts with ``min``) or ``F.max`` of two doubles
+    in Spark's order, never Python's order-dependent ``min``/``max`` on
+    NaN: None is no value, NaN sorts above every number, so ``min`` skips
+    NaN unless both are NaN and ``max`` is NaN as soon as one is."""
+    if a is None or b is None:
+        return a if b is None else b
+    if col.startswith("min"):
+        return a if b != b or a <= b else b
+    return a if a != a or (b == b and a >= b) else b
+
+
+def merge_summaries(rows) -> dict:
+    """``extract.extract_summaries`` rows combined per non-NULL
+    ``image_id`` as Spark's ``groupBy("image_id").agg(sum("n"), min, max)``
+    combines them: ``{image_id: {"n": ..., "min_longitude": ..., ...}}``."""
+    out: dict = {}
+    for r in rows:
+        if r["image_id"] is None:
+            continue
+        a = out.get(r["image_id"])
+        if a is None:
+            out[r["image_id"]] = {"n": r["n"], **{c: r[c] for c, _ in _OVERALL}}
+            continue
+        a["n"] += r["n"]
+        for c, _ in _OVERALL:
+            a[c] = _spark_fold(c, a[c], r[c])
+    return out
+
+
+def _catalog(images_rows, aggs: dict) -> dict:
+    """The catalog document of the images' (image_id, w, h) rows and their
+    per-id aggregates ``aggs`` (``n`` and the bounds)."""
     # doesSamples.py:439 sort by source
-    rows.sort(key=lambda r: (r["image_id"] is not None, r["image_id"] or ""))
-    # per-file bound -> overall_bounds key, fold
-    folds = (("min_longitude", "min_x", min), ("max_longitude", "max_x", max),
-             ("min_latitude", "min_y", min), ("max_latitude", "max_y", max),
-             ("min_elevation", "min_z", min), ("max_elevation", "max_z", max))
+    rows = sorted(images_rows, key=lambda r: (r["image_id"] is not None, r["image_id"] or ""))
     files = []
-    ob = {dst: None for _, dst, _ in folds}
+    ob = {dst: None for _, dst in _OVERALL}
     for r in rows:
         # LEFT join from the image catalog: all-NoData files contribute
         # zero points but the reference catalog enumerates every source
         # file (has_valid_data=false entries, doesSamples.py:351-466)
         a = aggs.get(r["image_id"], {}) if r["image_id"] is not None else {}
-        n = a.get("valid_pixels") or 0
+        n = a.get("n") or 0
         files.append({
             "source_tiff": r["image_id"], "file_prefix": r["image_id"],
-            "bounds_wgs84": {src: a.get(src) for src, _, _ in folds},
+            "bounds_wgs84": {src: a.get(src) for src, _ in _OVERALL},
             "original_points": r["w"] * r["h"], "frontend_points": n,
             "has_valid_data": n > 0,
             "available_formats": {"csv": True, "json": True, "geojson_wgs84": True, "readme": True},
         })
-        for src, dst, fn in folds:
-            if a.get(src) is None:
-                continue  # zero-point file: no bounds to fold
-            ob[dst] = a[src] if ob[dst] is None else fn(ob[dst], a[src])
+        for src, dst in _OVERALL:
+            ob[dst] = _spark_fold(src, ob[dst], a.get(src))
     return {
         "type": "elevation_catalog",
         "total_files": len(files),

@@ -14,8 +14,8 @@ The catalog rollup reproduces the reference master catalog
 (doesSamples.py:351-466, completePixleOutput.py:284-468): per-image
 bounds + counts, folded into overall bounds — one aggregation query;
 the grand-total row is the catalog's ``overall_bounds``. Over a fresh
-``extract.extract_points`` frame it rolls up the per-(image, tile)
-partials folded inside the extract pass instead of the points.
+``extract.extract_points`` frame it rolls up the per-image summaries
+folded inside the extract pass instead of the points.
 """
 
 from __future__ import annotations
@@ -188,14 +188,15 @@ def catalog_rollup(points: DataFrame) -> DataFrame:
 
     Over an untouched, uncached default ``extract.extract_points`` frame
     (``extract.source_images``, the rule ``zonal.zonal_stats`` follows)
-    it rolls up the per-(image, tile) ``extract.extract_partials`` rows
-    instead, so only those rows leave the Python workers: the same rows,
-    since counts add up and the partial bounds follow Spark's min/max."""
+    it rolls up the per-images-row ``extract.extract_summaries`` rows with
+    points (``n > 0``: a zero-point image adds no group) instead, so only
+    those rows leave the Python workers: the same rows, since counts add
+    up and the summary bounds follow Spark's min/max."""
     images = extract.source_images(points)
     if images is None:
         rows, count, col = points, F.count("*"), lambda agg, c: c
     else:
-        rows, count = extract.extract_partials(images, DEFAULT_LEVEL), F.sum("n")
+        rows, count = extract.extract_summaries(images).filter(F.col("n") > 0), F.sum("n")
         col = lambda agg, c: f"{agg}_{c}"
     return (
         rows.rollup("image_id")
