@@ -499,24 +499,19 @@ class TestFusedOperators:
         base = dict((t, n) for t, n, _ in Converter(spark, images).tiles().collect())
         assert sum(n for _, n, _ in got) > sum(base.values())
 
-    def test_fold_by_key_follows_spark_nan_order(self, spark):
-        """The in-worker fold agrees with Spark's min (skips NaN) and
-        max (NaN wins) on groups with some, all and no NaN."""
+    def test_fold_by_key_follows_spark_groupby_count(self, spark):
+        """The in-worker fold's keys and counts agree with Spark's
+        groupBy count, on keys that recur out of order."""
         from pyspark.sql import functions as F
 
         key = np.array([3, 1, 3, 1, 2, 2, 4, 4], dtype=np.int64)
-        v = np.array([np.nan, 5.0, 2.0, np.nan, np.nan, np.nan, -1.0, 7.5])
-        keys, n, [(mn, mx)] = extract.fold_by_key(key, [v])
+        keys, n = extract.fold_by_key(key)
         want = (
-            spark.createDataFrame([(int(k), float(x)) for k, x in zip(key, v)],
-                                  "k long, v double")
-            .groupBy("k").agg(F.count("*").alias("n"), F.min("v").alias("mn"),
-                              F.max("v").alias("mx"))
+            spark.createDataFrame([(int(k),) for k in key], "k long")
+            .groupBy("k").agg(F.count("*").alias("n"))
             .orderBy("k").toPandas()
         )
         assert keys.tolist() == want["k"].tolist() and n.tolist() == want["n"].tolist()
-        np.testing.assert_array_equal(mn, want["mn"].to_numpy())
-        np.testing.assert_array_equal(mx, want["mx"].to_numpy())
 
     def test_partials_plan_ships_no_points(self, spark, monkeypatch):
         """The one Python node under tiles() emits the per-(image, tile)
@@ -677,6 +672,35 @@ class TestFusedOperators:
             base = zonal.zonal_stats(extract.extract_points(zonal_images), rings).toPandas()
             n = lambda d, i: d.loc[d["image_id"] == f"img_0000000{i}", "count"].sum()
             assert n(fast, 1) == n(base, 1) + n(base, 2) and n(base, 1) > 0 and n(base, 2) > 0
+
+
+    @pytest.mark.parametrize("consumer", ["summaries", "partials", "zonal"])
+    def test_fold_rows_do_not_depend_on_batch_cap(self, spark, zonal_images, monkeypatch, consumer):
+        """Every consumer of the extract driver flushes its rows at the
+        one batch cap (extract._BATCH_ROWS, read when the plan is built)
+        and at the end: at a 3-row cap, which splits an image's rows
+        across batches and packs several images into one, each aggregate
+        gives the rows it gives at the default cap, on images with
+        all-NoData files, a NULL image_id and a repeated images row."""
+        from pyspark.sql import functions as F
+
+        ids = [r["image_id"] for r in zonal_images.select("image_id").orderBy("image_id").collect()]
+        images = zonal_images.unionByName(zonal_images.filter(F.col("image_id") == ids[1])).withColumn(
+            "image_id", F.when(F.col("image_id") != ids[2], F.col("image_id")).cast("string"))
+        frame = {
+            "summaries": lambda: extract.extract_summaries(images),
+            "partials": lambda: extract.extract_partials(images, 12),
+            "zonal": lambda: zonal.zonal_stats(
+                extract.extract_points(images), [synth.GOLDEN_DELHI_RING], "p"),
+        }[consumer]
+        rows = lambda: sorted(map(tuple, frame().collect()), key=repr)
+        want = rows()
+        monkeypatch.setattr(extract, "_BATCH_ROWS", 3)
+        got = rows()
+        assert got == want
+        assert len(want) > 3 and None in {r[1 if consumer == "zonal" else 0] for r in want}
+        if consumer == "summaries":
+            assert sum(r[0] == ids[1] for r in want) == 2 and any(r[3] == 0 for r in want)
 
 
 class TestSinks:

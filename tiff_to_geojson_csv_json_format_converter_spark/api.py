@@ -18,9 +18,10 @@ O(files + capped features), never O(pixels).
 
 Where the points go: ``tiles()``, ``catalog()``, ``analyze()`` and
 ``zonal_response()`` only need aggregates, so they aggregate inside the
-extract pass and only O(images x groups) rows cross into the JVM:
-``extract.extract_summaries`` folds one row per images row,
-``extract.extract_partials`` one row per image and tile, and
+extract pass and only O(images x groups) rows cross into the JVM. One
+extract driver serves them all, each with its own per-image emit:
+``extract.extract_summaries`` folds one row per images row (count and
+bounds), ``extract.extract_partials`` one count per image and tile, and
 ``zonal.zonal_stats`` over a fresh ``extract.extract_points`` frame one
 row per image and band inside the polygon. ``points()``, ``convert()``
 and ``nearest()`` still materialize every point.

@@ -46,15 +46,3 @@ def world_to_pixel(
     col = (e * dx - b * dy) / det - 0.5
     row = (-d * dx + a * dy) / det - 0.5
     return row, col
-
-
-def image_bounds_xy(
-    transform: tuple[float, float, float, float, float, float], w: int, h: int
-) -> tuple[float, float, float, float]:
-    """(min_x, min_y, max_x, max_y) of the full image footprint (pixel edges)."""
-    a, b, c, d, e, f = (float(v) for v in transform)
-    corners_col = np.array([0.0, w, 0.0, w])
-    corners_row = np.array([0.0, 0.0, h, h])
-    xs = c + a * corners_col + b * corners_row
-    ys = f + d * corners_col + e * corners_row
-    return float(xs.min()), float(ys.min()), float(xs.max()), float(ys.max())

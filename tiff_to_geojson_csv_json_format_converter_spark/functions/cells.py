@@ -90,10 +90,6 @@ def cell_id(lon: np.ndarray, lat: np.ndarray, level: int) -> np.ndarray:
     return ((np.uint64(level) << np.uint64(58)) | m).astype(np.int64)
 
 
-def cell_level(cid: np.ndarray) -> np.ndarray:
-    return (np.asarray(cid).astype(np.uint64) >> np.uint64(58)).astype(np.int64)
-
-
 def cell_to_xy(cid: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """cell id -> (level, tile_x, tile_y)."""
     u = np.asarray(cid).astype(np.uint64)

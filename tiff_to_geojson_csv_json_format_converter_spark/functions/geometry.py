@@ -26,11 +26,6 @@ def close_ring(ring: Ring) -> np.ndarray:
     return r
 
 
-def ring_bbox(ring: Ring) -> tuple[float, float, float, float]:
-    r = close_ring(ring)
-    return float(r[:, 0].min()), float(r[:, 1].min()), float(r[:, 0].max()), float(r[:, 1].max())
-
-
 def bbox_intersects(a: tuple[float, float, float, float], b: tuple[float, float, float, float]) -> bool:
     """Rectangle-overlap test — the catalog/file prefilter the reference
     runs before any expensive mask (test2.py:94-110; the emitted JS

@@ -31,14 +31,21 @@ batches; output batches are capped at ~256k rows per yield. No shuffle
 is involved — extraction is embarrassingly parallel and scales
 linearly with executors. Every point then crosses the Python->JVM
 boundary (~52 bytes a row), which is the cost when only an aggregate
-is wanted. Three aggregates run the same per-image kernel and fold the
-points in the worker instead, so only O(images x groups) rows cross:
+is wanted.
+
+One driver (:func:`_extract_fold`) runs that pass for every consumer: it
+owns the ``mapInArrow`` over the images, the per-image kernel call, the
+optional bbox push-down and the batching of the output rows. A consumer
+supplies its output schema and an ``emit`` that maps one image's bands
+to output columns. ``extract_points``' emit passes the bands on as they
+are; three emits fold them in the worker instead, so only O(images x
+groups) rows cross:
 
 - ``extract_summaries``: one row per images row (count and bounds), for
   the catalog, ``Converter.analyze`` and ``tiling.catalog_rollup``; its
   ``collect()`` is one job with no shuffle;
-- ``extract_partials``: one row per (image, tile), for tiles (on 96
-  images, 3.04 M points: 158 MB returned -> 0.3 MB);
+- ``extract_partials``: one count per (image, tile), for tiles (on 96
+  images, 3.04 M points -> ~3.8 k rows);
 - ``zonal.zonal_stats`` over an untouched default ``extract_points``
   frame: one row per (image, band) inside the polygon (see
   :func:`source_images`).
@@ -49,11 +56,12 @@ path.
 
 from __future__ import annotations
 
+import functools
 from typing import Iterator
 
 import numpy as np
 
-from ..functions import projection
+from ..functions import cells, projection
 from ..sources import codecs
 
 POINTS_SCHEMA = (
@@ -61,12 +69,8 @@ POINTS_SCHEMA = (
     "longitude double, latitude double, elevation double"
 )
 
-# extract_partials: one row per (image, tile) — valid-point count and bounds
-PARTIALS_SCHEMA = (
-    "image_id string, tile_id long, n long, "
-    "min_longitude double, max_longitude double, min_latitude double, "
-    "max_latitude double, min_elevation double, max_elevation double"
-)
+# extract_partials: one row per (image, tile) — its valid-point count
+PARTIALS_SCHEMA = "image_id string, tile_id long, n long"
 
 # extract_summaries: one row per images row — its size, valid-point count
 # and bounds (NULL bounds when it has no valid point)
@@ -347,11 +351,8 @@ def extract_points(
     The default frame (``valid_only=True``, every other argument at its
     default) remembers ``images_df``: see :func:`source_images`.
     """
-    points = images_df.select(*_KERNEL_COLS).mapInArrow(
-        lambda batches: _points_batches(
-            batches, valid_only, sample_cap, geojson_cap, round_output, bbox),
-        POINTS_SCHEMA,
-    )
+    points = _extract_fold(images_df, POINTS_SCHEMA, _emit_points,
+                           (valid_only, sample_cap, geojson_cap, round_output), bbox)
     if valid_only and sample_cap is None and geojson_cap is None and round_output and bbox is None:
         points._source_images = images_df
     return points
@@ -378,151 +379,123 @@ def source_images(points):
     return images
 
 
-def _points_batch(ids: list, lens: list, bufs: dict):
-    """One POINTS_SCHEMA RecordBatch from buffered chunks: chunk ``c`` has
-    ``lens[c]`` rows of image ``ids[c]``. ``image_id`` is built in Arrow
-    (``take`` of the distinct-per-chunk names), never as Python strings."""
+# pyarrow type of each DDL type name in the consumers' schemas
+_ARROW_TYPES = {"string": "string", "int": "int32", "long": "int64", "double": "float64"}
+
+
+def _extract_fold(images_df, schema: str, emit, kernel: tuple = (True, None, None, True),
+                  bbox: tuple | None = None):
+    """images DataFrame -> ``schema`` rows: one ``mapInArrow`` pass of
+    :func:`_fold_batches`. ``kernel`` is ``_extract_image``'s
+    ``(valid_only, sample_cap, geojson_cap, round_output)``; the default
+    gives the valid, rounded points."""
+    cap = _BATCH_ROWS  # read here, so the workers run the plan's cap
+    return images_df.select(*_KERNEL_COLS).mapInArrow(
+        lambda batches: _fold_batches(batches, schema, emit, kernel, bbox, cap), schema)
+
+
+def _fold_batches(batches: Iterator, schema: str, emit, kernel: tuple, bbox, cap: int) -> Iterator:
+    """:func:`_extract_fold`'s body: image batches -> ``schema`` batches of
+    about ``cap`` rows.
+
+    Each images row runs ``_extract_image(*row, *kernel)``; with ``bbox``
+    it reads only the bbox's pixel window (:func:`bbox_pixel_window`) and
+    keeps the points inside the bbox, bounds included. ``emit(row,
+    bands)`` gets the row's kernel columns and its non-empty bands and
+    yields chunks: equal-length arrays or lists, one per ``schema`` column
+    after ``image_id``. A chunk over ``cap`` rows is split before it is
+    buffered (one 4096x4096 band would otherwise blow the cap 64x), and
+    ``image_id`` is built in Arrow (``take`` of one name per chunk),
+    never as Python strings."""
     import pyarrow as pa
 
-    rep = np.repeat(np.arange(len(ids), dtype=np.int32), lens)
-    return pa.RecordBatch.from_arrays(
-        [
-            pa.array(ids, pa.string()).take(pa.array(rep)),
-            pa.array(np.concatenate(bufs["band"])),
-            pa.array(np.concatenate(bufs["pixel_idx"])),
-            pa.array(np.concatenate(bufs["lon"])),
-            pa.array(np.concatenate(bufs["lat"])),
-            pa.array(np.concatenate(bufs["z"])),
-        ],
-        names=["image_id", "band", "pixel_idx", "longitude", "latitude", "elevation"],
-    )
+    fields = [f.split() for f in schema.split(", ")]
+    types = [getattr(pa, _ARROW_TYPES[t])() for _, t in fields[1:]]
+    ids, lens, chunks, n_buf = [], [], [], 0
 
+    def batch():
+        rep = np.repeat(np.arange(len(ids), dtype=np.int32), lens)
+        return pa.RecordBatch.from_arrays(
+            [pa.array(ids, pa.string()).take(pa.array(rep))]
+            + [pa.array(np.concatenate(c), t) for c, t in zip(zip(*chunks), types)],
+            names=[name for name, _ in fields],
+        )
 
-def _points_batches(batches: Iterator, valid_only, sample_cap, geojson_cap,
-                    round_output, bbox) -> Iterator:
-    """extract_points' mapInArrow body: image batches -> point batches of
-    about ``_BATCH_ROWS`` rows."""
-    ids: list = []
-    lens: list = []
-    bufs = {k: [] for k in ("band", "pixel_idx", "lon", "lat", "z")}
-    n_buf = 0
-    for batch in batches:
-        tbl = batch.to_pydict()
-        for j in range(batch.num_rows):
-            win = None if bbox is None else bbox_pixel_window(
-                tbl["transform"][j], tbl["crs"][j], tbl["w"][j], tbl["h"][j], bbox)
-            for band, bi, bl, bb, bz in _extract_image(
-                tbl["image_id"][j], tbl["bytes"][j], tbl["w"][j], tbl["h"][j],
-                tbl["fmt"][j], tbl["transform"][j], tbl["crs"][j],
-                tbl["band_count"][j], valid_only, sample_cap, geojson_cap,
-                round_output, window=win,
-            ):
-                if bbox is not None and len(bi):
-                    _mn_lon, _mn_lat, _mx_lon, _mx_lat = bbox
-                    m = (
-                        (bl >= _mn_lon) & (bl <= _mx_lon)
-                        & (bb >= _mn_lat) & (bb <= _mx_lat)
-                    )
-                    bi, bl, bb, bz = bi[m], bl[m], bb[m], bz[m]
-                if len(bi) == 0:
-                    continue
-                # chunk oversized bands BEFORE buffering — one
-                # 4096x4096 band would otherwise blow the ~256k-row
-                # batch cap 64x in a single append
-                for lo in range(0, len(bi), _BATCH_ROWS):
-                    sl = slice(lo, lo + _BATCH_ROWS)
-                    n = len(bi[sl])
-                    ids.append(tbl["image_id"][j])
-                    lens.append(n)
-                    bufs["band"].append(np.full(n, band, dtype=np.int32))
-                    bufs["pixel_idx"].append(bi[sl])
-                    bufs["lon"].append(bl[sl])
-                    bufs["lat"].append(bb[sl])
-                    bufs["z"].append(bz[sl])
-                    n_buf += n
-                    if n_buf >= _BATCH_ROWS:
-                        yield _points_batch(ids, lens, bufs)
-                        ids, lens = [], []
-                        bufs = {k: [] for k in bufs}
-                        n_buf = 0
+    for images in batches:
+        tbl = images.to_pydict()
+        for row in zip(*(tbl[c] for c in _KERNEL_COLS)):
+            window = None if bbox is None else bbox_pixel_window(
+                row[5], row[6], row[2], row[3], bbox)
+            bands = _extract_image(*row, *kernel, window=window)
+            if bbox is not None:
+                bands = _clip_to_bbox(bands, bbox)
+            for chunk in emit(row, (b for b in bands if len(b[1]))):
+                for lo in range(0, len(chunk[0]), cap):
+                    part = [c[lo:lo + cap] for c in chunk]
+                    ids.append(row[0])
+                    lens.append(len(part[0]))
+                    chunks.append(part)
+                    n_buf += lens[-1]
+                    if n_buf >= cap:
+                        yield batch()
+                        ids, lens, chunks, n_buf = [], [], [], 0
     if n_buf:
-        yield _points_batch(ids, lens, bufs)
+        yield batch()
 
 
-def fold_by_key(key: np.ndarray, values: list) -> tuple:
-    """Group float ``values`` arrays by int64 ``key``: returns the distinct
-    keys (ascending), the count per key and a (min, max) pair per value
-    array. NaN follows Spark's ordering (NaN above every number), so a
-    second fold by ``F.min``/``F.max`` gives what Spark gives over the
-    unfolded rows: ``fmin`` skips NaN unless a group is all NaN, and
-    ``maximum`` returns NaN as soon as a group holds one.
+def _clip_to_bbox(bands: Iterator, bbox: tuple) -> Iterator:
+    """``_extract_image``'s bands restricted to the points inside the
+    lon/lat ``bbox``, bounds included."""
+    min_lon, min_lat, max_lon, max_lat = bbox
+    for band, bi, bl, bb, bz in bands:
+        m = (bl >= min_lon) & (bl <= max_lon) & (bb >= min_lat) & (bb <= max_lat)
+        yield band, bi[m], bl[m], bb[m], bz[m]
+
+
+def _emit_points(row, bands):
+    """extract_points' emit: every band's points as they are."""
+    for band, bi, bl, bb, bz in bands:
+        yield np.full(len(bi), band, dtype=np.int32), bi, bl, bb, bz
+
+
+def fold_by_key(key: np.ndarray) -> tuple:
+    """Count int64 ``key``: returns the distinct keys (ascending) and the
+    count per key.
 
     Row-major pixels come in runs of one key (a tile's span of an image
-    row), so each run is folded where it lies and only the run heads are
-    sorted (stable): the same counts, minima and maxima as a stable sort
-    of every row, without gathering every value."""
+    row), so each run is counted where it lies and only the run heads are
+    sorted: the same counts as a sort of every row."""
     runs = np.flatnonzero(np.r_[True, key[1:] != key[:-1]])
     order = np.argsort(key[runs], kind="stable")
     ks = key[runs][order]
     starts = np.flatnonzero(np.r_[True, ks[1:] != ks[:-1]])
     n = np.add.reduceat(np.diff(np.r_[runs, len(key)])[order], starts)
-    out = []
-    for v in values:
-        mn = np.fmin.reduceat(v, runs)[order]
-        mx = np.maximum.reduceat(v, runs)[order]
-        out.append((np.fmin.reduceat(mn, starts), np.maximum.reduceat(mx, starts)))
-    return ks[starts], n, out
+    return ks[starts], n
 
 
 def extract_partials(images_df, level: int = 12):
     """images DataFrame -> PARTIALS_SCHEMA: the valid, rounded points of
-    :func:`extract_points` folded inside the same Arrow pass into one row
-    per (image_id, tile_id) — the point count and the lon/lat/elevation
-    bounds, over all bands. ``tile_id`` is ``cells.tile_id_col``'s
-    row-major id at ``level`` (``cells.tile_xy`` is its numpy twin).
+    :func:`extract_points` counted inside the same Arrow pass per
+    (image_id, tile_id), over all bands. ``tile_id`` is
+    ``cells.tile_id_col``'s row-major id at ``level`` (``cells.tile_xy``
+    is its numpy twin).
 
     Tile aggregates (``Converter.tiles``) fold these rows with
     ``sum``/``countDistinct`` and get exactly what they would over the
     points, while the Python->JVM boundary carries O(images x tiles) rows
     instead of O(pixels). Per-image aggregates fold
     :func:`extract_summaries` instead."""
-    return images_df.select(*_KERNEL_COLS).mapInArrow(
-        lambda batches: _partials_batches(batches, level), PARTIALS_SCHEMA)
+    return _extract_fold(images_df, PARTIALS_SCHEMA, functools.partial(_emit_partials, level))
 
 
-def _partials_batches(batches: Iterator, level: int) -> Iterator:
-    """extract_partials' mapInArrow body: one partials batch per image batch."""
-    import pyarrow as pa
-
-    from ..functions import cells
-
-    names = [f.split()[0] for f in PARTIALS_SCHEMA.split(", ")]
-    for batch in batches:
-        tbl = batch.to_pydict()
-        ids, lens, parts = [], [], []
-        for j in range(batch.num_rows):
-            bands = [b for b in _extract_image(
-                tbl["image_id"][j], tbl["bytes"][j], tbl["w"][j], tbl["h"][j],
-                tbl["fmt"][j], tbl["transform"][j], tbl["crs"][j],
-                tbl["band_count"][j], True, None, None, True,
-            ) if len(b[1])]
-            if not bands:
-                continue
-            lon, lat, z = (np.concatenate([b[k] for b in bands]) if len(bands) > 1
-                           else bands[0][k] for k in (2, 3, 4))
-            tx, ty = cells.tile_xy(lon, lat, level)
-            tids, n, bounds = fold_by_key(tx * (1 << level) + ty, [lon, lat, z])
-            ids.append(tbl["image_id"][j])
-            lens.append(len(tids))
-            parts.append([tids, n] + [a for mm in bounds for a in mm])
-        if not ids:
-            continue
-        rep = np.repeat(np.arange(len(ids), dtype=np.int32), lens)
-        yield pa.RecordBatch.from_arrays(
-            [pa.array(ids, pa.string()).take(pa.array(rep))]
-            + [pa.array(np.concatenate(c)) for c in zip(*parts)],
-            names=names,
-        )
+def _emit_partials(level: int, row, bands):
+    """extract_partials' emit: one (tile_id, n) row per tile of the image."""
+    bands = list(bands)
+    if bands:
+        lon, lat = (np.concatenate([b[k] for b in bands]) if len(bands) > 1
+                    else bands[0][k] for k in (2, 3))
+        tx, ty = cells.tile_xy(lon, lat, level)
+        yield fold_by_key(tx * (1 << level) + ty)
 
 
 def extract_summaries(images_df):
@@ -532,41 +505,23 @@ def extract_summaries(images_df):
     lon/lat/elevation bounds, next to the row's ``w`` and ``h``. An image
     with no valid point gets ``n = 0`` and NULL bounds.
 
-    The bounds follow Spark's min/max order (as :func:`fold_by_key`'s):
-    ``min`` skips NaN unless every value is NaN, ``max`` is NaN as soon as
-    one value is; so ``F.min``/``F.max`` over these rows give what they
-    give over the points. Only O(images) rows leave the Python workers,
-    and with no shuffle a ``collect()`` of them is one Spark job."""
-    return images_df.select(*_KERNEL_COLS).mapInArrow(_summaries_batches, SUMMARY_SCHEMA)
+    The bounds follow Spark's min/max order: ``min`` skips NaN unless
+    every value is NaN (``np.fmin``), ``max`` is NaN as soon as one value
+    is (``np.maximum``); so ``F.min``/``F.max`` over these rows give what
+    they give over the points. Only O(images) rows leave the Python
+    workers, and with no shuffle a ``collect()`` of them is one Spark
+    job."""
+    return _extract_fold(images_df, SUMMARY_SCHEMA, _emit_summary)
 
 
-def _summaries_batches(batches: Iterator) -> Iterator:
-    """extract_summaries' mapInArrow body: one summary batch per image batch."""
-    import pyarrow as pa
-
-    names = [f.split()[0] for f in SUMMARY_SCHEMA.split(", ")]
-    for batch in batches:
-        if not batch.num_rows:
-            continue
-        tbl = batch.to_pydict()
-        rows = []
-        for j in range(batch.num_rows):
-            bands = [b for b in _extract_image(
-                tbl["image_id"][j], tbl["bytes"][j], tbl["w"][j], tbl["h"][j],
-                tbl["fmt"][j], tbl["transform"][j], tbl["crs"][j],
-                tbl["band_count"][j], True, None, None, True,
-            ) if len(b[1])]
-            # (lon, lat, z) of every band: min and max per band, then over bands
-            rows.append([sum(len(b[1]) for b in bands)] + [
-                float(fold.reduce([fold.reduce(b[k]) for b in bands])) if bands else None
-                for k in (2, 3, 4) for fold in (np.fmin, np.maximum)])
-        cols = list(zip(*rows))
-        yield pa.RecordBatch.from_arrays(
-            [pa.array(tbl["image_id"], pa.string()), pa.array(tbl["w"], pa.int32()),
-             pa.array(tbl["h"], pa.int32()), pa.array(cols[0], pa.int64())]
-            + [pa.array(c, pa.float64()) for c in cols[1:]],
-            names=names,
-        )
+def _emit_summary(row, bands):
+    """extract_summaries' emit: the image's one row, also when no band
+    has a point."""
+    bands = list(bands)
+    # (lon, lat, z) of every band: min and max per band, then over bands
+    yield ([row[2]], [row[3]], [sum(len(b[1]) for b in bands)], *(
+        [fold.reduce([fold.reduce(b[k]) for b in bands]) if bands else None]
+        for k in (2, 3, 4) for fold in (np.fmin, np.maximum)))
 
 
 # (aggregate, column) of the per-image bounds, in output order

@@ -206,21 +206,3 @@ def catalog_rollup(points: DataFrame) -> DataFrame:
         )
         .withColumn("is_overall", F.col("image_id").isNull())
     )
-
-
-def write_tiled(points: DataFrame, path: str, level: int = DEFAULT_LEVEL,
-                salt_buckets: int = 8, coarse_level: int = 6) -> None:
-    """Write the point table partitioned by a COARSE cell prefix (few
-    thousand directories max) with salted in-partition spread. Readers
-    with a bbox predicate prune partitions via the prefix column."""
-    tiled = assign_tiles(points, level)
-    tiled = tiled.withColumn(
-        "cell_prefix",
-        cells.cell_id_col(F.col("longitude"), F.col("latitude"), coarse_level),
-    )
-    (
-        salted_repartition(tiled, "cell_prefix", salt_buckets)
-        .write.mode("overwrite")
-        .partitionBy("cell_prefix")
-        .parquet(path)
-    )

@@ -15,18 +15,20 @@ Two plans, picked from the input by :func:`zonal_stats`:
   then the literal codegen ray-cast, or the Arrow PIP kernel above 64
   edges) -> groupBy agg. One shuffle, map-side partial aggregation.
 - in-extract path (an untouched, uncached default
-  ``extract.extract_points`` frame, see ``extract.source_images``): one
-  ``mapInArrow`` over the images windows each image to the polygon's
-  bbox, extracts, clips with the same PIP kernel and folds each
-  (image, band) to n, sum, M2, min and max, so O(images x bands) rows
-  cross into the JVM instead of every point. The JVM merges the partial
-  rows of a key (several images rows may share an id) with the k-way
-  form of Chan et al.'s pairwise update. Same rows as the row path:
-  count, min and max exactly, mean and std_pop up to summation order.
+  ``extract.extract_points`` frame, see ``extract.source_images``): the
+  extract driver (``extract._extract_fold``) windows each image to the
+  polygon's bbox and keeps the points inside the bbox; this module's
+  emit clips them with the same PIP kernel and folds each (image, band)
+  to n, sum, M2, min and max, so O(images x bands) rows cross into the
+  JVM instead of every point. The JVM merges the partial rows of a key
+  (several images rows may share an id) with the k-way form of Chan et
+  al.'s pairwise update. Same rows as the row path: count, min and max
+  exactly, mean and std_pop up to summation order.
 """
 
 from __future__ import annotations
 
+import functools
 import json
 
 import numpy as np
@@ -69,9 +71,11 @@ def _zonal_in_extract(images: DataFrame, rings: list) -> DataFrame:
     """Per-(image_id, band) min/max/mean/std_pop/count of the valid points
     of ``images`` inside ``rings``, folded inside the extract pass."""
     rings_arr = [np.asarray(r, dtype=np.float64) for r in rings]
-    bbox = joins._rings_bbox(rings)
-    parts = images.select(*extract._KERNEL_COLS).mapInArrow(
-        lambda batches: _zonal_batches(batches, rings_arr, bbox), _PARTIALS_SCHEMA)
+    # the polygon bbox's pixel window: an image the bbox misses decodes
+    # nothing, a small polygon on a large image extracts ~the overlap
+    parts = extract._extract_fold(images, _PARTIALS_SCHEMA,
+                                  functools.partial(_emit_zonal, rings_arr),
+                                  bbox=joins._rings_bbox(rings))
     # k-way Chan merge: M2 = sum(m2_i) + sum(n_i * (mean_i - mean)^2); the
     # key's mean comes first (a window over the aggregate's own
     # partitioning), so a key with one partial row keeps its m2 exactly
@@ -91,60 +95,16 @@ def _zonal_in_extract(images: DataFrame, rings: list) -> DataFrame:
     )
 
 
-def _zonal_batches(batches, rings_arr: list, bbox: tuple):
-    """The in-extract path's mapInArrow body: image batches -> one
-    _PARTIALS_SCHEMA batch per image batch that has points inside."""
-    import pyarrow as pa
-
-    min_lon, min_lat, max_lon, max_lat = bbox
-    schema = pa.schema([
-        ("image_id", pa.string()), ("band", pa.int32()), ("n", pa.int64()), ("s", pa.float64()),
-        ("m2", pa.float64()), ("mn", pa.float64()), ("mx", pa.float64()),
-    ])
-    for batch in batches:
-        tbl = batch.to_pydict()
-        rows = []
-        for j in range(batch.num_rows):
-            # the polygon bbox's pixel window: an image the bbox misses
-            # decodes nothing, a small polygon on a large image extracts
-            # ~the overlap
-            win = extract.bbox_pixel_window(
-                tbl["transform"][j], tbl["crs"][j], tbl["w"][j], tbl["h"][j], bbox)
-            for band, _, lon, lat, z in extract._extract_image(
-                tbl["image_id"][j], tbl["bytes"][j], tbl["w"][j], tbl["h"][j],
-                tbl["fmt"][j], tbl["transform"][j], tbl["crs"][j],
-                tbl["band_count"][j], True, None, None, True, window=win,
-            ):
-                # clip_points' bbox predicate, then its PIP kernel
-                m = (lon >= min_lon) & (lon <= max_lon) & (lat >= min_lat) & (lat <= max_lat)
-                lon, lat, z = lon[m], lat[m], z[m]
-                z = z[geometry.points_in_polygon(lon, lat, rings_arr)]
-                if len(z) == 0:
-                    continue
-                s = float(z.sum())
-                d = z - s / len(z)
-                rows.append((tbl["image_id"][j], band, len(z), s, float(d @ d),
-                             float(z.min()), float(z.max())))
-        if rows:
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(c, type=f.type) for c, f in zip(zip(*rows), schema)], schema=schema)
-
-
-def zonal_stats_multi(points: DataFrame, polygons: list[dict]) -> DataFrame:
-    """Many polygons at once: unioned per-polygon clips (each polygon's
-    bbox predicate still prunes independently). For large polygon layers
-    prefer the cell-cover equi-join in ``joins.cell_cover_join``."""
-    if not polygons:
-        return points.sparkSession.createDataFrame(
-            [],
-            "polygon_id string, image_id string, band int, min double, "
-            "max double, mean double, std_pop double, count long",
-        )
-    parts = [zonal_stats(points, p["rings"], p["polygon_id"]) for p in polygons]
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+def _emit_zonal(rings_arr: list, row, bands):
+    """The in-extract path's emit: one _PARTIALS_SCHEMA row per band with
+    points inside the polygon (the driver already applied clip_points'
+    bbox predicate, this is its PIP kernel)."""
+    for band, _, lon, lat, z in bands:
+        z = z[geometry.points_in_polygon(lon, lat, rings_arr)]
+        if len(z):
+            s = float(z.sum())
+            d = z - s / len(z)
+            yield [band], [len(z)], [s], [float(d @ d)], [float(z.min())], [float(z.max())]
 
 
 def combine_stats_reference_quirk(stats_rows: list[dict]) -> dict:

@@ -276,13 +276,3 @@ class ParquetCatalog:
             with open(schema_path) as f:
                 reader = reader.schema(StructType.fromJson(json.load(f)))
         return reader.parquet(f"{self.root}/data/*")
-
-
-def _count_checksum(df: DataFrame) -> tuple[int, int]:
-    """Order-insensitive content checksum: XOR of per-row xxhash64 over
-    all columns (cheap, distributed, deterministic, overflow-free)."""
-    row = df.select(
-        F.count("*").alias("n"),
-        F.bit_xor(F.xxhash64(*df.columns)).alias("chk"),
-    ).collect()[0]
-    return int(row["n"]), int(row["chk"] or 0)
