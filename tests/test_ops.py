@@ -5,6 +5,7 @@ multimodal plumbing shapes."""
 import numpy as np
 import pandas as pd
 import pytest
+from pyspark.sql import functions as F
 
 from tiff_to_geojson_csv_json_format_converter_spark.operators import (
     dedup, multimodal, similarity, text,
@@ -247,19 +248,65 @@ class TestSimilarity:
 
     def test_rerank_binary_wire_bit_equal_to_array_wire(self, spark):
         """The int16 binary wire and the array<long>+zip_with wire must
-        produce IDENTICAL rows — same quantization, same IEEE scoring
-        tree — at the registered dim 64."""
+        produce IDENTICAL rows from one candidate frame — same
+        quantization, same IEEE scoring tree — at dim 64 and dim 192."""
         emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+        wide = emb.select("vec_id", F.concat(
+            "embedding", F.transform("embedding", lambda v: -v),
+            F.transform("embedding", lambda v: v * F.lit(0.5)),
+        ).alias("embedding"))
+        n = emb.count()
+        cand = spark.range(n).select(
+            F.col("id").alias("query_id"),
+            F.explode(F.sequence(F.lit(1), F.lit(12))).alias("o"),
+        ).select("query_id", ((F.col("query_id") * 7 + F.col("o") * 13) % n).alias("neighbor_id"))
         cols = ["query_id", "neighbor_id", "dot_q", "cos_e6", "rank"]
-        for fn in (
-            lambda w: similarity.ivf_topk(emb, k=3, wire=w),
-            lambda w: similarity.lsh_topk(emb, k=3, wire=w),
-        ):
-            arr = fn("array").toPandas().sort_values(["query_id", "rank"])
-            binw = fn("binary").toPandas().sort_values(["query_id", "rank"])
-            assert arr[cols].reset_index(drop=True).equals(
-                binw[cols].reset_index(drop=True)
+        for vecs in (emb, wide):
+            arr, binw = (
+                similarity.exact_rerank_topk(vecs, cand, k=3, wire=w).toPandas()
+                .sort_values(["query_id", "rank"]).reset_index(drop=True)[cols]
+                for w in ("array", "binary")
             )
+            assert len(arr) > 2 * n and arr.equals(binw)
+
+    def test_ivf_grouped_rerank_partial_probe_matches_numpy(self, spark):
+        """The grouped posting-list re-rank at n_probe < n_centroids,
+        over a fixed centroid matrix, equals the exact re-rank of every
+        probed candidate: member list = nearest centroid, probed lists =
+        the n_probe nearest, self excluded, ordered (cos_e6 desc, id asc)."""
+        emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+        k, n_probe = 3, 2
+        rng = np.random.default_rng(5)
+        C = rng.normal(size=(6, 64))
+        C /= np.linalg.norm(C, axis=1, keepdims=True)
+        got = similarity._ivf_grouped_rerank(emb, C, k, n_probe, "vec_id", "embedding") \
+            .toPandas().sort_values(["query_id", "rank"])
+        pdf = emb.toPandas()
+        ids = pdf["vec_id"].to_numpy()
+        X = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
+        sims = (X / np.linalg.norm(X, axis=1, keepdims=True)) @ C.T
+        member = np.argmax(sims, axis=1)
+        probed = np.argsort(-sims, axis=1)[:, :n_probe]
+        Q = np.floor(X * 1000.0).astype(np.int64)
+        dots = Q @ Q.T
+        n2 = np.diag(dots).astype(np.float64)
+        want = []
+        for i in np.argsort(ids):
+            cand = np.flatnonzero(np.isin(member, probed[i]) & (ids != ids[i]))
+            cos_e6 = np.floor(dots[i, cand] / np.sqrt(n2[i] * n2[cand]) * 1e6).astype(np.int64)
+            for rank, j in enumerate(np.lexsort((ids[cand], -cos_e6))[:k], 1):
+                want.append((ids[i], ids[cand[j]], dots[i, cand[j]], cos_e6[j], rank))
+        assert len(set(member)) > n_probe  # some lists are not probed
+        cols = ["query_id", "neighbor_id", "dot_q", "cos_e6", "rank"]
+        assert list(map(tuple, got[cols].to_numpy())) == want
+
+    def test_lsh_declared_dim_must_match_vectors(self, spark):
+        """A declared LSH dim that is not the vectors' width is refused
+        with both widths named, not a numpy shape error."""
+        emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+        wide = emb.select("vec_id", F.concat("embedding", "embedding", "embedding").alias("embedding"))
+        with pytest.raises(Exception, match="LSH dim 64 does not match the vector width 192"):
+            similarity.lsh_topk(wide, k=5).collect()
 
     def test_brute_topk_blocked_bit_equal_to_broadcast(self, spark):
         """The no-driver-collect grid decomposition must reproduce the

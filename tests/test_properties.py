@@ -304,3 +304,18 @@ def test_knn_join_agrees_with_brute_force(spark, seed):
                 assert (r.image_id, r.pixel_idx, r.band) == tuple(pdf.loc[j, ["image_id", "pixel_idx", "band"]])
             else:
                 assert r.dist2 >= d2[j]
+
+
+def test_similarity_operators_on_an_empty_corpus(spark):
+    """An empty corpus gives empty results of each operator's schema —
+    no driver-side stacking of zero vectors at call time."""
+    from tiff_to_geojson_csv_json_format_converter_spark.operators import similarity
+
+    emb = spark.createDataFrame([], "vec_id long, embedding array<float>")
+    topk = [("query_id", "bigint"), ("neighbor_id", "bigint"), ("dot_q", "bigint"),
+            ("cos_e6", "bigint"), ("rank", "int")]
+    for df in (similarity.brute_topk(emb, k=3),
+               similarity.brute_topk_blocked(emb, k=3, n_blocks=2)):
+        assert df.dtypes == topk and df.collect() == []
+    pairs = similarity.cosine_pairs(emb, threshold_e6=400_000, mode="broadcast")
+    assert pairs.columns == ["id_a", "id_b", "dot_q", "cos_e6"] and pairs.collect() == []

@@ -1,17 +1,38 @@
 """Similarity search over the embeddings table (array<float> column).
 
-- ``quantized``: vectors quantized to int64 (floor(v*1000)) make dot
-  products EXACT integers — order-independent, engine-portable, and the
-  oracle-checkable form of cosine ranking.
-- ``brute_topk``: baseline exact top-k. The corpus matrix is collected
-  once, broadcast to executors, and each Arrow batch of queries does one
-  numpy (batch x corpus) matmul — the right brute-force shape up to a
-  few million corpus rows; beyond that use the LSH path.
-- ``lsh_topk``: random-hyperplane LSH bucketing (seeded, deterministic)
-  — candidates from bucket equi-joins only, then exact re-rank. The
-  scale path: no all-pairs work, shuffle bounded by bucket sizes.
-- ``cosine_pairs``: threshold near-dup pairs via the same quantized
-  dot + norms, broadcast-joined blockwise.
+Every operator quantizes vectors to int64 (``floor(v*1000)``) so dot
+products are EXACT integers, and scores a pair as
+``FLOOR(dot / SQRT(f64(na) * f64(nb)) * 1e6)`` — order-independent,
+engine-portable, and oracle-checkable. Each operator has one path:
+
+- ``with_quantized``: the Catalyst form of the quantization (``qvec``
+  plus its exact squared norm ``qnorm2``).
+- ``brute_topk``: exact self top-k. The corpus is collected once and
+  broadcast as a float64 matrix; each Arrow batch of queries is scored
+  with one matmul and keeps its per-query top-k.
+- ``brute_topk_blocked``: the same rows without the driver collect — a
+  (query batch x corpus block) grid of local top-k cells, then a global
+  window.
+- ``cosine_pairs``: threshold near-dup pairs. ``broadcast`` matmuls each
+  batch against the broadcast corpus; ``lsh`` is
+  :func:`cosine_pairs_lsh`; ``auto`` picks ``lsh`` at high thresholds,
+  otherwise counts the corpus and picks ``broadcast`` or
+  :func:`cosine_pairs_blocked`.
+- ``cosine_pairs_blocked``: hash-block Gram matrix, one exact matmul per
+  block pair, nothing through the driver.
+- ``cosine_pairs_lsh``: hyperplane-LSH bucket candidates, exact JVM
+  verify.
+- ``exact_rerank_topk``: exact re-rank of candidate pairs plus the
+  per-query window, over the ``array`` (JVM) or ``binary`` (Arrow) wire.
+- ``ivf_topk``: coarse centroid lists (sample or distributed k-means),
+  then one grouped posting-list re-rank.
+- ``lsh_topk``: hyperplane-LSH bucket candidates, then
+  ``exact_rerank_topk`` on the wire the declared ``dim`` selects.
+
+The shared kernels: :func:`_exact_scores` (guarded exact matmul and the
+FLOOR score), :func:`_local_topk` (per-query selection),
+:func:`_rank_topk` (global window), :func:`_lsh_signatures` (bucket
+rows) and :func:`_jvm_exact_scores` (JVM verify joins).
 """
 
 from __future__ import annotations
@@ -21,25 +42,15 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+_LOCAL_SCHEMA = "query_id long, neighbor_id long, dot_q long, cos_e6 long"
+_TOPK_SCHEMA = _LOCAL_SCHEMA + ", rank int"
+_TOPK_COLS = ["query_id", "neighbor_id", "dot_q", "cos_e6", "rank"]
+_PAIRS_SCHEMA = "id_a long, id_b long, dot_q long, cos_e6 long"
 
-def _exact_matmul(Q: np.ndarray, M: np.ndarray) -> np.ndarray:
-    """Exact int64 Gram products ``Q @ M.T``, via float64 BLAS when safe.
-
-    numpy routes int64 matmul through a scalar loop (no BLAS) — 50-100x
-    slower than dgemm. When every product and every partial sum fits in
-    float64's 53-bit integer window (max|Q| * max|M| * dim < 2^53), the
-    float64 matmul is EXACT for integer inputs regardless of summation
-    order, so we can take the fast path and round back to int64. The
-    quantized vectors here are |q| <= scale (1000 by default), so the
-    bound holds up to dim ~ 9e9; the int64 loop remains as the guarded
-    fallback.
-    """
-    if Q.size == 0 or M.size == 0:
-        return np.zeros((Q.shape[0], M.shape[0]), dtype=np.int64)
-    bound = float(np.abs(Q).max()) * float(np.abs(M).max()) * Q.shape[1]
-    if bound < 2.0**53:
-        return np.rint(Q.astype(np.float64) @ M.astype(np.float64).T).astype(np.int64)
-    return Q @ M.T
+# lsh_topk re-ranks on the binary wire from this declared dim up: below
+# it the JVM zip_with dot is cheap, above it per-element array
+# conversion across the candidate shuffle dominates (PLANS.md)
+_BINARY_WIRE_MIN_DIM = 128
 
 
 def with_quantized(df: DataFrame, vec_col: str = "embedding", scale: int = 1000) -> DataFrame:
@@ -50,44 +61,37 @@ def with_quantized(df: DataFrame, vec_col: str = "embedding", scale: int = 1000)
     return df.withColumn("qnorm2", norm2)
 
 
+def _broadcast_corpus(df: DataFrame, id_col: str, vec_col: str, scale: int):
+    """The quantized ``(id, qvec)`` frame, and its corpus collected once
+    and broadcast as ``(ids, float64 matrix)`` — None for an empty
+    corpus. float64 holds every quantized value exactly, so no batch
+    converts the corpus again."""
+    qdf = with_quantized(df, vec_col, scale).select(F.col(id_col).alias("id"), "qvec")
+    corpus = qdf.toPandas()
+    if len(corpus) == 0:
+        return qdf, None
+    sc = df.sparkSession.sparkContext
+    M = np.stack(corpus["qvec"].to_numpy()).astype(np.float64)
+    return qdf, (sc.broadcast(corpus["id"].to_numpy()), sc.broadcast(M))
+
+
 def brute_topk(df: DataFrame, k: int = 5, id_col: str = "vec_id",
                vec_col: str = "embedding", scale: int = 1000) -> DataFrame:
     """Exact self top-k by quantized cosine. Corpus -> driver -> broadcast
     numpy matrix; queries stream through in Arrow batches (one matmul per
     batch). Ties broken by neighbor id ascending; self excluded."""
-    qdf = with_quantized(df, vec_col, scale).select(id_col, "qvec", "qnorm2")
-    corpus = qdf.toPandas()
-    ids = corpus[id_col].to_numpy()
-    M = np.stack(corpus["qvec"].to_numpy()).astype(np.int64)
-    n2 = corpus["qnorm2"].to_numpy().astype(np.int64)
-    spark = df.sparkSession
-    b_ids = spark.sparkContext.broadcast(ids)
-    b_M = spark.sparkContext.broadcast(M)
-    b_n2 = spark.sparkContext.broadcast(n2)
+    qdf, corpus = _broadcast_corpus(df, id_col, vec_col, scale)
+    if corpus is None:
+        return df.sparkSession.createDataFrame([], _TOPK_SCHEMA)
+    b_ids, b_M = corpus
 
     def topk(batches):
-        ids_, M_, n2_ = b_ids.value, b_M.value, b_n2.value
+        ids, M = b_ids.value, b_M.value
         for pdf in batches:
-            Q = np.stack(pdf["qvec"].to_numpy()).astype(np.int64)
-            qn2 = pdf["qnorm2"].to_numpy().astype(np.int64)
-            qids = pdf[id_col].to_numpy()
-            dots = _exact_matmul(Q, M_)  # exact int64 (BLAS fast path)
-            out = []
-            for r in range(len(qids)):
-                cos = dots[r].astype(np.float64) / np.sqrt(qn2[r] * n2_.astype(np.float64))
-                cos_e6 = np.floor(cos * 1e6).astype(np.int64)
-                mask = ids_ != qids[r]
-                cand = np.flatnonzero(mask)
-                # sort by (-cos_e6, neighbor_id)
-                key = np.lexsort((ids_[cand], -cos_e6[cand]))
-                sel = cand[key[:k]]
-                for rank, j in enumerate(sel, 1):
-                    out.append((int(qids[r]), int(ids_[j]), int(dots[r, j]), int(cos_e6[j]), rank))
-            yield pd.DataFrame(out, columns=["query_id", "neighbor_id", "dot_q", "cos_e6", "rank"])
+            Q = np.stack(pdf["qvec"].to_numpy()).astype(np.float64)
+            yield _local_topk(pdf["id"].to_numpy(), Q, ids, M, k)
 
-    return qdf.mapInPandas(
-        topk, "query_id long, neighbor_id long, dot_q long, cos_e6 long, rank int"
-    )
+    return qdf.mapInPandas(topk, _TOPK_SCHEMA)
 
 
 def brute_topk_blocked(df: DataFrame, k: int = 5, id_col: str = "vec_id",
@@ -140,36 +144,6 @@ def brute_topk_blocked(df: DataFrame, k: int = 5, id_col: str = "vec_id",
                 F.col("g.side").alias("side"), "id", "pvec")
     )
 
-    def cell(pdf: pd.DataFrame) -> pd.DataFrame:
-        qs = pdf[pdf["side"] == "q"]
-        cs = pdf[pdf["side"] == "c"]
-        if len(qs) == 0 or len(cs) == 0:
-            return pd.DataFrame({
-                "query_id": pd.Series(dtype="int64"),
-                "neighbor_id": pd.Series(dtype="int64"),
-                "dot_q": pd.Series(dtype="int64"),
-                "cos_e6": pd.Series(dtype="int64"),
-            })
-        Q = _unpack_f64(qs["pvec"])
-        C = _unpack_f64(cs["pvec"])
-        qids = qs["id"].to_numpy()
-        cids = cs["id"].to_numpy()
-        dots, dots_f, qn2, cn2 = _exact_dots_norms(Q, C)
-        cos_e6 = np.floor(
-            dots_f / np.sqrt(qn2[:, None] * cn2[None, :]) * 1e6
-        ).astype(np.int64)
-        out = {"query_id": [], "neighbor_id": [], "dot_q": [], "cos_e6": []}
-        for r in range(len(qids)):
-            mask = cids != qids[r]
-            cand = np.flatnonzero(mask)
-            key = np.lexsort((cids[cand], -cos_e6[r, cand]))
-            sel = cand[key[:k]]
-            out["query_id"].extend([int(qids[r])] * len(sel))
-            out["neighbor_id"].extend(int(cids[j]) for j in sel)
-            out["dot_q"].extend(int(dots[r, j]) for j in sel)
-            out["cos_e6"].extend(int(cos_e6[r, j]) for j in sel)
-        return pd.DataFrame(out)
-
     # ~2 tasks per core, capped at 2x the cell count: python tasks pay a
     # worker round-trip each (measured ~0.3-0.4s on this host), so both
     # unbounded 4x inflation and per-cell partitions waste wall-clock;
@@ -177,16 +151,8 @@ def brute_topk_blocked(df: DataFrame, k: int = 5, id_col: str = "vec_id",
     n_parts = df.sparkSession.sparkContext.defaultParallelism
     local = rep.repartition(
         max(min(2 * n_parts, 2 * QB * B), 1), "qb", "cb"
-    ).mapInPandas(
-        _bucketed_kernel(["qb", "cb"], cell),
-        "query_id long, neighbor_id long, dot_q long, cos_e6 long",
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_e6"), F.asc("neighbor_id"))
-    return (
-        local.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "dot_q", "cos_e6", "rank")
-    )
+    ).mapInPandas(_bucketed_kernel(["qb", "cb"], _side_cell_topk(k)), _LOCAL_SCHEMA)
+    return _rank_topk(local, k)
 
 
 def cosine_pairs(df: DataFrame, threshold_e6: int = 950_000, id_col: str = "vec_id",
@@ -197,12 +163,12 @@ def cosine_pairs(df: DataFrame, threshold_e6: int = 950_000, id_col: str = "vec_
     """Embedding near-dup pairs: quantized cosine >= threshold, no
     cartesian product anywhere in the plan. Every emitted pair is
     EXACT-verified (no false positives in any mode); RECALL is
-    mode-dependent: ``broadcast``/``blocked`` are exhaustive (recall 1),
-    while the ``lsh`` route — the auto default at thresholds >= 0.9 —
-    is candidate-based (recall >= 0.9988 per pair at cos 0.95 with the
+    mode-dependent: ``broadcast`` is exhaustive (recall 1), while the
+    ``lsh`` route — the auto default at thresholds >= 0.9 — is
+    candidate-based (recall >= 0.9988 per pair at cos 0.95 with the
     default tables; see :func:`cosine_pairs_lsh`). Callers needing
-    guaranteed recall 1 at high thresholds must pass ``mode='blocked'``
-    explicitly.
+    guaranteed recall 1 at high thresholds call
+    :func:`cosine_pairs_blocked` directly.
 
     An exact threshold join at moderate thresholds (the registered query
     runs 0.4, where qualifying pairs are NOT high-cosine planted dups, so
@@ -210,38 +176,30 @@ def cosine_pairs(df: DataFrame, threshold_e6: int = 950_000, id_col: str = "vec_
     design question is where that quadratic work lives. A crossJoin puts
     it in the shuffle (n^2 rows over the wire: a hard 100 TB killer).
 
-    Two physical strategies, identical output:
-
     - ``broadcast`` (small corpora): the int64-quantized matrix is
       collected once and broadcast; each Arrow batch of rows does ONE
       matmul against it and emits only qualifying pairs. Zero join, zero
-      extra shuffle — but the corpus transits the driver, so it is
-      capped at ``broadcast_max_rows``.
-    - ``blocked`` (the 100 TB path, see :func:`cosine_pairs_blocked`):
-      the corpus is hash-partitioned into B blocks that meet pairwise in
-      an ``applyInPandas`` group per block pair — nothing ever touches
-      the driver, per-task memory is bounded by two blocks, and shuffle
-      volume is corpus x B (the classic blocked-Gram-matrix trade).
-
-    ``mode='auto'`` routes by threshold first: at genuine near-dup
-    thresholds (``threshold_e6 >= lsh_route_threshold_e6``, default 0.9)
-    the exact-everywhere strategies are the wrong default — qualifying
-    pairs are rare and angularly tight, which is exactly where
-    hyperplane-LSH candidate generation + exact verify does the same job
-    with candidate-bounded (not n^2) compute — so auto routes to
-    :func:`cosine_pairs_lsh` without ever counting the corpus. Below the
-    route threshold auto counts the corpus and picks: broadcast while it
-    fits under ``broadcast_max_rows``, else blocked with
-    B = ceil(n / block_rows).
+      extra shuffle — but the corpus transits the driver.
+    - ``lsh``: :func:`cosine_pairs_lsh`.
+    - ``auto`` routes by threshold first: at genuine near-dup thresholds
+      (``threshold_e6 >= lsh_route_threshold_e6``, default 0.9)
+      qualifying pairs are rare and angularly tight, which is exactly
+      where hyperplane-LSH candidate generation + exact verify does the
+      same job with candidate-bounded (not n^2) compute — so auto routes
+      to ``lsh`` without ever counting the corpus. Below the route
+      threshold auto counts the corpus and picks ``broadcast`` while it
+      fits under ``broadcast_max_rows``, else
+      :func:`cosine_pairs_blocked` with B = ceil(n / block_rows) blocks
+      (identical output, nothing through the driver).
 
     NOTE (laziness): the sub-threshold auto decision runs ``df.count()``
     at CALL time, executing the full upstream DAG once before the real
     job consumes it again. Cache ``df`` before calling with
-    ``mode='auto'`` when the upstream is expensive, or pass an explicit
-    mode (``broadcast``/``blocked``/``lsh``) to keep the operator fully
-    lazy.
+    ``mode='auto'`` when the upstream is expensive, or pick the path
+    explicitly (``broadcast``, ``lsh`` or :func:`cosine_pairs_blocked`)
+    to keep the operator fully lazy.
     """
-    if mode not in ("auto", "broadcast", "blocked", "lsh"):
+    if mode not in ("auto", "broadcast", "lsh"):
         raise ValueError(f"unknown mode {mode!r}")
     if mode == "auto" and threshold_e6 >= lsh_route_threshold_e6:
         import warnings
@@ -250,7 +208,8 @@ def cosine_pairs(df: DataFrame, threshold_e6: int = 950_000, id_col: str = "vec_
             "cosine_pairs(mode='auto') routed to LSH (threshold_e6="
             f"{threshold_e6} >= {lsh_route_threshold_e6}): recall is "
             "probabilistic (>=0.998 at 0.95 by the banding math), not "
-            "exhaustive. Pass mode='broadcast'/'blocked' for exact pairs.",
+            "exhaustive. Pass mode='broadcast' or call "
+            "cosine_pairs_blocked for exact pairs.",
             stacklevel=2,
         )
         mode = "lsh"
@@ -258,55 +217,32 @@ def cosine_pairs(df: DataFrame, threshold_e6: int = 950_000, id_col: str = "vec_
         return cosine_pairs_lsh(
             df, threshold_e6, id_col=id_col, vec_col=vec_col, scale=scale
         )
-    n_blocks = None
     if mode == "auto":
         n = df.count()
-        if n <= broadcast_max_rows:
-            mode = "broadcast"
-        else:
-            mode = "blocked"
-            # reuse the count — don't make the blocked path scan again
-            n_blocks = max(1, -(-n // max(block_rows, 1)))
-    if mode == "blocked":
-        return cosine_pairs_blocked(
-            df, threshold_e6, id_col=id_col, vec_col=vec_col, scale=scale,
-            n_blocks=n_blocks, block_rows=block_rows,
-        )
-    qdf = with_quantized(df, vec_col, scale).select(
-        F.col(id_col).alias("id"), "qvec", "qnorm2"
-    )
-    corpus = qdf.toPandas()
-    if len(corpus) == 0:
-        return df.sparkSession.createDataFrame(
-            [], "id_a long, id_b long, dot_q long, cos_e6 long"
-        )
-    ids = corpus["id"].to_numpy()
-    M = np.stack(corpus["qvec"].to_numpy()).astype(np.int64)
-    n2 = corpus["qnorm2"].to_numpy().astype(np.int64)
-    spark = df.sparkSession
-    b_ids = spark.sparkContext.broadcast(ids)
-    b_M = spark.sparkContext.broadcast(M)
-    b_n2 = spark.sparkContext.broadcast(n2)
+        if n > broadcast_max_rows:
+            return cosine_pairs_blocked(
+                df, threshold_e6, id_col=id_col, vec_col=vec_col, scale=scale,
+                n_blocks=max(1, -(-n // max(block_rows, 1))),
+            )
+    qdf, corpus = _broadcast_corpus(df, id_col, vec_col, scale)
+    if corpus is None:
+        return df.sparkSession.createDataFrame([], _PAIRS_SCHEMA)
+    b_ids, b_M = corpus
 
     def pairs(batches):
-        ids_, M_, n2_ = b_ids.value, b_M.value, b_n2.value
+        ids, M = b_ids.value, b_M.value
         for pdf in batches:
-            Q = np.stack(pdf["qvec"].to_numpy()).astype(np.int64)
-            qn2 = pdf["qnorm2"].to_numpy().astype(np.float64)
+            Q = np.stack(pdf["qvec"].to_numpy()).astype(np.float64)
             qids = pdf["id"].to_numpy()
-            dots = _exact_matmul(Q, M_)  # exact int64 (BLAS fast path)
-            # same IEEE expression tree as the SQL oracle:
-            # FLOOR(dot / SQRT(CAST(na AS DOUBLE)*CAST(nb AS DOUBLE)) * 1e6)
-            denom = np.sqrt(qn2[:, None] * n2_.astype(np.float64)[None, :])
-            cos_e6 = np.floor(dots.astype(np.float64) / denom * 1e6).astype(np.int64)
-            keep = (cos_e6 >= threshold_e6) & (qids[:, None] < ids_[None, :])
+            dots, cos_e6 = _exact_scores(Q, M)
+            keep = (cos_e6 >= threshold_e6) & (qids[:, None] < ids[None, :])
             r, c = np.nonzero(keep)
             yield pd.DataFrame({
-                "id_a": qids[r], "id_b": ids_[c],
+                "id_a": qids[r], "id_b": ids[c],
                 "dot_q": dots[r, c], "cos_e6": cos_e6[r, c],
             })
 
-    return qdf.mapInPandas(pairs, "id_a long, id_b long, dot_q long, cos_e6 long")
+    return qdf.mapInPandas(pairs, _PAIRS_SCHEMA)
 
 
 _WIRE_WIDTHS = {2: "<i2", 4: "<i4", 8: "<i8"}
@@ -371,6 +307,8 @@ def _unpack_f64(col) -> np.ndarray:
     value exactly, which is all the BLAS fast path needs."""
     vals = col.to_numpy()
     n = len(vals)
+    if n == 0:
+        return np.empty((0, 0), dtype=np.float64)
     d = (len(vals[0]) - 1) // vals[0][0]
     out = np.empty((n, d), dtype=np.float64)
     for i, v in enumerate(vals):
@@ -378,16 +316,17 @@ def _unpack_f64(col) -> np.ndarray:
     return out
 
 
-def _exact_dots_norms(A: np.ndarray, Bm: np.ndarray, rowwise: bool = False):
-    """The guarded exact scoring block shared by every blocked/binary
-    kernel (cell grid, re-rank wire, block-pair Gram): quantized-int
-    dots + squared norms, via float64 BLAS while every product and
-    partial sum fits the 53-bit integer window (qmax^2 * dim < 2^53 —
-    then einsum/matmul and rint are exact), falling back to int64
-    otherwise. ONE implementation so the bit-equality contract between
-    strategies cannot drift. ``rowwise`` scores A[i]·Bm[i] (paired
-    rows); otherwise the full A @ Bm.T Gram. Passing the SAME array as
-    both sides reuses its norms in the fallback path."""
+def _exact_scores(A: np.ndarray, Bm: np.ndarray, rowwise: bool = False):
+    """The exact scoring block shared by every numpy kernel: quantized
+    int dots ``dots`` and ``cos_e6 = FLOOR(dot / SQRT(f64(na) * f64(nb))
+    * 1e6)`` — the same IEEE expression tree as the JVM verify and the
+    SQL oracle. Dots and squared norms go through float64 BLAS while
+    every product and partial sum fits the 53-bit integer window
+    (qmax^2 * dim < 2^53 — then einsum/matmul and rint are exact),
+    falling back to int64 otherwise. ONE implementation so the
+    bit-equality contract between strategies cannot drift. ``rowwise``
+    scores A[i]·Bm[i] (paired rows); otherwise the full A @ Bm.T Gram.
+    Passing the SAME array as both sides reuses its norms."""
     qmax = max(float(np.abs(A).max()), float(np.abs(Bm).max()), 1.0)
     if qmax * qmax * A.shape[1] < 2.0**53:
         na = np.einsum("ij,ij->i", A, A)
@@ -401,7 +340,63 @@ def _exact_dots_norms(A: np.ndarray, Bm: np.ndarray, rowwise: bool = False):
         nb = na if Bm is A else np.einsum("ij,ij->i", Bi, Bi).astype(np.float64)
         dots = np.einsum("ij,ij->i", Ai, Bi) if rowwise else Ai @ Bi.T
         dots_f = dots.astype(np.float64)
-    return dots, dots_f, na, nb
+    denom = np.sqrt(na * nb) if rowwise else np.sqrt(na[:, None] * nb[None, :])
+    return dots, np.floor(dots_f / denom * 1e6).astype(np.int64)
+
+
+def _local_topk(qids: np.ndarray, Q: np.ndarray, cids: np.ndarray,
+                C: np.ndarray, k: int) -> pd.DataFrame:
+    """Each query's top-k among the corpus rows ``(cids, C)``: exact
+    scores, self excluded, ordered by (cos_e6 desc, neighbor id asc),
+    ranked from 1. The one per-query selector: the broadcast top-k
+    emits it as is, the grid and IVF cells as the local top-k their
+    global window re-ranks. Empty on either side yields no rows."""
+    if len(qids) == 0 or len(cids) == 0:
+        return pd.DataFrame({c: pd.Series(dtype="int32" if c == "rank" else "int64")
+                             for c in _TOPK_COLS})
+    dots, cos_e6 = _exact_scores(Q, C)
+    rows, sels = [], []
+    for r in range(len(qids)):
+        cand = np.flatnonzero(cids != qids[r])
+        sel = cand[np.lexsort((cids[cand], -cos_e6[r, cand]))[:k]]
+        rows.append(np.full(len(sel), r))
+        sels.append(sel)
+    r, c = np.concatenate(rows), np.concatenate(sels)
+    return pd.DataFrame({
+        "query_id": qids[r].astype(np.int64),
+        "neighbor_id": cids[c].astype(np.int64),
+        "dot_q": dots[r, c],
+        "cos_e6": cos_e6[r, c],
+        "rank": np.concatenate([np.arange(1, len(s) + 1, dtype=np.int32) for s in sels]),
+    })
+
+
+def _side_cell_topk(k: int):
+    """Group kernel over side-tagged packed rows (``side`` 'q' for
+    queries, 'c' for corpus; ``id``, ``pvec``): the local top-k of each
+    query in the group against the group's corpus rows."""
+
+    def cell(pdf: pd.DataFrame) -> pd.DataFrame:
+        qs = pdf[pdf["side"] == "q"]
+        cs = pdf[pdf["side"] == "c"]
+        return _local_topk(
+            qs["id"].to_numpy(), _unpack_f64(qs["pvec"]),
+            cs["id"].to_numpy(), _unpack_f64(cs["pvec"]), k,
+        ).drop(columns="rank")
+
+    return cell
+
+
+def _rank_topk(scored: DataFrame, k: int) -> DataFrame:
+    """Global per-query top-k of scored pairs by (cos_e6 desc,
+    neighbor_id asc) — exact over any union of local top-k's under the
+    same order."""
+    w = Window.partitionBy("query_id").orderBy(F.desc("cos_e6"), F.asc("neighbor_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select(*_TOPK_COLS)
+    )
 
 
 def _bucketed_kernel(keys: list, cell_fn):
@@ -431,15 +426,40 @@ def _bucketed_kernel(keys: list, cell_fn):
     return kernel
 
 
+def _jvm_exact_scores(qdf: DataFrame, cand: DataFrame, a_col: str, b_col: str) -> DataFrame:
+    """Candidate pairs ``(a_col, b_col)`` joined to both sides' quantized
+    vectors (``qdf``: id, qvec, qnorm2) and scored JVM-side: the exact
+    ``aggregate(zip_with(...))`` dot as ``dot_q`` and the FLOOR score as
+    ``cos_e6`` — whole-stage codegen, no Python."""
+    qa = qdf.select(F.col("id").alias(a_col), F.col("qvec").alias("va"),
+                    F.col("qnorm2").alias("na"))
+    qb = qdf.select(F.col("id").alias(b_col), F.col("qvec").alias("vb"),
+                    F.col("qnorm2").alias("nb"))
+    dot = F.aggregate(F.zip_with("va", "vb", lambda x, y: x * y),
+                      F.lit(0).cast("long"), lambda acc, v: acc + v)
+    return (
+        cand.join(qa, a_col).join(qb, b_col)
+        .withColumn("dot_q", dot)
+        .withColumn(
+            "cos_e6",
+            F.floor(
+                F.col("dot_q").cast("double")
+                / F.sqrt(F.col("na").cast("double") * F.col("nb").cast("double"))
+                * 1e6
+            ).cast("long"),
+        )
+    )
+
+
 def exact_rerank_topk(df: DataFrame, cand: DataFrame, k: int,
                       id_col: str = "vec_id", vec_col: str = "embedding",
-                      scale: int = 1000, wire: str = "auto",
-                      wire_dim_threshold: int = 128) -> DataFrame:
+                      scale: int = 1000, *, wire: str) -> DataFrame:
     """Exact quantized-cosine re-rank of candidate pairs + per-query
-    top-k — the shared final stage of :func:`ivf_topk` and
-    :func:`lsh_topk`. ``cand`` holds (query_id, neighbor_id) columns.
+    top-k — the final stage of :func:`lsh_topk`. ``cand`` holds
+    (query_id, neighbor_id) columns.
 
-    ``wire`` picks how vectors reach the scoring join:
+    ``wire`` ('array' or 'binary') picks how vectors reach the scoring
+    join:
 
     - ``'array'``: int64 ``qvec`` arrays scored JVM-side with
       ``aggregate(zip_with(...))`` — whole-stage-codegen friendly and
@@ -450,23 +470,13 @@ def exact_rerank_topk(df: DataFrame, cand: DataFrame, k: int,
       kernel — the wide-vector path: ``array`` cells pay per-element
       conversion on both shuffle sides, measured 10x+ slower at
       real embedding dims (PLANS.md 'Blocked cosine').
-    - ``'auto'``: probe the dim from one row (a tiny head() job) and
-      pick binary at ``dim >= wire_dim_threshold``. NOTE for callers:
-      the probe is one Spark JOB per call — in a loop or a
-      latency-sensitive path, pass ``wire`` explicitly (both in-repo
-      callers do: lsh_topk resolves from its declared plane dim,
-      ivf_topk from the trained centroid width — neither ever probes).
 
     Both wires floor-quantize BEFORE any transport, compute the
     identical IEEE expression tree
     ``FLOOR(dot / SQRT(f64(na) * f64(nb)) * 1e6)`` on exact integers,
     and are therefore bit-equal (asserted in tests/test_ops.py)."""
-    if wire not in ("auto", "array", "binary"):
+    if wire not in ("array", "binary"):
         raise ValueError(f"unknown wire {wire!r}")
-    if wire == "auto":
-        row = df.select(vec_col).head()
-        dim = len(row[0]) if row is not None else 0
-        wire = "binary" if dim >= wire_dim_threshold else "array"
     if wire == "binary":
         packed = df.select(
             F.col(id_col).alias("id"),
@@ -480,10 +490,9 @@ def exact_rerank_topk(df: DataFrame, cand: DataFrame, k: int,
             for pdf in batches:
                 if not len(pdf):
                     continue
-                A = _unpack_f64(pdf["pa"])
-                Bm = _unpack_f64(pdf["pb"])
-                dots, dots_f, na, nb = _exact_dots_norms(A, Bm, rowwise=True)
-                cos_e6 = np.floor(dots_f / np.sqrt(na * nb) * 1e6).astype(np.int64)
+                dots, cos_e6 = _exact_scores(
+                    _unpack_f64(pdf["pa"]), _unpack_f64(pdf["pb"]), rowwise=True
+                )
                 yield pd.DataFrame({
                     "query_id": pdf["query_id"].to_numpy().astype(np.int64),
                     "neighbor_id": pdf["neighbor_id"].to_numpy().astype(np.int64),
@@ -491,58 +500,33 @@ def exact_rerank_topk(df: DataFrame, cand: DataFrame, k: int,
                     "cos_e6": cos_e6,
                 })
 
-        scored = joined.mapInPandas(
-            score, "query_id long, neighbor_id long, dot_q long, cos_e6 long"
-        )
+        scored = joined.mapInPandas(score, _LOCAL_SCHEMA)
     else:
         qdf = with_quantized(df, vec_col, scale).select(
             F.col(id_col).alias("id"), "qvec", "qnorm2"
         )
-        qa = qdf.select(F.col("id").alias("query_id"), F.col("qvec").alias("va"),
-                        F.col("qnorm2").alias("na"))
-        qb = qdf.select(F.col("id").alias("neighbor_id"), F.col("qvec").alias("vb"),
-                        F.col("qnorm2").alias("nb"))
-        dot = F.aggregate(F.zip_with("va", "vb", lambda x, y: x * y),
-                          F.lit(0).cast("long"), lambda acc, v: acc + v)
-        scored = (
-            cand.join(qa, "query_id").join(qb, "neighbor_id")
-            .withColumn("dot_q", dot)
-            .withColumn(
-                "cos_e6",
-                F.floor(
-                    F.col("dot_q").cast("double")
-                    / F.sqrt(F.col("na").cast("double") * F.col("nb").cast("double"))
-                    * 1e6
-                ).cast("long"),
-            )
-        )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_e6"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "dot_q", "cos_e6", "rank")
-    )
+        scored = _jvm_exact_scores(qdf, cand, "query_id", "neighbor_id")
+    return _rank_topk(scored, k)
 
 
 def cosine_pairs_blocked(df: DataFrame, threshold_e6: int = 950_000,
                          id_col: str = "vec_id", vec_col: str = "embedding",
-                         scale: int = 1000, n_blocks: int | None = None,
-                         block_rows: int = 500_000) -> DataFrame:
+                         scale: int = 1000, *, n_blocks: int) -> DataFrame:
     """Blocked-Gram-matrix exact cosine threshold pairs — the shape that
     survives a corpus too large for any single broadcast or driver
     collect.
 
-    The corpus is hash-partitioned into B blocks (``pmod(xxhash64(id),
-    B)``); every unordered pair of vectors lives in exactly one of the
-    B(B+1)/2 unordered block pairs. Each vector row is replicated to the
-    B block-pair groups it participates in (tagged side 'a'/'b', or 's'
-    on the diagonal), and one ``applyInPandas`` group per block pair
-    stacks its two bounded matrices, runs ONE exact integer matmul
-    (float64 BLAS fast path, see _exact_matmul), and emits only
+    The corpus is hash-partitioned into B = ``n_blocks`` blocks
+    (``pmod(xxhash64(id), B)``); every unordered pair of vectors lives
+    in exactly one of the B(B+1)/2 unordered block pairs. Each vector
+    row is replicated to the B block-pair groups it participates in
+    (tagged side 'a'/'b', or 's' on the diagonal), and one group per
+    block pair stacks its two bounded matrices, runs ONE exact integer
+    matmul (float64 BLAS fast path, see _exact_scores), and emits only
     qualifying (min_id, max_id) pairs — each produced exactly once.
 
     Cost model: shuffle volume = corpus x B (each row to B groups),
-    per-task memory = 2 blocks = O(2 * block_rows * dim), parallelism =
+    per-task memory = 2 blocks = O(2 * n / B * dim), parallelism =
     B(B+1)/2 groups. Nothing transits the driver; there is no broadcast,
     no cartesian, and no collect anywhere in the plan (asserted in
     tests/test_plans.py). Output is bit-identical to the broadcast path:
@@ -564,8 +548,6 @@ def cosine_pairs_blocked(df: DataFrame, threshold_e6: int = 950_000,
     linear and shuffle-free; exactness is untouched because the floor
     happens before the wire and the ints ride exactly.
     """
-    if n_blocks is None:
-        n_blocks = max(1, -(-df.count() // max(block_rows, 1)))  # ceil
     B = int(n_blocks)
     pack = _pack_vec_udf(scale)
 
@@ -584,7 +566,6 @@ def cosine_pairs_blocked(df: DataFrame, threshold_e6: int = 950_000,
         .select("bi", "bj", "side", "id", "vec")
     )
     out_cols = ["id_a", "id_b", "dot_q", "cos_e6"]
-    unpack_f64 = _unpack_f64
 
     def block_pair(pdf: pd.DataFrame) -> pd.DataFrame:
         diag = (pdf["side"] == "s").any()
@@ -592,18 +573,11 @@ def cosine_pairs_blocked(df: DataFrame, threshold_e6: int = 950_000,
         b = pdf if diag else pdf[pdf["side"] == "b"]
         if len(a) == 0 or len(b) == 0:
             return pd.DataFrame({c: pd.Series(dtype="int64") for c in out_cols})
-        A = unpack_f64(a["vec"])
-        Bm = A if diag else unpack_f64(b["vec"])
-        # norms + Gram products via the shared guarded scoring block (f64 BLAS
-        # inside the 53-bit window, int64 fallback past it; passing the
-        # same array twice on the diagonal reuses its norms)
-        dots, dots_f, na, nb = _exact_dots_norms(A, Bm)
+        A = _unpack_f64(a["vec"])
+        # the same array twice on the diagonal reuses its norms
+        dots, cos_e6 = _exact_scores(A, A if diag else _unpack_f64(b["vec"]))
         ida = a["id"].to_numpy()
         idb = b["id"].to_numpy()
-        # identical IEEE expression tree to the broadcast path / SQL oracle:
-        # FLOOR(dot / SQRT(CAST(na AS DOUBLE)*CAST(nb AS DOUBLE)) * 1e6)
-        denom = np.sqrt(na[:, None] * nb[None, :])
-        cos_e6 = np.floor(dots_f / denom * 1e6).astype(np.int64)
         keep = cos_e6 >= threshold_e6
         if diag:
             # diagonal block: both sides are the same set — dedupe by id order
@@ -626,10 +600,43 @@ def cosine_pairs_blocked(df: DataFrame, threshold_e6: int = 950_000,
     n_parts = df.sparkSession.sparkContext.defaultParallelism
     return rep.repartition(
         max(min(2 * n_parts, 2 * n_groups), 1), "bi", "bj"
-    ).mapInPandas(
-        _bucketed_kernel(["bi", "bj"], block_pair),
-        "id_a long, id_b long, dot_q long, cos_e6 long",
-    )
+    ).mapInPandas(_bucketed_kernel(["bi", "bj"], block_pair), _PAIRS_SCHEMA)
+
+
+def _lsh_signatures(qdf: DataFrame, n_tables: int, n_planes: int, seed: int,
+                    dim: int | None = None) -> DataFrame:
+    """``(id, table, bucket)`` rows of ``qdf``'s ``(id, qvec)``: the
+    sign bits of ``qvec . plane`` against :func:`lsh_planes_int` planes
+    (exact int64 dots, every table in one matmul), packed per table.
+    The planes are built from the declared ``dim`` or, without one,
+    lazily in the kernel from the first batch's width — no driver job
+    at call time. A vector of another width raises ValueError."""
+    declared = lsh_planes_int(n_tables, n_planes, dim, seed) if dim else None
+    weights = 1 << np.arange(n_planes, dtype=np.int64)
+
+    def buckets(batches):
+        P = declared
+        for pdf in batches:
+            V = np.stack(pdf["qvec"].to_numpy()).astype(np.int64)
+            ids = pdf["id"].to_numpy().astype(np.int64)
+            if P is None:
+                P = lsh_planes_int(n_tables, n_planes, V.shape[1], seed)
+            d = P.shape[2]
+            if V.shape[1] != d:
+                raise ValueError(
+                    f"LSH dim {d} does not match the vector width {V.shape[1]}"
+                )
+            bits = (V @ P.reshape(-1, d).T) > 0  # (rows, tables*planes)
+            vals = (
+                bits.reshape(len(ids), n_tables, n_planes).astype(np.int64) * weights
+            ).sum(axis=2)  # (rows, tables)
+            yield pd.DataFrame({
+                "id": np.repeat(ids, n_tables),
+                "table": np.tile(np.arange(n_tables, dtype=np.int32), len(ids)),
+                "bucket": vals.ravel(),
+            })
+
+    return qdf.select("id", "qvec").mapInPandas(buckets, "id long, table int, bucket long")
 
 
 def cosine_pairs_lsh(df: DataFrame, threshold_e6: int = 950_000,
@@ -659,40 +666,16 @@ def cosine_pairs_lsh(df: DataFrame, threshold_e6: int = 950_000,
     deterministic for a fixed seed, and verified equal to the blocked
     path on planted dups in tests. Callers needing guaranteed recall 1
     at these thresholds must pay the quadratic and use
-    ``mode='blocked'``.
+    :func:`cosine_pairs_blocked`.
 
     Fully lazy: when ``dim`` is not given, the (seeded, deterministic)
     plane tensor is materialized inside the signature kernel from the
     first batch's vector width — no driver-side job runs at call time.
     """
-    plane_cache: dict[int, np.ndarray] = (
-        {dim: lsh_planes_int(n_tables, n_planes, dim, seed)} if dim else {}
-    )
-
-    def buckets(batches):
-        for pdf in batches:
-            V = np.stack(pdf["qvec"].to_numpy()).astype(np.int64)
-            ids = pdf["id"].to_numpy().astype(np.int64)
-            d = V.shape[1]
-            P = plane_cache.get(d)
-            if P is None:
-                P = plane_cache[d] = lsh_planes_int(n_tables, n_planes, d, seed)
-            # one matmul for ALL tables: (rows, dim) @ (dim, tables*planes)
-            bits = (V @ P.reshape(-1, d).T) > 0  # exact int64 dots
-            weights = 1 << np.arange(n_planes, dtype=np.int64)
-            vals = (
-                bits.reshape(len(ids), n_tables, n_planes).astype(np.int64) * weights
-            ).sum(axis=2)  # (rows, tables)
-            yield pd.DataFrame({
-                "id": np.repeat(ids, n_tables),
-                "table": np.tile(np.arange(n_tables, dtype=np.int32), len(ids)),
-                "bucket": vals.ravel(),
-            })
-
     qdf = with_quantized(df, vec_col, scale).select(
         F.col(id_col).alias("id"), "qvec", "qnorm2"
     )
-    sig = qdf.select("id", "qvec").mapInPandas(buckets, "id long, table int, bucket long")
+    sig = _lsh_signatures(qdf, n_tables, n_planes, seed, dim)
     a = sig.select(F.col("id").alias("id_a"), "table", "bucket")
     b = sig.select(F.col("id").alias("id_b"), "table", "bucket")
     cand = (
@@ -701,16 +684,8 @@ def cosine_pairs_lsh(df: DataFrame, threshold_e6: int = 950_000,
         .select("id_a", "id_b")
         .dropDuplicates()
     )
-    qa = qdf.select(F.col("id").alias("id_a"), F.col("qvec").alias("va"), F.col("qnorm2").alias("na"))
-    qb = qdf.select(F.col("id").alias("id_b"), F.col("qvec").alias("vb"), F.col("qnorm2").alias("nb"))
-    dot = F.aggregate(F.zip_with("va", "vb", lambda x, y: x * y), F.lit(0).cast("long"), lambda acc, v: acc + v)
     return (
-        cand.join(qa, "id_a").join(qb, "id_b")
-        .withColumn("dot_q", dot)
-        .withColumn(
-            "cos_e6",
-            F.floor(F.col("dot_q").cast("double") / F.sqrt(F.col("na").cast("double") * F.col("nb").cast("double")) * 1e6).cast("long"),
-        )
+        _jvm_exact_scores(qdf, cand, "id_a", "id_b")
         .filter(F.col("cos_e6") >= threshold_e6)
         .select("id_a", "id_b", "dot_q", "cos_e6")
     )
@@ -823,13 +798,11 @@ def spherical_kmeans_distributed(df: DataFrame, n_centroids: int, iters: int,
 
 def ivf_topk(df: DataFrame, k: int = 5, n_centroids: int = 16, n_probe: int = 10,
              id_col: str = "vec_id", vec_col: str = "embedding", seed: int = 42,
-             kmeans_iters: int = 3, train: str = "sample",
-             wire: str = "auto") -> DataFrame:
+             kmeans_iters: int = 3, train: str = "sample") -> DataFrame:
     """IVF (inverted-file) approximate top-k: vectors are assigned to the
     nearest of ``n_centroids`` coarse centroids; each query probes its
     ``n_probe`` nearest centroid lists and exact-reranks only those
-    candidates. The scale path: candidate generation is an equi-join on
-    centroid id; list sizes bound the fan-out.
+    candidates.
 
     The ``n_probe=10`` default is chosen from the measured recall/probe
     curve on the sf0.1 bench embeddings (recall@5 = 0.35/0.55/0.80/0.84/
@@ -846,25 +819,20 @@ def ivf_topk(df: DataFrame, k: int = 5, n_centroids: int = 16, n_probe: int = 10
     either way (probing is what bounds recall; with
     n_probe == n_centroids the result is exact regardless of training).
 
-    ``wire='auto'`` (default) runs the GROUPED posting-list re-rank:
-    the assignment Arrow pass emits each vector once as a packed
-    binary member row of its own list plus ``n_probe`` packed query
-    replicas; one kernel per (list, query-sub-bucket) scores the
-    (queries x members) cell with ONE exact matmul and emits only its
-    per-query local top-k, so vectors cross the shuffle
-    O(n * (1 + n_probe)) times instead of once per candidate PAIR
-    (n * n_probe * avg_list_len with the per-pair join), and the
+    The re-rank is grouped by posting list: the assignment Arrow pass
+    emits each vector once as a packed binary member row of its own
+    list plus ``n_probe`` packed query replicas; one kernel per
+    (list, query-sub-bucket) scores the (queries x members) cell with
+    ONE exact matmul and emits only its per-query local top-k, so
+    vectors cross the shuffle O(n * (1 + n_probe)) times instead of
+    once per candidate PAIR (n * n_probe * avg_list_len), and the
     global window ranks n * n_probe * k rows instead of every
     candidate. Any global top-k neighbor lives in exactly one probed
     list and survives that list's local top-k under the same
-    (cos desc, id asc) order, so the result is identical to the
-    per-pair re-rank (same quantize + IEEE scoring tree; asserted in
-    tests). ``wire='array'``/``'binary'`` force the per-pair
-    :func:`exact_rerank_topk` transports instead — bit-equal, kept as
-    the cross-checkable reference paths.
+    (cos desc, id asc) order, so the result is the exact re-rank of
+    every probed candidate (same quantize + IEEE scoring tree; asserted
+    in tests).
     """
-    import numpy as np
-
     if train == "distributed":
         C = spherical_kmeans_distributed(df, n_centroids, kmeans_iters, id_col, vec_col)
     else:
@@ -880,58 +848,23 @@ def ivf_topk(df: DataFrame, k: int = 5, n_centroids: int = 16, n_probe: int = 10
                 if len(m):
                     mean = m.mean(axis=0)
                     C[c] = mean / max(np.linalg.norm(mean), 1e-12)
-    spark = df.sparkSession
-    b_C = spark.sparkContext.broadcast(C)
-
-    if wire == "auto":
-        return _ivf_grouped_rerank(df, C, b_C, k, n_probe, id_col, vec_col)
-
-    def assign_centroid(batches):
-        CC = b_C.value
-        for pdf in batches:
-            X = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            Xn = X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
-            sims = Xn @ CC.T
-            order = np.argsort(-sims, axis=1)
-            yield pd.DataFrame({
-                "id": pdf[id_col].to_numpy().astype(np.int64),
-                "list_id": order[:, 0].astype(np.int32),
-                "probe_lists": list(order[:, :n_probe].astype(np.int32)),
-            })
-
-    # the assignment frame feeds BOTH candidate sides — checkpoint so
-    # the Arrow assignment pass runs once, not once per join branch
-    assigned = df.select(id_col, vec_col).mapInPandas(
-        assign_centroid, "id long, list_id int, probe_lists array<int>"
-    ).localCheckpoint(eager=False)
-    corpus = assigned.select(F.col("id").alias("neighbor_id"), F.col("list_id"))
-    probes = assigned.select(F.col("id").alias("query_id"), F.explode("probe_lists").alias("list_id"))
-    # no dropDuplicates: every vector belongs to exactly ONE list and a
-    # query's probed lists are distinct (argsort prefix), so a
-    # (query, neighbor) pair can arise from at most one (list) join row
-    cand = (
-        probes.join(corpus, "list_id")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id")
-    )
-    # the trained centroid matrix already knows the dim driver-side —
-    # resolve 'auto' here so the rerank never pays its head() probe job
-    return exact_rerank_topk(df, cand, k, id_col=id_col, vec_col=vec_col,
-                             wire=wire)
+    return _ivf_grouped_rerank(df, C, k, n_probe, id_col, vec_col)
 
 
-def _ivf_grouped_rerank(df: DataFrame, C, b_C, k: int, n_probe: int,
+def _ivf_grouped_rerank(df: DataFrame, C: np.ndarray, k: int, n_probe: int,
                         id_col: str, vec_col: str, scale: int = 1000) -> DataFrame:
-    """The default IVF re-rank: one scoring cell per (posting list,
-    query sub-bucket), exact matmul per cell, local top-k, then a small
-    global window. See :func:`ivf_topk`'s docstring for the cost model;
-    exactness is the shared :func:`_exact_dots_norms` + FLOOR tree.
+    """The IVF re-rank over centroids ``C``: each vector's member list is
+    its nearest centroid, its probed lists the ``n_probe`` nearest; one
+    scoring cell per (posting list, query sub-bucket), local top-k, then
+    the global window. See :func:`ivf_topk`'s docstring for the cost
+    model.
 
     Query rows are sub-bucketed ``id % S`` with members replicated to
     every sub-bucket so one hot list spreads over S tasks; S adapts to
     the session's parallelism (S=1 once n_centroids >= 2*cores, the
     100 TB regime where lists outnumber tasks anyway)."""
     spark = df.sparkSession
+    b_C = spark.sparkContext.broadcast(C)
     n_centroids = len(C)
     n_parts = spark.sparkContext.defaultParallelism
     S = max(1, -(-2 * n_parts // max(n_centroids, 1)))
@@ -966,48 +899,10 @@ def _ivf_grouped_rerank(df: DataFrame, C, b_C, k: int, n_probe: int,
     rep = df.select(id_col, vec_col).mapInPandas(
         assign_pack, "side string, list_id int, sub int, id long, pvec binary"
     )
-
-    def cell(pdf: pd.DataFrame) -> pd.DataFrame:
-        qs = pdf[pdf["side"] == "q"]
-        cs = pdf[pdf["side"] == "c"]
-        if len(qs) == 0 or len(cs) == 0:
-            return pd.DataFrame({
-                "query_id": pd.Series(dtype="int64"),
-                "neighbor_id": pd.Series(dtype="int64"),
-                "dot_q": pd.Series(dtype="int64"),
-                "cos_e6": pd.Series(dtype="int64"),
-            })
-        Q = _unpack_f64(qs["pvec"])
-        M = _unpack_f64(cs["pvec"])
-        qids = qs["id"].to_numpy()
-        mids = cs["id"].to_numpy()
-        dots, dots_f, qn2, mn2 = _exact_dots_norms(Q, M)
-        cos_e6 = np.floor(
-            dots_f / np.sqrt(qn2[:, None] * mn2[None, :]) * 1e6
-        ).astype(np.int64)
-        out = {"query_id": [], "neighbor_id": [], "dot_q": [], "cos_e6": []}
-        for r in range(len(qids)):
-            cand = np.flatnonzero(mids != qids[r])
-            key = np.lexsort((mids[cand], -cos_e6[r, cand]))
-            sel = cand[key[:k]]
-            out["query_id"].extend([int(qids[r])] * len(sel))
-            out["neighbor_id"].extend(int(mids[j]) for j in sel)
-            out["dot_q"].extend(int(dots[r, j]) for j in sel)
-            out["cos_e6"].extend(int(cos_e6[r, j]) for j in sel)
-        return pd.DataFrame(out)
-
     local = rep.repartition(
         max(min(2 * n_parts, n_centroids * S), 1), "list_id", "sub"
-    ).mapInPandas(
-        _bucketed_kernel(["list_id", "sub"], cell),
-        "query_id long, neighbor_id long, dot_q long, cos_e6 long",
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_e6"), F.asc("neighbor_id"))
-    return (
-        local.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "dot_q", "cos_e6", "rank")
-    )
+    ).mapInPandas(_bucketed_kernel(["list_id", "sub"], _side_cell_topk(k)), _LOCAL_SCHEMA)
+    return _rank_topk(local, k)
 
 
 def lsh_planes_int(n_tables: int = 4, n_planes: int = 16, dim: int = 64,
@@ -1023,36 +918,17 @@ def lsh_planes_int(n_tables: int = 4, n_planes: int = 16, dim: int = 64,
 
 def lsh_topk(df: DataFrame, k: int = 5, n_planes: int = 16, id_col: str = "vec_id",
              vec_col: str = "embedding", dim: int = 64, seed: int = 42,
-             n_tables: int = 4, wire: str = "auto") -> DataFrame:
+             n_tables: int = 4) -> DataFrame:
     """Approximate top-k: random-hyperplane signatures (n_tables
     independent tables of n_planes bits, integer-quantized planes x
     integer-quantized vectors — fully deterministic), candidates =
     bucket collisions in any table, exact quantized-cosine re-rank.
     Recall grows with n_tables; all joins are equi-joins on
-    (table, bucket)."""
-    planes = lsh_planes_int(n_tables, n_planes, dim, seed)
-    spark = df.sparkSession
-    b_planes = spark.sparkContext.broadcast(planes)
-
-    def buckets(batches):
-        P = b_planes.value
-        nt, npl, d = P.shape
-        flat = P.reshape(-1, d).T  # (dim, tables*planes)
-        weights = 1 << np.arange(npl, dtype=np.int64)
-        for pdf in batches:
-            V = np.stack(pdf["qvec"].to_numpy()).astype(np.int64)
-            ids = pdf[id_col].to_numpy().astype(np.int64)
-            bits = (V @ flat) > 0  # exact int64 dots, all tables at once
-            vals = (bits.reshape(len(ids), nt, npl).astype(np.int64) * weights).sum(axis=2)
-            yield pd.DataFrame({
-                "id": np.repeat(ids, nt),
-                "table": np.tile(np.arange(nt, dtype=np.int32), len(ids)),
-                "bucket": vals.ravel(),
-            })
-
-    sig = with_quantized(df, vec_col).select(id_col, "qvec").mapInPandas(
-        buckets, "id long, table int, bucket long"
-    )
+    (table, bucket). ``dim`` must be the vectors' width: it sizes the
+    planes and picks the re-rank wire (binary from dim 128) without a
+    probe job; a vector of another width raises ValueError."""
+    qdf = with_quantized(df, vec_col).select(F.col(id_col).alias("id"), "qvec")
+    sig = _lsh_signatures(qdf, n_tables, n_planes, seed, dim)
     a = sig.select(F.col("id").alias("query_id"), "table", "bucket")
     b = sig.select(F.col("id").alias("neighbor_id"), "table", "bucket")
     cand = (
@@ -1061,9 +937,5 @@ def lsh_topk(df: DataFrame, k: int = 5, n_planes: int = 16, id_col: str = "vec_i
         .select("query_id", "neighbor_id")
         .dropDuplicates()
     )
-    # the declared plane dim decides the wire without a probe job
-    resolved = wire
-    if resolved == "auto":
-        resolved = "binary" if dim >= 128 else "array"
-    return exact_rerank_topk(df, cand, k, id_col=id_col, vec_col=vec_col,
-                             wire=resolved)
+    wire = "binary" if dim >= _BINARY_WIRE_MIN_DIM else "array"
+    return exact_rerank_topk(df, cand, k, id_col=id_col, vec_col=vec_col, wire=wire)
