@@ -1,8 +1,11 @@
-"""Per-operation jobs, stages, tasks and CPU split of one perfbench
-workload: medians over the passes after the warm-up.
+"""Per-operation jobs, stages, tasks and CPU split: medians over the calls
+after the warm-up, of one perfbench workload's operations or of one
+entry query.
 
     cd <tree under test> && PYTHONPATH=$PWD:$PWD/perfbench \
         python <path>/BENCH/op_probe.py <workload> <seed> <passes>
+    cd <tree under test> && PYTHONPATH=$PWD:$PWD/perfbench \
+        python <path>/BENCH/op_probe.py query <entry query> <sf dir> <calls>
 
 Run it from the directory of the tree under test (Python workers import
 the package by working directory), so one copy of this script probes
@@ -14,8 +17,14 @@ that call's jobs and their stages' task counts, and perfbench's
 ``CpuClock``, read around each call, splits its CPU into driver, Python
 workers, JIT, GC and the rest of the JVM. ``compiles`` counts janino
 compilations (Spark's ``CodegenMetrics``) during the call.
+
+In ``query`` mode each call collects ``queries()[<entry query>](spark,
+<sf dir>)``; a call fails when its rows differ from the warm-up's, and
+the line adds the best wall time, the row count and the md5 of the
+sorted rows (compare it across trees for "same rows").
 """
 
+import hashlib
 import json
 import os
 import statistics
@@ -23,7 +32,7 @@ import sys
 from collections import defaultdict
 
 
-def main(name: str, seed: int, n_pass: int) -> None:
+def main(argv: list) -> None:
     sys.path[:0] = [".", "perfbench"]
     import run
     import spans
@@ -58,19 +67,42 @@ def main(name: str, seed: int, n_pass: int) -> None:
                     "jvm_rest_s": d["cpu_s"] - d["driver_s"] - d["python_s"] - d["jit_s"] - d["gc_s"]})
 
     ops = ProbeOps(tracer, clock)
-    wl = workloads.WORKLOADS[name](spark, seed, tracer, ops, os.environ.get("TMPDIR", "/tmp"))
-    wl.setup_inputs()
-    wl.build_oracle()
-    for p in range(-1, n_pass):  # pass -1 is the unrecorded warm-up
-        wl.run_pass(p)
-        wl.after_pass(p)
+    extra = {}
+    if argv[0] == "query":
+        from tiff_to_geojson_csv_json_format_converter_spark.plans import entry_queries
+
+        name, sf_dir, n_call = argv[1], argv[2], int(argv[3])
+        query, first = entry_queries.queries()[name], []
+
+        def call():
+            return sorted(repr(tuple(r)) for r in query(spark, sf_dir).collect())
+
+        def same_rows(rows):
+            if not first:
+                first.append(rows)
+            return rows == first[0]
+
+        for p in range(-1, n_call):  # call -1 is the unrecorded warm-up
+            ops.run(name, call, same_rows, p)
+        extra[name] = {"wall_best_s": round(min(r["wall_s"] for r in rec[name]), 3),
+                       "rows": len(first[0]),
+                       "rows_md5": hashlib.md5("\n".join(first[0]).encode()).hexdigest()[:12]}
+    else:
+        wl = workloads.WORKLOADS[argv[0]](spark, int(argv[1]), tracer, ops,
+                                          os.environ.get("TMPDIR", "/tmp"))
+        wl.setup_inputs()
+        wl.build_oracle()
+        for p in range(-1, int(argv[2])):  # pass -1 is the unrecorded warm-up
+            wl.run_pass(p)
+            wl.after_pass(p)
     for op, rs in sorted(rec.items()):
         print(json.dumps({"op": op, "n": len(rs),
-                          **{k: round(statistics.median(r[k] for r in rs), 3) for k in rs[0]}}))
+                          **{k: round(statistics.median(r[k] for r in rs), 3) for k in rs[0]},
+                          **extra.get(op, {})}))
     run.stop_spark(spark)
 
 
 if __name__ == "__main__":
-    if len(sys.argv) != 4:
+    if len(sys.argv) != 4 + (sys.argv[1:2] == ["query"]):
         sys.exit(__doc__)
-    main(sys.argv[1], int(sys.argv[2]), int(sys.argv[3]))
+    main(sys.argv[1:])

@@ -349,7 +349,7 @@ def bench_scaled_suite(spark, sf_dir: str, cpus: int, host_probe, mult: int = 4)
 
     polys = synth.polygons_df(spark)
     best_of("cell_cover_join", lambda: joins.cell_cover_join(
-        pts_m, polys, lon_col="lon", lat_col="lat"
+        pts_m.select("lon", "lat", "z"), polys, lon_col="lon", lat_col="lat"
     ).groupBy("polygon_id").agg(
         F.count("*").alias("n"), F.sum(F.col("z").cast("long")).alias("sum_z")
     ).count())

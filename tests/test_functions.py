@@ -194,6 +194,23 @@ class TestCells:
         assert mn_lon <= 77.2 <= mx_lon
         assert mn_lat <= 28.3 <= mx_lat
 
+    def test_cell_bounds_of_an_array_is_the_per_cell_formula(self):
+        """Bit for bit, at every level, including the grid's corners."""
+        def one(c):  # the per-cell formula
+            lvl, tx, ty = (int(v[0]) for v in cells.cell_to_xy(np.array([c])))
+            n = 1 << lvl
+            return (float(tx) / n * 360.0 - 180.0, 90.0 - float(ty + 1) / n * 180.0,
+                    float(tx + 1) / n * 360.0 - 180.0, 90.0 - float(ty) / n * 180.0)
+
+        rng = np.random.default_rng(3)
+        lon = np.r_[rng.uniform(-180, 180, 200), -180.0, 180.0]
+        lat = np.r_[rng.uniform(-90, 90, 200), 90.0, -90.0]
+        for level in (0, 1, 8, 12, 20, 28):
+            cids = cells.cell_id(lon, lat, level)
+            got = np.column_stack(cells.cell_bounds(cids))
+            assert got.tobytes() == np.array([one(c) for c in cids.tolist()]).tobytes()
+        assert cells.cell_bounds(np.zeros(0, np.int64))[0].shape == (0,)
+
 
 class TestGeometry:
     def test_pip_box_equals_range_predicate(self):
@@ -383,7 +400,7 @@ def test_classify_cells_interior_conservative_exact():
         [[2.0, 2.0], [3.0, 2.0], [3.0, 3.0], [2.0, 3.0], [2.0, 2.0]],  # hole
     ]
     cover = cells.cover_bbox(0.0, 0.0, 10.0, 10.0, 8)
-    boxes = np.array([cells.cell_bounds(int(c)) for c in cover])
+    boxes = np.column_stack(cells.cell_bounds(cover))
     interior = geometry.classify_cells_interior(boxes, rings)
     assert interior.any() and not interior.all()
     rng = np.random.default_rng(9)

@@ -485,10 +485,10 @@ def test_jaccard_join_is_prefix_equi_join(spark):
     assert "sh64" in p
 
 
-def test_cell_cover_join_is_equi_join(spark):
-    """D1-at-scale: points meet polygons on the cell key (shuffled
-    equi-join), never a cartesian / broadcast nested loop, and the
-    exact refinement is the plan's one Arrow eval node."""
+def test_cell_cover_join_is_one_arrow_pass(spark):
+    """D1-at-scale: the cover index is broadcast, and the points meet it
+    inside ONE ``mapInArrow`` pass: no join node of any kind (so never a
+    cartesian or nested loop), no shuffle, and no other Python node."""
     import re
 
     pts = spark.createDataFrame(
@@ -496,11 +496,13 @@ def test_cell_cover_join_is_equi_join(spark):
         "point_id long, longitude double, latitude double, elevation double",
     )
     polys = synth.polygons_df(spark)
-    df = joins.cell_cover_join(pts, polys, level=8)
-    p = plan_str(df)
-    assert "CartesianProduct" not in p and "BroadcastNestedLoopJoin" not in p
-    assert "SortMergeJoin" in p or "ShuffledHashJoin" in p or "BroadcastHashJoin" in p
-    assert len(re.findall(r"^\(\d+\) ArrowEvalPython$", p, re.M)) == 1
+    for df in (joins.cell_cover_join(pts, polys, level=8),
+               joins.cell_cover_candidates(pts, polys, level=8)[0]):
+        p = plan_str(df)
+        nodes = re.findall(r"^\(\d+\) (?:\* )?(\w+)", p, re.M)
+        assert nodes.count("MapInArrow") == 1, nodes
+        assert not {"ArrowEvalPython", "MapInPandas", "BatchEvalPython", "Exchange"} & set(nodes)
+        assert not [n for n in nodes if "Join" in n or "Cartesian" in n], nodes
 
 
 def test_cell_cover_join_matches_numpy_pip(spark):
@@ -593,6 +595,48 @@ def test_cell_cover_join_schema_and_fails_loudly(spark):
     degen = layer([[[77.25, 28.25]]])
     with pytest.raises(Exception, match="ring must"):
         joins.cell_cover_join(pts, degen).collect()
+
+
+def test_cell_cover_join_refuses_colliding_columns(spark):
+    """A points column named like one the join emits is refused, never
+    duplicated (two ``polygon_id`` columns would fail later, on an
+    ambiguous reference, far from the cause)."""
+    polys = synth.polygons_df(spark)
+    base = "point_id long, longitude double, latitude double"
+    for extra, fn in (("polygon_id string", joins.cell_cover_join),
+                      ("polygon_id string", joins.cell_cover_candidates),
+                      ("cell long", joins.cell_cover_candidates),
+                      ("interior boolean", joins.cell_cover_candidates)):
+        pts = spark.createDataFrame([], f"{base}, {extra}")
+        with pytest.raises(ValueError, match=extra.split()[0]):
+            fn(pts, polys)
+
+
+def test_cell_cover_join_null_and_nan_coordinates_never_join(spark):
+    """A null, NaN or infinite coordinate never joins. The polygon covers
+    the (-180, 90) corner cell at level 8 as an interior cell: Spark's
+    tile expression puts a null there (``greatest`` skips it) and a NaN
+    (``floor`` casts it to 0), and the tile clamp puts -inf, +inf
+    latitude and an off-grid -200 there. Only the control point inside
+    the cell joins, and none of the others is even a candidate."""
+    import json
+
+    shell = [[-190.0, 80.0], [-170.0, 80.0], [-170.0, 100.0], [-190.0, 100.0]]
+    polys = spark.createDataFrame(
+        [("corner", json.dumps({"type": "Polygon", "coordinates": [shell]}),
+          -190.0, 80.0, -170.0, 100.0)],
+        "polygon_id string, geojson string, min_lon double, min_lat double, "
+        "max_lon double, max_lat double")
+    nan, inf = float("nan"), float("inf")
+    pts = spark.createDataFrame(
+        [(0, -179.5, 89.5), (1, None, None), (2, None, 89.5), (3, -179.5, None),
+         (4, nan, nan), (5, nan, 89.5), (6, -179.5, nan), (7, -inf, 89.5),
+         (8, -179.5, inf), (9, -200.0, 89.5)],
+        "point_id long, longitude double, latitude double")
+    cand = joins.cell_cover_candidates(pts, polys, level=8)[0]
+    assert [(r["point_id"], r["interior"]) for r in cand.collect()] == [(0, True)]
+    got = joins.cell_cover_join(pts, polys, level=8).collect()
+    assert [(r["point_id"], r["polygon_id"]) for r in got] == [(0, "corner")]
 
 
 def test_clip_fallback_ladder_rungs(spark):

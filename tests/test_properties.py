@@ -5,7 +5,7 @@ kNN join's Column ring cells and results against their numpy twins."""
 import numpy as np
 import pandas as pd
 import pytest
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from tiff_to_geojson_csv_json_format_converter_spark.functions import (
@@ -304,6 +304,94 @@ def test_knn_join_agrees_with_brute_force(spark, seed):
                 assert (r.image_id, r.pixel_idx, r.band) == tuple(pdf.loc[j, ["image_id", "pixel_idx", "band"]])
             else:
                 assert r.dist2 >= d2[j]
+
+
+# --- the cell-cover join against brute force (Spark) ------------------------
+
+def _cover_layer(rng, n_polys: int) -> list[tuple[str, list]]:
+    """Overlapping boxes and triangles over one region, some with a hole,
+    some with the shell left unclosed."""
+    polys = []
+    for i in range(n_polys):
+        cx, cy = float(rng.uniform(77.0, 79.0)), float(rng.uniform(28.0, 30.0))
+        w, h = rng.uniform(0.05, 3.0, size=2).tolist()
+        if i % 2:
+            shell = [[cx - w, cy - h], [cx + w, cy - h], [cx, cy + h]]
+        else:
+            shell = [[cx - w, cy - h], [cx + w, cy - h], [cx + w, cy + h], [cx - w, cy + h]]
+        if rng.random() < 0.5:
+            shell.append(shell[0])
+        rings = [shell]
+        if rng.random() < 0.5:  # inside either shape
+            hx, hy, hw, hh = cx, cy - h / 3, w / 8, h / 8
+            rings.append([[hx - hw, hy - hh], [hx + hw, hy - hh], [hx + hw, hy + hh],
+                          [hx - hw, hy + hh], [hx - hw, hy - hh]])
+        polys.append((f"p{i}", rings))
+    return polys
+
+
+def _cover_points(rng, n: int, level: int, polys: list) -> np.ndarray:
+    """Uniform points, points on cell edges and corners, and every
+    polygon vertex."""
+    if n == 0:
+        return np.zeros((0, 2))
+    w, h = 360.0 / (1 << level), 180.0 / (1 << level)
+    uni = rng.uniform([76.0, 27.0], [80.0, 31.0], size=(n, 2))
+    kx = np.floor((uni[: n // 4, 0] + 180.0) / w)
+    ky = np.floor((90.0 - uni[: n // 4, 1]) / h)
+    edges = np.vstack([np.column_stack([-180.0 + kx * w, uni[: n // 4, 1]]),
+                       np.column_stack([uni[: n // 4, 0], 90.0 - ky * h]),
+                       np.column_stack([-180.0 + kx * w, 90.0 - ky * h])])
+    verts = [np.asarray(r, dtype=np.float64) for _, rings in polys for r in rings]
+    return np.vstack([uni, edges, *verts])
+
+
+@settings(max_examples=8, deadline=None)
+@given(seed=st.integers(min_value=0, max_value=2**32 - 1), level=st.sampled_from([8, 12]),
+       n_polys=st.integers(min_value=0, max_value=4), n_points=st.integers(min_value=0, max_value=300))
+@example(seed=1, level=8, n_polys=0, n_points=100)
+@example(seed=2, level=12, n_polys=3, n_points=0)
+def test_cell_cover_join_agrees_with_brute_force(spark, seed, level, n_polys, n_points):
+    """The join is brute-force ``geometry.points_in_polygon`` over every
+    (point, polygon) pair; the candidates are a superset of it and follow
+    the cover rule: the point's cell is in the cover of the polygon's
+    bbox, and the cell is interior or the point is inside the bbox."""
+    import json
+
+    from tiff_to_geojson_csv_json_format_converter_spark.operators import joins
+
+    rng = np.random.default_rng(seed)
+    polys = _cover_layer(rng, n_polys)
+    xy = _cover_points(rng, n_points, level, polys)
+    boxes = [(min(p[0] for p in rings[0]), min(p[1] for p in rings[0]),
+              max(p[0] for p in rings[0]), max(p[1] for p in rings[0])) for _, rings in polys]
+    layer = spark.createDataFrame(
+        [(pid, json.dumps({"type": "Polygon", "coordinates": rings}), *box)
+         for (pid, rings), box in zip(polys, boxes)],
+        "polygon_id string, geojson string, min_lon double, min_lat double, "
+        "max_lon double, max_lat double")
+    pts = spark.createDataFrame([(i, float(x), float(y)) for i, (x, y) in enumerate(xy)],
+                                "point_id long, longitude double, latitude double")
+
+    x, y = xy[:, 0], xy[:, 1]
+    cid = cells.cell_id(x, y, level)
+    want, rule = set(), set()
+    for (pid, rings), (bx0, by0, bx1, by1) in zip(polys, boxes):
+        inside = geometry.points_in_polygon(x, y, [np.asarray(r, dtype=np.float64) for r in rings])
+        want |= {(i, pid) for i in np.flatnonzero(inside).tolist()}
+        cover = cells.cover_bbox(bx0, by0, bx1, by1, level)
+        flags = dict(zip(cover.tolist(), geometry.classify_cells_interior(
+            np.column_stack(cells.cell_bounds(cover)), rings).tolist()))
+        in_box = (x >= bx0) & (x <= bx1) & (y >= by0) & (y <= by1)
+        rule |= {(i, pid, int(cid[i]), flags[int(cid[i])]) for i in range(len(xy))
+                 if int(cid[i]) in flags and (flags[int(cid[i])] or in_box[i])}
+
+    got = joins.cell_cover_join(pts, layer, level=level).collect()
+    assert len(got) == len(want) and {(r["point_id"], r["polygon_id"]) for r in got} == want
+    cand = joins.cell_cover_candidates(pts, layer, level=level)[0].collect()
+    assert len(cand) == len(rule)
+    assert {(r["point_id"], r["polygon_id"], r["cell"], r["interior"]) for r in cand} == rule
+    assert want <= {(i, pid) for i, pid, _, _ in rule}
 
 
 def test_similarity_operators_on_an_empty_corpus(spark):

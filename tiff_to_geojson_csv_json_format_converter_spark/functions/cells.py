@@ -149,14 +149,15 @@ def cover_bbox(min_lon: float, min_lat: float, max_lon: float, max_lat: float, l
     return xy_to_cell(gx.ravel(), gy.ravel(), level)
 
 
-def cell_bounds(cid: int) -> tuple[float, float, float, float]:
-    """(min_lon, min_lat, max_lon, max_lat) of one cell."""
-    lvl, tx, ty = cell_to_xy(np.array([cid]))
-    n = 1 << int(lvl[0])
-    min_lon = float(tx[0]) / n * 360.0 - 180.0
-    max_lon = float(tx[0] + 1) / n * 360.0 - 180.0
-    max_lat = 90.0 - float(ty[0]) / n * 180.0
-    min_lat = 90.0 - float(ty[0] + 1) / n * 180.0
+def cell_bounds(cid) -> tuple:
+    """(min_lon, min_lat, max_lon, max_lat) of one cell, or four arrays
+    for an array of cell ids."""
+    lvl, tx, ty = cell_to_xy(np.asarray(cid))
+    n = np.ldexp(1.0, lvl)
+    min_lon = tx / n * 360.0 - 180.0
+    max_lon = (tx + 1) / n * 360.0 - 180.0
+    max_lat = 90.0 - ty / n * 180.0
+    min_lat = 90.0 - (ty + 1) / n * 180.0
     return min_lon, min_lat, max_lon, max_lat
 
 

@@ -8,8 +8,11 @@ Spark-first strategy per SURVEY.md §2.D:
   keys, so the same predicates prune files before any scan.
 - D3 polygon clip: two-stage — (1) cheap bbox predicate (pushed to the
   scan), (2) exact ray-casting PIP in an Arrow-batched pandas UDF.
-  Optionally a cell-cover equi-join replaces (1) when polygons are
-  many (cover cells pre-computed driver-side per polygon).
+  When polygons are many, :func:`cell_cover_join` fuses both into one
+  ``mapInArrow`` over the points against a broadcast cell-cover index:
+  no join, no shuffle, and interior cells settle without a ray-cast
+  (as in Raster Intervals). Against the equi-join plan it replaced,
+  ``spatial_query`` pass CPU fell ~20 % (18 of 20 interleaved pairs).
 - D6 kNN: index points by row-major tile id, probe each query's
   Chebyshev ring square; the ring cells are exploded in codegen and
   broadcast, the points stream past them (broadcast hash equi-join,
@@ -267,46 +270,48 @@ def clip_points_multi(points: DataFrame, polygons: dict[str, list],
     return boxed.withColumn(tag_col, F.explode(tags(F.col(lon_col), F.col(lat_col))))
 
 
+_MAX_LAYER_ROWS = 250_000
+
+
 def cell_cover_join(points: DataFrame, polygons: DataFrame,
                     level: int = 8,
                     lon_col: str = "longitude", lat_col: str = "latitude",
-                    max_layer_rows: int = 250_000) -> DataFrame:
-    """Point-in-polygon join for LARGE polygon sets: cell-cover equi-join
-    + exact PIP refinement.
+                    max_layer_rows: int = _MAX_LAYER_ROWS) -> DataFrame:
+    """Point-in-polygon join for LARGE polygon sets: one Arrow pass over
+    the points against a broadcast cell-cover index.
 
     ``bbox_join``/``clip_points`` broadcast the polygons — right for the
     reference's one-request shapes, wrong for 10^5+ polygon layers. Here
-    both sides meet on a Z-order cell key instead:
+    a point only meets the polygons whose cover holds its cell, so the
+    pair count is output-shaped, not |points| x |polygons|:
 
-    1. each polygon explodes (Arrow UDF) to the ``level`` cells covering
-       its bbox — narrow rows (cell, polygon_id, interior); cells wholly
-       inside the polygon are pre-classified so their points skip the
-       ray-cast entirely (exact work = boundary cells);
-    2. each point gets its cell id in pure codegen
-       (:func:`cells.cell_id_col`);
-    3. a shuffle equi-join on the cell produces candidates — each point
-       only ever meets polygons whose cover shares its cell, so the
-       pair count is output-shaped, not |points| x |polygons|; the
-       candidate rows stay geometry-free (cell, polygon_id, interior);
-    4. exact ray-cast over the boundary-cell candidates only, in the
-       vectorized numpy kernel. Ring geometry is resolved inside the
-       kernel from a Spark broadcast variable ({polygon_id: parsed
-       ndarrays}, one copy per worker), so neither the JVM rows nor the
-       Arrow transfer ever hold a per-row geometry string (~250 B/row
-       of pure allocator+transfer garbage before; GC time was the
-       dominant cost of this stage at 32 cores,
-       BENCH/r06_diag_heap.json). Interior-cell rows short-circuit
-       inside the kernel (no ray-cast — one boolean copy).
+    1. the driver collects the layer (one job, capped at
+       ``max_layer_rows``, raises above it), covers each polygon's bbox
+       with ``level`` cells (:func:`cells.cover_bbox`) and flags the
+       cells wholly inside it (:func:`geometry.classify_cells_interior`);
+       one broadcast holds the sorted cover cells, each cell's polygon
+       and flag, and the polygons' ids, rings and bboxes;
+    2. one ``mapInArrow`` over the points (:func:`_cover_batches`) gives
+       each point its cell id (:func:`cells.cell_id`), expands it to its
+       cover entries by binary search, drops the pairs outside the
+       polygon's bbox, ray-casts the boundary-cell pairs per polygon
+       (interior-cell pairs skip it), and emits the matches by ``take``.
 
-    Hot cells (dense tiles) are ordinary join skew — AQE skew-join or
-    ``salted_repartition`` on the cell key applies. Returns the points
-    columns + ``polygon_id`` (a point duplicates per containing polygon,
-    exactly like a SQL join).
+    Returns the points columns + ``polygon_id`` (a point duplicates per
+    containing polygon, like a SQL join); a points column named
+    ``polygon_id`` is refused, and a null, NaN or infinite coordinate
+    never joins. Every points column crosses into Python and Catalyst
+    cannot prune through the pass: select what the caller reads first.
+    ``polygons`` needs (polygon_id, geojson, min_lon, min_lat, max_lon,
+    max_lat) — the ``synth.polygons_df`` shape.
 
-    ``polygons`` needs (polygon_id, geojson, min_lon, min_lat,
-    max_lon, max_lat) — the ``synth.polygons_df`` shape. The layer is
-    materialized with ONE small driver job at call time, capped at
-    ``max_layer_rows`` (raises above it).
+    A/B against the plan it replaced (a cover ``mapInPandas``, a
+    broadcast hash join on the cell and an ``ArrowEvalPython`` PIP
+    filter over whole candidate rows), 4 cores: per ``spatial_query``
+    call 3 jobs, 6 tasks, 1.35 s CPU and no GC instead of 5, 13, 3.53 s
+    and 0.9 s GC; ``spatial_query`` pass CPU medians 8.39 -> 6.74 s
+    (10/10 interleaved pairs) and 9.69 -> 7.77 s (8/10, a noisier
+    batch); same rows at sf0.001-sf0.1.
 
     Measured negative results, deleted — do not rebuild them:
 
@@ -321,132 +326,120 @@ def cell_cover_join(points: DataFrame, polygons: DataFrame,
       BENCH/r06_diag_cell_cover_scorer.json;
     - r07 per-polygon_id LITERAL codegen parity dispatch: the predicate
       restructures the join and lands in a substituted join condition
-      — 2.76 s vs 1.69 s at 32 cores, OPTIMIZATION_r07.md.
+      — 2.76 s vs 1.69 s at 32 cores, OPTIMIZATION_r07.md;
+    - a split-union that sent only boundary-cell candidates through
+      Python planned the candidate join twice (r06_diag_phase.json:
+      reused_exchange false);
+    - a driver-built ``LocalRelation`` cover for the equi-join: ~0.2 s,
+      inside noise.
     """
-    import json as _json
-
-    # the polygon layer is broadcast-small by construction (it rode a
-    # broadcast join before this refactor) — collecting it once on the
-    # driver is the same O(|polygons|) bound, and the broadcast variable
-    # deserializes ONCE per worker instead of shipping geometry per row.
-    # limit()+1 bounds the driver exposure BEFORE materializing anything:
-    # one job either returns the whole layer or proves it's over the cap.
-    # rings are parsed in Python, as the cover stage does, so corrupt
-    # GeoJSON raises the decoder's own error
-    taken = polygons.select(
-        "polygon_id", "geojson").limit(max_layer_rows + 1).collect()
-    if len(taken) > max_layer_rows:
-        raise ValueError(
-            f"polygon layer exceeds max_layer_rows={max_layer_rows} for "
-            f"the driver-collected broadcast; split the layer or raise "
-            f"the cap")
-    cand, lon_col, lat_col = cell_cover_candidates(
-        points, polygons, level, lon_col, lat_col)
-    rings_map = {
-        r[0]: [np.asarray(rr, dtype=np.float64)
-               for rr in _json.loads(r[1])["coordinates"]]
-        for r in taken
-    }
-    bc = points.sparkSession.sparkContext.broadcast(rings_map)
-
-    @F.pandas_udf(BooleanType())
-    def pip_pair(lon: pd.Series, lat: pd.Series, pid: pd.Series,
-                 interior: pd.Series) -> pd.Series:
-        out = interior.to_numpy(dtype=bool).copy()  # interior rows are in
-        x, y = lon.to_numpy(), lat.to_numpy()
-        pend = ~out
-        rm = bc.value
-        for p in pid[pend].unique():
-            m = pend & (pid == p).to_numpy()
-            out[m] = geometry.points_in_polygon(x[m], y[m], rm[p])
-        return pd.Series(out)
-
-    # ONE scan, ONE join, ONE Arrow pass over 4 slim columns. A
-    # split-union (interior rows bypassing Python) was measured to plan
-    # the candidate join TWICE — AQE re-optimizes the union branches
-    # independently and exchange reuse missed (r06_diag_phase.json:
-    # reused_exchange false) — and a double scan is the wrong trade at
-    # 100 TB; interior rows now cost ~26 transferred bytes each instead
-    # of a second pass over the whole candidate subtree.
-    return (
-        cand.filter(pip_pair(F.col(lon_col), F.col(lat_col),
-                             F.col("polygon_id"), F.col("interior")))
-        .drop("cell", "interior")
-    )
+    return _cover_pass(points, polygons, level, lon_col, lat_col, max_layer_rows, exact=True)
 
 
 def cell_cover_candidates(points: DataFrame, polygons: DataFrame,
                           level: int = 8,
                           lon_col: str = "longitude",
                           lat_col: str = "latitude"):
-    """The candidate-generation stages of :func:`cell_cover_join`
-    (polygon cell cover at ``level`` -> point cell key -> cell
-    equi-join -> bbox prune), without the final PIP refinement —
-    factored out so the candidate phase can be timed and counted on its
-    own. Returns (candidates, lon_col, lat_col); candidate rows carry
-    the points columns plus (cell, polygon_id, interior) and no
-    geometry."""
-    import json as _json
+    """:func:`cell_cover_join`'s pass without the ray-cast: every
+    (point, polygon) pair whose cells meet and whose point is inside the
+    polygon's bbox, so the candidate phase can be counted on its own.
+    Returns (candidates, lon_col, lat_col); candidate rows are ``cell``,
+    the points columns, ``polygon_id`` and ``interior``, and a points
+    column of any of those names is refused."""
+    return (_cover_pass(points, polygons, level, lon_col, lat_col, _MAX_LAYER_ROWS, exact=False),
+            lon_col, lat_col)
 
-    from ..functions import cells as _cells
 
-    def cover(pdf_iter):
-        for pdf in pdf_iter:
-            rows = {"cell": [], "polygon_id": [], "interior": [],
-                    "bx0": [], "by0": [], "bx1": [], "by1": []}
-            for r in pdf.itertuples(index=False):
-                cover_cells = _cells.cover_bbox(
-                    r.min_lon, r.min_lat, r.max_lon, r.max_lat, level
-                )
-                rings_list = [np.asarray(rr, dtype=np.float64)
-                              for rr in _json.loads(r.geojson)["coordinates"]]
-                # interior-cell shortcut (SURVEY D3): cells wholly inside
-                # skip the per-point ray-cast at join time — exact work is
-                # O(boundary cells), not O(polygon area)
-                boxes = np.array([_cells.cell_bounds(int(c)) for c in cover_cells])
-                interior = geometry.classify_cells_interior(boxes, rings_list)
-                nc = len(cover_cells)
-                rows["cell"].extend(cover_cells.tolist())
-                rows["polygon_id"].extend([r.polygon_id] * nc)
-                rows["interior"].extend(interior.tolist())
-                # the polygon's exact bbox rides on each cover row so the
-                # join can drop bbox-outside candidates in codegen BEFORE
-                # the PIP kernel: cover cells are coarse, so most boundary-
-                # cell points are outside the polygon bbox and can never
-                # be PIP-inside (zero crossings) — filtering them is
-                # result-preserving and shrinks the Arrow transfer
-                rows["bx0"].extend([r.min_lon] * nc)
-                rows["by0"].extend([r.min_lat] * nc)
-                rows["bx1"].extend([r.max_lon] * nc)
-                rows["by1"].extend([r.max_lat] * nc)
-            yield pd.DataFrame(rows)
+def _cover_pass(points: DataFrame, polygons: DataFrame, level: int, lon_col: str,
+                lat_col: str, max_layer_rows: int, exact: bool) -> DataFrame:
+    """The one ``mapInArrow`` of :func:`cell_cover_join` (``exact``) and
+    :func:`cell_cover_candidates`; see the former."""
+    import json
 
-    # (cell, polygon_id, interior, bbox) only — the rings geometry would
-    # otherwise be duplicated into every covering-cell row and shuffled
-    # cover-size times; the PIP kernel reads it from a broadcast variable
-    poly_cells = polygons.mapInPandas(
-        cover, "cell long, polygon_id string, interior boolean, "
-               "bx0 double, by0 double, bx1 double, by1 double"
-    )
-    if "cell" in points.columns:
-        # the join key must never silently clobber a caller column
-        raise ValueError("column 'cell' already present")
-    pts = points.withColumn(
-        "cell", _cells.cell_id_col(F.col(lon_col), F.col(lat_col), level)
-    )
-    cand = (
-        pts.join(poly_cells, "cell")
-        # bbox prune (codegen, before the PIP kernel): a point outside the
-        # polygon's bbox has zero ray crossings, so dropping it cannot
-        # change the join result; interior-cell rows skip the test
-        .filter(
-            F.col("interior")
-            | ((F.col(lon_col) >= F.col("bx0")) & (F.col(lon_col) <= F.col("bx1"))
-               & (F.col(lat_col) >= F.col("by0")) & (F.col(lat_col) <= F.col("by1")))
-        )
-        .drop("bx0", "by0", "bx1", "by1")
-    )
-    return cand, lon_col, lat_col
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
+    from pyspark.sql.types import LongType, StructField, StructType
+
+    emitted = ("polygon_id",) if exact else ("cell", "polygon_id", "interior")
+    clash = [c for c in emitted if c in points.columns]
+    if clash:
+        raise ValueError(f"points already have a column named {clash[0]!r}, "
+                         "which the cell-cover join emits")
+    id_field = StructField("polygon_id", polygons.schema["polygon_id"].dataType)
+    fields = [*points.schema.fields, id_field]
+    if not exact:
+        fields = [StructField("cell", LongType()), *fields, StructField("interior", BooleanType())]
+    # one job: coalesce(1) keeps the limit from planning a second,
+    # partition-scanning job; limit()+1 proves the cap before anything
+    # larger is materialized
+    taken = polygons.select("polygon_id", "geojson", "min_lon", "min_lat", "max_lon", "max_lat") \
+        .coalesce(1).limit(max_layer_rows + 1).collect()
+    if len(taken) > max_layer_rows:
+        raise ValueError(
+            f"polygon layer exceeds max_layer_rows={max_layer_rows} for "
+            f"the driver-collected broadcast; split the layer or raise "
+            f"the cap")
+    # each list starts with an empty part, so an empty layer concatenates
+    cover, owner, interior, rings = [np.zeros(0, np.int64)], [np.zeros(0, np.int32)], \
+        [np.zeros(0, bool)], []
+    for i, (_, geojson, *box) in enumerate(taken):
+        # rings are parsed here, so corrupt GeoJSON raises the decoder's
+        # own error and a degenerate ring close_ring's
+        rr = [np.asarray(r, dtype=np.float64) for r in json.loads(geojson)["coordinates"]]
+        cc = cells.cover_bbox(*box, level)
+        cover.append(cc)
+        owner.append(np.full(len(cc), i, dtype=np.int32))
+        interior.append(geometry.classify_cells_interior(np.column_stack(cells.cell_bounds(cc)), rr))
+        rings.append(rr)
+    cover = np.concatenate(cover)
+    order = np.argsort(cover, kind="stable")
+    ids = pa.array([r[0] for r in taken], to_arrow_type(id_field.dataType))
+    bc = points.sparkSession.sparkContext.broadcast((
+        cover[order], np.concatenate(owner)[order], np.concatenate(interior)[order], ids, rings,
+        np.array([r[2:] for r in taken], dtype=np.float64).reshape(-1, 4)))
+    return points.mapInArrow(
+        lambda batches: _cover_batches(batches, bc.value, lon_col, lat_col, level, exact),
+        StructType(fields))
+
+
+def _cover_batches(batches, index: tuple, lon_col: str, lat_col: str, level: int,
+                   exact: bool):
+    """:func:`_cover_pass`'s body: points batches -> matched (point,
+    polygon) rows, against ``index`` = (sorted cover cells, their
+    polygon, their interior flag, polygon ids, polygon rings, polygon
+    bboxes)."""
+    import pyarrow as pa
+
+    cover, owner, interior, ids, rings, bbox = index
+    for b in batches:
+        # Arrow -> numpy turns a null into NaN
+        x = b.column(lon_col).cast(pa.float64()).to_numpy(zero_copy_only=False)
+        y = b.column(lat_col).cast(pa.float64()).to_numpy(zero_copy_only=False)
+        cid = cells.cell_id(x, y, level)
+        lo = np.searchsorted(cover, cid, "left")
+        n = np.searchsorted(cover, cid, "right") - lo
+        pt = np.repeat(np.arange(len(cid)), n)
+        ent = np.arange(len(pt)) - np.repeat(np.cumsum(n) - n, n) + np.repeat(lo, n)
+        poly, px, py = owner[ent], x[pt], y[pt]
+        box = bbox[poly]
+        # inclusive polygon-bbox prune: a point outside the bbox is
+        # outside the polygon, and an interior cell lies inside the bbox.
+        # It also drops the NaN (or null), infinite and off-grid
+        # coordinates that the tile clamp puts on an edge cell
+        keep = (px >= box[:, 0]) & (px <= box[:, 2]) & (py >= box[:, 1]) & (py <= box[:, 3])
+        if exact:
+            test = np.flatnonzero(keep & ~interior[ent])
+            test = test[np.argsort(poly[test], kind="stable")]
+            for run in np.split(test, np.flatnonzero(np.diff(poly[test])) + 1):
+                if len(run):
+                    keep[run] = geometry.points_in_polygon(px[run], py[run], rings[poly[run[0]]])
+        sel = np.flatnonzero(keep)
+        out = b.take(pt[sel])
+        cols, names = [*out.columns, ids.take(poly[sel])], [*out.schema.names, "polygon_id"]
+        if not exact:
+            cols = [pa.array(cid[pt[sel]]), *cols, pa.array(interior[ent[sel]])]
+            names = ["cell", *names, "interior"]
+        yield pa.RecordBatch.from_arrays(cols, names=names)
 
 
 def bbox_join(images: DataFrame, polygons: DataFrame, how: str = "inner") -> DataFrame:

@@ -2905,11 +2905,14 @@ def _cover_join_sql() -> str:
 @_register("cell_cover_join", _cover_join_sql())
 def q_cell_cover_join(spark, sf_dir):
     """D1/D3 at large polygon cardinality: polygons explode to covering
-    Z-order cells, points join on their cell (equi-join, output-shaped
-    pair count — never |points| x |polygons|), exact ray-cast refine.
+    Z-order cells, each point meets the polygons whose cover holds its
+    cell (output-shaped pair count — never |points| x |polygons|),
+    exact ray-cast refine, all in one Arrow pass over the points.
     The broadcast bbox join stays for the reference's single-request
     shapes; this is the 10^5-polygon-layer plan."""
-    pts = _pts(spark, sf_dir).filter("valid")
+    # the join's Arrow pass hides from Catalyst which columns are read
+    # above it, so the unused _pts columns are pruned here
+    pts = _pts(spark, sf_dir).filter("valid").select("lon", "lat", "z")
     polys = synth.polygons_df(spark)
     joined = joins.cell_cover_join(pts, polys, lon_col="lon", lat_col="lat")
     return joined.groupBy("polygon_id").agg(
