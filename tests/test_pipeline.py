@@ -180,6 +180,17 @@ class TestKnn:
         assert got["band"].tolist() == [0, 1, 2]
         assert (got["pixel_idx"] == 5).all()
 
+    def test_bad_k_or_ring_raises(self, spark):
+        """``k < 1`` would return nothing, and a negative ``max_ring``
+        would probe a wrong square: both raise before any job runs."""
+        pts = spark.createDataFrame([(5, 77.2, 28.3)], "pixel_idx long, longitude double, latitude double")
+        qs = spark.createDataFrame([("q1", 77.2, 28.3)], "query_id string, lon double, lat double")
+        for kw, match in (({"k": 0}, "k must be"), ({"k": -1}, "k must be"),
+                          ({"max_ring": -1}, "max_ring must be")):
+            with pytest.raises(ValueError, match=match):
+                joins.knn_join(pts, qs, **kw)
+        assert len(joins.knn_join(pts, qs, k=1, max_ring=0).collect()) == 1
+
     def test_null_query_coordinates_return_no_rows(self, spark, points_sdf):
         """A query with a null lon or lat gets no rows, even with points
         on the grid's edge (where a null coordinate's tile would land);

@@ -5,8 +5,8 @@ promises must be visible in explain() output, not just hoped for.
 - the polygon side of bbox joins is broadcast (no shuffle of the big side)
 - tile assignment is pure codegen (no Python evaluation node)
 - extraction is shuffle-free (embarrassingly parallel)
-- kNN candidate generation is an equi-join, never a cartesian product;
-  it runs JVM-only and broadcasts only the ring cells
+- kNN candidates come from one Arrow pass against a ring index: no
+  join, so never a cartesian product
 """
 
 import numpy as np
@@ -170,30 +170,15 @@ def test_knn_has_no_cartesian_product(spark):
     assert "CartesianProduct" not in p and "BroadcastNestedLoopJoin" not in p
 
 
-def _subtree(plan: str, node: str) -> str:
-    """The lines of ``plan`` (a tree string) under the first ``node``
-    line, the node included: every following line whose node name starts
-    further right."""
-    lines = plan.splitlines()
-    start = next(i for i, ln in enumerate(lines) if node in ln)
-
-    def col(ln):
-        return len(ln) - len(ln.lstrip(" :+-|"))
-
-    out = [lines[start]]
-    for ln in lines[start + 1:]:
-        if col(ln) <= col(lines[start]):
-            break
-        out.append(ln)
-    return "\n".join(out)
-
-
 @pytest.mark.parametrize("query_frame", ["one_request", "cached_batch"])
-def test_knn_plan_is_jvm_only_and_broadcasts_the_candidates(spark, query_frame):
-    """The executed (final AQE) kNN plan has no Python stage and exactly
-    one broadcast, of the exploded ring cells: the point table always
-    streams, whether the query side is a size-less createDataFrame
+def test_knn_plan_is_one_arrow_pass(spark, query_frame):
+    """The executed (final AQE) kNN plan meets the points and the ring
+    index inside ONE ``mapInArrow``: no broadcast exchange, no join node
+    of any kind (so never a cartesian or nested loop) and no other
+    Python node, whether the query side is a size-less createDataFrame
     request or a cached batch smaller than the points."""
+    import re
+
     pts = spark.range(4096, numPartitions=4).selectExpr(
         "id as pixel_idx", "77.0D + (id % 64) * 0.002D as longitude",
         "28.0D + (id div 64) * 0.002D as latitude").cache()
@@ -211,12 +196,10 @@ def test_knn_plan_is_jvm_only_and_broadcasts_the_candidates(spark, query_frame):
     finally:
         pts.unpersist()
         qs.unpersist()
-    for node in ("MapInPandas", "ArrowEvalPython", "BatchEvalPython"):
-        assert node not in final
-    assert final.count("BroadcastExchange") == 1
-    built = _subtree(final, "BroadcastExchange")
-    assert "Generate explode(sequence(" in built
-    assert "pixel_idx" not in built  # the point scan is the streamed side
+    nodes = re.findall(r"^[\s:+|-]*(?:\*\(\d+\) )?(\w+)", final, re.M)
+    assert nodes.count("MapInArrow") == 1, nodes
+    assert not {"ArrowEvalPython", "MapInPandas", "BatchEvalPython", "BroadcastExchange"} & set(nodes)
+    assert not [n for n in nodes if "Join" in n or "Cartesian" in n], nodes
 
 
 def test_salted_repartition_plan_shuffles_on_salt(spark):
@@ -595,6 +578,10 @@ def test_cell_cover_join_schema_and_fails_loudly(spark):
     degen = layer([[[77.25, 28.25]]])
     with pytest.raises(Exception, match="ring must"):
         joins.cell_cover_join(pts, degen).collect()
+
+    # no ring at all: refused on the driver, never left to a task
+    with pytest.raises(ValueError, match="no rings"):
+        joins.cell_cover_join(pts, layer([]))
 
 
 def test_cell_cover_join_refuses_colliding_columns(spark):

@@ -229,23 +229,25 @@ def _edge_queries(level: int) -> list[tuple[float, float]]:
 
 
 @pytest.mark.parametrize("level", [12, 14])
-def test_knn_column_ring_equals_k_ring_xy(spark, level):
-    """The JVM ring of each query is exactly ``cells.k_ring_xy``'s
-    clipped Chebyshev square, decoded with ``cells.cell_to_xy``."""
+def test_knn_ring_index_equals_k_ring_xy(level):
+    """Each query's entries in the ring index are exactly
+    ``cells.k_ring_xy``'s clipped Chebyshev square, decoded with
+    ``cells.cell_to_xy``; the index is sorted by cell."""
     from tiff_to_geojson_csv_json_format_converter_spark.operators import joins
 
     qs = _edge_queries(level)
-    qdf = spark.createDataFrame([(str(i), lon, lat) for i, (lon, lat) in enumerate(qs)],
-                                "query_id string, lon double, lat double")
-    tx, ty = cells.tile_xy(np.array([q[0] for q in qs]), np.array([q[1] for q in qs]), level)
+    qx, qy = np.array([q[0] for q in qs]), np.array([q[1] for q in qs])
+    tx, ty = cells.tile_xy(qx, qy, level)
     n = 1 << level
     for max_ring in range(4):
-        got = {}
-        for r in joins._ring_cells(qdf, "lon", "lat", level, max_ring).collect():
-            got.setdefault(r["query_id"], set()).add((r["_cell"] // n, r["_cell"] % n))
+        ring, owner = joins._ring_index(qx, qy, level, max_ring)
+        assert (np.diff(ring) >= 0).all()
         for i in range(len(qs)):
+            got = ring[owner == i]
             _, rx, ry = cells.cell_to_xy(cells.k_ring_xy(int(tx[i]), int(ty[i]), level, max_ring))
-            assert got[str(i)] == set(zip(rx.tolist(), ry.tolist())), (qs[i], max_ring)
+            assert len(got) == len(rx)
+            assert set(zip((got // n).tolist(), (got % n).tolist())) == set(zip(rx.tolist(), ry.tolist())), \
+                (qs[i], max_ring)
 
 
 def _knn_points(rng) -> pd.DataFrame:
@@ -271,50 +273,140 @@ def _knn_queries(rng, level: int) -> list[tuple[float, float]]:
                (77.03, 90.0 - ty * h)])  # exactly on cell edges
 
 
+def _knn_odd_points(level: int) -> list[tuple]:
+    """(lon, lat) points whose tile comes from Spark's clamp: NaN, +-inf
+    and off-grid coordinates, each next to a finite point on the same
+    tile; and null coordinates, which never join."""
+    nan, inf = float("nan"), float("inf")
+    w = 360.0 / (1 << level)
+    return [(-180.0, 90.0), (nan, nan), (-inf, inf), (-200.0, 95.0),
+            (180.0 - w / 2, 28.01), (inf, 28.01), (200.0, 28.01), (nan, 28.01),
+            (77.01, -90.0), (77.01, -inf), (77.01, nan),
+            (None, 28.01), (77.01, None), (None, None)]
+
+
 @settings(max_examples=5, deadline=None)
 @given(seed=st.integers(min_value=0, max_value=2**32 - 1))
 def test_knn_join_agrees_with_brute_force(spark, seed):
-    """Exact rows are the brute-force neighbours (distance bits and tie
-    order: image_id, pixel_idx, band); inexact rows never beat the true
-    distance; a query is short of k rows only when its missing
-    neighbours lie beyond the searched radius."""
+    """Against two brute forces, with Arrow batches of 7 rows so that the
+    3-band pixels, the pixels sharing a coordinate and the queries
+    placed on them tie across batches and within one:
+
+    - every query row's clipped square of tiles (``cells.k_ring_xy``)
+      scanned point by point: the rows per query_id are exactly its k
+      best candidates (distance bits, then image_id, pixel_idx, band;
+      NaN last), pooled over the rows of a duplicated query_id; a null
+      coordinate never joins; NaN, +-inf and off-grid points sit on
+      their clamped tile;
+    - every point: exact rows are the true neighbours, inexact rows
+      never beat the true distance, and a query is short of k rows only
+      when its missing neighbours lie beyond the searched radius."""
     from tiff_to_geojson_csv_json_format_converter_spark.operators import joins
 
     level, max_ring, k = 14, 2, 3
     rng = np.random.default_rng(seed)
     pdf = _knn_points(rng)
-    qs = _knn_queries(rng, level)
-    got = joins.knn_join(
-        spark.createDataFrame(pdf), spark.createDataFrame(
-            [(str(i), float(lon), float(lat)) for i, (lon, lat) in enumerate(qs)],
-            "query_id string, lon double, lat double"),
-        k=k, level=level, max_ring=max_ring).toPandas()
+    odd = _knn_odd_points(level)
+    rows = [(int(r.image_id), int(r.pixel_idx), int(r.band), float(r.longitude), float(r.latitude))
+            for r in pdf.itertuples()]
+    rows += [(9, 10_000 + i, 0, lon, lat) for i, (lon, lat) in enumerate(odd)]
+    # 12 pixels on one coordinate, ids descending: whatever the batch
+    # split, one batch holds more than k of them, in reverse tie order
+    rows += [(9, 20_011 - i, 0, 77.041, 28.041) for i in range(12)]
+    multi = pdf[pdf["band"] == 2][["longitude", "latitude"]].to_numpy()[:3]
+    qs = [(str(i), float(lon), float(lat)) for i, (lon, lat) in enumerate(
+        _knn_queries(rng, level) + _edge_queries(level) + [tuple(p) for p in multi]
+        + [tuple(p) for p in pdf[["longitude", "latitude"]].to_numpy()[:2]]
+        + [p for p in odd if p[0] is not None and p[1] is not None] + [(77.041, 28.041)])]
+    qs += [("dup", 77.01, 28.01), ("dup", 77.03, 28.04), ("twin", 77.02, 28.02),
+           ("twin", 77.02, 28.02), ("null", None, 28.01), ("null", 77.01, None)]
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "7")
+    try:
+        got = joins.knn_join(
+            spark.createDataFrame(rows, "image_id long, pixel_idx long, band int, "
+                                        "longitude double, latitude double"),
+            spark.createDataFrame(qs, "query_id string, lon double, lat double"),
+            k=k, level=level, max_ring=max_ring).collect()
+    finally:
+        spark.conf.unset("spark.sql.execution.arrow.maxRecordsPerBatch")
     guard = (max_ring * 180.0 / (1 << level)) ** 2
-    plon, plat = pdf["longitude"].to_numpy(), pdf["latitude"].to_numpy()
-    for i, (lon, lat) in enumerate(qs):
-        rows = got[got["query_id"] == str(i)].sort_values("knn_rank")
-        assert rows["knn_rank"].tolist() == list(range(1, len(rows) + 1))
-        d2 = (plon - lon) * (plon - lon) + (plat - lat) * (plat - lat)
-        order = np.lexsort((pdf["band"], pdf["pixel_idx"], pdf["image_id"], d2))[:k]
-        assert len(rows) >= min(k, int((d2 <= guard).sum()))
-        for r, j in zip(rows.itertuples(), order):
-            assert r.exact == (r.dist2 <= guard)
-            if r.exact:
-                assert r.dist2 == d2[j]
-                assert (r.image_id, r.pixel_idx, r.band) == tuple(pdf.loc[j, ["image_id", "pixel_idx", "band"]])
+    by_id = {}
+    for r in got:
+        by_id.setdefault(r["query_id"], []).append(r)
+
+    # the scan of each query row's square
+    ok = [r for r in rows if r[3] is not None and r[4] is not None]
+    px = np.array([r[3] for r in ok], dtype=np.float64)
+    py = np.array([r[4] for r in ok], dtype=np.float64)
+    ptx, pty = cells.tile_xy(px, py, level)
+    cand = {}
+    for qid, lon, lat in qs:
+        if lon is None or lat is None:
+            continue
+        qtx, qty = cells.tile_xy(np.array([lon]), np.array([lat]), level)
+        _, rx, ry = cells.cell_to_xy(cells.k_ring_xy(int(qtx[0]), int(qty[0]), level, max_ring))
+        square = set(zip(rx.tolist(), ry.tolist()))
+        for j, r in enumerate(ok):
+            if (int(ptx[j]), int(pty[j])) in square:
+                with np.errstate(invalid="ignore"):  # inf - inf is NaN, as in Spark
+                    d2 = (px[j] - lon) * (px[j] - lon) + (py[j] - lat) * (py[j] - lat)
+                cand.setdefault(qid, []).append((bool(np.isnan(d2)), 0.0 if np.isnan(d2) else d2, *r[:3]))
+    assert set(by_id) == {q for q, c in cand.items() if c}
+    for qid, c in cand.items():
+        want = sorted(c)[:k]
+        have = sorted(by_id[qid], key=lambda r: r["knn_rank"])
+        assert [r["knn_rank"] for r in have] == list(range(1, len(want) + 1)), qid
+        for r, (is_nan, d2, img, pix, band) in zip(have, want):
+            assert (r["image_id"], r["pixel_idx"], r["band"]) == (img, pix, band), qid
+            assert np.isnan(r["dist2"]) if is_nan else r["dist2"] == d2, qid
+            assert r["exact"] == (not is_nan and d2 <= guard), qid
+
+    # every point, for the queries of a unique id on the grid
+    for qid, lon, lat in qs:
+        if qid in ("dup", "twin", "null") or not (-180 <= lon <= 180 and -90 <= lat <= 90):
+            continue
+        have = sorted(by_id.get(qid, []), key=lambda r: r["knn_rank"])
+        with np.errstate(invalid="ignore"):
+            d2 = (px - lon) * (px - lon) + (py - lat) * (py - lat)
+        order = np.lexsort(([r[2] for r in ok], [r[1] for r in ok], [r[0] for r in ok], d2))[:k]
+        assert len(have) >= min(k, int((d2 <= guard).sum()))
+        for r, j in zip(have, order):
+            if r["exact"]:
+                assert r["dist2"] == d2[j]
+                assert (r["image_id"], r["pixel_idx"], r["band"]) == ok[j][:3]
             else:
-                assert r.dist2 >= d2[j]
+                assert not r["dist2"] < d2[j]
 
 
 # --- the cell-cover join against brute force (Spark) ------------------------
 
-def _cover_layer(rng, n_polys: int) -> list[tuple[str, list]]:
+def _cover_layer(rng, n_polys: int, level: int) -> list[tuple[str, list]]:
     """Overlapping boxes and triangles over one region, some with a hole,
-    some with the shell left unclosed."""
+    some with the shell left unclosed; boxes whose edges (and hole's
+    edges) lie on ``level`` cell edges; and boxes one cell wide."""
+    n = 1 << level
     polys = []
     for i in range(n_polys):
         cx, cy = float(rng.uniform(77.0, 79.0)), float(rng.uniform(28.0, 30.0))
         w, h = rng.uniform(0.05, 3.0, size=2).tolist()
+        if i % 4 == 2:  # cell-aligned, the hole one cell in
+            tx, ty = cells.tile_xy(np.array([cx]), np.array([cy]), level)
+            wx, wy = rng.integers(1, 7, size=2)
+            # tiles tx..tx+wx-1 west to east, ty..ty+wy-1 north to south
+            x0, _, _, y1 = cells.cell_bounds(cells.xy_to_cell(tx, ty, level))
+            _, y0, x1, _ = cells.cell_bounds(cells.xy_to_cell(tx + wx - 1, ty + wy - 1, level))
+            x0, y0, x1, y1 = (float(v[0]) for v in (x0, y0, x1, y1))
+            rings = [[[x0, y0], [x1, y0], [x1, y1], [x0, y1], [x0, y0]]]
+            if wx > 2 and wy > 2:
+                hx0, hy0 = x0 + 360.0 / n, y0 + 180.0 / n
+                hx1, hy1 = x1 - 360.0 / n, y1 - 180.0 / n
+                rings.append([[hx0, hy0], [hx1, hy0], [hx1, hy1], [hx0, hy1], [hx0, hy0]])
+            polys.append((f"p{i}", rings))
+            continue
+        if i % 4 == 3:  # inside one cell column
+            tx, _ = cells.tile_xy(np.array([cx]), np.array([cy]), level)
+            lo, _, hi, _ = cells.cell_bounds(cells.xy_to_cell(tx, np.array([0]), level))
+            cx, w = float((lo[0] + hi[0]) / 2), float((hi[0] - lo[0]) * rng.uniform(0.1, 0.5))
         if i % 2:
             shell = [[cx - w, cy - h], [cx + w, cy - h], [cx, cy + h]]
         else:
@@ -328,6 +420,51 @@ def _cover_layer(rng, n_polys: int) -> list[tuple[str, list]]:
                           [hx - hw, hy + hh], [hx - hw, hy - hh]])
         polys.append((f"p{i}", rings))
     return polys
+
+
+def _shell_box(rings: list) -> tuple:
+    return (min(p[0] for p in rings[0]), min(p[1] for p in rings[0]),
+            max(p[0] for p in rings[0]), max(p[1] for p in rings[0]))
+
+
+@settings(max_examples=40, deadline=None)
+@given(seed=st.integers(min_value=0, max_value=2**32 - 1), level=st.sampled_from([8, 10, 12]),
+       n_polys=st.integers(min_value=0, max_value=12))
+def test_cover_index_equals_per_polygon_loop(seed, level, n_polys):
+    """The cover index built for the whole layer at once, classifying
+    only the cells inside each polygon's vertex extent, equals the
+    per-polygon loop (``cells.cover_bbox`` and
+    ``geometry.classify_cells_interior`` over every cover cell), entry
+    for entry: cells, owners and interior flags. The layer adds, to the
+    generated shapes, bboxes wider than their rings and shells off the
+    grid, whose clamped edge cells can be interior."""
+    import json
+
+    from tiff_to_geojson_csv_json_format_converter_spark.operators import joins
+
+    rng = np.random.default_rng(seed)
+    polys = _cover_layer(rng, n_polys, level)
+    taken = [(pid, json.dumps({"type": "Polygon", "coordinates": rings}), *_shell_box(rings))
+             for pid, rings in polys]
+    big = [[[-190.0, 80.0], [-170.0, 80.0], [-170.0, 100.0], [-190.0, 100.0]],
+           [[-175.0, 85.0], [-174.0, 85.0], [-174.0, 86.0], [-175.0, 86.0]]]
+    taken += [("wide", taken[0][1], *(np.array(taken[0][2:]) + [-1.0, -1.0, 1.0, 1.0]))] if taken else []
+    taken += [("off", json.dumps({"type": "Polygon", "coordinates": big}), -190.0, 80.0, -170.0, 100.0)]
+
+    cover, owner, interior = [np.zeros(0, np.int64)], [np.zeros(0, np.int32)], [np.zeros(0, bool)]
+    for i, (_, geojson, *box) in enumerate(taken):
+        rr = [np.asarray(r, dtype=np.float64) for r in json.loads(geojson)["coordinates"]]
+        cc = cells.cover_bbox(*box, level)
+        cover.append(cc)
+        owner.append(np.full(len(cc), i, dtype=np.int32))
+        interior.append(geometry.classify_cells_interior(np.column_stack(cells.cell_bounds(cc)), rr))
+    cover = np.concatenate(cover)
+    order = np.argsort(cover, kind="stable")
+    got = joins._cover_index(taken, level)
+    np.testing.assert_array_equal(got[0], cover[order])
+    np.testing.assert_array_equal(got[1], np.concatenate(owner)[order])
+    np.testing.assert_array_equal(got[2], np.concatenate(interior)[order])
+    assert got[2][got[1] == len(taken) - 1].any()  # the clamped corner cell
 
 
 def _cover_points(rng, n: int, level: int, polys: list) -> np.ndarray:
@@ -361,10 +498,9 @@ def test_cell_cover_join_agrees_with_brute_force(spark, seed, level, n_polys, n_
     from tiff_to_geojson_csv_json_format_converter_spark.operators import joins
 
     rng = np.random.default_rng(seed)
-    polys = _cover_layer(rng, n_polys)
+    polys = _cover_layer(rng, n_polys, level)
     xy = _cover_points(rng, n_points, level, polys)
-    boxes = [(min(p[0] for p in rings[0]), min(p[1] for p in rings[0]),
-              max(p[0] for p in rings[0]), max(p[1] for p in rings[0])) for _, rings in polys]
+    boxes = [_shell_box(rings) for _, rings in polys]
     layer = spark.createDataFrame(
         [(pid, json.dumps({"type": "Polygon", "coordinates": rings}), *box)
          for (pid, rings), box in zip(polys, boxes)],

@@ -121,7 +121,8 @@ def parent(cid: np.ndarray, steps: int = 1) -> np.ndarray:
 def k_ring_xy(tx: int, ty: int, level: int, k: int) -> np.ndarray:
     """All cell ids within Chebyshev distance k of (tx, ty), clipped to
     the grid — the neighborhood probe for cell-ring kNN (SURVEY.md D6),
-    kept as the test oracle of its Column twin ``joins._ring_cells``."""
+    kept as the test oracle of ``joins._ring_index``, which builds every
+    query's square at once."""
     n = 1 << level
     xs = np.arange(max(0, tx - k), min(n, tx + k + 1))
     ys = np.arange(max(0, ty - k), min(n, ty + k + 1))
@@ -139,8 +140,9 @@ def ring_only_xy(tx: int, ty: int, level: int, k: int) -> np.ndarray:
 
 
 def cover_bbox(min_lon: float, min_lat: float, max_lon: float, max_lat: float, level: int) -> np.ndarray:
-    """Cell ids covering a lon/lat bbox at ``level`` (polygon cover seed
-    for the cell equi-join, SURVEY.md D3)."""
+    """Cell ids covering a lon/lat bbox at ``level`` (the polygon cover of
+    the cell-cover join, SURVEY.md D3), kept as the per-polygon test
+    oracle of ``joins._cover_index``, which covers a whole layer at once."""
     x0, y1 = tile_xy(np.array([min_lon]), np.array([min_lat]), level)
     x1, y0 = tile_xy(np.array([max_lon]), np.array([max_lat]), level)
     xs = np.arange(x0[0], x1[0] + 1)

@@ -13,13 +13,15 @@ Spark-first strategy per SURVEY.md §2.D:
   no join, no shuffle, and interior cells settle without a ray-cast
   (as in Raster Intervals). Against the equi-join plan it replaced,
   ``spatial_query`` pass CPU fell ~20 % (18 of 20 interleaved pairs).
-- D6 kNN: index points by row-major tile id, probe each query's
-  Chebyshev ring square; the ring cells are exploded in codegen and
-  broadcast, the points stream past them (broadcast hash equi-join,
-  never a cross join), then ``row_number`` over (query, dist2) takes
-  top-k. The ring guarantee: a row is exact when the k-th best
-  candidate is closer than the nearest possible point of the first
-  unsearched ring.
+- D6 kNN: key points by row-major tile id and probe each query's
+  Chebyshev ring square. :func:`knn_join` has the shape of
+  :func:`cell_cover_join`: the driver sorts every query's ring cells
+  into one broadcast index, one ``mapInArrow`` over the points finds
+  their queries by binary search and keeps each query's best rows per
+  batch, then ``row_number`` over (query, dist2) takes top-k. No join,
+  so never a cross join. The ring guarantee: a row is exact when the
+  k-th best candidate is closer than the nearest possible point of the
+  first unsearched ring.
 """
 
 from __future__ import annotations
@@ -354,8 +356,6 @@ def _cover_pass(points: DataFrame, polygons: DataFrame, level: int, lon_col: str
                 lat_col: str, max_layer_rows: int, exact: bool) -> DataFrame:
     """The one ``mapInArrow`` of :func:`cell_cover_join` (``exact``) and
     :func:`cell_cover_candidates`; see the former."""
-    import json
-
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_type
     from pyspark.sql.types import LongType, StructField, StructType
@@ -379,47 +379,106 @@ def _cover_pass(points: DataFrame, polygons: DataFrame, level: int, lon_col: str
             f"polygon layer exceeds max_layer_rows={max_layer_rows} for "
             f"the driver-collected broadcast; split the layer or raise "
             f"the cap")
-    # each list starts with an empty part, so an empty layer concatenates
-    cover, owner, interior, rings = [np.zeros(0, np.int64)], [np.zeros(0, np.int32)], \
-        [np.zeros(0, bool)], []
-    for i, (_, geojson, *box) in enumerate(taken):
-        # rings are parsed here, so corrupt GeoJSON raises the decoder's
-        # own error and a degenerate ring close_ring's
-        rr = [np.asarray(r, dtype=np.float64) for r in json.loads(geojson)["coordinates"]]
-        cc = cells.cover_bbox(*box, level)
-        cover.append(cc)
-        owner.append(np.full(len(cc), i, dtype=np.int32))
-        interior.append(geometry.classify_cells_interior(np.column_stack(cells.cell_bounds(cc)), rr))
-        rings.append(rr)
-    cover = np.concatenate(cover)
-    order = np.argsort(cover, kind="stable")
     ids = pa.array([r[0] for r in taken], to_arrow_type(id_field.dataType))
-    bc = points.sparkSession.sparkContext.broadcast((
-        cover[order], np.concatenate(owner)[order], np.concatenate(interior)[order], ids, rings,
-        np.array([r[2:] for r in taken], dtype=np.float64).reshape(-1, 4)))
+    bc = points.sparkSession.sparkContext.broadcast((*_cover_index(taken, level), ids))
     return points.mapInArrow(
         lambda batches: _cover_batches(batches, bc.value, lon_col, lat_col, level, exact),
         StructType(fields))
 
 
+def _rect_index(x0, x1, y0, y1, key):
+    """Sorted (cell, owner) of one inclusive tile rectangle per owner,
+    ``[x0, x1] x [y0, y1]``, with ``key(tx, ty)`` the cell id: cells run
+    x-major within a rectangle, equal cells keep owner order, and a
+    rectangle with ``x1 < x0`` or ``y1 < y0`` is empty. The index of both
+    :func:`_cover_pass` (bbox covers) and :func:`knn_join` (ring squares),
+    built without a loop over the owners."""
+    nx = np.maximum(x1 - x0 + 1, 0)
+    ny = np.maximum(y1 - y0 + 1, 0)
+    cnt = nx * ny
+    owner = np.repeat(np.arange(len(cnt), dtype=np.int32), cnt)
+    j = np.arange(len(owner)) - np.repeat(np.cumsum(cnt) - cnt, cnt)
+    h = ny[owner]
+    cid = key(x0[owner] + j // h, y0[owner] + j % h)
+    order = np.argsort(cid, kind="stable")
+    return cid[order], owner[order]
+
+
+def _probe(index_cells, cid):
+    """(row, entry) pairs: each of ``cid`` against every equal cell of the
+    sorted ``index_cells``, by two binary searches and no loop."""
+    lo = np.searchsorted(index_cells, cid, "left")
+    n = np.searchsorted(index_cells, cid, "right") - lo
+    row = np.repeat(np.arange(len(cid)), n)
+    return row, np.arange(len(row)) - np.repeat(np.cumsum(n) - n, n) + np.repeat(lo, n)
+
+
+def _runs(idx, key):
+    """``idx`` grouped by ``key[idx]`` (one stable argsort): one array per
+    key value, for a kernel called once per polygon."""
+    idx = idx[np.argsort(key[idx], kind="stable")]
+    return [r for r in np.split(idx, np.flatnonzero(np.diff(key[idx])) + 1) if len(r)]
+
+
+def _cover_index(taken: list, level: int) -> tuple:
+    """The driver half of :func:`_cover_pass`: (sorted cover cells, each
+    cell's polygon, its interior flag, polygon rings, polygon bboxes) of
+    the collected layer rows (polygon_id, geojson, min_lon, min_lat,
+    max_lon, max_lat).
+
+    Every polygon's bbox cover (:func:`cells.cover_bbox`) is one tile
+    rectangle; all of them come from one :func:`cells.tile_xy` call and
+    :func:`_rect_index`. Only the cells strictly inside the extent of a
+    polygon's vertices go to :func:`geometry.classify_cells_interior`,
+    one call per polygon that has any: every other cell has a corner
+    outside the polygon or touches an edge's bbox, so the classifier
+    rejects it. That is every edge cell of a cover, whose bbox is the
+    vertex extent, and every cell of a cover one or two cells wide."""
+    import json
+
+    # rings are parsed here, so corrupt GeoJSON raises the decoder's own
+    # error and a degenerate ring close_ring's
+    rings = [[geometry.close_ring(r) for r in json.loads(g)["coordinates"]] for _, g, *_ in taken]
+    empty = [r[0] for r, rr in zip(taken, rings) if not rr]
+    if empty:
+        raise ValueError(f"polygon {empty[0]!r} has no rings")
+    box = np.array([r[2:] for r in taken], dtype=np.float64).reshape(-1, 4)
+    tx, ty = cells.tile_xy(box[:, [0, 2]], box[:, [1, 3]], level)
+    cover, owner = _rect_index(tx[:, 0], tx[:, 1], ty[:, 1], ty[:, 0],
+                               lambda gx, gy: cells.xy_to_cell(gx, gy, level))
+    # each polygon's vertex extent; fmin/fmax skip a NaN vertex, whose
+    # edges never cross a ray nor overlap a cell
+    verts = [r for rr in rings for r in rr]
+    lo = np.full((len(rings), 2), np.inf)
+    hi = np.full((len(rings), 2), -np.inf)
+    if verts:
+        of = np.repeat(np.arange(len(rings)), [sum(len(r) for r in rr) for rr in rings])
+        verts = np.concatenate(verts)
+        np.fmin.at(lo, of, verts)
+        np.fmax.at(hi, of, verts)
+    cb = np.column_stack(cells.cell_bounds(cover))
+    inner = np.flatnonzero((cb[:, 0] > lo[owner, 0]) & (cb[:, 1] > lo[owner, 1])
+                           & (cb[:, 2] < hi[owner, 0]) & (cb[:, 3] < hi[owner, 1]))
+    interior = np.zeros(len(cover), dtype=bool)
+    for run in _runs(inner, owner):
+        interior[run] = geometry.classify_cells_interior(cb[run], rings[owner[run[0]]])
+    return cover, owner, interior, rings, box
+
+
 def _cover_batches(batches, index: tuple, lon_col: str, lat_col: str, level: int,
                    exact: bool):
     """:func:`_cover_pass`'s body: points batches -> matched (point,
-    polygon) rows, against ``index`` = (sorted cover cells, their
-    polygon, their interior flag, polygon ids, polygon rings, polygon
-    bboxes)."""
+    polygon) rows, against ``index`` = :func:`_cover_index`'s tuple plus
+    the polygon ids."""
     import pyarrow as pa
 
-    cover, owner, interior, ids, rings, bbox = index
+    cover, owner, interior, rings, bbox, ids = index
     for b in batches:
         # Arrow -> numpy turns a null into NaN
         x = b.column(lon_col).cast(pa.float64()).to_numpy(zero_copy_only=False)
         y = b.column(lat_col).cast(pa.float64()).to_numpy(zero_copy_only=False)
         cid = cells.cell_id(x, y, level)
-        lo = np.searchsorted(cover, cid, "left")
-        n = np.searchsorted(cover, cid, "right") - lo
-        pt = np.repeat(np.arange(len(cid)), n)
-        ent = np.arange(len(pt)) - np.repeat(np.cumsum(n) - n, n) + np.repeat(lo, n)
+        pt, ent = _probe(cover, cid)
         poly, px, py = owner[ent], x[pt], y[pt]
         box = bbox[poly]
         # inclusive polygon-bbox prune: a point outside the bbox is
@@ -428,11 +487,8 @@ def _cover_batches(batches, index: tuple, lon_col: str, lat_col: str, level: int
         # coordinates that the tile clamp puts on an edge cell
         keep = (px >= box[:, 0]) & (px <= box[:, 2]) & (py >= box[:, 1]) & (py <= box[:, 3])
         if exact:
-            test = np.flatnonzero(keep & ~interior[ent])
-            test = test[np.argsort(poly[test], kind="stable")]
-            for run in np.split(test, np.flatnonzero(np.diff(poly[test])) + 1):
-                if len(run):
-                    keep[run] = geometry.points_in_polygon(px[run], py[run], rings[poly[run[0]]])
+            for run in _runs(np.flatnonzero(keep & ~interior[ent]), poly):
+                keep[run] = geometry.points_in_polygon(px[run], py[run], rings[poly[run[0]]])
         sel = np.flatnonzero(keep)
         out = b.take(pt[sel])
         cols, names = [*out.columns, ids.take(poly[sel])], [*out.schema.names, "polygon_id"]
@@ -458,32 +514,6 @@ def bbox_join(images: DataFrame, polygons: DataFrame, how: str = "inner") -> Dat
     return images.join(p, cond, how)
 
 
-def _ring_cells(queries: DataFrame, qlon: str, qlat: str, level: int,
-                max_ring: int) -> DataFrame:
-    """(query_id, _qlon, _qlat, _cell): one row per cell of each query's
-    clipped Chebyshev square of radius ``max_ring`` — the Column twin of
-    :func:`..functions.cells.k_ring_xy`, keyed row-major like
-    :func:`..functions.cells.tile_id_col`. Two ``explode(sequence(...))``
-    generators in whole-stage codegen; no Python. A query with a null
-    coordinate emits no cells: ``tile_x_col``/``tile_y_col`` would put
-    it on tile 0 (``greatest`` skips nulls) and pair it with the points
-    on the grid's edge at a null distance."""
-    n = 1 << level
-
-    def axis(t):
-        return F.explode(F.sequence(F.greatest(t - max_ring, F.lit(0)),
-                                    F.least(t + max_ring, F.lit(n - 1))))
-
-    return (
-        queries.select("query_id", F.col(qlon).alias("_qlon"), F.col(qlat).alias("_qlat"))
-        .filter(F.col("_qlon").isNotNull() & F.col("_qlat").isNotNull())
-        .withColumn("_tx", axis(cells.tile_x_col(F.col("_qlon"), level)))
-        .withColumn("_ty", axis(cells.tile_y_col(F.col("_qlat"), level)))
-        .select("query_id", "_qlon", "_qlat",
-                (F.col("_tx") * F.lit(n) + F.col("_ty")).alias("_cell"))
-    )
-
-
 def knn_join(
     points: DataFrame,
     queries: DataFrame,
@@ -497,25 +527,50 @@ def knn_join(
     reference semantics = the JS min-distance reduce emitted by the pyc
     ``tiff_processor_enhanced``: kNN with k=1 over all points).
 
-    Plan shape, all JVM (no Python stage): each query explodes its
-    ring-0..max_ring cells (:func:`_ring_cells`) carrying its own
-    coordinates; that candidate-cell side is broadcast explicitly and the
-    points, keyed by the same row-major tile id in codegen, stream past
-    it (one BroadcastHashJoin, never a cross join); top-k via
-    ``row_number`` on (dist2, image_id, pixel_idx, band) for
-    deterministic ties.
+    Plan shape: one Arrow pass over the points against a driver-built
+    ring index, then the top-k window.
 
-    The broadcast side holds at most (2·max_ring+1)² rows per query (25
-    at the defaults). Its hash relation measured ~65 bytes a row with
-    6-character query ids, so ~1.6 KB per query on top of a ~1 MB fixed
-    allocation (2.5 MB for 1,000 queries): it assumes the query side is
-    a request batch, as the broadcast query frame before it did.
+    1. the driver collects ``query_id`` and the query coordinates (one
+       job), drops a query with a null coordinate, and builds every
+       query's clipped Chebyshev square of
+       radius ``max_ring`` around its row-major tile
+       (:func:`cells.tile_xy`, the twin of :func:`cells.tile_id_col`),
+       sorted by cell (:func:`_rect_index`); one broadcast holds the
+       cells, their query, the query coordinates and ids: at most
+       (2·max_ring+1)² × 12 bytes plus ~20 bytes and the id per query
+       (~320 bytes at the defaults);
+    2. one ``mapInArrow`` over ``points.select(*id_cols, lon, lat)``
+       (:func:`_knn_batches`) expands each point to the queries whose
+       square holds its tile by binary search, computes ``dist2`` and
+       keeps, per query and batch, every row that can still rank <= k;
+    3. ``row_number`` over (query_id; dist2, image_id, pixel_idx, band)
+       takes the top k, with deterministic ties.
+
+    No join, no broadcast exchange and no co-location shuffle: the only
+    Exchange is the window's, over at most ~k rows per query and batch.
+    Against the plan it replaced (ring cells exploded in codegen and
+    broadcast-hash-joined to the streamed points, which were
+    repartitioned when under-partitioned), 4 cores, ``op_probe.py
+    spatial_query``: per 48-query call 1.94 -> 1.26 s CPU (JIT 0.98 ->
+    0.54 s, driver 0.12 -> 0.04 s), per one-query request 1.85 -> 1.14
+    s, both still 3 jobs and 9 tasks; ``q_knn`` at sf0.1: see CHANGES.md.
 
     Guarantee: a result row is exact if its dist is <= the nearest
     possible distance of the first UNsearched ring; rows are flagged
     ``exact`` accordingly (queries in empty neighborhoods widen with
-    ``max_ring``). A query with a null lon or lat returns no rows.
+    ``max_ring``). A query with a null lon or lat returns no rows, and a
+    point with a null coordinate is never a neighbour; a NaN or infinite
+    coordinate lands on the tile Spark's clamp gives it. ``k < 1`` and
+    ``max_ring < 0`` raise ``ValueError``.
     """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
+    from pyspark.sql.types import DoubleType, StructField, StructType
+
+    if k < 1:
+        raise ValueError(f"k must be >= 1, got {k}")
+    if max_ring < 0:
+        raise ValueError(f"max_ring must be >= 0, got {max_ring}")
     plon, plat = point_cols
     qlon, qlat = query_cols
     # cells are 360/2^L wide but only 180/2^L tall; the ring-search
@@ -523,29 +578,21 @@ def knn_join(
     # the first unsearched ring at distance max_ring * cell_h)
     cell_min_deg = 180.0 / (1 << level)
 
-    n_parts = points.sparkSession.sparkContext.defaultParallelism
-    pts = points.withColumn("_cell", cells.tile_id_col(F.col(plon), F.col(plat), level))
-    # The streamed points keep their own partitioning through the
-    # broadcast join, so a single-file parquet scan would make the whole
-    # fan-out single-task (q_knn at sf0.1 on 4 cores: 3 splits, one task
-    # doing all 11.6 M candidate rows, 32 s instead of 8.4-9.0 s).
-    # Co-locate points by cell across the default parallelism (at real
-    # scale the table is already written cell-partitioned and this does
-    # not fire).
-    if points.rdd.getNumPartitions() < n_parts:
-        pts = pts.repartition(n_parts, "_cell")
+    id_type = queries.schema["query_id"].dataType
+    rows = [r for r in queries.select("query_id", qlon, qlat).collect()
+            if r[1] is not None and r[2] is not None]
+    qx = np.array([r[1] for r in rows], dtype=np.float64)
+    qy = np.array([r[2] for r in rows], dtype=np.float64)
+    bc = points.sparkSession.sparkContext.broadcast(
+        (*_ring_index(qx, qy, level, max_ring), qx, qy,
+         pa.array([r[0] for r in rows], to_arrow_type(id_type))))
 
     id_cols = [c for c in points.columns if c in ("image_id", "pixel_idx", "band")]
-    cand = (
-        F.broadcast(_ring_cells(queries, qlon, qlat, level, max_ring)).join(pts, "_cell")
-        .withColumn(
-            "dist2",
-            (F.col(plon) - F.col("_qlon")) * (F.col(plon) - F.col("_qlon"))
-            + (F.col(plat) - F.col("_qlat")) * (F.col(plat) - F.col("_qlat")),
-        )
-        # slim before the window shuffle: only ids + rank key cross the wire
-        .select("query_id", *id_cols, plon, plat, "dist2")
-    )
+    schema = StructType([StructField("query_id", id_type),
+                         *[points.schema[c] for c in (*id_cols, plon, plat)],
+                         StructField("dist2", DoubleType())])
+    cand = points.select(*id_cols, plon, plat).mapInArrow(
+        lambda batches: _knn_batches(batches, bc.value, plon, plat, level, k), schema)
     # ties: image_id and pixel_idx in the caller's column order, then the
     # band, so a multi-band pixel ranks in band order, not shuffle order
     order = ["dist2", *[c for c in id_cols if c != "band"]]
@@ -561,6 +608,61 @@ def knn_join(
     # width, cell height) — the height is the binding dimension)
     guard = (max_ring * cell_min_deg) ** 2
     return topk.withColumn("exact", F.col("dist2") <= F.lit(guard))
+
+
+def _ring_index(qx, qy, level: int, max_ring: int) -> tuple:
+    """Sorted (cell, query) of every query's Chebyshev square of radius
+    ``max_ring`` around its tile, clipped to the grid (the squares of
+    :func:`cells.k_ring_xy`), keyed row-major ``tile_x * 2^level +
+    tile_y``."""
+    n = 1 << level
+    tx, ty = cells.tile_xy(qx, qy, level)
+    return _rect_index(np.maximum(tx - max_ring, 0), np.minimum(tx + max_ring, n - 1),
+                       np.maximum(ty - max_ring, 0), np.minimum(ty + max_ring, n - 1),
+                       lambda gx, gy: gx * n + gy)
+
+
+def _knn_batches(batches, index: tuple, lon_col: str, lat_col: str, level: int, k: int):
+    """:func:`knn_join`'s body: points batches -> (query_id, point
+    columns, dist2) candidate rows against ``index`` = (sorted ring
+    cells, their query, query lon, query lat, query ids)."""
+    import pyarrow as pa
+
+    ring, owner, qx, qy, ids = index
+    n = 1 << level
+    for b in batches:
+        lon, lat = b.column(lon_col), b.column(lat_col)
+        x = lon.cast(pa.float64()).to_numpy(zero_copy_only=False)
+        y = lat.cast(pa.float64()).to_numpy(zero_copy_only=False)
+        tx, ty = cells.tile_xy(x, y, level)
+        cid = tx * n + ty
+        if lon.null_count or lat.null_count:  # Arrow -> numpy made them NaN
+            cid[(lon.is_null().to_numpy(zero_copy_only=False)
+                 | lat.is_null().to_numpy(zero_copy_only=False))] = -1
+        pt, ent = _probe(ring, cid)
+        q = owner[ent]
+        dx, dy = x[pt] - qx[q], y[pt] - qy[q]
+        d2 = dx * dx + dy * dy  # Spark's (p - q) * (p - q) + ..., bit for bit
+        sel = _within_k(q, d2, k)
+        out = b.take(pt[sel])
+        yield pa.RecordBatch.from_arrays([ids.take(q[sel]), *out.columns, pa.array(d2[sel])],
+                                         names=["query_id", *out.schema.names, "dist2"])
+
+
+def _within_k(group, value, k: int):
+    """Indices of the rows whose ``value`` is at most the k-th smallest of
+    their ``group``, NaN last and equal to NaN as Spark orders a double:
+    the rows that rank < k plus every row tied with the k-th. A row it
+    drops has k rows of its own batch strictly nearer, so it ranks > k
+    in the window whatever the tie order."""
+    if not len(group):
+        return np.zeros(0, dtype=np.int64)
+    order = np.lexsort((value, group))
+    g, v = group[order], value[order]
+    start = np.flatnonzero(np.r_[True, g[1:] != g[:-1]])
+    size = np.diff(np.r_[start, len(g)])
+    kth = np.repeat(v[start + np.minimum(size, k) - 1], size)
+    return order[(v <= kth) | np.isnan(kth)]
 
 
 def classify_clip_geometry(rings: list) -> str:
