@@ -18,6 +18,15 @@ that call's jobs and their stages' task counts, and perfbench's
 workers, JIT, GC and the rest of the JVM. ``compiles`` counts janino
 compilations (Spark's ``CodegenMetrics``) during the call.
 
+``jit_s`` is smeared across operations. The JIT compiler threads run
+asynchronously: a method queued for compilation while one call runs is
+compiled while that call or a later one runs, and its CPU lands on
+whichever operation is running then (even ``spark.range(10).collect()``
+reads most of its CPU as JIT early in a JVM). An operation's ``jit_s``
+is the JVM's compile load during its calls, not what the operation
+itself caused; an operator rewrite does not reach it, a JIT policy does
+(see ``plans/session.py``). Compare the total across operations.
+
 In ``query`` mode each call collects ``queries()[<entry query>](spark,
 <sf dir>)``; a call fails when its rows differ from the warm-up's, and
 the line adds the best wall time, the row count and the md5 of the
