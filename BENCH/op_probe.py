@@ -24,7 +24,7 @@ compiled while that call or a later one runs, and its CPU lands on
 whichever operation is running then (even ``spark.range(10).collect()``
 reads most of its CPU as JIT early in a JVM). An operation's ``jit_s``
 is the JVM's compile load during its calls, not what the operation
-itself caused; an operator rewrite does not reach it, a JIT policy does
+itself caused; an operator rewrite does not reach it, JIT flags do
 (see ``plans/session.py``). Compare the total across operations.
 
 In ``query`` mode each call collects ``queries()[<entry query>](spark,

@@ -1,6 +1,5 @@
 """plans.worker_daemon: zip directories are re-read only when the archive
-changed, and a session from get_spark really forks its workers from it.
-session_conf: the daemon is local-only, and the JIT policy reaches the JVM."""
+changed, and a session from get_spark really forks its workers from it."""
 
 import importlib
 import sys
@@ -91,29 +90,6 @@ def test_daemon_conf_is_local_only():
         assert "spark.python.daemon.module" not in session.session_conf(master)
     own = {"spark.python.daemon.module": "pyspark.daemon"}
     assert session.session_conf("local[2]", extra_conf=own)["spark.python.daemon.module"] == "pyspark.daemon"
-
-
-JIT_KEY = "spark.driver.defaultJavaOptions"
-
-
-def test_jit_policy_conf_on_every_master():
-    for master in (None, "local[2]", "spark://host:7077", "yarn"):
-        assert session.session_conf(master)[JIT_KEY] == "-XX:CompileThresholdScaling=3"
-    own = {JIT_KEY: "-XX:CompileThresholdScaling=1"}
-    assert session.session_conf("local[2]", extra_conf=own)[JIT_KEY] == own[JIT_KEY]
-    extra = {"spark.driver.extraJavaOptions": "-Dfoo=bar"}
-    conf = session.session_conf("local[2]", extra_conf=extra)
-    assert conf[JIT_KEY] == "-XX:CompileThresholdScaling=3"
-    assert conf["spark.driver.extraJavaOptions"] == "-Dfoo=bar"
-
-
-def test_spark_jvm_runs_the_jit_policy(spark):
-    """The session fixture's JVM was launched with the scaled compile
-    thresholds (the JVM default is 1.0)."""
-    jvm = spark.sparkContext._jvm
-    bean = jvm.java.lang.management.ManagementFactory.getPlatformMXBean(
-        jvm.com.sun.management.HotSpotDiagnosticMXBean._java_lang_class)
-    assert float(bean.getVMOption("CompileThresholdScaling").getValue()) == 3.0
 
 
 def test_spark_workers_fork_from_the_daemon(spark):

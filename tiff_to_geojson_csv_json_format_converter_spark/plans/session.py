@@ -31,50 +31,24 @@ set only for ``local[...]`` masters. On a cluster the daemon starts
 before the executor can import the application's ``--py-files``, so it
 could not import this package; there the stock daemon runs.
 
-The driver JVM runs with ``-XX:CompileThresholdScaling=3``
-(``spark.driver.defaultJavaOptions``): every compile tier's invocation
-and back-edge thresholds are 3x the JVM's. A short-lived driver sits
-early on its JVM's warm-up curve. Over 25 perfbench ``spatial_query``
-passes in one JVM (``local[4]``, 4-core host, seed 5) pass CPU fell
-from ~5.5 to ~2.3 s, and the JIT compiler threads' share from 2-4 s to
-~0.5 s. Much of that early JIT work compiles warm-but-not-hot Spark
-methods that the run never repays; the scaled thresholds skip that
-tail, and hot loops still reach C2. Sweep with perfbench's workloads
-(one set-up, a warm-up pass, then the median CPU of the next two
-passes; seed 5, same host), pass CPU ``ingest_tiles`` /
-``spatial_query``:
+JIT flags are left at the JVM's defaults; two were measured and
+rejected (perfbench ``--seconds 2``, seed 21, one run per flag and
+workload, 4-core host). ``-XX:TieredStopAtLevel=1`` (C1 only) cut
+``spatial_query``'s ``pass_cpu_s`` from 9.68 to 6.91 s, but its pass
+wall time rose from ~3.3 to ~4.7 s; on ``ingest_tiles`` it raised
+``pass_cpu_s`` from 10.41 to 12.57 s, and ``zonal_stats`` from 0.99 to
+2.18 s. ``-XX:CICompilerCount=2`` stayed within noise on both.
 
-- JVM defaults: 6.29 / 5.71 s (median of 5 runs);
-- ``CompileThresholdScaling=3``: 4.95 / 3.99 s (median of 5 runs;
-  every run below every default run; set-up CPU -20 % / -11 %; pass
-  wall time unchanged);
-- ``=2``: 5.10 / 5.10 s; ``=5``: 5.55 / 5.99 s (GC spikes); ``=10``:
-  5.60 / 4.43 s (one run each);
-- ``-XX:-TieredCompilation``: 6.3-6.5 / 5.6-5.97 s, no gain;
-- ``-XX:+UseSerialGC``: 5.7-6.0 / 4.97-5.45 s, within noise;
-- ``-XX:TieredStopAtLevel=1`` (C1 only): 5.7-6.1 / 4.25-6.1 s, with
-  1.8 s of GC in one run. An earlier run (seed 21, one run per flag)
-  found it cut ``spatial_query`` from 9.68 to 6.91 s but raised its
-  pass wall time from ~3.3 to ~4.7 s, and raised ``ingest_tiles`` from
-  10.41 to 12.57 s (``zonal_stats`` 0.99 to 2.18 s);
-- ``-XX:CICompilerCount=2`` (earlier run): within noise on both.
-
-Interleaved perfbench A/B against the JVM defaults (``--seconds 2``,
-seeds 31-48, same host): ``pass_cpu_s`` 5.65 -> 4.55 s on
-``ingest_tiles`` (10/10 pairs) and 5.41 -> 4.32 s on ``spatial_query``
-(8/8), JIT CPU per pass 2.26 -> 0.93 s and 2.44 -> 1.47 s, set-up CPU
--18 % on both, pass wall time flat; ``=2`` lost to ``=3`` on both. The
-cost is wall time where a query repeats a few times in a warm JVM:
-``bench.py``'s best-of-3 suite at ``local[4]`` (six interleaved runs a
-side, ``BENCH/bench_local4_*.json``) took 24.75 -> 27.00 s, with
-several leaves +7-18 %: code compiled later runs slower meanwhile.
-
-Only the driver's JVM gets the flag. On ``local[...]`` that is every
-task; executors on a cluster keep the JVM defaults, because the policy
-was not measured there. A JVM that ``spark-submit`` already started
-(``get_spark`` then attaches to it) ignores the key: pass the flag to
-``spark-submit`` instead. ``extra_conf`` replaces the key; a caller's
-``spark.driver.extraJavaOptions`` is appended after it and keeps it.
+Raising the compile thresholds trades one yardstick for the other.
+``-XX:CompileThresholdScaling=3`` cut perfbench's pass CPU ~20 % with
+flat pass wall time: early in a JVM most JIT work compiles
+warm-but-not-hot methods that a short run never repays. But
+``bench.py``'s best-of-3 suite, queries repeated in a warm JVM, read
+~9 % more wall time. Raising only the C2 (tier 4) thresholds 3x saved
+10-20 % of pass CPU; its ``bench.py`` A/B was unresolved, and its
+calmer half read slower too. Raising only the C1 thresholds, or
+``-XX:Tier4LoadFeedback=1`` (C2 thresholds that rise only with the C2
+queue), saved nothing. The runs are in CHANGES.md.
 """
 
 from __future__ import annotations
@@ -138,8 +112,6 @@ def session_conf(master: str | None, shuffle_partitions: int | None = None,
         "spark.sql.files.maxPartitionBytes": "134217728",
         "spark.sql.session.timeZone": "UTC",
         "spark.driver.memory": os.environ.get("SPARK_DRIVER_MEMORY", "8g"),
-        # the JIT policy of the JVM get_spark launches (module docstring)
-        "spark.driver.defaultJavaOptions": "-XX:CompileThresholdScaling=3",
         "spark.ui.enabled": "false",
     }
     if master == "local" or (master or "").startswith("local["):
