@@ -16,9 +16,14 @@ with zipfile.ZipFile('$ZIP', 'w') as z:
             z.write(p, p)
 "
 
+# the driver JVM is started here, before get_spark runs, so its JIT
+# policy goes on the command line
+JIT="$(python -c 'from tiff_to_geojson_csv_json_format_converter_spark.plans.session import DRIVER_JIT_OPTIONS; print(DRIVER_JIT_OPTIONS)')"
+
 exec spark-submit \
   --master "local[${SPARK_GRAFT_CPUS:-32}]" \
   --py-files "$ZIP" \
+  --conf spark.driver.defaultJavaOptions="$JIT" \
   --conf spark.sql.adaptive.enabled=true \
   --conf spark.sql.shuffle.partitions="${SPARK_GRAFT_CPUS:-32}" \
   bench.py

@@ -92,6 +92,36 @@ def test_daemon_conf_is_local_only():
     assert session.session_conf("local[2]", extra_conf=own)["spark.python.daemon.module"] == "pyspark.daemon"
 
 
+JIT_KEY = "spark.driver.defaultJavaOptions"
+
+
+def test_jit_policy_conf_is_local_only():
+    for master in ("local", "local[2]"):
+        assert session.session_conf(master)[JIT_KEY] == session.DRIVER_JIT_OPTIONS
+    for master in (None, "spark://host:7077", "yarn"):
+        assert JIT_KEY not in session.session_conf(master)
+    own = {JIT_KEY: "-XX:CompileThresholdScaling=1"}
+    assert session.session_conf("local[2]", extra_conf=own)[JIT_KEY] == own[JIT_KEY]
+    extra = {"spark.driver.extraJavaOptions": "-Dfoo=bar"}
+    conf = session.session_conf("local[2]", extra_conf=extra)
+    assert conf[JIT_KEY] == session.DRIVER_JIT_OPTIONS
+    assert conf["spark.driver.extraJavaOptions"] == "-Dfoo=bar"
+
+
+def test_spark_jvm_runs_the_jit_policy(spark):
+    """The session fixture's JVM was launched with 3x the JVM's C2
+    (tier 4) thresholds and its own C1 (tier 3) ones."""
+    jvm = spark.sparkContext._jvm
+    bean = jvm.java.lang.management.ManagementFactory.getPlatformMXBean(
+        jvm.com.sun.management.HotSpotDiagnosticMXBean._java_lang_class)
+    flags = {name: int(bean.getVMOption(name).getValue()) for name in (
+        "Tier4InvocationThreshold", "Tier4MinInvocationThreshold", "Tier4CompileThreshold",
+        "Tier4BackEdgeThreshold", "Tier3InvocationThreshold", "Tier3CompileThreshold")}
+    assert flags == {"Tier4InvocationThreshold": 15000, "Tier4MinInvocationThreshold": 1800,
+                     "Tier4CompileThreshold": 45000, "Tier4BackEdgeThreshold": 120000,
+                     "Tier3InvocationThreshold": 200, "Tier3CompileThreshold": 2000}
+
+
 def test_spark_workers_fork_from_the_daemon(spark):
     """The session fixture is get_spark(master="local[4]"): its Python
     workers carry the daemon's patch and its frozen objects."""

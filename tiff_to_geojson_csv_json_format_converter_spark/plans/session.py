@@ -31,24 +31,32 @@ set only for ``local[...]`` masters. On a cluster the daemon starts
 before the executor can import the application's ``--py-files``, so it
 could not import this package; there the stock daemon runs.
 
-JIT flags are left at the JVM's defaults; two were measured and
-rejected (perfbench ``--seconds 2``, seed 21, one run per flag and
-workload, 4-core host). ``-XX:TieredStopAtLevel=1`` (C1 only) cut
-``spatial_query``'s ``pass_cpu_s`` from 9.68 to 6.91 s, but its pass
-wall time rose from ~3.3 to ~4.7 s; on ``ingest_tiles`` it raised
-``pass_cpu_s`` from 10.41 to 12.57 s, and ``zonal_stats`` from 0.99 to
-2.18 s. ``-XX:CICompilerCount=2`` stayed within noise on both.
+On ``local[...]`` masters the driver JVM, which then runs every task,
+compiles with C2 (tier 4) thresholds 3x the JVM's
+(``spark.driver.defaultJavaOptions``). Early in a JVM most JIT work is
+C2 compiling warm-but-not-hot methods that a short run never repays.
+C1 still compiles on the JVM's schedule, so new code, Spark's generated
+classes too, leaves the interpreter as early as before; the cost is a
+little more JVM CPU in code that stays in C1 longer. Scaling every tier
+(``-XX:CompileThresholdScaling=3``) saved as much CPU but slowed
+``bench.py``'s best-of-3 suite ~9 %; raising only the C1 thresholds,
+or ``-XX:Tier4LoadFeedback=1``, saved nothing. The runs are in
+CHANGES.md.
 
-Raising the compile thresholds trades one yardstick for the other.
-``-XX:CompileThresholdScaling=3`` cut perfbench's pass CPU ~20 % with
-flat pass wall time: early in a JVM most JIT work compiles
-warm-but-not-hot methods that a short run never repays. But
-``bench.py``'s best-of-3 suite, queries repeated in a warm JVM, read
-~9 % more wall time. Raising only the C2 (tier 4) thresholds 3x saved
-10-20 % of pass CPU; its ``bench.py`` A/B was unresolved, and its
-calmer half read slower too. Raising only the C1 thresholds, or
-``-XX:Tier4LoadFeedback=1`` (C2 thresholds that rise only with the C2
-queue), saved nothing. The runs are in CHANGES.md.
+The key reaches only a JVM that ``get_spark`` launches. A JVM that
+``spark-submit`` already started ignores it, so ``BENCH/run_bench.sh``
+passes ``DRIVER_JIT_OPTIONS`` itself. Cluster masters do not get it:
+there the key is the administrators' (``spark-defaults.conf``) and the
+policy was not measured. ``extra_conf`` replaces the key; a caller's
+``spark.driver.extraJavaOptions`` is appended after it.
+
+Two other JIT flags were measured and rejected (perfbench
+``--seconds 2``, seed 21, one run per flag and workload, 4-core host).
+``-XX:TieredStopAtLevel=1`` (C1 only) cut ``spatial_query``'s
+``pass_cpu_s`` from 9.68 to 6.91 s, but its pass wall time rose from
+~3.3 to ~4.7 s; on ``ingest_tiles`` it raised ``pass_cpu_s`` from
+10.41 to 12.57 s, and ``zonal_stats`` from 0.99 to 2.18 s.
+``-XX:CICompilerCount=2`` stayed within noise on both.
 """
 
 from __future__ import annotations
@@ -58,6 +66,10 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
+# the local driver JVM's JIT policy: the tier-4 (C2) thresholds 3x the
+# JVM's 5000 / 600 / 15000 / 40000 (module docstring)
+DRIVER_JIT_OPTIONS = ("-XX:Tier4InvocationThreshold=15000 -XX:Tier4MinInvocationThreshold=1800"
+                      " -XX:Tier4CompileThreshold=45000 -XX:Tier4BackEdgeThreshold=120000")
 # the directory holding this package, so Python workers can import it
 # whatever the working directory
 _PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -119,6 +131,7 @@ def session_conf(master: str | None, shuffle_partitions: int | None = None,
         # has started, so the daemon module is a local-only setting
         conf["spark.python.daemon.module"] = f"{__package__}.worker_daemon"
         conf["spark.executorEnv.PYTHONPATH"] = _PACKAGE_ROOT
+        conf["spark.driver.defaultJavaOptions"] = DRIVER_JIT_OPTIONS
     if extra_conf:
         conf.update(extra_conf)
     return conf
