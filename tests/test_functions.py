@@ -238,10 +238,6 @@ class TestGeometry:
         got = geometry.points_in_polygon(x, y, rings)
         assert got.tolist() == [False, True]
 
-    def test_bbox_intersects(self):
-        assert geometry.bbox_intersects((0, 0, 2, 2), (1, 1, 3, 3))
-        assert not geometry.bbox_intersects((0, 0, 1, 1), (2, 2, 3, 3))
-
     def test_normalize_geometry(self):
         poly = {"type": "Polygon", "coordinates": [synth.GOLDEN_DELHI_RING]}
         assert geometry.normalize_geometry(poly)[0][0] == [77.0, 28.0]
@@ -318,20 +314,22 @@ class TestBufferRing:
         assert np.allclose(buf, orig, atol=1e-7)
 
 
-def test_points_in_union_overlap_counted_once():
+def test_points_in_union_overlap_counted_once(spark):
     """Two overlapping squares: the overlap is IN the union (OR), though
-    even-odd over the stacked rings would XOR it out."""
-    import numpy as np
-
-    from tiff_to_geojson_csv_json_format_converter_spark.functions import geometry
+    even-odd over the stacked rings would XOR it out. The union is the
+    cover pass behind clip_points_union; each point comes once."""
+    from tiff_to_geojson_csv_json_format_converter_spark.operators import joins
 
     sq1 = [[0.0, 0.0], [2.0, 0.0], [2.0, 2.0], [0.0, 2.0], [0.0, 0.0]]
     sq2 = [[1.0, 1.0], [3.0, 1.0], [3.0, 3.0], [1.0, 3.0], [1.0, 1.0]]
-    x = np.array([1.5, 0.5, 2.5, 3.5])  # overlap, only sq1, only sq2, outside
-    y = np.array([1.5, 0.5, 2.5, 3.5])
-    got = geometry.points_in_union(x, y, [[sq1], [sq2]])
-    assert got.tolist() == [True, True, True, False]
+    xy = [(1.5, 1.5), (0.5, 0.5), (2.5, 2.5), (3.5, 3.5)]  # overlap, sq1, sq2, out
+    pts = spark.createDataFrame([(i, x, y) for i, (x, y) in enumerate(xy)],
+                                "point_id long, longitude double, latitude double")
+    got = [r["point_id"] for r in joins.clip_points_union(pts, [[sq1], [sq2]]).collect()]
+    assert sorted(got) == [0, 1, 2]
     # the stacked even-odd polygon is provably wrong on the overlap
+    x = np.array([p[0] for p in xy])
+    y = np.array([p[1] for p in xy])
     xor = geometry.points_in_polygon(x, y, [sq1, sq2])
     assert not xor[0]
 

@@ -11,6 +11,7 @@ promises must be visible in explain() output, not just hoped for.
 
 import numpy as np
 import pytest
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from tiff_to_geojson_csv_json_format_converter_spark.functions import cells
@@ -30,18 +31,26 @@ def plan_str(df) -> str:
     return buf.getvalue()
 
 
-def arrow_outputs(df) -> list:
-    """The output column names of each MapInArrow node in ``df``'s
-    physical plan (a cached relation's own plan not included)."""
-    out, todo = [], [df._jdf.queryExecution().sparkPlan()]
+def plan_nodes(node) -> list:
+    """Every node of the physical plan under ``node`` (a DataFrame: its
+    sparkPlan), parents before children; a cached relation's own plan
+    not included."""
+    if isinstance(node, DataFrame):
+        node = node._jdf.queryExecution().sparkPlan()
+    out, todo = [], [node]
     while todo:
         node = todo.pop()
-        if node.nodeName() == "MapInArrow":
-            attrs = node.output()
-            out.append([attrs.apply(i).name() for i in range(attrs.size())])
+        out.append(node)
         kids = node.children()
         todo += [kids.apply(i) for i in range(kids.size())]
     return out
+
+
+def arrow_outputs(df) -> list:
+    """The output column names of each MapInArrow node in ``df``'s
+    physical plan."""
+    return [[n.output().apply(i).name() for i in range(n.output().size())]
+            for n in plan_nodes(df) if n.nodeName() == "MapInArrow"]
 
 
 def test_parquet_scan_pushdown(spark):
@@ -86,7 +95,8 @@ def test_extraction_has_no_shuffle(spark):
 def test_zonal_stats_path_follows_its_input(spark, frame):
     """An untouched extract frame plans one MapInArrow over the images
     that emits the per-(image, band) partials, and no Python eval node;
-    any other points frame keeps the row path over its points."""
+    any other points frame takes the row path: one more MapInArrow, the
+    clip over its points."""
     images = synth.images_df(spark, "xs").localCheckpoint()
     pts = extract.extract_points(images, valid_only=True,
                                  sample_cap=100 if frame == "sample_cap" else None)
@@ -105,9 +115,9 @@ def test_zonal_stats_path_follows_its_input(spark, frame):
         assert outs == [partials]
         assert "ArrowEvalPython" not in p and "BatchEvalPython" not in p
     elif frame == "cached":
-        assert outs == [] and "InMemoryTableScan" in p
+        assert outs == [points] and "InMemoryTableScan" in p
     else:
-        assert outs == [points]
+        assert outs == [points, points]
 
 
 def test_tiles_plan_one_exchange_no_python_eval(spark):
@@ -364,14 +374,10 @@ def test_cosine_pairs_auto_routes_high_threshold_through_lsh(spark):
     assert want and got == want
 
 
-def test_clip_points_multi_single_pass_equals_per_polygon_union(spark, monkeypatch):
-    """clip_points_multi: small fixed layers clip via the LITERAL codegen
-    ray-cast — zero python eval nodes in the plan (r7 optimization);
-    the Arrow-kernel fallback (forced by shrinking the edge budget)
-    must produce the identical rows, and both must equal the union of
-    independent clip_points runs."""
-    import numpy as np
-
+def test_clip_points_multi_single_pass_equals_per_polygon_union(spark):
+    """clip_points_multi clips every polygon in one pass over the points:
+    its (tag, point) rows are the union of independent clip_points runs,
+    with a point in two polygons tagged twice."""
     rng = np.random.RandomState(11)
     pts = spark.createDataFrame(
         [(i, float(77 + rng.rand() * 0.6), float(28 + rng.rand() * 0.6), float(i % 50))
@@ -383,8 +389,7 @@ def test_clip_points_multi_single_pass_equals_per_polygon_union(spark, monkeypat
     polys = {"sq": [sq1], "tri": [tri]}
 
     multi = joins.clip_points_multi(pts, polys)
-    p = plan_str(multi)
-    assert "ArrowEvalPython" not in p and "BatchEvalPython" not in p
+    assert multi.columns == [*pts.columns, "poly"]
     got = sorted(
         (r["poly"], r["point_id"]) for r in multi.select("poly", "point_id").collect()
     )
@@ -394,14 +399,7 @@ def test_clip_points_multi_single_pass_equals_per_polygon_union(spark, monkeypat
         for r in joins.clip_points(pts, rings).select("point_id").collect()
     )
     assert want and got == want
-    # force the Arrow-kernel fallback: identical rows, python node present
-    monkeypatch.setattr(joins, "_PIP_LITERAL_MAX_EDGES", 0)
-    fb = joins.clip_points_multi(pts, polys)
-    assert "ArrowEvalPython" in plan_str(fb)
-    got_fb = sorted(
-        (r["poly"], r["point_id"]) for r in fb.select("poly", "point_id").collect()
-    )
-    assert got_fb == want
+    assert len({i for _, i in got}) < len(got)  # the overlap is tagged twice
 
 
 def test_catalog_null_partition_keys_rejected(spark, tmp_path):
@@ -432,26 +430,50 @@ def test_multi_root_scan_is_broadcast_no_cartesian(spark):
     assert "BroadcastHashJoin" in p or "BroadcastNestedLoopJoin" in p
 
 
-def test_union_clip_bbox_pushed_below_python(spark, monkeypatch):
-    """D7 union clip: small fixed layers run the literal codegen OR-of-
-    even-odd predicate — no python eval node at all (r7 optimization);
-    the Arrow-kernel fallback keeps the bbox prefilter as a Catalyst
-    Filter BELOW the python eval and returns identical rows."""
+def test_union_clip_bbox_pushed_below_python(spark):
+    """D7 union clip: the overall-bbox Filter sits below the one Python
+    node, the cover pass, and a point inside two overlapping polygons
+    comes once (OR of the members; even-odd over the stacked rings
+    would XOR the overlap out)."""
+    sq1 = [[77.0, 28.0], [77.2, 28.0], [77.2, 28.2], [77.0, 28.2], [77.0, 28.0]]
+    sq2 = [[77.1, 28.1], [77.3, 28.1], [77.3, 28.3], [77.1, 28.3], [77.1, 28.1]]
+    # overlap, only sq1, only sq2, outside both but inside the overall bbox
+    xy = [(77.15, 28.15), (77.05, 28.05), (77.25, 28.25), (77.25, 28.05)]
+    pts = spark.createDataFrame([(i, x, y) for i, (x, y) in enumerate(xy)],
+                                "point_id long, longitude double, latitude double")
+    df = joins.clip_points_union(pts, [[sq1], [sq2]])
+    nodes = plan_nodes(df)
+    arrow = [n for n in nodes if n.nodeName() == "MapInArrow"]
+    assert len(arrow) == 1
+    assert not {"ArrowEvalPython", "BatchEvalPython"} & {n.nodeName() for n in nodes}
+    filters = [n for n in plan_nodes(arrow[0]) if n.nodeName() == "Filter"]
+    assert filters and "77.3" in filters[0].condition().toString()
+    assert sorted(r["point_id"] for r in df.collect()) == [0, 1, 2]
+    stacked = joins.clip_points(pts, [sq1, sq2])
+    assert sorted(r["point_id"] for r in stacked.collect()) == [1, 2]
+
+
+def test_clip_operators_are_one_arrow_pass_above_the_bbox_filter(spark):
+    """Each clip operator plans exactly one MapInArrow, the cover pass,
+    with the overall-bbox Filter below it so the scan can prune; no
+    Python eval node and no nested-loop join."""
     pts = spark.createDataFrame(
         [(1, 77.25, 28.25, 5.0)], "point_id long, longitude double, latitude double, elevation double"
     )
-    sq = [[77.0, 28.0], [77.5, 28.5], [77.5, 28.5], [77.0, 28.5], [77.0, 28.0]]
-    df = joins.clip_points_union(pts, [[sq], [sq]])
-    p = plan_str(df)
-    assert "ArrowEvalPython" not in p and "BatchEvalPython" not in p
-    rows = sorted(r["point_id"] for r in df.collect())
-    monkeypatch.setattr(joins, "_PIP_LITERAL_MAX_EDGES", 0)
-    fb = joins.clip_points_union(pts, [[sq], [sq]])
-    pfb = plan_str(fb)
-    assert "ArrowEvalPython" in pfb
-    python_pos = pfb.index("ArrowEvalPython")
-    assert ">= 77.0" in pfb[python_pos:] or "77.0" in pfb[python_pos:]
-    assert sorted(r["point_id"] for r in fb.collect()) == rows
+    sq = [[77.1, 28.1], [77.3, 28.1], [77.3, 28.3], [77.1, 28.3], [77.1, 28.1]]
+    tri = [[77.2, 28.2], [77.55, 28.25], [77.3, 28.55], [77.2, 28.2]]
+    # the point is inside both polygons: once per clip, once per tag
+    for df, n_rows in ((joins.clip_points(pts, [sq]), 1),
+                       (joins.clip_points_union(pts, [[sq], [tri]]), 1),
+                       (joins.clip_points_multi(pts, {"sq": [sq], "tri": [tri]}), 2)):
+        nodes = plan_nodes(df)
+        names = [n.nodeName() for n in nodes]
+        assert names.count("MapInArrow") == 1, names
+        assert not {"ArrowEvalPython", "BatchEvalPython", "BroadcastNestedLoopJoin"} & set(names)
+        arrow = nodes[names.index("MapInArrow")]
+        filters = [n.condition().toString() for n in plan_nodes(arrow) if n.nodeName() == "Filter"]
+        assert len(filters) == 1 and "77.1" in filters[0] and "28.1" in filters[0], filters
+        assert df.count() == n_rows
 
 
 def test_jaccard_join_is_prefix_equi_join(spark):
@@ -710,20 +732,6 @@ def test_clip_fallback_ladder_classification_edge_cases(spark):
     assert got1 and got1 == got2
 
 
-def test_clip_refuses_caller_barrier_column(spark):
-    """A caller column named like the clip's internal barrier column is
-    refused, never reused for the parity seed or dropped from the output."""
-    pts = spark.createDataFrame(
-        [(1, 77.2, 28.2, "keep")],
-        f"point_id long, longitude double, latitude double, {joins._PIP_BARRIER_COL} string",
-    )
-    sq = [[77.1, 28.1], [77.3, 28.1], [77.3, 28.3], [77.1, 28.3], [77.1, 28.1]]
-    with pytest.raises(ValueError, match=joins._PIP_BARRIER_COL):
-        joins.clip_points(pts, [sq])
-    with pytest.raises(ValueError, match=joins._PIP_BARRIER_COL):
-        joins.clip_points_union(pts, [[sq]])
-
-
 def test_tile_assign_null_image_id_keeps_distinct_semantics(spark):
     """tile_assign's rollup on a frame with a NULL image_id: n_images is
     COUNT(DISTINCT image_id) (NULL not counted) while n_points and the
@@ -752,3 +760,41 @@ def test_tile_assign_null_image_id_keeps_distinct_semantics(spark):
     assert sorted(want.values()) == [(1, 0), (4, 2)]
     finest = got.filter("kind = 'pyramid' and level = 12").agg(F.sum("n_points")).first()[0]
     assert finest == 5
+
+
+@pytest.mark.parametrize("edges", [4, 80])
+def test_clip_points_multi_refuses_a_tag_column_clash(spark, edges):
+    """A points column named like ``clip_points_multi``'s tag column is
+    refused with a ValueError that names it, never duplicated (an
+    ambiguous reference later) nor overwritten by the tag, whatever the
+    polygon's size. ``clip_points`` and ``clip_points_union`` emit no
+    column, so the caller's column passes through them."""
+    ang = np.linspace(0.0, 2 * np.pi, edges, endpoint=False)
+    ring = [[77.2 + 0.1 * np.cos(t), 28.2 + 0.1 * np.sin(t)] for t in ang]
+    pts = spark.createDataFrame([(1, 77.2, 28.2, "mine")],
+                                "point_id long, longitude double, latitude double, poly string")
+    with pytest.raises(ValueError, match="'poly'"):
+        joins.clip_points_multi(pts, {"c": [ring]})
+    for df in (joins.clip_points(pts, [ring]), joins.clip_points_union(pts, [[ring]])):
+        assert df.columns == pts.columns
+        assert [tuple(r) for r in df.collect()] == [(1, 77.2, 28.2, "mine")]
+
+
+def test_point_operators_leave_no_driver_temp_files(spark):
+    """``clip_points``, ``cell_cover_join`` and ``knn_join`` carry their
+    index in the pass's closure: twenty calls of each leave the driver's
+    temp dir as it was. An explicit ``broadcast`` writes a file there
+    per call that outlives the frame."""
+    import os
+
+    pts = spark.createDataFrame([(1, 77.25, 28.25)], "point_id long, longitude double, latitude double")
+    polys = synth.polygons_df(spark)
+    qs = spark.createDataFrame([("q1", 77.25, 28.25)], "query_id string, lon double, lat double")
+    sq = [[77.1, 28.1], [77.3, 28.1], [77.3, 28.3], [77.1, 28.3], [77.1, 28.1]]
+    temp_dir = spark.sparkContext._temp_dir
+    before = sorted(os.listdir(temp_dir))
+    for _ in range(20):
+        frames = (joins.clip_points(pts, [sq]), joins.cell_cover_join(pts, polys),
+                  joins.knn_join(pts, qs))
+    assert all(df.collect() for df in frames)
+    assert sorted(os.listdir(temp_dir)) == before

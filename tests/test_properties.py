@@ -422,9 +422,23 @@ def _cover_layer(rng, n_polys: int, level: int) -> list[tuple[str, list]]:
     return polys
 
 
-def _shell_box(rings: list) -> tuple:
-    return (min(p[0] for p in rings[0]), min(p[1] for p in rings[0]),
-            max(p[0] for p in rings[0]), max(p[1] for p in rings[0]))
+def _clip_extras(rng) -> list[tuple[str, list]]:
+    """A multi-shell ring list (a holed box and a box apart from it) and
+    a star ring of 72 edges, over the same region as ``_cover_layer``."""
+    cx, cy = float(rng.uniform(77.0, 79.0)), float(rng.uniform(28.0, 30.0))
+    box = lambda x0, y0, x1, y1: [[x0, y0], [x1, y0], [x1, y1], [x0, y1], [x0, y0]]
+    shells = [box(cx - 0.5, cy - 0.5, cx, cy), box(cx - 0.4, cy - 0.4, cx - 0.1, cy - 0.1),
+              box(cx + 0.3, cy + 0.3, cx + 0.9, cy + 0.6)]
+    t = np.linspace(0.0, 2 * np.pi, 72, endpoint=False) + rng.uniform(0, 1)
+    r = np.where(np.arange(72) % 2 == 0, 1.2, 0.5)
+    star = np.column_stack([cx + r * np.cos(t), cy + r * np.sin(t)]).tolist()
+    return [("multi", shells), ("star", [star])]
+
+
+def _rings_box(rings: list) -> tuple:
+    """The bbox over every ring, as ``joins._rings_bbox``."""
+    return (min(p[0] for r in rings for p in r), min(p[1] for r in rings for p in r),
+            max(p[0] for r in rings for p in r), max(p[1] for r in rings for p in r))
 
 
 @settings(max_examples=40, deadline=None)
@@ -444,7 +458,7 @@ def test_cover_index_equals_per_polygon_loop(seed, level, n_polys):
 
     rng = np.random.default_rng(seed)
     polys = _cover_layer(rng, n_polys, level)
-    taken = [(pid, json.dumps({"type": "Polygon", "coordinates": rings}), *_shell_box(rings))
+    taken = [(pid, json.dumps({"type": "Polygon", "coordinates": rings}), *_rings_box(rings))
              for pid, rings in polys]
     big = [[[-190.0, 80.0], [-170.0, 80.0], [-170.0, 100.0], [-190.0, 100.0]],
            [[-175.0, 85.0], [-174.0, 85.0], [-174.0, 86.0], [-175.0, 86.0]]]
@@ -460,7 +474,8 @@ def test_cover_index_equals_per_polygon_loop(seed, level, n_polys):
         interior.append(geometry.classify_cells_interior(np.column_stack(cells.cell_bounds(cc)), rr))
     cover = np.concatenate(cover)
     order = np.argsort(cover, kind="stable")
-    got = joins._cover_index(taken, level)
+    rings = [[geometry.close_ring(r) for r in json.loads(g)["coordinates"]] for _, g, *_ in taken]
+    got = joins._cover_index(rings, np.array([t[2:] for t in taken], dtype=np.float64), level)
     np.testing.assert_array_equal(got[0], cover[order])
     np.testing.assert_array_equal(got[1], np.concatenate(owner)[order])
     np.testing.assert_array_equal(got[2], np.concatenate(interior)[order])
@@ -492,21 +507,34 @@ def test_cell_cover_join_agrees_with_brute_force(spark, seed, level, n_polys, n_
     """The join is brute-force ``geometry.points_in_polygon`` over every
     (point, polygon) pair; the candidates are a superset of it and follow
     the cover rule: the point's cell is in the cover of the polygon's
-    bbox, and the cell is interior or the point is inside the bbox."""
+    bbox, and the cell is interior or the point is inside the bbox.
+
+    The clip operators, the same pass at their own level, agree with the
+    same brute force: ``clip_points_multi`` gives every pair,
+    ``clip_points_union`` every point inside any polygon once, and
+    ``clip_points`` a multi-shell polygon's points. The layer adds a
+    multi-shell ring list and a 72-edge ring to the overlapping, holed
+    shapes, and the points add null and NaN coordinates, which never
+    match."""
     import json
 
     from tiff_to_geojson_csv_json_format_converter_spark.operators import joins
 
     rng = np.random.default_rng(seed)
     polys = _cover_layer(rng, n_polys, level)
+    polys += _clip_extras(rng) if polys else []
     xy = _cover_points(rng, n_points, level, polys)
-    boxes = [_shell_box(rings) for _, rings in polys]
+    nan = float("nan")
+    odd = [(None, None), (None, 28.5), (77.5, None), (nan, nan), (nan, 28.5), (77.5, nan)]
+    rows = [(float(x), float(y)) for x, y in xy] + (odd if n_points else [])
+    xy = np.array([[nan if v is None else v for v in r] for r in rows]).reshape(-1, 2)
+    boxes = [_rings_box(rings) for _, rings in polys]
     layer = spark.createDataFrame(
         [(pid, json.dumps({"type": "Polygon", "coordinates": rings}), *box)
          for (pid, rings), box in zip(polys, boxes)],
         "polygon_id string, geojson string, min_lon double, min_lat double, "
         "max_lon double, max_lat double")
-    pts = spark.createDataFrame([(i, float(x), float(y)) for i, (x, y) in enumerate(xy)],
+    pts = spark.createDataFrame([(i, x, y) for i, (x, y) in enumerate(rows)],
                                 "point_id long, longitude double, latitude double")
 
     x, y = xy[:, 0], xy[:, 1]
@@ -528,6 +556,15 @@ def test_cell_cover_join_agrees_with_brute_force(spark, seed, level, n_polys, n_
     assert len(cand) == len(rule)
     assert {(r["point_id"], r["polygon_id"], r["cell"], r["interior"]) for r in cand} == rule
     assert want <= {(i, pid) for i, pid, _, _ in rule}
+
+    if not polys:
+        return
+    multi = joins.clip_points_multi(pts, dict(polys), tag_col="pid").collect()
+    assert sorted((r["point_id"], r["pid"]) for r in multi) == sorted(want)
+    union = [r["point_id"] for r in joins.clip_points_union(pts, [rr for _, rr in polys]).collect()]
+    assert sorted(union) == sorted({i for i, _ in want})
+    one = [r["point_id"] for r in joins.clip_points(pts, dict(polys)["multi"]).collect()]
+    assert sorted(one) == sorted(i for i, pid in want if pid == "multi")
 
 
 def test_similarity_operators_on_an_empty_corpus(spark):

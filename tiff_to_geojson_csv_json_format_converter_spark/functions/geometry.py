@@ -1,11 +1,12 @@
-"""Vectorized planar geometry: bbox algebra, point-in-polygon, buffers.
+"""Vectorized planar geometry: point-in-polygon, cell classification,
+buffers.
 
 Replaces the reference's shapely usage (``shape``, ``.bounds``,
-``.intersects``, ``.intersection``, ``.buffer`` — test2.py:107,275-280)
-with numpy. The PIP test is even-odd ray casting with the same
-center-containment semantics as ``rasterio.mask.mask(..., all_touched
-=False)`` (test2.py:1272): a pixel belongs to the zone iff its CENTER
-is inside the polygon.
+``.intersection``, ``.buffer`` — test2.py:107,275-280) with numpy. The
+PIP test is even-odd ray casting with the same center-containment
+semantics as ``rasterio.mask.mask(..., all_touched=False)``
+(test2.py:1272): a pixel belongs to the zone iff its CENTER is inside
+the polygon.
 """
 
 from __future__ import annotations
@@ -24,13 +25,6 @@ def close_ring(ring: Ring) -> np.ndarray:
     if not np.array_equal(r[0], r[-1]):
         r = np.vstack([r, r[:1]])
     return r
-
-
-def bbox_intersects(a: tuple[float, float, float, float], b: tuple[float, float, float, float]) -> bool:
-    """Rectangle-overlap test — the catalog/file prefilter the reference
-    runs before any expensive mask (test2.py:94-110; the emitted JS
-    ``findFilesInBounds`` at doesSamples.py:488-494)."""
-    return not (a[2] < b[0] or b[2] < a[0] or a[3] < b[1] or b[3] < a[1])
 
 
 def points_in_ring(x: np.ndarray, y: np.ndarray, ring: Ring) -> np.ndarray:
@@ -113,26 +107,6 @@ def buffer_ring(ring: Ring, dist: float, miter_limit: float = 8.0) -> np.ndarray
         nn = np.linalg.norm(nav)
         out[i] = r[i] + (nav / nn if nn > 1e-12 else normals[i]) * dist
     return close_ring(out)
-
-
-def points_in_union(x: np.ndarray, y: np.ndarray,
-                    polygons: Sequence[Sequence[Ring]]) -> np.ndarray:
-    """TRUE geometric-union membership: a point is in the union iff it is
-    inside ANY polygon (each polygon = shell + holes, even-odd within).
-
-    This is the engine form of the reference's turf ``union`` of drawn
-    regions before zonal stats (slope.js:406,427): union SEMANTICS for
-    clipping and aggregation, computed WITHOUT constructing the merged
-    geometry. Overlap-safe where stacking all rings into one even-odd
-    polygon is not (a point covered by two overlapping shells XORs to
-    "outside" there; it ORs to "inside" here). The merged ring set
-    itself is a client-display concern in the reference and stays out
-    of the engine.
-    """
-    inside = points_in_polygon(x, y, polygons[0])
-    for rings in polygons[1:]:
-        inside = inside | points_in_polygon(x, y, rings)
-    return inside
 
 
 def classify_cells_interior(cell_boxes: np.ndarray,

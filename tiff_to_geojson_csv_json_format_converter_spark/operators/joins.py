@@ -6,17 +6,20 @@ Spark-first strategy per SURVEY.md §2.D:
   ``broadcast()`` + plain min/max range predicates. At 100 TB the
   image-side bbox columns double as Iceberg/parquet min-max skipping
   keys, so the same predicates prune files before any scan.
-- D3 polygon clip: two-stage — (1) cheap bbox predicate (pushed to the
-  scan), (2) exact ray-casting PIP in an Arrow-batched pandas UDF.
-  When polygons are many, :func:`cell_cover_join` fuses both into one
-  ``mapInArrow`` over the points against a broadcast cell-cover index:
-  no join, no shuffle, and interior cells settle without a ray-cast
-  (as in Raster Intervals). Against the equi-join plan it replaced,
-  ``spatial_query`` pass CPU fell ~20 % (18 of 20 interleaved pairs).
+- D3 polygon clip: every point-in-polygon operator is one ``mapInArrow``
+  over the points against a driver-side polygon layer
+  (:func:`_cover_pass`): a point meets only the polygons whose bbox
+  cover holds its cell, found by binary search; interior cells settle
+  without a ray-cast (as in Raster Intervals) and the rest is ray-cast
+  per polygon. :func:`clip_points`, :func:`clip_points_union` and
+  :func:`clip_points_multi` run it over their 1 to N polygons behind an
+  overall-bbox Catalyst filter (pushed to the scan);
+  :func:`cell_cover_join` runs it over a collected layer frame. No
+  join, no shuffle, no pandas UDF and no code generated per polygon.
 - D6 kNN: key points by row-major tile id and probe each query's
   Chebyshev ring square. :func:`knn_join` has the shape of
   :func:`cell_cover_join`: the driver sorts every query's ring cells
-  into one broadcast index, one ``mapInArrow`` over the points finds
+  into one index, one ``mapInArrow`` over the points finds
   their queries by binary search and keeps each query's best rows per
   batch, then ``row_number`` over (query, dist2) takes top-k. No join,
   so never a cross join. The ring guarantee: a row is exact when the
@@ -27,10 +30,9 @@ Spark-first strategy per SURVEY.md §2.D:
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import BooleanType
+from pyspark.sql.types import BooleanType, LongType, StringType, StructField, StructType
 
 from ..functions import cells, geometry
 
@@ -46,230 +48,63 @@ def _rings_bbox(rings: list) -> tuple:
             float(allv[:, 0].max()), float(allv[:, 1].max()))
 
 
-def pip_contains_udf(rings: list):
-    """Vectorized point-in-polygon predicate UDF for a FIXED polygon
-    (broadcast by closure — the reference's single-request clip shape,
-    test2.py:258-272)."""
-    rings_arr = [np.asarray(r, dtype=np.float64) for r in rings]
-
-    @F.pandas_udf(BooleanType())
-    def contains(lon: pd.Series, lat: pd.Series) -> pd.Series:
-        inside = geometry.points_in_polygon(lon.to_numpy(), lat.to_numpy(), rings_arr)
-        return pd.Series(inside)
-
-    return contains
+# the clip operators' cover level: cell_cover_join's default
+_CLIP_LEVEL = 8
 
 
-# rings with at most this many non-horizontal edges total clip via the
-# literal codegen predicate (no Python crossing); bigger geometries fall
-# back to the Arrow kernel (codegen size and JVM constant-pool bounds)
-_PIP_LITERAL_MAX_EDGES = 64
+def _clip(points: DataFrame, polygons: list, lon_col: str, lat_col: str,
+          tag_col: str | None = None, tags: list | None = None) -> DataFrame:
+    """The clip operators' plan: the overall bbox of ``polygons`` (each a
+    ring list) as a Catalyst filter, which the scan can prune on, then
+    :func:`_cover_pass` over them at :data:`_CLIP_LEVEL`. With a
+    ``tag_col`` it emits one row per (point, polygon) tagged from
+    ``tags``; without one, each matched point once."""
+    import pyarrow as pa
 
-
-def _count_pip_edges(rings: list) -> int:
-    total = 0
-    for ring in rings:
-        r = geometry.close_ring(ring)
-        for (xi, yi), (xj, yj) in zip(r[:-1], r[1:]):
-            if yi != yj:
-                total += 1
-    return total
-
-
-def _pip_literal_pred(rings: list, lon_col: str, lat_col: str,
-                      seed_col: str | None = None):
-    """Even-odd ray-cast against a FIXED small ring list as a LITERAL
-    whole-stage-codegen predicate — no Python workers, no Arrow hop,
-    no per-row ring-array walking (a boxed lambda evaluation over a
-    rings column was measured GC-bound, see :func:`cell_cover_join`;
-    here every coordinate is a compiled double literal).
-
-    Bit-compatible with :func:`..functions.geometry.points_in_polygon`:
-    per edge the crossing abscissa evaluates the identical float64
-    expression ``(xj-xi)*(y-yi)/(yj-yi)+xi`` (the edge deltas are
-    python-float differences — the same IEEE subtraction numpy does),
-    horizontal edges are skipped, and summing crossings over all rings
-    then testing oddness equals the kernel's XOR chain. This is also
-    literally the engine twin of the oracle's ``_raycast_sql``.
-
-    Callers evaluate it above a :func:`_pip_barrier` projection and
-    pass that projection's column as ``seed_col``: the crossing sum is
-    seeded with ``seed_col * 0`` (provably zero, never folded or
-    split), so the predicate REQUIRES the barrier column — column
-    pruning cannot drop it, the nondeterministic Project survives, and
-    the filter stays above it reading materialized lon/lat columns
-    instead of substituted derived trees."""
-    x, y = F.col(lon_col), F.col(lat_col)
-    # pmod(barrier, 1) == 0 always but is not algebraically simplified
-    # (Spark 4 folds `x * 0`, which silently removed the barrier
-    # reference and resurrected the pushdown — r7 plans)
-    total = F.pmod(F.col(seed_col), F.lit(1)) if seed_col else F.lit(0).cast("long")
-    for ring in rings:
-        r = geometry.close_ring(ring)
-        for (xi, yi), (xj, yj) in zip(r[:-1], r[1:]):
-            xi, yi, xj, yj = float(xi), float(yi), float(xj), float(yj)
-            if yi == yj:
-                continue
-            cond = (
-                ((F.lit(yi) > y) != (F.lit(yj) > y))
-                & (x < F.lit(xj - xi) * (y - F.lit(yi)) / F.lit(yj - yi) + F.lit(xi))
-            )
-            total = total + F.when(cond, F.lit(1)).otherwise(F.lit(0))
-    return (total % 2) == 1
-
-
-_PIP_BARRIER_COL = "__pip_barrier"
-
-
-def _pip_barrier(df: DataFrame) -> DataFrame:
-    """Append a nondeterministic throwaway column, making this Project a
-    PREDICATE-PUSHDOWN BARRIER: filters above it cannot be pushed below
-    (the optimizer refuses to push through a projection with
-    nondeterministic fields). Needed because the literal ray-cast
-    references lon/lat once per edge — pushed through a derived-column
-    projection (the _pts expressions), the optimizer substitutes the
-    whole lon/lat trees into EVERY edge term and codegen'd Filter
-    conditions get no common-subexpression elimination: measured 3.1s
-    vs 0.19s at sf0.1. Guarding the PREDICATE does not work — Spark 4
-    happily pushes nondeterministic predicates through a deterministic
-    Project (verified in r7 plans); the nondeterminism must sit in the
-    projection itself. Callers drop the column right after the clip, so a
-    caller column of the same name is refused, never reused or dropped."""
-    if _PIP_BARRIER_COL in df.columns:
-        raise ValueError(f"input already has a column named {_PIP_BARRIER_COL!r}, "
-                         "which the polygon clip uses internally")
-    return df.withColumn(_PIP_BARRIER_COL, F.monotonically_increasing_id())
+    rings = [[geometry.close_ring(r) for r in p] for p in polygons]
+    box = np.array([_rings_bbox(p) for p in rings], dtype=np.float64).reshape(-1, 4)
+    boxed = points.filter(
+        (F.col(lon_col) >= float(box[:, 0].min())) & (F.col(lon_col) <= float(box[:, 2].max()))
+        & (F.col(lat_col) >= float(box[:, 1].min())) & (F.col(lat_col) <= float(box[:, 3].max()))
+    )
+    ids = None if tag_col is None else pa.array(tags, pa.string())
+    id_field = None if tag_col is None else StructField(tag_col, StringType())
+    return _cover_pass(boxed, (ids, rings, box), _CLIP_LEVEL, lon_col, lat_col, id_field)
 
 
 def clip_points(points: DataFrame, rings: list, lon_col: str = "longitude", lat_col: str = "latitude") -> DataFrame:
-    """Exact polygon clip of a point table: bbox predicate (Catalyst,
-    pushed to the scan) then exact PIP refinement — the engine form of
+    """Exact polygon clip of a point table: the engine form of
     ``rasterio.mask.mask(..., crop=True)`` center containment
-    (test2.py:1272). Small fixed rings refine via the literal codegen
-    ray-cast (zero Python crossings); large ones via the Arrow kernel.
-    Both evaluate the identical IEEE expression tree (bit-equal,
-    test-asserted)."""
-    min_lon, min_lat, max_lon, max_lat = _rings_bbox(rings)
-    boxed = points.filter(
-        (F.col(lon_col) >= min_lon) & (F.col(lon_col) <= max_lon)
-        & (F.col(lat_col) >= min_lat) & (F.col(lat_col) <= max_lat)
-    )
-    if _count_pip_edges(rings) <= _PIP_LITERAL_MAX_EDGES:
-        return (
-            _pip_barrier(boxed)
-            .filter(_pip_literal_pred(rings, lon_col, lat_col,
-                                      seed_col=_PIP_BARRIER_COL))
-            .drop(_PIP_BARRIER_COL)
-        )
-    return boxed.filter(pip_contains_udf(rings)(F.col(lon_col), F.col(lat_col)))
+    (test2.py:1272). The bbox predicate (Catalyst, pushed to the scan),
+    then the cover pass over a one-polygon layer; the rows are the
+    points inside ``rings`` (shell + holes, even-odd), each once, with
+    no column added. Every points column crosses into Python and
+    Catalyst cannot prune through the pass: select what the caller
+    reads first."""
+    return _clip(points, [rings], lon_col, lat_col)
 
 
 def clip_points_union(points: DataFrame, polygons: list,
                       lon_col: str = "longitude", lat_col: str = "latitude") -> DataFrame:
     """D7: clip against the UNION of several polygons (each a ring list)
-    — the reference's turf-union-then-clip flow (slope.js:406-427) with
-    union semantics fused into the predicate: overall-bbox prefilter
-    (Catalyst, scan-pushed) then OR-of-even-odd PIP refinement in one
-    Arrow pass. No merged geometry is materialized; overlapping regions
-    are counted once."""
-    min_lon, min_lat, max_lon, max_lat = _rings_bbox(
-        [r for p in polygons for r in p]
-    )
-    boxed = points.filter(
-        (F.col(lon_col) >= min_lon) & (F.col(lon_col) <= max_lon)
-        & (F.col(lat_col) >= min_lat) & (F.col(lat_col) <= max_lat)
-    )
-    if sum(_count_pip_edges(p) for p in polygons) <= _PIP_LITERAL_MAX_EDGES:
-        pred = _pip_literal_pred(polygons[0], lon_col, lat_col,
-                                 seed_col=_PIP_BARRIER_COL)
-        for p in polygons[1:]:  # union == OR of per-polygon even-odd
-            pred = pred | _pip_literal_pred(p, lon_col, lat_col,
-                                            seed_col=_PIP_BARRIER_COL)
-        return _pip_barrier(boxed).filter(pred).drop(_PIP_BARRIER_COL)
-    polys_arr = [[np.asarray(r, dtype=np.float64) for r in p] for p in polygons]
-
-    @F.pandas_udf(BooleanType())
-    def contains(lon: pd.Series, lat: pd.Series) -> pd.Series:
-        inside = geometry.points_in_union(lon.to_numpy(), lat.to_numpy(), polys_arr)
-        return pd.Series(inside)
-
-    return boxed.filter(contains(F.col(lon_col), F.col(lat_col)))
+    — the reference's turf-union-then-clip flow (slope.js:406-427). No
+    merged geometry is materialized: the cover pass over the N polygons
+    emits each point once, on its first match, so overlapping regions
+    count once (stacking every ring into one even-odd polygon would XOR
+    an overlap out)."""
+    return _clip(points, polygons, lon_col, lat_col)
 
 
 def clip_points_multi(points: DataFrame, polygons: dict[str, list],
                       lon_col: str = "longitude", lat_col: str = "latitude",
                       tag_col: str = "poly") -> DataFrame:
     """Clip ONE point scan against SEVERAL tagged polygons in a single
-    Arrow pass: returns the points columns + ``tag_col``, one row per
-    (point, containing polygon) — the same output as unioning
-    ``clip_points`` per polygon, at 1/len(polygons) the scan cost.
-
-    Shape: overall-bbox Catalyst prefilter (pushed to the scan), then
-    one pandas UDF evaluates every polygon's own bbox short-circuit +
-    exact even-odd PIP and emits the matching tags as an array;
-    ``explode`` drops non-members. Right for a HANDFUL of query
-    polygons (the reference's request shapes — each polygon's rings
-    ride the UDF closure); for 10^5-polygon layers use
-    ``cell_cover_join``, which meets on a cell key instead of
-    broadcasting geometry.
-
-    ``polygons`` maps tag -> ring list (shell + holes, every ring a
-    point list)."""
-    from pyspark.sql.types import ArrayType, StringType
-
-    items = [
-        (tag, [np.asarray(r, dtype=np.float64) for r in rings], _rings_bbox(rings))
-        for tag, rings in polygons.items()
-    ]
-    mnx = min(b[0] for _, _, b in items)
-    mny = min(b[1] for _, _, b in items)
-    mxx = max(b[2] for _, _, b in items)
-    mxy = max(b[3] for _, _, b in items)
-
-    boxed = points.filter(
-        (F.col(lon_col) >= mnx) & (F.col(lon_col) <= mxx)
-        & (F.col(lat_col) >= mny) & (F.col(lat_col) <= mxy)
-    )
-    if sum(_count_pip_edges(r) for _, r, _ in items) <= _PIP_LITERAL_MAX_EDGES:
-        # literal codegen membership per polygon, one row per (point,
-        # tag) via a broadcast cross join with the tiny tag table and a
-        # single CASE-dispatched parity filter. Deliberately NO
-        # explode(array(when(...)))) — expressions inside a Generate
-        # re-evaluate per output row, interpreted (the measured r6
-        # trap), and array_compact rewrites to a CodegenFallback
-        # ArrayFilter that drops the whole projection to interpreted
-        # eval; this form is end-to-end whole-stage codegen. The filter
-        # references both join sides, so it cannot be pushed below the
-        # join into the (possibly derived) point projection.
-        tags_df = F.broadcast(points.sparkSession.createDataFrame(
-            [(tag,) for tag, _, _ in items], f"{tag_col} string"))
-        pred = F.lit(False)
-        for tag, rings, (bx0, by0, bx1, by1) in items:
-            own_box = (
-                (F.col(lon_col) >= bx0) & (F.col(lon_col) <= bx1)
-                & (F.col(lat_col) >= by0) & (F.col(lat_col) <= by1)
-            )
-            pred = F.when(
-                F.col(tag_col) == tag,
-                own_box & _pip_literal_pred(rings, lon_col, lat_col),
-            ).otherwise(pred)
-        return boxed.crossJoin(tags_df).filter(pred)
-
-    @F.pandas_udf(ArrayType(StringType()))
-    def tags(lon: pd.Series, lat: pd.Series) -> pd.Series:
-        x, y = lon.to_numpy(), lat.to_numpy()
-        out: list[list] = [[] for _ in range(len(x))]
-        for tag, rings, (bx0, by0, bx1, by1) in items:
-            m = (x >= bx0) & (x <= bx1) & (y >= by0) & (y <= by1)
-            if not m.any():
-                continue
-            inside = np.zeros(len(x), dtype=bool)
-            inside[m] = geometry.points_in_polygon(x[m], y[m], rings)
-            for i in np.flatnonzero(inside):
-                out[i].append(tag)
-        return pd.Series(out)
-
-    return boxed.withColumn(tag_col, F.explode(tags(F.col(lon_col), F.col(lat_col))))
+    pass: the points columns + ``tag_col``, one row per (point,
+    containing polygon) — the rows of ``clip_points`` per polygon,
+    tagged and unioned, at one scan. ``polygons`` maps tag -> ring list
+    (shell + holes, every ring a point list). A points column named
+    ``tag_col`` is refused."""
+    return _clip(points, list(polygons.values()), lon_col, lat_col, tag_col, list(polygons))
 
 
 _MAX_LAYER_ROWS = 250_000
@@ -280,24 +115,25 @@ def cell_cover_join(points: DataFrame, polygons: DataFrame,
                     lon_col: str = "longitude", lat_col: str = "latitude",
                     max_layer_rows: int = _MAX_LAYER_ROWS) -> DataFrame:
     """Point-in-polygon join for LARGE polygon sets: one Arrow pass over
-    the points against a broadcast cell-cover index.
+    the points against a cell-cover index of the layer.
 
-    ``bbox_join``/``clip_points`` broadcast the polygons — right for the
-    reference's one-request shapes, wrong for 10^5+ polygon layers. Here
-    a point only meets the polygons whose cover holds its cell, so the
+    A point only meets the polygons whose cover holds its cell, so the
     pair count is output-shaped, not |points| x |polygons|:
 
     1. the driver collects the layer (one job, capped at
        ``max_layer_rows``, raises above it), covers each polygon's bbox
        with ``level`` cells (:func:`cells.cover_bbox`) and flags the
        cells wholly inside it (:func:`geometry.classify_cells_interior`);
-       one broadcast holds the sorted cover cells, each cell's polygon
-       and flag, and the polygons' ids, rings and bboxes;
+       the pass's closure holds the sorted cover cells, each cell's
+       polygon and flag, and the polygons' ids, rings and bboxes;
     2. one ``mapInArrow`` over the points (:func:`_cover_batches`) gives
        each point its cell id (:func:`cells.cell_id`), expands it to its
        cover entries by binary search, drops the pairs outside the
        polygon's bbox, ray-casts the boundary-cell pairs per polygon
        (interior-cell pairs skip it), and emits the matches by ``take``.
+
+    The clip operators (:func:`clip_points` and its kin) are the same
+    pass over polygons the caller already holds on the driver.
 
     Returns the points columns + ``polygon_id`` (a point duplicates per
     containing polygon, like a SQL join); a points column named
@@ -335,7 +171,8 @@ def cell_cover_join(points: DataFrame, polygons: DataFrame,
     - a driver-built ``LocalRelation`` cover for the equi-join: ~0.2 s,
       inside noise.
     """
-    return _cover_pass(points, polygons, level, lon_col, lat_col, max_layer_rows, exact=True)
+    layer, id_field = _collect_layer(polygons, max_layer_rows)
+    return _cover_pass(points, layer, level, lon_col, lat_col, id_field)
 
 
 def cell_cover_candidates(points: DataFrame, polygons: DataFrame,
@@ -348,27 +185,22 @@ def cell_cover_candidates(points: DataFrame, polygons: DataFrame,
     Returns (candidates, lon_col, lat_col); candidate rows are ``cell``,
     the points columns, ``polygon_id`` and ``interior``, and a points
     column of any of those names is refused."""
-    return (_cover_pass(points, polygons, level, lon_col, lat_col, _MAX_LAYER_ROWS, exact=False),
-            lon_col, lat_col)
+    layer, id_field = _collect_layer(polygons, _MAX_LAYER_ROWS)
+    return _cover_pass(points, layer, level, lon_col, lat_col, id_field, exact=False), lon_col, lat_col
 
 
-def _cover_pass(points: DataFrame, polygons: DataFrame, level: int, lon_col: str,
-                lat_col: str, max_layer_rows: int, exact: bool) -> DataFrame:
-    """The one ``mapInArrow`` of :func:`cell_cover_join` (``exact``) and
-    :func:`cell_cover_candidates`; see the former."""
+def _collect_layer(polygons: DataFrame, max_layer_rows: int) -> tuple:
+    """((ids, rings, bboxes), ``polygon_id`` field) of a layer frame
+    (polygon_id, geojson, min_lon, min_lat, max_lon, max_lat), collected
+    in one job. The rings are parsed here, so corrupt GeoJSON raises the
+    decoder's own error, a degenerate ring ``close_ring``'s, and a
+    polygon without rings a ``ValueError``."""
+    import json
+
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_type
-    from pyspark.sql.types import LongType, StructField, StructType
 
-    emitted = ("polygon_id",) if exact else ("cell", "polygon_id", "interior")
-    clash = [c for c in emitted if c in points.columns]
-    if clash:
-        raise ValueError(f"points already have a column named {clash[0]!r}, "
-                         "which the cell-cover join emits")
     id_field = StructField("polygon_id", polygons.schema["polygon_id"].dataType)
-    fields = [*points.schema.fields, id_field]
-    if not exact:
-        fields = [StructField("cell", LongType()), *fields, StructField("interior", BooleanType())]
     # one job: coalesce(1) keeps the limit from planning a second,
     # partition-scanning job; limit()+1 proves the cap before anything
     # larger is materialized
@@ -377,12 +209,44 @@ def _cover_pass(points: DataFrame, polygons: DataFrame, level: int, lon_col: str
     if len(taken) > max_layer_rows:
         raise ValueError(
             f"polygon layer exceeds max_layer_rows={max_layer_rows} for "
-            f"the driver-collected broadcast; split the layer or raise "
+            f"the driver-collected index; split the layer or raise "
             f"the cap")
+    rings = [[geometry.close_ring(r) for r in json.loads(g)["coordinates"]] for _, g, *_ in taken]
+    empty = [r[0] for r, rr in zip(taken, rings) if not rr]
+    if empty:
+        raise ValueError(f"polygon {empty[0]!r} has no rings")
+    box = np.array([r[2:] for r in taken], dtype=np.float64).reshape(-1, 4)
     ids = pa.array([r[0] for r in taken], to_arrow_type(id_field.dataType))
-    bc = points.sparkSession.sparkContext.broadcast((*_cover_index(taken, level), ids))
+    return (ids, rings, box), id_field
+
+
+def _cover_pass(points: DataFrame, layer: tuple, level: int, lon_col: str, lat_col: str,
+                id_field: StructField | None, exact: bool = True) -> DataFrame:
+    """The one ``mapInArrow`` of every point-in-polygon operator:
+    ``points`` against ``layer`` = (ids, rings, bboxes) of the polygons
+    on the driver; see :func:`cell_cover_join`.
+
+    It emits the points columns plus ``id_field`` per matched (point,
+    polygon) pair or, without an ``id_field``, each matched point once,
+    on its first match; without ``exact``, every candidate pair with its
+    ``cell`` first and its ``interior`` flag last. A points column of an
+    emitted name is refused. The index rides in the pass's closure, not
+    in an explicit broadcast, which would leave one driver temp file
+    behind per call; PySpark broadcasts a closure above its 1 MB
+    threshold itself."""
+    ids, rings, box = layer
+    id_col = id_field.name if id_field else None
+    emitted = ([id_col] if id_col else []) + ([] if exact else ["cell", "interior"])
+    clash = [c for c in emitted if c in points.columns]
+    if clash:
+        raise ValueError(f"points already have a column named {clash[0]!r}, "
+                         "which the point-in-polygon pass emits")
+    fields = [*points.schema.fields, *([id_field] if id_field else [])]
+    if not exact:
+        fields = [StructField("cell", LongType()), *fields, StructField("interior", BooleanType())]
+    index = (*_cover_index(rings, box, level), ids)
     return points.mapInArrow(
-        lambda batches: _cover_batches(batches, bc.value, lon_col, lat_col, level, exact),
+        lambda batches: _cover_batches(batches, index, lon_col, lat_col, level, id_col, exact),
         StructType(fields))
 
 
@@ -420,11 +284,10 @@ def _runs(idx, key):
     return [r for r in np.split(idx, np.flatnonzero(np.diff(key[idx])) + 1) if len(r)]
 
 
-def _cover_index(taken: list, level: int) -> tuple:
+def _cover_index(rings: list, box: np.ndarray, level: int) -> tuple:
     """The driver half of :func:`_cover_pass`: (sorted cover cells, each
     cell's polygon, its interior flag, polygon rings, polygon bboxes) of
-    the collected layer rows (polygon_id, geojson, min_lon, min_lat,
-    max_lon, max_lat).
+    a layer of closed ring lists and their (n, 4) bboxes.
 
     Every polygon's bbox cover (:func:`cells.cover_bbox`) is one tile
     rectangle; all of them come from one :func:`cells.tile_xy` call and
@@ -434,15 +297,6 @@ def _cover_index(taken: list, level: int) -> tuple:
     outside the polygon or touches an edge's bbox, so the classifier
     rejects it. That is every edge cell of a cover, whose bbox is the
     vertex extent, and every cell of a cover one or two cells wide."""
-    import json
-
-    # rings are parsed here, so corrupt GeoJSON raises the decoder's own
-    # error and a degenerate ring close_ring's
-    rings = [[geometry.close_ring(r) for r in json.loads(g)["coordinates"]] for _, g, *_ in taken]
-    empty = [r[0] for r, rr in zip(taken, rings) if not rr]
-    if empty:
-        raise ValueError(f"polygon {empty[0]!r} has no rings")
-    box = np.array([r[2:] for r in taken], dtype=np.float64).reshape(-1, 4)
     tx, ty = cells.tile_xy(box[:, [0, 2]], box[:, [1, 3]], level)
     cover, owner = _rect_index(tx[:, 0], tx[:, 1], ty[:, 1], ty[:, 0],
                                lambda gx, gy: cells.xy_to_cell(gx, gy, level))
@@ -466,7 +320,7 @@ def _cover_index(taken: list, level: int) -> tuple:
 
 
 def _cover_batches(batches, index: tuple, lon_col: str, lat_col: str, level: int,
-                   exact: bool):
+                   id_col: str | None, exact: bool):
     """:func:`_cover_pass`'s body: points batches -> matched (point,
     polygon) rows, against ``index`` = :func:`_cover_index`'s tuple plus
     the polygon ids."""
@@ -490,8 +344,12 @@ def _cover_batches(batches, index: tuple, lon_col: str, lat_col: str, level: int
             for run in _runs(np.flatnonzero(keep & ~interior[ent]), poly):
                 keep[run] = geometry.points_in_polygon(px[run], py[run], rings[poly[run[0]]])
         sel = np.flatnonzero(keep)
+        if id_col is None:  # pt is non-decreasing: keep each point's first match
+            sel = sel[np.diff(pt[sel], prepend=-1) != 0]
         out = b.take(pt[sel])
-        cols, names = [*out.columns, ids.take(poly[sel])], [*out.schema.names, "polygon_id"]
+        cols, names = out.columns, out.schema.names
+        if id_col is not None:
+            cols, names = [*cols, ids.take(poly[sel])], [*names, id_col]
         if not exact:
             cols = [pa.array(cid[pt[sel]]), *cols, pa.array(interior[ent[sel]])]
             names = ["cell", *names, "interior"]
@@ -535,8 +393,8 @@ def knn_join(
        query's clipped Chebyshev square of
        radius ``max_ring`` around its row-major tile
        (:func:`cells.tile_xy`, the twin of :func:`cells.tile_id_col`),
-       sorted by cell (:func:`_rect_index`); one broadcast holds the
-       cells, their query, the query coordinates and ids: at most
+       sorted by cell (:func:`_rect_index`); the pass's closure holds
+       the cells, their query, the query coordinates and ids: at most
        (2·max_ring+1)² × 12 bytes plus ~20 bytes and the id per query
        (~320 bytes at the defaults);
     2. one ``mapInArrow`` over ``points.select(*id_cols, lon, lat)``
@@ -565,7 +423,7 @@ def knn_join(
     """
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_type
-    from pyspark.sql.types import DoubleType, StructField, StructType
+    from pyspark.sql.types import DoubleType
 
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
@@ -583,16 +441,15 @@ def knn_join(
             if r[1] is not None and r[2] is not None]
     qx = np.array([r[1] for r in rows], dtype=np.float64)
     qy = np.array([r[2] for r in rows], dtype=np.float64)
-    bc = points.sparkSession.sparkContext.broadcast(
-        (*_ring_index(qx, qy, level, max_ring), qx, qy,
-         pa.array([r[0] for r in rows], to_arrow_type(id_type))))
+    index = (*_ring_index(qx, qy, level, max_ring), qx, qy,
+             pa.array([r[0] for r in rows], to_arrow_type(id_type)))
 
     id_cols = [c for c in points.columns if c in ("image_id", "pixel_idx", "band")]
     schema = StructType([StructField("query_id", id_type),
                          *[points.schema[c] for c in (*id_cols, plon, plat)],
                          StructField("dist2", DoubleType())])
     cand = points.select(*id_cols, plon, plat).mapInArrow(
-        lambda batches: _knn_batches(batches, bc.value, plon, plat, level, k), schema)
+        lambda batches: _knn_batches(batches, index, plon, plat, level, k), schema)
     # ties: image_id and pixel_idx in the caller's column order, then the
     # band, so a multi-band pixel ranks in band order, not shuffle order
     order = ["dist2", *[c for c in id_cols if c != "band"]]
