@@ -317,7 +317,8 @@ class TestBufferRing:
 def test_points_in_union_overlap_counted_once(spark):
     """Two overlapping squares: the overlap is IN the union (OR), though
     even-odd over the stacked rings would XOR it out. The union is the
-    cover pass behind clip_points_union; each point comes once."""
+    cover kernel's keep mask behind clip_points_union; each point comes
+    once."""
     from tiff_to_geojson_csv_json_format_converter_spark.operators import joins
 
     sq1 = [[0.0, 0.0], [2.0, 0.0], [2.0, 2.0], [0.0, 2.0], [0.0, 0.0]]

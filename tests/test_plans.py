@@ -95,8 +95,9 @@ def test_extraction_has_no_shuffle(spark):
 def test_zonal_stats_path_follows_its_input(spark, frame):
     """An untouched extract frame plans one MapInArrow over the images
     that emits the per-(image, band) partials, and no Python eval node;
-    any other points frame takes the row path: one more MapInArrow, the
-    clip over its points."""
+    any other points frame takes the row path over its points: the
+    clip's one ArrowEvalPython of the coordinates, and no MapInArrow of
+    its own."""
     images = synth.images_df(spark, "xs").localCheckpoint()
     pts = extract.extract_points(images, valid_only=True,
                                  sample_cap=100 if frame == "sample_cap" else None)
@@ -107,6 +108,7 @@ def test_zonal_stats_path_follows_its_input(spark, frame):
     try:
         df = zonal.zonal_stats(pts, [synth.GOLDEN_DELHI_RING])
         outs, p = arrow_outputs(df), plan_str(df)
+        evals = [n.nodeName() for n in plan_nodes(df)].count("ArrowEvalPython")
     finally:
         pts.unpersist()
     partials = [f.split()[0] for f in zonal._PARTIALS_SCHEMA.split(", ")]
@@ -115,9 +117,9 @@ def test_zonal_stats_path_follows_its_input(spark, frame):
         assert outs == [partials]
         assert "ArrowEvalPython" not in p and "BatchEvalPython" not in p
     elif frame == "cached":
-        assert outs == [points] and "InMemoryTableScan" in p
+        assert outs == [] and "InMemoryTableScan" in p and evals == 1
     else:
-        assert outs == [points, points]
+        assert outs == [points] and evals == 1
 
 
 def test_tiles_plan_one_exchange_no_python_eval(spark):
@@ -432,8 +434,8 @@ def test_multi_root_scan_is_broadcast_no_cartesian(spark):
 
 def test_union_clip_bbox_pushed_below_python(spark):
     """D7 union clip: the overall-bbox Filter sits below the one Python
-    node, the cover pass, and a point inside two overlapping polygons
-    comes once (OR of the members; even-odd over the stacked rings
+    node, the cover kernel's keep mask, and a point inside two
+    overlapping polygons comes once (OR of the members; even-odd over the stacked rings
     would XOR the overlap out)."""
     sq1 = [[77.0, 28.0], [77.2, 28.0], [77.2, 28.2], [77.0, 28.2], [77.0, 28.0]]
     sq2 = [[77.1, 28.1], [77.3, 28.1], [77.3, 28.3], [77.1, 28.3], [77.1, 28.1]]
@@ -443,9 +445,9 @@ def test_union_clip_bbox_pushed_below_python(spark):
                                 "point_id long, longitude double, latitude double")
     df = joins.clip_points_union(pts, [[sq1], [sq2]])
     nodes = plan_nodes(df)
-    arrow = [n for n in nodes if n.nodeName() == "MapInArrow"]
+    arrow = [n for n in nodes if n.nodeName() == "ArrowEvalPython"]
     assert len(arrow) == 1
-    assert not {"ArrowEvalPython", "BatchEvalPython"} & {n.nodeName() for n in nodes}
+    assert not {"MapInArrow", "BatchEvalPython"} & {n.nodeName() for n in nodes}
     filters = [n for n in plan_nodes(arrow[0]) if n.nodeName() == "Filter"]
     assert filters and "77.3" in filters[0].condition().toString()
     assert sorted(r["point_id"] for r in df.collect()) == [0, 1, 2]
@@ -453,10 +455,12 @@ def test_union_clip_bbox_pushed_below_python(spark):
     assert sorted(r["point_id"] for r in stacked.collect()) == [1, 2]
 
 
-def test_clip_operators_are_one_arrow_pass_above_the_bbox_filter(spark):
-    """Each clip operator plans exactly one MapInArrow, the cover pass,
-    with the overall-bbox Filter below it so the scan can prune; no
-    Python eval node and no nested-loop join."""
+def test_clip_operators_are_one_arrow_udf_above_the_bbox_filter(spark):
+    """Each clip operator plans exactly one ArrowEvalPython, the cover
+    kernel over the coordinates alone, with the overall-bbox Filter
+    below it so the scan can prune; no other Python node and no
+    nested-loop join. The other points columns never reach Python, and
+    a column the caller does not read is pruned from the scan."""
     pts = spark.createDataFrame(
         [(1, 77.25, 28.25, 5.0)], "point_id long, longitude double, latitude double, elevation double"
     )
@@ -468,12 +472,16 @@ def test_clip_operators_are_one_arrow_pass_above_the_bbox_filter(spark):
                        (joins.clip_points_multi(pts, {"sq": [sq], "tri": [tri]}), 2)):
         nodes = plan_nodes(df)
         names = [n.nodeName() for n in nodes]
-        assert names.count("MapInArrow") == 1, names
-        assert not {"ArrowEvalPython", "BatchEvalPython", "BroadcastNestedLoopJoin"} & set(names)
-        arrow = nodes[names.index("MapInArrow")]
+        assert names.count("ArrowEvalPython") == 1, names
+        assert not {"MapInArrow", "BatchEvalPython", "BroadcastNestedLoopJoin"} & set(names)
+        arrow = nodes[names.index("ArrowEvalPython")]
+        args = arrow.udfs().apply(0).children()
+        assert [args.apply(i).name() for i in range(args.size())] == ["longitude", "latitude"]
         filters = [n.condition().toString() for n in plan_nodes(arrow) if n.nodeName() == "Filter"]
         assert len(filters) == 1 and "77.1" in filters[0] and "28.1" in filters[0], filters
         assert df.count() == n_rows
+        pruned = [n for n in plan_nodes(df.select("point_id")) if n.nodeName() == "ArrowEvalPython"]
+        assert "elevation" not in pruned[0].child().output().toString()
 
 
 def test_jaccard_join_is_prefix_equi_join(spark):
@@ -782,9 +790,10 @@ def test_clip_points_multi_refuses_a_tag_column_clash(spark, edges):
 
 def test_point_operators_leave_no_driver_temp_files(spark):
     """``clip_points``, ``cell_cover_join`` and ``knn_join`` carry their
-    index in the pass's closure: twenty calls of each leave the driver's
-    temp dir as it was. An explicit ``broadcast`` writes a file there
-    per call that outlives the frame."""
+    index in the pass's closure: twenty calls of each with a small index
+    leave the driver's temp dir as it was. An explicit ``broadcast``
+    writes a file there per call that outlives the frame, and so does
+    PySpark's own broadcast of a closure above 1 MB."""
     import os
 
     pts = spark.createDataFrame([(1, 77.25, 28.25)], "point_id long, longitude double, latitude double")

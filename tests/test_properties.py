@@ -509,7 +509,7 @@ def test_cell_cover_join_agrees_with_brute_force(spark, seed, level, n_polys, n_
     the cover rule: the point's cell is in the cover of the polygon's
     bbox, and the cell is interior or the point is inside the bbox.
 
-    The clip operators, the same pass at their own level, agree with the
+    The clip operators, the same kernel at their own level, agree with the
     same brute force: ``clip_points_multi`` gives every pair,
     ``clip_points_union`` every point inside any polygon once, and
     ``clip_points`` a multi-shell polygon's points. The layer adds a

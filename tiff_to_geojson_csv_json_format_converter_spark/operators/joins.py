@@ -6,16 +6,19 @@ Spark-first strategy per SURVEY.md §2.D:
   ``broadcast()`` + plain min/max range predicates. At 100 TB the
   image-side bbox columns double as Iceberg/parquet min-max skipping
   keys, so the same predicates prune files before any scan.
-- D3 polygon clip: every point-in-polygon operator is one ``mapInArrow``
-  over the points against a driver-side polygon layer
-  (:func:`_cover_pass`): a point meets only the polygons whose bbox
-  cover holds its cell, found by binary search; interior cells settle
-  without a ray-cast (as in Raster Intervals) and the rest is ray-cast
-  per polygon. :func:`clip_points`, :func:`clip_points_union` and
-  :func:`clip_points_multi` run it over their 1 to N polygons behind an
-  overall-bbox Catalyst filter (pushed to the scan);
-  :func:`cell_cover_join` runs it over a collected layer frame. No
-  join, no shuffle, no pandas UDF and no code generated per polygon.
+- D3 polygon clip: every point-in-polygon operator runs one kernel
+  against a driver-side polygon layer (:func:`_cover_match`): a point
+  meets only the polygons whose bbox cover holds its cell, found by
+  binary search; interior cells settle without a ray-cast (as in Raster
+  Intervals) and the rest is ray-cast per polygon.
+  :func:`clip_points`, :func:`clip_points_union` and
+  :func:`clip_points_multi` run it over their 1 to N polygons as one
+  scalar Arrow UDF of the coordinates behind an overall-bbox Catalyst
+  filter (pushed to the scan): only the two coordinate columns cross
+  into Python, and Catalyst prunes the rest as usual.
+  :func:`cell_cover_join` runs it in one ``mapInArrow`` over a collected
+  layer frame. No join, no shuffle, no pandas UDF and no code generated
+  per polygon.
 - D6 kNN: key points by row-major tile id and probe each query's
   Chebyshev ring square. :func:`knn_join` has the shape of
   :func:`cell_cover_join`: the driver sorts every query's ring cells
@@ -32,7 +35,8 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import BooleanType, LongType, StringType, StructField, StructType
+from pyspark.sql.types import (ArrayType, BooleanType, IntegerType, LongType, StructField,
+                               StructType)
 
 from ..functions import cells, geometry
 
@@ -56,31 +60,63 @@ def _clip(points: DataFrame, polygons: list, lon_col: str, lat_col: str,
           tag_col: str | None = None, tags: list | None = None) -> DataFrame:
     """The clip operators' plan: the overall bbox of ``polygons`` (each a
     ring list) as a Catalyst filter, which the scan can prune on, then
-    :func:`_cover_pass` over them at :data:`_CLIP_LEVEL`. With a
-    ``tag_col`` it emits one row per (point, polygon) tagged from
-    ``tags``; without one, each matched point once."""
+    :func:`_cover_match` over them at :data:`_CLIP_LEVEL` as a scalar
+    Arrow UDF of ``(lon_col, lat_col)``. Without a ``tag_col`` the UDF is
+    a keep mask, so each matched point comes once and no column is
+    added; with one it is the list of the polygons holding the point,
+    exploded into one row per (point, polygon) tagged from ``tags``.
+    The UDF reads only the coordinates: Spark keeps the other columns on
+    the JVM side, and Catalyst prunes what the caller does not read."""
     import pyarrow as pa
+    from pyspark.sql.functions import arrow_udf
 
+    if tag_col is not None and tag_col in points.columns:
+        raise ValueError(f"points already have a column named {tag_col!r}, "
+                         "which the point-in-polygon pass emits")
     rings = [[geometry.close_ring(r) for r in p] for p in polygons]
     box = np.array([_rings_bbox(p) for p in rings], dtype=np.float64).reshape(-1, 4)
     boxed = points.filter(
         (F.col(lon_col) >= float(box[:, 0].min())) & (F.col(lon_col) <= float(box[:, 2].max()))
         & (F.col(lat_col) >= float(box[:, 1].min())) & (F.col(lat_col) <= float(box[:, 3].max()))
     )
-    ids = None if tag_col is None else pa.array(tags, pa.string())
-    id_field = None if tag_col is None else StructField(tag_col, StringType())
-    return _cover_pass(boxed, (ids, rings, box), _CLIP_LEVEL, lon_col, lat_col, id_field)
+    index = _cover_index(rings, box, _CLIP_LEVEL)
+    if tag_col is None:
+        def keep(lon, lat):
+            pt = _cover_match(index, _coords(lon), _coords(lat), _CLIP_LEVEL)[1]
+            mask = np.zeros(len(lon), dtype=bool)
+            mask[pt] = True
+            return pa.array(mask)
+
+        return boxed.filter(arrow_udf(keep, BooleanType())(lon_col, lat_col))
+    owner = index[1]
+
+    def hits(lon, lat):
+        _, pt, ent = _cover_match(index, _coords(lon), _coords(lat), _CLIP_LEVEL)
+        # pt is non-decreasing: point i's polygons are pt's run of value i
+        offsets = np.searchsorted(pt, np.arange(len(lon) + 1)).astype(np.int32)
+        return pa.ListArray.from_arrays(pa.array(offsets), pa.array(owner[ent]))
+
+    # polygon positions cross back, not tags: ints leave Python and enter
+    # the JVM cheaper than strings, and the JVM looks the tag up
+    pos = F.explode(arrow_udf(hits, ArrayType(IntegerType()))(lon_col, lat_col))
+    return boxed.select("*", pos.alias(tag_col)).withColumn(
+        tag_col, F.array(*map(F.lit, tags))[F.col(tag_col)])
+
+
+def _coords(col) -> np.ndarray:
+    """An Arrow coordinate column as float64 numpy; a null becomes NaN."""
+    import pyarrow as pa
+
+    return col.cast(pa.float64()).to_numpy(zero_copy_only=False)
 
 
 def clip_points(points: DataFrame, rings: list, lon_col: str = "longitude", lat_col: str = "latitude") -> DataFrame:
     """Exact polygon clip of a point table: the engine form of
     ``rasterio.mask.mask(..., crop=True)`` center containment
     (test2.py:1272). The bbox predicate (Catalyst, pushed to the scan),
-    then the cover pass over a one-polygon layer; the rows are the
-    points inside ``rings`` (shell + holes, even-odd), each once, with
-    no column added. Every points column crosses into Python and
-    Catalyst cannot prune through the pass: select what the caller
-    reads first."""
+    then the cover kernel over a one-polygon layer as a keep mask; the
+    rows are the points inside ``rings`` (shell + holes, even-odd), each
+    once, with no column added."""
     return _clip(points, [rings], lon_col, lat_col)
 
 
@@ -88,10 +124,10 @@ def clip_points_union(points: DataFrame, polygons: list,
                       lon_col: str = "longitude", lat_col: str = "latitude") -> DataFrame:
     """D7: clip against the UNION of several polygons (each a ring list)
     — the reference's turf-union-then-clip flow (slope.js:406-427). No
-    merged geometry is materialized: the cover pass over the N polygons
-    emits each point once, on its first match, so overlapping regions
-    count once (stacking every ring into one even-odd polygon would XOR
-    an overlap out)."""
+    merged geometry is materialized: the cover kernel's keep mask over
+    the N polygons holds a point once however many members contain it,
+    so overlapping regions count once (stacking every ring into one
+    even-odd polygon would XOR an overlap out)."""
     return _clip(points, polygons, lon_col, lat_col)
 
 
@@ -132,8 +168,9 @@ def cell_cover_join(points: DataFrame, polygons: DataFrame,
        polygon's bbox, ray-casts the boundary-cell pairs per polygon
        (interior-cell pairs skip it), and emits the matches by ``take``.
 
-    The clip operators (:func:`clip_points` and its kin) are the same
-    pass over polygons the caller already holds on the driver.
+    The clip operators (:func:`clip_points` and its kin) run the same
+    kernel (:func:`_cover_match`) over polygons the caller already holds
+    on the driver, as a scalar Arrow UDF of the coordinates.
 
     Returns the points columns + ``polygon_id`` (a point duplicates per
     containing polygon, like a SQL join); a points column named
@@ -221,32 +258,31 @@ def _collect_layer(polygons: DataFrame, max_layer_rows: int) -> tuple:
 
 
 def _cover_pass(points: DataFrame, layer: tuple, level: int, lon_col: str, lat_col: str,
-                id_field: StructField | None, exact: bool = True) -> DataFrame:
-    """The one ``mapInArrow`` of every point-in-polygon operator:
-    ``points`` against ``layer`` = (ids, rings, bboxes) of the polygons
-    on the driver; see :func:`cell_cover_join`.
+                id_field: StructField, exact: bool = True) -> DataFrame:
+    """:func:`cell_cover_join`'s ``mapInArrow``: ``points`` against
+    ``layer`` = (ids, rings, bboxes) of the polygons on the driver.
 
     It emits the points columns plus ``id_field`` per matched (point,
-    polygon) pair or, without an ``id_field``, each matched point once,
-    on its first match; without ``exact``, every candidate pair with its
+    polygon) pair or, without ``exact``, every candidate pair with its
     ``cell`` first and its ``interior`` flag last. A points column of an
     emitted name is refused. The index rides in the pass's closure, not
     in an explicit broadcast, which would leave one driver temp file
-    behind per call; PySpark broadcasts a closure above its 1 MB
-    threshold itself."""
+    behind per call. PySpark broadcasts a pickled closure above its 1 MB
+    threshold itself, which leaves such a file too: only an index under
+    it leaves none."""
     ids, rings, box = layer
-    id_col = id_field.name if id_field else None
-    emitted = ([id_col] if id_col else []) + ([] if exact else ["cell", "interior"])
+    emitted = [id_field.name] + ([] if exact else ["cell", "interior"])
     clash = [c for c in emitted if c in points.columns]
     if clash:
         raise ValueError(f"points already have a column named {clash[0]!r}, "
                          "which the point-in-polygon pass emits")
-    fields = [*points.schema.fields, *([id_field] if id_field else [])]
+    fields = [*points.schema.fields, id_field]
     if not exact:
         fields = [StructField("cell", LongType()), *fields, StructField("interior", BooleanType())]
-    index = (*_cover_index(rings, box, level), ids)
+    index = _cover_index(rings, box, level)
     return points.mapInArrow(
-        lambda batches: _cover_batches(batches, index, lon_col, lat_col, level, id_col, exact),
+        lambda batches: _cover_batches(batches, index, ids, lon_col, lat_col, level,
+                                       id_field.name, exact),
         StructType(fields))
 
 
@@ -255,7 +291,7 @@ def _rect_index(x0, x1, y0, y1, key):
     ``[x0, x1] x [y0, y1]``, with ``key(tx, ty)`` the cell id: cells run
     x-major within a rectangle, equal cells keep owner order, and a
     rectangle with ``x1 < x0`` or ``y1 < y0`` is empty. The index of both
-    :func:`_cover_pass` (bbox covers) and :func:`knn_join` (ring squares),
+    :func:`_cover_index` (bbox covers) and :func:`knn_join` (ring squares),
     built without a loop over the owners."""
     nx = np.maximum(x1 - x0 + 1, 0)
     ny = np.maximum(y1 - y0 + 1, 0)
@@ -285,7 +321,7 @@ def _runs(idx, key):
 
 
 def _cover_index(rings: list, box: np.ndarray, level: int) -> tuple:
-    """The driver half of :func:`_cover_pass`: (sorted cover cells, each
+    """The driver half of :func:`_cover_match`: (sorted cover cells, each
     cell's polygon, its interior flag, polygon rings, polygon bboxes) of
     a layer of closed ring lists and their (n, 4) bboxes.
 
@@ -319,39 +355,45 @@ def _cover_index(rings: list, box: np.ndarray, level: int) -> tuple:
     return cover, owner, interior, rings, box
 
 
-def _cover_batches(batches, index: tuple, lon_col: str, lat_col: str, level: int,
-                   id_col: str | None, exact: bool):
+def _cover_match(index: tuple, x: np.ndarray, y: np.ndarray, level: int,
+                 exact: bool = True) -> tuple:
+    """The one point-in-polygon kernel: (cell of every point, point,
+    cover entry) of each (point, polygon) pair of the coordinates
+    ``x``, ``y`` that matches against ``index`` (:func:`_cover_index`),
+    point non-decreasing. Without ``exact``, every candidate pair: the
+    ray-cast is skipped."""
+    cover, owner, interior, rings, bbox = index
+    cid = cells.cell_id(x, y, level)
+    pt, ent = _probe(cover, cid)
+    poly, px, py = owner[ent], x[pt], y[pt]
+    box = bbox[poly]
+    # inclusive polygon-bbox prune: a point outside the bbox is outside
+    # the polygon, and an interior cell lies inside the bbox. It also
+    # drops the NaN (or null), infinite and off-grid coordinates that
+    # the tile clamp puts on an edge cell
+    keep = (px >= box[:, 0]) & (px <= box[:, 2]) & (py >= box[:, 1]) & (py <= box[:, 3])
+    if exact:
+        for run in _runs(np.flatnonzero(keep & ~interior[ent]), poly):
+            keep[run] = geometry.points_in_polygon(px[run], py[run], rings[poly[run[0]]])
+    sel = np.flatnonzero(keep)
+    return cid, pt[sel], ent[sel]
+
+
+def _cover_batches(batches, index: tuple, ids, lon_col: str, lat_col: str, level: int,
+                   id_col: str, exact: bool):
     """:func:`_cover_pass`'s body: points batches -> matched (point,
-    polygon) rows, against ``index`` = :func:`_cover_index`'s tuple plus
-    the polygon ids."""
+    polygon) rows by ``take``, the polygon's id from ``ids``."""
     import pyarrow as pa
 
-    cover, owner, interior, rings, bbox, ids = index
+    owner, interior = index[1], index[2]
     for b in batches:
-        # Arrow -> numpy turns a null into NaN
-        x = b.column(lon_col).cast(pa.float64()).to_numpy(zero_copy_only=False)
-        y = b.column(lat_col).cast(pa.float64()).to_numpy(zero_copy_only=False)
-        cid = cells.cell_id(x, y, level)
-        pt, ent = _probe(cover, cid)
-        poly, px, py = owner[ent], x[pt], y[pt]
-        box = bbox[poly]
-        # inclusive polygon-bbox prune: a point outside the bbox is
-        # outside the polygon, and an interior cell lies inside the bbox.
-        # It also drops the NaN (or null), infinite and off-grid
-        # coordinates that the tile clamp puts on an edge cell
-        keep = (px >= box[:, 0]) & (px <= box[:, 2]) & (py >= box[:, 1]) & (py <= box[:, 3])
-        if exact:
-            for run in _runs(np.flatnonzero(keep & ~interior[ent]), poly):
-                keep[run] = geometry.points_in_polygon(px[run], py[run], rings[poly[run[0]]])
-        sel = np.flatnonzero(keep)
-        if id_col is None:  # pt is non-decreasing: keep each point's first match
-            sel = sel[np.diff(pt[sel], prepend=-1) != 0]
-        out = b.take(pt[sel])
-        cols, names = out.columns, out.schema.names
-        if id_col is not None:
-            cols, names = [*cols, ids.take(poly[sel])], [*names, id_col]
+        cid, pt, ent = _cover_match(index, _coords(b.column(lon_col)), _coords(b.column(lat_col)),
+                                    level, exact)
+        out = b.take(pt)
+        cols = [*out.columns, ids.take(owner[ent])]
+        names = [*out.schema.names, id_col]
         if not exact:
-            cols = [pa.array(cid[pt[sel]]), *cols, pa.array(interior[ent[sel]])]
+            cols = [pa.array(cid[pt]), *cols, pa.array(interior[ent])]
             names = ["cell", *names, "interior"]
         yield pa.RecordBatch.from_arrays(cols, names=names)
 

@@ -12,14 +12,15 @@ over the polygon-masked pixels, with two contract quirks preserved here:
 Two plans, picked from the input by :func:`zonal_stats`:
 
 - row path (any points frame): ``joins.clip_points`` (the bbox
-  predicate, then the cover pass: one ``mapInArrow`` over the boxed
-  points) -> groupBy agg. One shuffle, map-side partial aggregation.
+  predicate, then the cover kernel as one scalar Arrow UDF of the
+  boxed points' coordinates) -> groupBy agg. One shuffle, map-side
+  partial aggregation.
 - in-extract path (an untouched, uncached default
   ``extract.extract_points`` frame, see ``extract.source_images``): the
   extract driver (``extract._extract_fold``) windows each image to the
   polygon's bbox and keeps the points inside the bbox; this module's
   emit clips them with ``geometry.points_in_polygon``, the PIP kernel
-  the cover pass runs on its boundary cells, and folds each (image,
+  the cover kernel runs on its boundary cells, and folds each (image,
   band) to n, sum, M2, min and max, so O(images x bands) rows cross into the
   JVM instead of every point. The JVM merges the partial rows of a key
   (several images rows may share an id) with the k-way form of Chan et
@@ -100,8 +101,8 @@ def _emit_zonal(rings_arr: list, row, bands):
     """The in-extract path's emit: one _PARTIALS_SCHEMA row per band with
     points inside the polygon. The extract driver already kept the
     points inside the polygon's bbox; ``points_in_polygon`` over all of
-    them is what the cover pass decides per point, so both paths keep the
-    same points."""
+    them is what the cover kernel decides per point, so both paths keep
+    the same points."""
     for band, _, lon, lat, z in bands:
         z = z[geometry.points_in_polygon(lon, lat, rings_arr)]
         if len(z):

@@ -396,9 +396,8 @@ def q_zonal_stats_polys(spark, sf_dir):
     shape that holds when the input is 100 TB and the fixtures are a
     request's query layer; the oracle stays the 3-way UNION of
     independent single-polygon clips, so the fused pass is verified
-    equal to the per-polygon semantics. Only the columns read after the
-    clip enter it: Catalyst cannot prune through the pass."""
-    pts = _pts(spark, sf_dir).filter("valid").select("image_id", "lon", "lat", "z")
+    equal to the per-polygon semantics."""
+    pts = _pts(spark, sf_dir).filter("valid")
     tagged = joins.clip_points_multi(
         pts, {tag: _rings(pid) for tag, pid in _ZONAL_SUITE},
         lon_col="lon", lat_col="lat",
@@ -956,7 +955,7 @@ def q_zonal_null_fallback(spark, sf_dir):
     [c-h, c+h) box — verified equal to the ray-cast in tests)."""
     from ..functions import geometry as geometry_fns
 
-    pts = _pts(spark, sf_dir).filter("valid").select("lon", "lat")
+    pts = _pts(spark, sf_dir).filter("valid")
     n_clip = joins.clip_points(pts, [_FAR_RING], lon_col="lon", lat_col="lat").count()
     b = pts.agg(
         F.min("lon"), F.max("lon"), F.min("lat"), F.max("lat")
@@ -1028,7 +1027,7 @@ def q_stats_merge_quirk(spark, sf_dir):
 
     from ..operators import zonal as zonal_ops
 
-    pts = _pts(spark, sf_dir).filter("valid").select("image_id", "lon", "lat", "z")
+    pts = _pts(spark, sf_dir).filter("valid")
     clipped = joins.clip_points(pts, _rings("poly_0003"), lon_col="lon", lat_col="lat")
     zb = F.col("z").cast("long")
     per = clipped.groupBy("image_id").agg(
@@ -2771,8 +2770,7 @@ def q_raster_digest_suite(spark, sf_dir):
                            [F.col("n"), F.col("ni"), None, F.col("sz")]))
 
     zonal = (
-        joins.clip_points(pts.select("image_id", "band", "longitude", "latitude", "elevation"),
-                          [synth.GOLDEN_DELHI_RING])
+        joins.clip_points(pts, [synth.GOLDEN_DELHI_RING])
         .groupBy(*ib).agg(
             F.count("*").alias("n"), F.min(cents).alias("mn"),
             F.max(cents).alias("mx"), F.sum(cents).alias("sz"),
@@ -2871,10 +2869,10 @@ def q_zonal_stats_union(spark, sf_dir):
     """D7: zonal stats over the UNION of two OVERLAPPING polygons
     (small box poly_0002 sits inside pentagon poly_0003's extent) — the
     reference's turf-union-then-clip flow (slope.js:406-427): the clip
-    keeps each point once, on its first containing polygon, so the
+    keeps each point once, however many members contain it, so the
     overlap region counts once (even-odd ring stacking would XOR it
     out)."""
-    pts = _pts(spark, sf_dir).filter("valid").select("image_id", "lon", "lat", "z")
+    pts = _pts(spark, sf_dir).filter("valid")
     clipped = joins.clip_points_union(
         pts, [_rings("poly_0002"), _rings("poly_0003")], lon_col="lon", lat_col="lat"
     )
