@@ -106,6 +106,8 @@ class TestConverter:
         info file per all-NoData image and none for the repeated one."""
         from pyspark.sql import functions as F
 
+        from tiff_to_geojson_csv_json_format_converter_spark.operators import extract, sinks
+
         images = synth.images_df(spark, "xs")
         first = images.orderBy("image_id").first()["image_id"]
         conv = Converter(spark, images.unionByName(images.filter(F.col("image_id") == first)))
@@ -113,6 +115,17 @@ class TestConverter:
         assert res["catalog"]["total_files"] == images.count() + 1
         infos, empties = _info_files_and_empty_images(conv, tmp_path / "out")
         assert infos and infos == empties
+        # one GeoJSON document and file per id; the repeated id's holds
+        # both rows' points and totals
+        pts = extract.extract_points(conv.images).filter("band = 0")
+        docs = sinks.geojson_collection_docs(pts, conv.images).select("image_id").collect()
+        assert len(docs) == len({r["image_id"] for r in docs})
+        assert len(res["geojson_files"]) == len(set(res["geojson_files"])) == len(docs)
+        with open(tmp_path / "out" / f"{first}_wgs84.geojson") as f:
+            meta = json.load(f)["metadata"]
+        w, h = images.filter(F.col("image_id") == first).select("w", "h").first()
+        assert meta["total_original_points"] == 2 * w * h
+        assert 0 < meta["geojson_points"] <= meta["total_original_points"]
 
     def test_convert_valid_mode_catalog_is_summary_path(self, spark, tmp_path, monkeypatch):
         """convert(mode='valid') writes the catalog Converter.catalog()
@@ -175,28 +188,37 @@ class TestConverter:
 
 
 class TestCsvByteParity:
-    def test_csv_lines_match_pandas_to_csv(self, spark, images_pdf):
-        """A7: the engine's CSV rows must byte-equal what the reference
-        writes via df.to_csv(float_format='%.6f') (doesSamples.py:101)."""
+    def test_csv_lines_match_pandas_to_csv(self, spark, images_pdf, tmp_path):
+        """A7: the rows sinks.write_csv_per_image writes for an image must
+        byte-equal what the reference writes via
+        df.to_csv(float_format='%.6f') (doesSamples.py:101). The part
+        files have no pixel order, so the lines are compared sorted."""
+        import glob
         import io
 
         from pyspark.sql import functions as F
 
-        from tests import oracle
         from tiff_to_geojson_csv_json_format_converter_spark.operators import extract, sinks
 
         one = images_pdf[images_pdf["image_id"] == "img_00000000"]
         sdf = synth.images_df(spark, "xs").filter(F.col("image_id") == "img_00000000")
         pts = extract.extract_points(sdf, valid_only=True).filter("band = 0")
-        got = [r[0] for r in pts.orderBy("pixel_idx").select(sinks.csv_line_col()).collect()]
+        out = str(tmp_path / "csv")
+        sinks.write_csv_per_image(pts, out)
+        header, got = "longitude,latitude,elevation", []
+        for part in glob.glob(os.path.join(out, "image_id=img_00000000", "part-*.csv")):
+            with open(part) as f:
+                lines = f.read().splitlines()
+            assert lines[0] == header
+            got += lines[1:]
         want_pts = oracle.extract_points(one, valid_only=True)
-        want_pts = want_pts[want_pts["band"] == 0].sort_values("pixel_idx")
+        want_pts = want_pts[want_pts["band"] == 0]
         buf = io.StringIO()
         want_pts[["longitude", "latitude", "elevation"]].to_csv(
             buf, index=False, float_format="%.6f", header=False
         )
         want = buf.getvalue().splitlines()
-        assert got == want
+        assert want and sorted(got) == sorted(want)
 
 
 class TestCli:

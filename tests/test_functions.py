@@ -163,7 +163,6 @@ class TestCells:
     def test_k_ring(self):
         assert len(cells.k_ring_xy(100, 100, 12, 0)) == 1
         assert len(cells.k_ring_xy(100, 100, 12, 1)) == 9
-        assert len(cells.ring_only_xy(100, 100, 12, 3)) == 24
         # clipped at the grid edge
         assert len(cells.k_ring_xy(0, 0, 12, 1)) == 4
 
@@ -262,9 +261,8 @@ class TestSynth:
 
 
 class TestBufferRing:
-    """True outward offset (per-edge normal + miter join) vs the
-    documented centroid-scaling quirk — proving the quirk wrong on a
-    concave shell and the real buffer right."""
+    """True outward offset (per-edge normal + miter join), right on a
+    concave shell as well as a convex one."""
 
     L_SHAPE = [(0.0, 0.0), (4.0, 0.0), (4.0, 1.0), (1.0, 1.0), (1.0, 4.0), (0.0, 4.0)]
 
@@ -285,14 +283,6 @@ class TestBufferRing:
         s = self._boundary_samples(self.L_SHAPE)
         inside = geometry.points_in_polygon(s[:, 0], s[:, 1], [buf])
         assert inside.all(), f"{(~inside).sum()} boundary points escaped the buffer"
-
-    def test_centroid_quirk_fails_on_concave(self):
-        """The round-1 shortcut provably loses boundary coverage on the
-        same concave shell — this is why it is quarantined as a quirk."""
-        buf = geometry.buffer_ring_centroid_quirk(self.L_SHAPE, 0.05)
-        s = self._boundary_samples(self.L_SHAPE)
-        inside = geometry.points_in_polygon(s[:, 0], s[:, 1], [buf])
-        assert not inside.all()
 
     def test_buffer_grows_area_convex_and_respects_orientation(self):
         import numpy as np

@@ -2,7 +2,6 @@
 real decoded rasters, resumable catalog, streaming incremental driver,
 sink formatting parity (SURVEY.md §5 items 3-5)."""
 
-import glob
 import json
 import os
 
@@ -712,6 +711,38 @@ class TestFusedOperators:
             assert sum(r[0] == ids[1] for r in want) == 2 and any(r[3] == 0 for r in want)
 
 
+def _reference_feature_collection(source_file, total_original_points, rows) -> str:
+    """The reference's FeatureCollection (completePixleOutput.py:108-128)
+    of points ``rows``: json.dumps(separators=(',',':')) of its dict."""
+    return json.dumps({
+        "type": "FeatureCollection",
+        "crs": {"type": "name", "properties": {"name": "urn:ogc:def:crs:OGC:1.3:CRS84"}},
+        "metadata": {
+            "source_file": source_file,
+            "total_original_points": total_original_points,
+            "geojson_points": len(rows),
+            "note": "Coordinates in WGS84 (longitude, latitude, elevation)",
+        },
+        "features": [
+            {"type": "Feature",
+             "geometry": {"type": "Point",
+                          "coordinates": [r["longitude"], r["latitude"], r["elevation"]]}}
+            for r in rows
+        ],
+    }, separators=(",", ":"))
+
+
+@pytest.fixture(scope="module")
+def xs_converted(spark, tmp_path_factory):
+    """The xs images run once through convert(mode="valid"):
+    (output directory, images frame, convert's result)."""
+    from tiff_to_geojson_csv_json_format_converter_spark.api import Converter
+
+    images = synth.images_df(spark, "xs")
+    out = str(tmp_path_factory.mktemp("xs_converted") / "out")
+    return out, images, Converter(spark, images).convert(out, mode="valid")
+
+
 class TestSinks:
     def test_geojson_feature_matches_reference_json(self, spark, points_sdf):
         """Feature strings must byte-equal the reference's
@@ -729,12 +760,36 @@ class TestSinks:
             )
             assert feat == want, (feat, want)
 
-    def test_feature_collection_envelope(self, spark, points_sdf):
-        fc = sinks.geojson_feature_collection(points_sdf.limit(5), "img_x.tif", 256)
-        doc = json.loads(fc)
-        assert doc["type"] == "FeatureCollection"
-        assert doc["metadata"]["geojson_points"] == 5
-        assert len(doc["features"]) == 5
+    def test_feature_collection_envelope(self, spark, points_sdf, xs_converted):
+        """Each GeoJSON file convert writes is the reference envelope
+        (completePixleOutput.py:108-128) byte for byte, features in pixel
+        order."""
+        out, images, _ = xs_converted
+        pts = points_sdf.filter("band = 0")
+        ids = {r["image_id"] for r in pts.select("image_id").distinct().collect()}
+        totals = {r["image_id"]: r["w"] * r["h"]
+                  for r in images.select("image_id", "w", "h").collect()}
+        for image_id in sorted(ids)[:3]:
+            rows = sorted(pts.filter(pts["image_id"] == image_id).collect(),
+                          key=lambda r: r["pixel_idx"])
+            with open(os.path.join(out, f"{image_id}_wgs84.geojson")) as f:
+                assert f.read() == _reference_feature_collection(
+                    image_id, totals[image_id], rows)
+
+    def test_write_geojson_per_image(self, spark, points_sdf, xs_converted):
+        """Convert writes one GeoJSON file per image with valid points,
+        named <image_id>_wgs84.geojson, each counting its own features."""
+        out, _, res = xs_converted
+        pts = points_sdf.filter("band = 0")
+        ids = {r["image_id"] for r in pts.select("image_id").distinct().collect()}
+        assert ids
+        assert sorted(res["geojson_files"]) == sorted(
+            os.path.join(out, f"{i}_wgs84.geojson") for i in ids)
+        for path in res["geojson_files"]:
+            with open(path) as f:
+                doc = json.load(f)
+            assert doc["type"] == "FeatureCollection"
+            assert doc["metadata"]["geojson_points"] == len(doc["features"]) > 0
 
     def test_struct_of_arrays_json(self, spark, points_sdf):
         doc = json.loads(sinks.json_struct_of_arrays(points_sdf.limit(10), {"source_file": "x"}))
@@ -786,31 +841,41 @@ class TestSinks:
         assert got == want
 
     def test_distributed_geojson_docs_match_driver_assembly(self, spark, points_sdf):
-        """The executor-side FeatureCollection builder must byte-equal the
-        driver-assembled envelope for every image."""
+        """The executor-side FeatureCollection builder must byte-equal
+        json.dumps of the reference envelope for every image, whatever
+        the partitioning of its input."""
         images = synth.images_df(spark, "xs")
         pts = points_sdf.filter("band = 0")
         docs = {r["image_id"]: r["doc"]
                 for r in sinks.geojson_collection_docs(pts.repartition(5), images).collect()}
-        img_meta = {r["image_id"]: r["w"] * r["h"]
-                    for r in images.select("image_id", "w", "h").collect()}
+        totals = {r["image_id"]: r["w"] * r["h"]
+                  for r in images.select("image_id", "w", "h").collect()}
         assert docs
         for image_id, doc in list(docs.items())[:3]:
-            single = (pts.filter(pts["image_id"] == image_id)
-                      .orderBy("pixel_idx").coalesce(1))
-            want = sinks.geojson_feature_collection(
-                single, image_id, img_meta[image_id])
-            assert doc == want
+            rows = sorted(pts.filter(pts["image_id"] == image_id).collect(),
+                          key=lambda r: r["pixel_idx"])
+            assert doc == _reference_feature_collection(image_id, totals[image_id], rows)
 
-    def test_write_geojson_per_image(self, spark, points_sdf, tmp_path):
-        images = synth.images_df(spark, "xs")
-        out = str(tmp_path / "gj")
-        sinks.write_geojson_per_image(points_sdf.filter("band = 0"), images, out)
-        files = glob.glob(os.path.join(out, "image_id=*", "part-*"))
-        assert files
-        doc = json.loads(open(files[0]).read())
-        assert doc["type"] == "FeatureCollection"
-        assert doc["metadata"]["geojson_points"] == len(doc["features"])
+    def test_geojson_docs_escape_image_id(self, spark, points_sdf, tmp_path):
+        """An id holding JSON's special characters stays valid JSON, in
+        the builder's documents and in the file convert writes."""
+        from pyspark.sql import functions as F
+
+        from tiff_to_geojson_csv_json_format_converter_spark.api import Converter
+
+        odd = 'a"b\\c'
+        first = points_sdf.filter("band = 0").select("image_id").first()["image_id"]
+        rename = F.when(F.col("image_id") == first, F.lit(odd)).otherwise(F.col("image_id"))
+        images = synth.images_df(spark, "xs").withColumn("image_id", rename)
+        pts = points_sdf.filter("band = 0").withColumn("image_id", rename)
+        docs = {r["image_id"]: r["doc"]
+                for r in sinks.geojson_collection_docs(pts, images).collect()}
+        assert json.loads(docs[odd])["metadata"]["source_file"] == odd
+        res = Converter(spark, images.filter(F.col("image_id") == odd)).convert(
+            str(tmp_path / "out"), mode="valid")
+        assert len(res["geojson_files"]) == 1
+        with open(res["geojson_files"][0]) as f:
+            assert json.load(f)["metadata"]["source_file"] == odd
 
     def test_master_catalog(self, spark, points_sdf):
         images = synth.images_df(spark, "xs")

@@ -697,9 +697,9 @@ def test_clip_fallback_ladder_rungs(spark):
     assert want and got == want
 
     # classification is driver-side and pure
-    assert joins.classify_clip_geometry([]) == "center"
-    assert joins.classify_clip_geometry([[[1.0, 1.0], [1.0, 1.0]]]) == "center"
-    assert joins.classify_clip_geometry([[[1.0, 1.0], [2.0, 1.0]]]) == "window"
+    assert joins._classify_and_bbox([])[0] == "center"
+    assert joins._classify_and_bbox([[[1.0, 1.0], [1.0, 1.0]]])[0] == "center"
+    assert joins._classify_and_bbox([[[1.0, 1.0], [2.0, 1.0]]])[0] == "window"
 
 
 def test_clip_fallback_ladder_classification_edge_cases(spark):
@@ -711,10 +711,10 @@ def test_clip_fallback_ladder_classification_edge_cases(spark):
     nan_hole = [[float("nan"), float("nan")]] * 3
     # NaN hole: shell alone is usable, but PIP over [shell, hole] would
     # bbox-NaN to an empty result -> window rung over the finite coords
-    assert joins.classify_clip_geometry([valid, nan_hole]) == "window"
+    assert joins._classify_and_bbox([valid, nan_hole])[0] == "window"
     # collinear shell with 3 distinct vertices and 2-D bbox extent
-    assert joins.classify_clip_geometry(
-        [[[0.0, 0.0], [1.0, 1.0], [2.0, 2.0], [0.0, 0.0]]]) == "window"
+    assert joins._classify_and_bbox(
+        [[[0.0, 0.0], [1.0, 1.0], [2.0, 2.0], [0.0, 0.0]]])[0] == "window"
     # degenerate first shell + valid second shell: window bbox must span both
     pts = spark.createDataFrame(
         [(1, 77.05, 28.05, 1.0), (2, 77.5, 28.5, 2.0), (3, 78.5, 29.5, 3.0)],

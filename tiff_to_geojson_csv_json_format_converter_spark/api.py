@@ -11,10 +11,11 @@ Script-parity map:
 - ``nearest(queries)``         <- pyc getElevation JS (kNN k=1)
 - ``catalog()``                <- create_master_catalog
 
-Per-image output files (GeoJSON / CSV / JSON / readme) are assembled
-from ONE distributed pass; file writing is bounded by the reference's
-own output caps (10k GeoJSON features), so the driver-side assembly is
-O(files + capped features), never O(pixels).
+Where the GeoJSON goes: ``convert()`` has one builder,
+``sinks.geojson_collection_docs``, which assembles each image id's
+FeatureCollection in the executors. The driver streams the finished
+documents with ``toLocalIterator()`` and writes each to
+``<id>_wgs84.geojson``; it never assembles a feature.
 
 Where the points go: ``tiles()``, ``catalog()``, ``analyze()`` and
 ``zonal_response()`` only need aggregates, so they aggregate inside the
@@ -97,52 +98,23 @@ class Converter:
             "data_sparsity", F.when(pct < 0.1, "sparse").otherwise("dense")
         )
 
-    def convert(self, out_dir: str, mode: str = "sampled", geojson_cap: int | None = None) -> dict:
+    def convert(self, out_dir: str, mode: str = "sampled") -> dict:
         """Write per-image GeoJSON (+CSV for sampled mode) files + master
         catalog + combined CSV, mirroring the reference converters'
         on-disk contract."""
         os.makedirs(out_dir, exist_ok=True)
-        cap = geojson_cap or extract.MAX_GEOJSON_POINTS
         pts = self.points(mode)
-        geo_pts = extract.extract_points(
-            self.images,
-            valid_only=(mode == "valid"),
-            sample_cap=extract.MAX_FRONTEND_POINTS if mode == "sampled" else None,
-            geojson_cap=cap if mode == "sampled" else None,
+        # sampled mode adds the GeoJSON cap (doesSamples.py:145-150)
+        geo_pts = pts if mode != "sampled" else extract.extract_points(
+            self.images, valid_only=False, sample_cap=extract.MAX_FRONTEND_POINTS,
+            geojson_cap=extract.MAX_GEOJSON_POINTS,
         )
-        # deterministic feature order: collect (pixel_idx, feature)
-        # structs and sort — collect_list alone is shuffle-order-dependent
-        # (same fix sinks.geojson_collection_docs carries)
-        feats = (
-            geo_pts.filter(F.col("band") == 0)
-            .groupBy("image_id")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct(
-                        F.col("pixel_idx").alias("o"),
-                        sinks.geojson_feature_col().alias("f"),
-                    ))),
-                    lambda s_: s_["f"],
-                ).alias("features"),
-                F.count("*").alias("n"),
-            )
-        )
+        docs = sinks.geojson_collection_docs(geo_pts.filter(F.col("band") == 0), self.images)
         written = []
-        for row in feats.toLocalIterator():
-            fc = {
-                "type": "FeatureCollection",
-                "crs": {"type": "name", "properties": {"name": "urn:ogc:def:crs:OGC:1.3:CRS84"}},
-                "metadata": {
-                    "source_file": row["image_id"],
-                    "geojson_points": row["n"],
-                    "note": "Coordinates in WGS84 (longitude, latitude, elevation)",
-                },
-                "features": ["@@F@@"],
-            }
-            body = json.dumps(fc, separators=(",", ":")).replace('"@@F@@"', ",".join(row["features"]))
+        for row in docs.toLocalIterator():
             p = os.path.join(out_dir, f"{row['image_id']}_wgs84.geojson")
-            with open(p, "w") as f:
-                f.write(body)
+            with open(p, "w", encoding="utf-8") as f:
+                f.write(row["doc"])
             written.append(p)
         # combined CSV with lineage (completePixleOutput.py:252-282)
         sinks.write_csv_per_image(pts, os.path.join(out_dir, "combined_csv"))

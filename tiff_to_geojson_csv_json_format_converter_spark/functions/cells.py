@@ -130,15 +130,6 @@ def k_ring_xy(tx: int, ty: int, level: int, k: int) -> np.ndarray:
     return xy_to_cell(gx.ravel(), gy.ravel(), level)
 
 
-def ring_only_xy(tx: int, ty: int, level: int, k: int) -> np.ndarray:
-    """Cells at exactly Chebyshev distance k (the expanding shell)."""
-    if k == 0:
-        return xy_to_cell(np.array([tx]), np.array([ty]), level)
-    full = k_ring_xy(tx, ty, level, k)
-    inner = set(k_ring_xy(tx, ty, level, k - 1).tolist())
-    return np.array([c for c in full.tolist() if c not in inner], dtype=np.int64)
-
-
 def cover_bbox(min_lon: float, min_lat: float, max_lon: float, max_lat: float, level: int) -> np.ndarray:
     """Cell ids covering a lon/lat bbox at ``level`` (the polygon cover of
     the cell-cover join, SURVEY.md D3), kept as the per-polygon test

@@ -150,19 +150,6 @@ def classify_cells_interior(cell_boxes: np.ndarray,
     return inside & ~overlap
 
 
-def buffer_ring_centroid_quirk(ring: Ring, dist: float) -> np.ndarray:
-    """The round-1 centroid-scaling shortcut, kept as a documented quirk:
-    pushes each vertex away from the centroid. WRONG for concave shells
-    (edges near reflex corners can move inward); use ``buffer_ring``."""
-    r = close_ring(ring)[:-1]
-    c = r.mean(axis=0)
-    v = r - c
-    norm = np.linalg.norm(v, axis=1, keepdims=True)
-    norm[norm == 0] = 1.0
-    out = r + v / norm * dist
-    return close_ring(out)
-
-
 def normalize_geometry(obj: Any) -> list[list[list[float]]]:
     """Normalize the reference's accepted geometry shapes (test2.py:256-272,
     get_raster_stats_direct.py:39-52) into a list of polygons, each a list

@@ -564,11 +564,12 @@ def _within_k(group, value, k: int):
     return order[(v <= kth) | np.isnan(kth)]
 
 
-def classify_clip_geometry(rings: list) -> str:
-    """D4 trigger classification (test2.py:1264-1357), re-expressed as
-    DATA conditions: the reference's 4-rung try/except ladder fires on
-    rasterio exceptions, which deterministic numpy kernels don't throw —
-    what actually varies is the GEOMETRY's usability.
+def _classify_and_bbox(rings: list) -> tuple[str, tuple | None]:
+    """(rung, finite-coords bbox or None): the D4 trigger classification
+    (test2.py:1264-1357), re-expressed as DATA conditions: the
+    reference's 4-rung try/except ladder fires on rasterio exceptions,
+    which deterministic numpy kernels don't throw — what actually varies
+    is the GEOMETRY's usability.
 
     - 'clip':   shell has >= 3 distinct finite vertices and nonzero
                 bbox area -> exact PIP is well-defined (reference rung 1;
@@ -590,12 +591,6 @@ def classify_clip_geometry(rings: list) -> str:
     and the window bbox spans every ring's FINITE coordinates (the
     _rings_bbox multi-shell invariant).
     """
-    return _classify_and_bbox(rings)[0]
-
-
-def _classify_and_bbox(rings: list) -> tuple[str, tuple | None]:
-    """(rung, finite-coords bbox or None) — shared by the public
-    classifier and the ladder so both use identical geometry logic."""
     nonempty = [np.asarray(r, dtype=np.float64).reshape(-1, 2)
                 for r in (rings or []) if len(r)]
     if not nonempty:

@@ -14,8 +14,10 @@ Formatting contracts preserved:
   fold (doesSamples.py:351-466)
 
 String assembly happens in built-in expressions (format_string/concat —
-JVM); envelopes that are single documents are assembled driver-side from
-aggregate query results (they are O(files), not O(points)).
+JVM). The per-image GeoJSON documents are assembled executor-side
+(:func:`geojson_collection_docs`); the catalog and struct-of-arrays
+documents are assembled driver-side from aggregate query results (they
+are O(files) or capped, not O(points)).
 """
 
 from __future__ import annotations
@@ -172,11 +174,6 @@ def write_compressed_outputs(images_df: DataFrame, out_dir: str,
     )
 
 
-def csv_line_col(lon="longitude", lat="latitude", z="elevation", fmt: str = "%.6f"):
-    """One formatted CSV line per point (header handled by the writer)."""
-    return F.format_string(f"{fmt},{fmt},{fmt}", F.col(lon), F.col(lat), F.col(z))
-
-
 def geojson_feature_col(lon="longitude", lat="latitude", z="elevation"):
     """GeoJSON Feature string, byte-compatible with the reference's
     json.dump(separators=(',',':')) of the rounded values
@@ -218,87 +215,48 @@ def write_csv_per_image(points: DataFrame, path: str, fmt: str = "%.6f") -> None
     )
 
 
-def geojson_feature_collection(points: DataFrame, source_file: str,
-                               total_original_points: int) -> str:
-    """Driver-assembled FeatureCollection envelope
-    (completePixleOutput.py:108-124). Use only for bounded outputs
-    (the reference caps GeoJSON at 10k features)."""
-    feats = [r[0] for r in points.select(geojson_feature_col()).collect()]
-    envelope = {
-        "type": "FeatureCollection",
-        "crs": {"type": "name", "properties": {"name": "urn:ogc:def:crs:OGC:1.3:CRS84"}},
-        "metadata": {
-            "source_file": source_file,
-            "total_original_points": total_original_points,
-            "geojson_points": len(feats),
-            "note": "Coordinates in WGS84 (longitude, latitude, elevation)",
-        },
-        "features": ["@@F@@"],
-    }
-    body = json.dumps(envelope, separators=(",", ":"))
-    return body.replace('"@@F@@"', ",".join(feats))
+def geojson_collection_docs(points: DataFrame, images: DataFrame) -> DataFrame:
+    """The per-image FeatureCollection (completePixleOutput.py:108-128):
+    one ``(image_id, doc)`` row per image id with points, the document
+    assembled executor-side, so the driver never touches a feature.
 
-
-def geojson_collection_docs(points: DataFrame, images: DataFrame,
-                            order_col: str = "pixel_idx",
-                            source_suffix: str = "") -> DataFrame:
-    """Distributed FeatureCollection builder: one envelope STRING per
-    image, byte-identical to ``geojson_feature_collection``, assembled
-    entirely executor-side.
-
-    One shuffle (groupBy image_id) + one broadcastable join against the
-    image catalog for total_original_points; the driver never touches a
-    feature. This is the 100 TB surface for the A6 sink — the collected
-    variant above stays for the reference's capped (≤10k features)
-    request/response path. Features are ordered by ``order_col`` so the
-    output is a pure function of the data, not of the shuffle.
+    ``doc`` is ``json.dumps(envelope, separators=(',',':'))`` of the
+    reference envelope ``{type, crs, metadata{source_file,
+    total_original_points, geojson_points, note}, features}`` (for a
+    non-ASCII id Spark writes the raw UTF-8 where ``json.dumps`` writes
+    ``\\u`` escapes). Features are ordered by ``pixel_idx``, so the
+    document is a pure function of the data, not of the shuffle.
+    ``total_original_points`` is ``w*h`` summed over the id's images
+    rows: a repeated id gets one document holding every row's points.
     """
-    feats = points.select(
-        "image_id",
-        F.col(order_col).alias("_o"),
-        geojson_feature_col().alias("_f"),
-    )
-    per_img = feats.groupBy("image_id").agg(
+    per_img = points.groupBy("image_id").agg(
         F.array_join(
             F.transform(
-                F.array_sort(F.collect_list(F.struct("_o", "_f"))),
+                F.array_sort(F.collect_list(F.struct(
+                    F.col("pixel_idx").alias("_o"), geojson_feature_col().alias("_f")))),
                 lambda s: s["_f"],
             ),
             ",",
         ).alias("_body"),
         F.count("*").alias("_n"),
     )
-    totals = images.select(
-        "image_id", (F.col("w").cast("long") * F.col("h")).alias("_total")
-    )
-    header = F.format_string(
-        '{"type":"FeatureCollection",'
-        '"crs":{"type":"name","properties":{"name":"urn:ogc:def:crs:OGC:1.3:CRS84"}},'
-        '"metadata":{"source_file":"%s","total_original_points":%s,'
-        '"geojson_points":%s,'
-        '"note":"Coordinates in WGS84 (longitude, latitude, elevation)"},'
-        '"features":[',
-        F.concat(F.col("image_id"), F.lit(source_suffix)),
-        F.col("_total").cast("string"),
-        F.col("_n").cast("string"),
-    )
-    return (
-        per_img.join(F.broadcast(totals), "image_id")
-        .select("image_id", F.concat(header, F.col("_body"), F.lit("]}")).alias("doc"))
-    )
-
-
-def write_geojson_per_image(points: DataFrame, images: DataFrame, path: str,
-                            order_col: str = "pixel_idx") -> None:
-    """Write one ``<image_id>/part-*.txt`` FeatureCollection per image via
-    the distributed text writer — no driver materialization."""
-    (
-        geojson_collection_docs(points, images, order_col=order_col)
-        .withColumnRenamed("doc", "value")
-        .repartition("image_id")
-        .write.mode("overwrite")
-        .partitionBy("image_id")
-        .text(path)
+    totals = images.groupBy("image_id").agg(
+        F.sum(F.col("w").cast("long") * F.col("h")).alias("_total"))
+    # to_json escapes the id as JSON; the struct fixes the key order
+    metadata = F.to_json(F.struct(
+        F.col("image_id").alias("source_file"),
+        F.col("_total").alias("total_original_points"),
+        F.col("_n").alias("geojson_points"),
+        F.lit("Coordinates in WGS84 (longitude, latitude, elevation)").alias("note"),
+    ))
+    return per_img.join(F.broadcast(totals), "image_id").select(
+        "image_id",
+        F.concat(
+            F.lit('{"type":"FeatureCollection",'
+                  '"crs":{"type":"name","properties":{"name":"urn:ogc:def:crs:OGC:1.3:CRS84"}},'
+                  '"metadata":'),
+            metadata, F.lit(',"features":['), F.col("_body"), F.lit("]}"),
+        ).alias("doc"),
     )
 
 
@@ -507,13 +465,11 @@ def fixed_point_col(col, digits: int = 6):
 
 
 def analyze_report_df(per_image: DataFrame) -> DataFrame:
-    """A10, driver-checkable form: :func:`analyze_report`'s exact line
-    structure as (line_no, line) rows, entirely in Catalyst — header,
-    ruler, thousands-separated totals (format_number), then one line per
-    image sorted by image_id with bounds at fixed %.6f (the portable
-    integer assembly of :func:`fixed_point_col`, where the driver-side
-    string uses Python float repr). Input is the analyze_images
-    aggregate (test.py:366-515).
+    """A10: the master report (test.py:366-515) as (line_no, line) rows,
+    entirely in Catalyst — header, ruler, thousands-separated totals
+    (format_number), then one line per image sorted by image_id with
+    bounds at fixed %.6f (the portable integer assembly of
+    :func:`fixed_point_col`). Input is the analyze_images aggregate.
 
     Scale note: line numbering uses a GLOBAL-order window (no
     partitionBy), which funnels the per-image rows through one task by
@@ -614,24 +570,3 @@ def json_envelope_rows(points: DataFrame, group_col: str = "image_id",
             F.lit("]}}"),
         ).alias("envelope"),
     )
-
-
-def analyze_report(per_image: DataFrame) -> str:
-    """Human-readable master report (test.py:366-515): totals + sparsity
-    histogram from the analyze aggregates."""
-    rows = [r.asDict() for r in per_image.collect()]
-    total_files = len(rows)
-    total_valid = sum(r.get("valid_pixels", 0) for r in rows)
-    lines = [
-        "TIFF ANALYSIS MASTER REPORT",
-        "=" * 50,
-        f"Total files analyzed: {total_files}",
-        f"Total valid points: {total_valid:,}",
-    ]
-    for r in rows:
-        lines.append(
-            f"  {r['image_id']}: {r.get('valid_pixels', 0):,} valid points "
-            f"bounds=({r.get('min_longitude')},{r.get('min_latitude')})..."
-            f"({r.get('max_longitude')},{r.get('max_latitude')})"
-        )
-    return "\n".join(lines)

@@ -1637,7 +1637,7 @@ _JACCARD_NOBLOCK_SQL = """
 @_register(
     "minhash_lsh_pairs",
     f"""
-    WITH RECURSIVE pairs AS ({_JACCARD_NOBLOCK_SQL}),
+    WITH RECURSIVE pairs AS MATERIALIZED ({_JACCARD_NOBLOCK_SQL}),
     edges AS (
         SELECT doc_a AS u, doc_b AS v FROM pairs
         UNION ALL SELECT doc_b, doc_a FROM pairs
