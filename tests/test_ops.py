@@ -125,32 +125,35 @@ class TestDedup:
         for _, r in got.iterrows():
             assert r["jaccard_e6"] == int(np.floor(r["n_inter"] / r["n_union"] * 1e6))
 
-    def test_jaccard_cache_scope_leaves_no_cached_relations(self, spark, planted_docs):
-        """Two sequential corpora, each through an owner-managed
-        CacheScope, must leave zero persisted relations behind —
-        no session-lifetime cache leak across corpus loops."""
+    def test_jaccard_pairs_persists_nothing(self, spark, planted_docs):
+        """jaccard_pairs caches nothing: no RDD is persisted once the
+        frame is built, after it is collected, or after its (no-effect)
+        CacheScope closes, with or without a scope passed."""
         def persisted():
             return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
 
         baseline = persisted()  # other tests in the shared session may cache
-        # shifted ids: plans must differ from every other test's, else
-        # Spark's cacheManager resolves cache() to the already-cached
-        # session-lifetime relation and no new RDD would appear
-        corpora = [
-            planted_docs.withColumn("doc_id", planted_docs["doc_id"] + 1000),
-            planted_docs.withColumn("doc_id", planted_docs["doc_id"] + 2000),
-        ]
-        results = []
-        for corpus in corpora:
+        # shifted ids: a plan no other test built
+        corpus = planted_docs.withColumn("doc_id", planted_docs["doc_id"] + 1000)
+        for with_scope in (False, True):
             with dedup.CacheScope() as scope:
-                out = dedup.jaccard_pairs(
-                    corpus, n=4, threshold_e6=600_000, scope=scope
-                ).collect()
-                results.append(len(out))
-                # cache is live while the owner still holds the scope
-                assert persisted() - baseline
+                df = dedup.jaccard_pairs(corpus, n=4, threshold_e6=600_000,
+                                         scope=scope if with_scope else None)
+                assert persisted() - baseline == set()
+                assert len(df.collect()) >= 6
+                assert persisted() - baseline == set()
             assert persisted() - baseline == set()
-        assert results[0] == results[1] > 0  # shifted ids, same pairs
+
+    def test_pair_operators_run_no_job_when_built(self, spark, spark_jobs, planted_docs):
+        """Building either dedup pair operator's frame runs no Spark job
+        (no count of the corpus at composition); its rows are unchanged."""
+        for build in (
+            lambda: dedup.jaccard_pairs(planted_docs, n=4, threshold_e6=600_000, block_col="source"),
+            lambda: dedup.minhash_lsh_pairs(planted_docs, n=4, threshold_e6=600_000),
+        ):
+            df, n_jobs = spark_jobs(build)
+            assert n_jobs == 0
+            assert len(df.collect()) >= 6
 
     def test_minhash_lsh_recall_on_planted_dups(self, spark, planted_docs):
         exact = dedup.jaccard_pairs(planted_docs, n=4, threshold_e6=600_000).toPandas()
@@ -564,39 +567,64 @@ def test_ivf_distributed_training_exact_in_exhaustive_mode(spark):
     assert key(got) == key(want)
 
 
-@pytest.mark.parametrize("threshold_e6", [300_000, 500_000, 800_000])
-def test_jaccard_pairs_equals_bruteforce(spark, threshold_e6):
-    """PPJoin prefix+positional filtering must reproduce the naive
-    all-pairs answer exactly — adversarial corpus: empty text, sub-n
-    text, exact duplicates, near-dups, disjoint vocab."""
-    n = 3
-    docs = [
-        (0, "", "s"), (1, "ab", "s"), (2, "abcabc", "s"), (3, "abcabc", "s"),
-        (4, "abcabd", "s"), (5, "xyzxyzxyz", "s"), (6, "abcxyz", "s"),
-        (7, "aaaaaaaa", "s"), (8, "aaabaaab", "s"), (9, "the quick brown fox", "s"),
-        (10, "the quick brown fax", "s"), (11, "zzzz", "t"),  # other block
-        (12, "zzzz", "t"), (13, "abcabc", "t"),
+def _jaccard_corpus(name):
+    if name == "adversarial":  # empty, sub-n, exact dups, near-dups, disjoint
+        return [
+            (0, "", "s"), (1, "ab", "s"), (2, "abcabc", "s"), (3, "abcabc", "s"),
+            (4, "abcabd", "s"), (5, "xyzxyzxyz", "s"), (6, "abcxyz", "s"),
+            (7, "aaaaaaaa", "s"), (8, "aaabaaab", "s"), (9, "the quick brown fox", "s"),
+            (10, "the quick brown fax", "s"), (11, "zzzz", "t"),  # other block
+            (12, "zzzz", "t"), (13, "abcabc", "t"),
+        ]
+    if name == "hot_shingle":  # one long substring, so its shingles are in every set
+        hot, rng = "abcdefghijklmnopqrstuvwxyz0123456789", np.random.default_rng(7)
+        return [(i, hot + " " + " ".join(rng.choice(BASE.split(), int(rng.integers(1, 12)))), "s")
+                for i in range(24)]
+    if name == "nulls":
+        return [(0, "the quick brown fox", "s"), (1, "the quick brown fax", "s"),
+                (2, None, "s"), (3, None, "s"), (4, "zzzz", None), (5, "zzzz", None),
+                (6, None, None), (7, "the quick brown fox", "t"),
+                (None, "the quick brown fox", "s")]
+    # cross_bucket: one block of many near-dups, so their pairs span
+    # documents of different hash buckets
+    return [(i, BASE[: 40 + 3 * (i % 5)] + " " + str(i % 3), "s") for i in range(30)]
+
+
+_BRUTEFORCE_CASES = [
+    pytest.param(t, corpus, block_col,
+                 id=str(t) if (corpus, block_col) == ("adversarial", "source")
+                 else f"{corpus}-{block_col}-{t}")
+    for corpus, block_col in [
+        ("adversarial", "source"), ("adversarial", None), ("hot_shingle", "source"),
+        ("nulls", "source"), ("nulls", None), ("cross_bucket", "source"),
     ]
-    got = dedup.jaccard_pairs(
-        spark.createDataFrame(docs, "doc_id long, text string, source string"),
-        n=n, threshold_e6=threshold_e6, block_col="source",
-    ).toPandas()
+    for t in (300_000, 500_000, 800_000)
+]
+
+
+@pytest.mark.parametrize("threshold_e6,corpus,block_col", _BRUTEFORCE_CASES)
+def test_jaccard_pairs_equals_bruteforce(spark, threshold_e6, corpus, block_col):
+    """The cell pass must reproduce the naive all-pairs answer exactly,
+    with the oracle SQL's semantics: a null id, a null text or (when
+    blocking) a null block is no document."""
+    n = 3
+    docs = _jaccard_corpus(corpus)
+    frame = spark.createDataFrame(docs, "doc_id long, text string, source string")
+    got = dedup.jaccard_pairs(frame, n=n, threshold_e6=threshold_e6, block_col=block_col).toPandas()
     got_set = {(r.doc_a, r.doc_b): (r.n_inter, r.n_union, r.jaccard_e6)
                for r in got.itertuples(index=False)}
 
     def shingle_set(t):
-        if len(t) < n:
-            return {t[i:i + n] for i in range(max(len(t) - n + 1, 1))}
-        return {t[i:i + n] for i in range(len(t) - n + 1)}
+        return {t[i:i + n] for i in range(max(len(t) - n + 1, 1))}
 
     want = {}
     for i, (ida, ta, sa) in enumerate(docs):
         for idb, tb, sb in docs[i + 1:]:
-            if sa != sb:
+            if None in (ida, idb, ta, tb):
+                continue
+            if block_col and (sa is None or sa != sb):
                 continue
             A, B = shingle_set(ta), shingle_set(tb)
-            if not A or not B:
-                continue
             inter = len(A & B)
             union = len(A | B)
             j_e6 = int(np.floor(inter / union * 1e6))
@@ -604,6 +632,34 @@ def test_jaccard_pairs_equals_bruteforce(spark, threshold_e6):
                 lo, hi = min(ida, idb), max(ida, idb)
                 want[(lo, hi)] = (inter, union, j_e6)
     assert got_set == want, (sorted(got_set), sorted(want))
+    if corpus == "cross_bucket":
+        b = dedup._bucket("doc_id", dedup._n_buckets(spark))
+        bucket = dict(frame.select("doc_id", b.alias("b")).collect())
+        assert {bucket[a] != bucket[b] for a, b in want} == {True, False}
+
+
+def test_null_text_is_no_document(spark):
+    """A null text has no shingles, so it pairs with nothing, and with a
+    block a null block pairs with nothing: jaccard_pairs equals the
+    registered ngram_jaccard oracle SQL run by DuckDB, and
+    minhash_lsh_pairs (no block) finds only the two real pairs."""
+    import duckdb
+
+    from tiff_to_geojson_csv_json_format_converter_spark.plans import entry_queries
+
+    fox = BASE
+    rows = [(1, "s", fox), (2, "s", fox + " x"), (3, "s", None), (4, "s", None),
+            (5, None, "zzzz"), (6, None, "zzzz")]
+    documents = pd.DataFrame(rows, columns=["doc_id", "source", "text"])
+    con = duckdb.connect()
+    con.register("documents", documents)
+    want = sorted(con.execute(entry_queries.oracle_sql()["ngram_jaccard"]).fetchall())
+    docs = spark.createDataFrame(rows, "doc_id long, source string, text string")
+    got = sorted(tuple(r) for r in dedup.jaccard_pairs(
+        docs, n=4, threshold_e6=300_000, block_col="source").collect())
+    assert got == want and [r[:2] for r in want] == [(1, 2)]
+    lsh = dedup.minhash_lsh_pairs(docs, n=4, num_hashes=64, bands=64, threshold_e6=300_000)
+    assert sorted((r.doc_a, r.doc_b) for r in lsh.collect()) == [(1, 2), (5, 6)]
 
 
 def test_jaccard_pairs_keep_ids_above_2_53(spark):

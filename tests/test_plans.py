@@ -135,26 +135,20 @@ def test_tiles_plan_one_exchange_no_python_eval(spark):
     assert "ArrowEvalPython" not in p and "BatchEvalPython" not in p
 
 
-def test_catalog_runs_one_job(spark, monkeypatch):
+def test_catalog_runs_one_job(spark, spark_jobs, monkeypatch):
     """Converter.catalog(): one collect() of the per-images-row summaries,
     a plan with no Exchange; the merge and the sort run on the driver."""
     from tiff_to_geojson_csv_json_format_converter_spark.api import Converter
     from tiff_to_geojson_csv_json_format_converter_spark.operators import sinks
 
-    sc = spark.sparkContext
     conv = Converter(spark, synth.images_df(spark, "xs"))
     seen = []
     real = sinks.catalog_document
     monkeypatch.setattr(sinks, "catalog_document",
                         lambda summaries: seen.append(summaries) or real(summaries))
-    sc.setJobGroup("test-catalog-jobs", "Converter.catalog")
-    try:
-        cat = conv.catalog()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
+    cat, n_jobs = spark_jobs(conv.catalog)
     assert cat["total_files"] == synth.SCALES["xs"][0]
-    assert len(sc.statusTracker().getJobIdsForGroup("test-catalog-jobs")) == 1
+    assert n_jobs == 1
     assert len(seen) == 1 and "Exchange" not in plan_str(seen[0])
 
 
@@ -484,18 +478,27 @@ def test_clip_operators_are_one_arrow_udf_above_the_bbox_filter(spark):
         assert "elevation" not in pruned[0].child().output().toString()
 
 
-def test_jaccard_join_is_prefix_equi_join(spark):
-    """Prefix-filter jaccard: the self-join is an equi-join on the hashed
-    shingle (+block) — no cartesian anywhere in the plan."""
+def test_jaccard_pairs_is_one_cell_pass(spark):
+    """jaccard_pairs is one pass, blocked or not: shingle sets in
+    codegen, the pack and the grid replication, ONE Exchange on the
+    cell, one kernel. No window, join, aggregate, cached relation or
+    cartesian product."""
+    import re
+
     from tiff_to_geojson_csv_json_format_converter_spark.operators import dedup
 
     docs = spark.createDataFrame(
         [(1, "abcdefgh", "s"), (2, "abcdefgx", "s")], "doc_id long, text string, source string"
     )
-    df = dedup.jaccard_pairs(docs, 3, 500_000, block_col="source")
-    p = plan_str(df)
-    assert "CartesianProduct" not in p
-    assert "sh64" in p
+    for block_col in ("source", None):
+        p = plan_str(dedup.jaccard_pairs(docs, 3, 500_000, block_col=block_col))
+        nodes = re.findall(r"^\(\d+\) (?:\* )?(\w+)", p, re.M)
+        assert nodes.count("Exchange") == 1, nodes
+        assert [n for n in nodes if "Python" in n or n.startswith(("MapIn", "FlatMap"))] \
+            == ["MapInPandas", "MapInPandas"], nodes
+        assert not [n for n in nodes if n in ("Window", "InMemoryRelation", "InMemoryTableScan",
+                                              "CartesianProduct")
+                    or n.endswith(("Join", "Aggregate"))], nodes
 
 
 def test_cell_cover_join_is_one_arrow_pass(spark):

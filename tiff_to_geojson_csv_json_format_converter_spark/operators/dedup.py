@@ -3,26 +3,30 @@
 Four families, each a first-class engine operator:
 
 - exact:      md5 content hash -> groupBy (one shuffle; map-side combine)
-- n-gram Jaccard: exact set similarity via an inverted shingle index
-  (explode -> equi-join on (block, shingle) -> group by pair). The
-  blocking column bounds the join fan-out at scale.
+- n-gram Jaccard: exact set similarity in one pass over a bucket grid
+  (shingle sets -> replicate each doc to the cells of its hash bucket
+  -> one repartition on (block, cell) -> one kernel per cell counting
+  every pair's intersection). The blocking column splits the cells.
 - MinHash+LSH: signature pandas UDF -> band/bucket equi-join ->
-  candidate pairs verified with exact Jaccard (the scale path: no
-  pairwise work outside colliding buckets).
+  candidate pairs verified with exact Jaccard on the same bucket grid
+  (the scale path: no pairwise work outside colliding buckets).
 - SimHash: 64-bit token-majority hash; Hamming-<=r pairs found by the
   pigeonhole band trick ((r+1) bands, equi-join per band).
 
 All shingle/token expansion uses built-in sequence/transform/explode
-(JVM codegen); only the signature computations are (Arrow-batched)
-pandas UDFs.
+(JVM); only the signatures, the set packing and the per-cell pair
+counting are (Arrow-batched) pandas UDFs.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import BinaryType, StructField, StructType
+
+from .similarity import _bucketed_kernel
 
 _P61 = (1 << 61) - 1
 
@@ -40,205 +44,191 @@ def exact_dedup(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -
     )
 
 
-def shingles(df: DataFrame, n: int = 3, id_col: str = "doc_id", text_col: str = "text",
-             extra_cols: tuple = ()) -> DataFrame:
-    """Distinct character n-gram shingles per doc — pure built-ins:
-    sequence -> transform(substring) -> array_distinct -> explode."""
-    arr = F.expr(
+def _shingle_set(n: int, text_col: str):
+    """The distinct character n-grams of ``text_col`` as xxhash64 longs,
+    in codegen: sequence -> transform(xxhash64(substr)) ->
+    array_distinct (over longs: cheaper than over the strings). NULL for
+    a NULL text, which is no document (without the guard ``greatest``
+    skips the NULL length and every null text gets the set
+    {xxhash64(NULL)} = {42}).
+
+    Sizes, intersections and Jaccard are invariant under any injective
+    renaming of shingles; a 64-bit collision within one compared pair's
+    union (the only event that could change a count) has probability
+    ~|A∪B|²/2⁶⁵ < 1e-13 per pair."""
+    return F.when(F.col(text_col).isNotNull(), F.expr(
         f"array_distinct(transform(sequence(1, greatest(length({text_col}) - {n - 1}, 1)),"
-        f" i -> substr({text_col}, i, {n})))"
-    )
-    return df.select(id_col, *extra_cols, F.explode(arr).alias("shingle"))
+        f" i -> xxhash64(substr({text_col}, i, {n}))))"))
 
 
 class CacheScope:
-    """Owner-managed lifetime for multi-consumer cached intermediates.
-
-    Operators that cache a relation consumed several times downstream
-    (``jaccard_pairs``'s per-doc prefix table) register it here instead
-    of leaking a session-lifetime cache; the owner releases everything
-    at once::
-
-        with CacheScope() as scope:
-            pairs = jaccard_pairs(docs, scope=scope).collect()
-        # all caches registered by the call are unpersisted here
-
-    Re-entrant and idempotent; usable as a plain object too
-    (call :meth:`release` explicitly, e.g. from a finally block).
-    """
-
-    def __init__(self):
-        self._dfs: list[DataFrame] = []
-
-    def cache(self, df: DataFrame) -> DataFrame:
-        df = df.cache()
-        self._dfs.append(df)
-        return df
-
-    def release(self) -> None:
-        while self._dfs:
-            self._dfs.pop().unpersist()
+    """No effect: no dedup operator caches anything any more.
+    ``jaccard_pairs`` still accepts ``scope=`` (and this class still
+    works as a context manager) only for callers that pass one."""
 
     def __enter__(self) -> "CacheScope":
         return self
 
     def __exit__(self, *exc) -> bool:
-        self.release()
         return False
 
 
+_PAIRS_COLS = ["doc_a", "doc_b", "n_inter", "n_union", "jaccard_e6"]
+
+
+def _bucket(col: str, n_buckets: int):
+    return F.pmod(F.xxhash64(col), F.lit(n_buckets)).cast("int")
+
+
+def _n_buckets(spark) -> int:
+    """B = ceil(sqrt(2 * defaultParallelism)): the B(B+1)/2 cells of the
+    bucket grid spread over the cores with no count of the input."""
+    return int(np.ceil(np.sqrt(2 * max(spark.sparkContext.defaultParallelism, 1))))
+
+
+def _replicated_sets(sets_df: DataFrame, id_col: str, keys: list, B: int) -> DataFrame:
+    """The bucket grid both dedup pair operators verify on. Each row of
+    ``sets_df`` (``id_col``, ``*keys``, ``sh_set`` array<long>) becomes
+    one ``blob`` and is replicated to the B cells ``(*keys, min(b, o),
+    max(b, o))``, o in 0..B-1, of its own bucket b = pmod(xxhash64(id),
+    B): every pair of documents with equal keys meets in exactly one
+    cell.
+
+    The sets ride the replication shuffle AND the Arrow boundary as ONE
+    binary memcpy per row: as array<long> cells the same bytes pay
+    per-element UnsafeArrayData<->Arrow conversion on both sides
+    (measured 14.8s of pure delivery at 4x vs <2s packed; PLANS.md
+    'Blocked cosine'). Shingle hashes are full-range int64, so the blob
+    is fixed-width '<i8' with no width tag.
+
+    Returns the grid (``*keys, bi, bj, b, doc_a, blob``)."""
+    schema = sets_df.schema
+    packed_schema = StructType([schema[k] for k in keys] + [
+        StructField("doc_a", schema[id_col].dataType, False),
+        StructField("blob", BinaryType()),
+    ])
+
+    def pack(batches):
+        for pdf in batches:
+            out = pdf[keys].copy()
+            out["doc_a"] = pdf[id_col]
+            out["blob"] = [np.asarray(a, dtype=np.int64).tobytes() for a in pdf["sh_set"].to_numpy()]
+            yield out
+
+    return (
+        sets_df.select(*keys, id_col, "sh_set").mapInPandas(pack, packed_schema)
+        .withColumn("b", _bucket("doc_a", B))
+        .withColumn("o", F.explode(F.sequence(F.lit(0), F.lit(B - 1))))
+        .select(*keys, F.least("b", "o").alias("bi"), F.greatest("b", "o").alias("bj"),
+                "b", "doc_a", "blob")
+    )
+
+
+def _run_cells(grid: DataFrame, keys: list, cell, id_t: str) -> DataFrame:
+    """One hash repartition on the cell, then one kernel call per cell;
+    ~2 tasks per core (python tasks pay a worker round-trip each)."""
+    n_partitions = 2 * max(grid.sparkSession.sparkContext.defaultParallelism, 1)
+    cell_keys = [*keys, "bi", "bj"]
+    return grid.repartition(n_partitions, *cell_keys).mapInPandas(
+        _bucketed_kernel(cell_keys, cell),
+        f"doc_a {id_t}, doc_b {id_t}, n_inter long, n_union long, jaccard_e6 long")
+
+
+def _decode_sets(blobs) -> tuple[np.ndarray, np.ndarray]:
+    """Packed sets -> (vocabulary codes of every element, set offsets)."""
+    arrs = [np.frombuffer(b, dtype="<i8") for b in blobs]
+    lens = np.fromiter(map(len, arrs), dtype=np.int64, count=len(arrs))
+    codes = np.unique(np.concatenate(arrs), return_inverse=True)[1]
+    return codes, np.concatenate([[0], np.cumsum(lens)])
+
+
+def _scored_pairs(ids: np.ndarray, codes: np.ndarray, offs: np.ndarray,
+                  pai: np.ndarray, pbi: np.ndarray, threshold_e6: int) -> pd.DataFrame:
+    """Exact Jaccard of the set pairs (``pai``, ``pbi``) (indices into
+    ``ids`` and the decoded sets; ``pai`` sorted), as output rows
+    (min id, max id, n_inter, n_union, jaccard_e6) at or above
+    ``threshold_e6``.
+
+    |A∩B| by a vocabulary bitmap: per run of one ``pai``, set A's bits,
+    probe the gathered codes of that run's partners (memory ~ one run's
+    partner elements, not pairs x set size), sum per partner, clear.
+    Each element is one O(1) probe and the loop body is a few numpy
+    calls on views."""
+    if not len(pai):
+        return pd.DataFrame({c: [] for c in _PAIRS_COLS})
+    lens = np.diff(offs)
+    mask = np.zeros(int(codes.max()) + 1, dtype=bool)
+    ni = np.empty(len(pai), dtype=np.int64)
+    runs = (np.flatnonzero(pai[1:] != pai[:-1]) + 1).tolist()
+    for s, e in zip([0, *runs], [*runs, len(pai)]):
+        acodes = codes[offs[pai[s]]:offs[pai[s] + 1]]
+        mask[acodes] = True
+        pb = pbi[s:e]
+        pl = lens[pb]
+        ends = np.cumsum(pl)
+        starts = ends - pl
+        hits = np.concatenate([[0], np.cumsum(
+            mask[codes[np.repeat(offs[pb] - starts, pl) + np.arange(ends[-1])]])])
+        ni[s:e] = hits[ends] - hits[starts]
+        mask[acodes] = False
+    nu = lens[pai] + lens[pbi] - ni
+    # the SAME IEEE expression tree as the SQL oracle:
+    # FLOOR(CAST(ni AS DOUBLE) / CAST(nu AS DOUBLE) * 1e6)
+    with np.errstate(divide="ignore", invalid="ignore"):
+        j = np.floor(ni.astype(np.float64) / nu.astype(np.float64) * 1e6)
+    keep = (nu > 0) & (j >= threshold_e6)
+    a, b = ids[pai[keep]], ids[pbi[keep]]
+    return pd.DataFrame({
+        "doc_a": np.minimum(a, b), "doc_b": np.maximum(a, b),
+        "n_inter": ni[keep], "n_union": nu[keep], "jaccard_e6": j[keep].astype(np.int64),
+    })
+
+
 def _verify_jaccard_blocked(cand: DataFrame, sets_df: DataFrame,
-                            threshold_e6: int, n_docs: int,
-                            block_rows: int = 500_000) -> DataFrame:
-    """Exact Jaccard verification of candidate pairs against per-doc
-    distinct-shingle sets, as a BLOCK-PAIR grouped Arrow kernel.
+                            threshold_e6: int) -> DataFrame:
+    """Exact Jaccard verification of candidate pairs on the bucket grid
+    of :func:`_replicated_sets`: each doc's set crosses the shuffle B
+    times, each pair once as two ids into the one cell of its two
+    buckets, and :func:`_scored_pairs` counts the cell's candidates.
 
     Why not the per-pair ``array_intersect`` join: Spark's ArrayIntersect
-    rebuilds a hash set of one operand per ROW, so verifying 540k
-    candidates against ~176-element sets costs ~95M boxed hash inserts —
-    measured ~5s of ngram_jaccard's 6s at sf0.1 while the joins
-    themselves cost ~1s. Here each doc's set crosses the shuffle B times
-    (its hash bucket meets every other bucket once), pairs cross once as
-    two ids, and one kernel per unordered bucket pair sorts each set
-    once then counts intersections with vectorized ``searchsorted``
-    (one call per doc_a over its concatenated partners).
+    rebuilds a hash set of one operand per ROW (measured ~5s of
+    ngram_jaccard's 6s at sf0.1 for 540k candidates). Per-task memory is
+    two buckets of sets, no broadcast, no driver collect. Output equals
+    the array_intersect form: the same integer counts feed the same
+    FLOOR(ni/nu*1e6) IEEE tree.
 
-    Scale shape (same proof as cosine_pairs_blocked): per-task memory is
-    two buckets of sets (bounded by ``block_rows``), no broadcast, no
-    driver collect, everything equi-keyed on (bi, bj). B additionally
-    floors at ~sqrt(2 * parallelism) so small corpora still spread over
-    the cores. Output is bit-identical to the array_intersect form: the
-    same integer counts feed the same FLOOR(ni/nu*1e6) IEEE tree.
-
-    ``cand``: (doc_a, doc_b) — already deduplicated. ``sets_df``:
-    (doc_id, sh_set array<long>) with one row per doc, sets distinct.
-    """
-    from .similarity import _bucketed_kernel
-
-    spark = cand.sparkSession
-    n_parts = spark.sparkContext.defaultParallelism
-    b_floor = int(np.ceil(np.sqrt(2 * max(n_parts, 1))))
-    B = max(-(-max(n_docs, 1) // max(block_rows, 1)), b_floor, 1)
+    ``cand``: (doc_a, doc_b), doc_a < doc_b, deduplicated. ``sets_df``:
+    (doc_id, sh_set array<long>) with one row per doc, sets distinct."""
+    id_col = sets_df.columns[0]
+    B = _n_buckets(cand.sparkSession)
+    grid = _replicated_sets(sets_df, id_col, [], B)
     id_t = cand.schema["doc_a"].dataType.simpleString()
-
-    # the sets ride the B-way replication shuffle AND the Arrow boundary
-    # as ONE binary memcpy per row: as array<long> cells the same bytes
-    # pay per-element UnsafeArrayData<->Arrow conversion on both sides —
-    # measured 14.8s of pure delivery (no-op kernel) at 4x vs <2s packed
-    # (the engine's standing binary-wire rule, PLANS.md 'Blocked
-    # cosine'). Shingle hashes are full-range int64, so the blob is
-    # fixed-width '<i8' with no width tag.
-    sets_id_col = sets_df.columns[0]
-
-    def pack_sets(batches):
-        for pdf in batches:
-            yield pd.DataFrame({
-                "doc_a": pdf[sets_id_col],
-                "blob": [np.asarray(a, dtype=np.int64).tobytes()
-                         for a in pdf["sh_set"].to_numpy()],
-            })
-
-    packed = sets_df.mapInPandas(pack_sets, f"doc_a {id_t}, blob binary")
-    ba = F.pmod(F.xxhash64("doc_a"), F.lit(B)).cast("int")
-    bb = F.pmod(F.xxhash64("doc_b"), F.lit(B)).cast("int")
+    ba, bb = _bucket("doc_a", B), _bucket("doc_b", B)
     rep_pairs = cand.select(
         F.least(ba, bb).alias("bi"), F.greatest(ba, bb).alias("bj"),
-        "doc_a", "doc_b",
-        F.lit(None).cast("binary").alias("blob"),
+        "doc_a", "doc_b", F.lit(None).cast("binary").alias("blob"),
     )
     # set rows repeat their own id as doc_b (the kernel tells them apart
     # by the blob): a null there would make pandas read the whole doc_b
     # column as float64 and corrupt ids above 2^53
-    rep_sets = (
-        packed
-        .withColumn("b", F.pmod(F.xxhash64("doc_a"), F.lit(B)).cast("int"))
-        .withColumn("o", F.explode(F.sequence(F.lit(0), F.lit(B - 1))))
-        .select(
-            F.least("b", "o").alias("bi"), F.greatest("b", "o").alias("bj"),
-            "doc_a", F.col("doc_a").alias("doc_b"), "blob",
-        )
-    )
-    out_schema = (f"doc_a {id_t}, doc_b {id_t}, n_inter long, "
-                  "n_union long, jaccard_e6 long")
-    out_cols = ["doc_a", "doc_b", "n_inter", "n_union", "jaccard_e6"]
+    rep_sets = grid.drop("b").withColumn("doc_b", F.col("doc_a"))
 
     def cell(pdf: pd.DataFrame) -> pd.DataFrame:
-        # Fully batched intersection counting. An earlier version looped
-        # per doc_a with per-iteration fromiter/concatenate/searchsorted;
-        # its ~30-50us fixed cost per doc_a scaled with docs x groups and
-        # dominated at 4x input (measured 19s vs ~8s for the JVM
-        # array_intersect). This version does ONE vocab remap + ONE
-        # element gather per kernel group, then a tight per-doc_a loop of
-        # bitmap set / gather / reduceat — the per-element work is a
-        # direct O(1) bitmap probe (no log factor) and the loop body is
-        # ~6 numpy calls on views.
         is_set = pdf["blob"].notna().to_numpy()
-        prows = pdf[~is_set]
+        prows, srows = pdf[~is_set], pdf[is_set]
         if not len(prows):
-            return pd.DataFrame({c: [] for c in out_cols})
-        srows = pdf[is_set]
-        docs = srows["doc_a"].to_numpy()
-        set_arrs = [np.frombuffer(b, dtype="<i8") for b in srows["blob"].to_numpy()]
-        lens = np.fromiter((len(a) for a in set_arrs), dtype=np.int64,
-                           count=len(set_arrs))
-        flat = np.concatenate(set_arrs) if set_arrs else np.empty(0, np.int64)
-        vocab = np.unique(flat)
-        codes = np.searchsorted(vocab, flat).astype(np.int32)
-        offs = np.concatenate([[0], np.cumsum(lens)])
-        doc2i = {d: i for i, d in enumerate(docs)}
-        pa = prows["doc_a"].to_numpy()
-        pb = prows["doc_b"].to_numpy()
+            return pd.DataFrame({c: [] for c in _PAIRS_COLS})
+        ids = srows["doc_a"].to_numpy()
+        codes, offs = _decode_sets(srows["blob"].to_numpy())
+        doc2i = {d: i for i, d in enumerate(ids.tolist())}
+        pa, pb = prows["doc_a"].to_numpy(), prows["doc_b"].to_numpy()
         order = np.argsort(pa, kind="stable")
-        pa_s, pb_s = pa[order], pb[order]
-        pai = np.fromiter((doc2i[d] for d in pa_s), dtype=np.int64, count=len(pa_s))
-        pbi = np.fromiter((doc2i[d] for d in pb_s), dtype=np.int64, count=len(pb_s))
-        # gather every pair's partner-set codes in one pass (grouped
-        # arange over the per-pair slice ranges)
-        pl = lens[pbi]
-        p_ends = np.cumsum(pl)
-        p_starts = p_ends - pl
-        within = np.arange(p_ends[-1], dtype=np.int64) - np.repeat(p_starts, pl)
-        elem_codes = codes[np.repeat(offs[pbi], pl) + within]
-        # doc_a run bounds over the sorted pairs
-        bounds = np.flatnonzero(pa_s[1:] != pa_s[:-1]) + 1
-        r_starts = np.concatenate([[0], bounds])
-        r_stops = np.concatenate([bounds, [len(pa_s)]])
-        mask = np.zeros(len(vocab), dtype=bool)
-        ni_all = np.empty(len(pa_s), dtype=np.int64)
-        for s, e in zip(r_starts.tolist(), r_stops.tolist()):
-            ai = pai[s]
-            acodes = codes[offs[ai]:offs[ai + 1]]
-            mask[acodes] = True
-            hit = mask[elem_codes[p_starts[s]:p_ends[e - 1]]]
-            ni_all[s:e] = np.add.reduceat(
-                hit.astype(np.int64), p_starts[s:e] - p_starts[s])
-            mask[acodes] = False
-        nu_all = lens[pai] + pl - ni_all
-        # the SAME IEEE expression tree as the SQL oracle:
-        # FLOOR(CAST(ni AS DOUBLE) / CAST(nu AS DOUBLE) * 1e6)
-        j_all = np.floor(
-            ni_all.astype(np.float64) / nu_all.astype(np.float64) * 1e6
-        ).astype(np.int64)
-        keep = j_all >= threshold_e6
-        return pd.DataFrame({
-            "doc_a": pa_s[keep],
-            "doc_b": pb_s[keep],
-            "n_inter": ni_all[keep],
-            "n_union": nu_all[keep],
-            "jaccard_e6": j_all[keep],
-        })
+        pai = np.fromiter((doc2i[d] for d in pa[order].tolist()), dtype=np.int64, count=len(pa))
+        pbi = np.fromiter((doc2i[d] for d in pb[order].tolist()), dtype=np.int64, count=len(pb))
+        return _scored_pairs(ids, codes, offs, pai, pbi, threshold_e6)
 
-    # partition count: ~2 tasks per core (python tasks pay a worker
-    # round-trip each, so 4x-groups inflation wastes wall-clock), capped
-    # at 2x the group count so tiny grids don't spray empty tasks
-    # (16-cell grid measured: 32 partitions 0.81s vs 64 -> 1.2-1.7s).
-    # Measured at sf0.1 (36 groups, 32 cores): 64 partitions 3.2s vs
-    # 36 -> 7.3s (straggler tail) and 144 -> 4.3s (handshake overhead).
-    n_groups = B * (B + 1) // 2
-    n_partitions = max(min(2 * n_parts, 2 * n_groups), 1)
-    return rep_pairs.unionByName(rep_sets).repartition(
-        n_partitions, "bi", "bj"
-    ).mapInPandas(_bucketed_kernel(["bi", "bj"], cell), out_schema)
+    return _run_cells(rep_pairs.unionByName(rep_sets), [], cell, id_t)
 
 
 def jaccard_pairs(df: DataFrame, n: int = 3, threshold_e6: int = 500_000,
@@ -246,113 +236,54 @@ def jaccard_pairs(df: DataFrame, n: int = 3, threshold_e6: int = 500_000,
                   block_col: str | None = None,
                   scope: CacheScope | None = None) -> DataFrame:
     """Exact n-gram Jaccard similarity pairs >= threshold (scaled 1e6),
-    via PREFIX FILTERING — the exact similarity-join algorithm that
-    survives hot shingles (a plain document-frequency cap cannot: on
-    dense vocabularies some qualifying pairs share ONLY hot shingles).
+    (doc_a, doc_b, n_inter, n_union, jaccard_e6) with doc_a < doc_b, as
+    ONE pass: partition first, then join locally ("Distributed
+    Similarity Joins over Top-K Rankings", EDBT 2020).
 
-    Theorem (AllPairs/PPJoin family): order every doc's shingles by a
-    global canonical order (ascending document frequency, rarest first);
-    with prefix length ``|A| - ceil(t*|A|) + 1``, any pair with
-    J(A,B) >= t must share its canonically-smallest common shingle in
-    BOTH prefixes. So the self-join runs over prefixes only — hot
-    shingles (high df) sort to the END of each doc and drop out of most
-    prefixes, exactly where the quadratic blow-up lived. A size filter
-    (J <= min/max sizes) prunes further. Candidates are then verified
-    via array_intersect on the full shingle-set arrays (JVM built-in),
-    so the output equals the naive all-pairs answer.
+    1. each document's xxhash64 shingle set in codegen
+       (:func:`_shingle_set`); a null id, text or block is no document
+       and is dropped, as the oracle's joins and ``a.doc_id < b.doc_id``
+       drop them;
+    2. the set is packed and replicated to the grid cells of its own
+       hash bucket (:func:`_replicated_sets`);
+    3. one hash repartition on the cell, the plan's only Exchange;
+    4. one kernel per cell scores every pair of the cell exactly:
+       a < b within one bucket, every cross pair of two buckets, each
+       pair met in exactly one cell (:func:`_scored_pairs`).
 
-    Shingles are carried as xxhash64 LONGS end-to-end: set sizes,
-    intersections and Jaccard are invariant under any injective
-    renaming of shingles, and a 64-bit collision WITHIN one compared
-    pair's union (the only event that could change a count) has
-    probability ~|A∪B|²/2⁶⁵ < 1e-13 per pair. The win is large: long
-    arrays shrink the verify shuffle ~4x and array_intersect drops
-    string hashing (measured at sf0.1/t=0.3: verify stage 40.1s -> 5.4s,
-    identical 245,964 output rows vs the string-set run and vs the
-    string-based all-pairs SQL oracle).
+    No index, prefix or candidate table, so no hot-shingle blow-up: the
+    work is all pairs within each block times the set size, pruned by
+    the size filter J <= min(|A|,|B|)/max(|A|,|B|) before counting.
+    ``block_col`` (e.g. source/domain) confines pairs to equal blocks,
+    the standard web-pipeline blocking strategy, and multiplies the
+    cells by the number of blocks.
 
-    Plan: one groupBy(shingle) for df, one groupBy(doc) building the
-    (ordered set, prefix) arrays, a prefix equi-join producing DISTINCT
-    candidate pairs, and an O(candidates) verify join — vs the old
-    inverted-index plan's O(sum df^2) join + pair-count shuffle
-    (measured at sf0.1: 47.7M join rows -> 19.8M, and the groupBy-pair
-    shuffle replaced by a 0.58M-pair verify).
-
-    ``block_col`` (e.g. source/domain) additionally confines candidates
-    to equal blocks — the standard web-pipeline blocking strategy.
-
-    ``scope``: a :class:`CacheScope` that owns the lifetime of the
-    cached per-doc prefix table (4 downstream consumers). Pass one when
-    looping over many corpora — ``with CacheScope() as s:
-    jaccard_pairs(df, scope=s).collect()`` leaves no cached relations
-    behind. Without a scope the cache is session-lifetime (Spark evicts
-    LRU under memory pressure; one-shot driver queries rely on this).
+    ``scope`` has no effect (nothing is cached); see :class:`CacheScope`.
     """
-    extra = [block_col] if block_col else []
-    spark = df.sparkSession
-    n_parts = spark.sparkContext.defaultParallelism
-    # single-file parquet sources arrive in one partition; spread docs
-    # before the (embarrassingly parallel) shingling explode
-    sh = shingles(df.repartition(n_parts), n, id_col, text_col, tuple(extra)) \
-        .withColumn("sh64", F.xxhash64("shingle")).drop("shingle")
-    # document frequency per shingle as a WINDOW count, not
-    # groupBy+join: the join form plans the shingle explode TWICE (the
-    # aggregate side is an independent subtree) and pays two exchanges
-    # on sh64 where the window pays one (guide §2.4 — two operations
-    # keyed the same way share one exchange). Same values: count over
-    # partitionBy(sh64) == the joined groupBy(sh64) count.
-    dfw = Window.partitionBy("sh64")
-    # ceil(t*size) in exact integer arithmetic
-    t_size = (F.lit(threshold_e6) * F.col("set_size") + F.lit(999_999)) / F.lit(1_000_000)
-    per_doc = (
-        sh.withColumn("df", F.count("*").over(dfw))
-        .groupBy(id_col, *extra)
-        .agg(F.sort_array(F.collect_list(F.struct("df", "sh64"))).alias("ordered"))
-        .withColumn("set_size", F.size("ordered").cast("long"))
-        .withColumn("prefix_len", (F.col("set_size") - F.floor(t_size) + 1).cast("int"))
-        .withColumn("sh_set", F.transform("ordered", lambda x: x["sh64"]))
-        .withColumn("prefix", F.slice("sh_set", 1, F.col("prefix_len")))
-        .drop("ordered")
-    )
-    per_doc = scope.cache(per_doc) if scope is not None else per_doc.cache()
-    a = per_doc.select(
-        F.col(id_col).alias("doc_a"), *extra,
-        F.col("set_size").alias("size_a"),
-        F.posexplode("prefix").alias("pos_a", "sh64"),
-    )
-    b = per_doc.select(
-        F.col(id_col).alias("doc_b"), *extra,
-        F.col("set_size").alias("size_b"),
-        F.posexplode("prefix").alias("pos_b", "sh64"),
-    )
-    # PPJoin positional filter: at the canonically-FIRST common shingle
-    # (positions p_a, p_b), every other common element lies after it in
-    # both docs, so |A∩B| <= 1 + min(|A|-p_a-1, |B|-p_b-1); J >= t needs
-    # |A∩B|*(1e6+t_e6) >= t_e6*(|A|+|B|). The bound is monotone over
-    # later collision rows, so filtering EVERY collision row is sound:
-    # a qualifying pair always keeps its first-collision row.
-    ubound = F.lit(1) + F.least(
-        F.col("size_a") - F.col("pos_a") - 1, F.col("size_b") - F.col("pos_b") - 1
-    )
-    cand = (
-        a.join(b, ["sh64", *extra])
-        .filter(
-            (F.col("doc_a") < F.col("doc_b"))
-            # size filter: J <= min(|A|,|B|)/max(|A|,|B|)
-            & (F.col("size_a") * 1_000_000 >= F.lit(threshold_e6) * F.col("size_b"))
-            & (F.col("size_b") * 1_000_000 >= F.lit(threshold_e6) * F.col("size_a"))
-            & (ubound * (1_000_000 + threshold_e6) >= F.lit(threshold_e6) * (F.col("size_a") + F.col("size_b")))
-        )
-        .select("doc_a", "doc_b")
-        .dropDuplicates()
-    )
-    # one cheap metadata-ish count over the INPUT sizes the verify grid
-    # (ceil(n/block_rows), floored at ~sqrt(2*parallelism)); the blocked
-    # kernel verify replaces the per-pair array_intersect join — see
-    # _verify_jaccard_blocked for the measured why
-    n_docs = df.count()
-    sets_df = per_doc.select(id_col, "sh_set")
-    return _verify_jaccard_blocked(cand, sets_df, threshold_e6, n_docs)
+    keys = [block_col] if block_col else []
+    # drop before the sets: a filter on the set column would evaluate
+    # the (interpreted) higher-order shingle expression twice
+    docs = df.na.drop(subset=[id_col, text_col, *keys]) \
+        .select(id_col, *keys, _shingle_set(n, text_col).alias("sh_set"))
+    grid = _replicated_sets(docs, id_col, keys, _n_buckets(df.sparkSession))
+    id_t = df.schema[id_col].dataType.simpleString()
+
+    def cell(pdf: pd.DataFrame) -> pd.DataFrame:
+        ids = pdf["doc_a"].to_numpy()
+        codes, offs = _decode_sets(pdf["blob"].to_numpy())
+        bi = pdf["bi"].iat[0]
+        if bi == pdf["bj"].iat[0]:
+            pai, pbi = np.triu_indices(len(ids), 1)
+        else:
+            b = pdf["b"].to_numpy()
+            x, y = np.flatnonzero(b == bi), np.flatnonzero(b != bi)
+            pai, pbi = np.repeat(x, len(y)), np.tile(y, len(x))
+        lens = np.diff(offs)
+        la, lb = lens[pai], lens[pbi]
+        fits = np.minimum(la, lb) * 1_000_000 >= threshold_e6 * np.maximum(la, lb)
+        return _scored_pairs(ids, codes, offs, pai[fits], pbi[fits], threshold_e6)
+
+    return _run_cells(grid, keys, cell, id_t)
 
 
 # --- MinHash + LSH -----------------------------------------------------------
@@ -402,7 +333,9 @@ def minhash_lsh_pairs(df: DataFrame, n: int = 5, num_hashes: int = 64, bands: in
     """LSH candidate pairs (band-bucket equi-join) verified with exact
     Jaccard — output identical to ``jaccard_pairs`` restricted to pairs
     LSH recalled. At threshold 0.5 with 16 bands x 4 rows recall is
-    ~1 for true near-dups."""
+    ~1 for true near-dups. A null id or text is no document and is
+    dropped."""
+    df = df.na.drop(subset=[id_col, text_col])
     rows_per_band = num_hashes // bands
     sigs = minhash_signatures(df, n, num_hashes, id_col, text_col)
     banded = sigs.select(
@@ -425,23 +358,10 @@ def minhash_lsh_pairs(df: DataFrame, n: int = 5, num_hashes: int = 64, bands: in
         .select("doc_a", "doc_b")
         .dropDuplicates()
     )
-    # verify ONLY the candidates: per-doc distinct shingle arrays joined to
-    # each candidate pair, exact |A∩B| via array_intersect (JVM built-in).
-    # No all-pairs work ever happens — this is the 100 TB-shaped plan.
-    # shingles carried as xxhash64 longs (same trick as jaccard_pairs:
-    # long-array intersect is ~7x cheaper than string sets; counts are
-    # invariant under injective renaming, collision odds < 1e-13/pair)
-    sets = df.select(
-        id_col,
-        F.expr(
-            f"transform(array_distinct(transform(sequence(1, greatest(length({text_col}) - {n - 1}, 1)),"
-            f" i -> substr({text_col}, i, {n}))), s -> xxhash64(s))"
-        ).alias("sh_set"),
-    )
-    # blocked-kernel verify (see _verify_jaccard_blocked): the shingle
-    # transform also now evaluates ONCE into the replicated set frame
-    # instead of once per join side
-    return _verify_jaccard_blocked(cand, sets, threshold_e6, df.count())
+    # verify ONLY the candidates (see _verify_jaccard_blocked): no
+    # all-pairs work ever happens
+    sets = df.select(id_col, _shingle_set(n, text_col).alias("sh_set"))
+    return _verify_jaccard_blocked(cand, sets, threshold_e6)
 
 
 # --- SimHash -----------------------------------------------------------------

@@ -1303,7 +1303,7 @@ def q_dedup_exact(spark, sf_dir):
 )
 def q_ngram_jaccard(spark, sf_dir):
     """Dedup/n-gram: exact 4-gram Jaccard pairs >= 0.3, blocked by source
-    (inverted shingle index join)."""
+    (one bucket-grid pass: a kernel per (source, bucket pair) cell)."""
     docs = _load(spark, sf_dir, "documents")
     return dedup.jaccard_pairs(docs, n=4, threshold_e6=300_000, block_col="source")
 
